@@ -15,6 +15,13 @@ import graft.ops.{GroupStage, MapStage, ReduceStage, Sinks}
   *   read.text → map (flatMap | pipe) → group (shuffle+sort) →
   *   reduce (mapPartitions | pipe) → outputfileNN sink
   *
+  * The group stage combines identical mapped lines map-side: each distinct
+  * line is shuffled once per map partition with its count and re-emitted
+  * `count` times after the sort, so a word count's `token\t1` lines cost
+  * one shuffle record per distinct token per mapper. Reducers still see
+  * every line, in the same partition and order as without the combine —
+  * native and piped map/reduce stages run unchanged.
+  *
   * Jobs run strictly FIFO by default, one at a time — the reference queues
   * new jobs while BUSY (`/root/reference/mapreduce/manager/__main__.py:
   * 278-291`) — via a single-threaded executor, so `submit` is async like
@@ -37,7 +44,8 @@ import graft.ops.{GroupStage, MapStage, ReduceStage, Sinks}
   * submission order — that ordering guarantee is FIFO-mode parity.
   *
   * `parityMode` selects the golden-parity rank-mod group router
-  * ([[graft.ops.GroupStage.rankMod]]) instead of the scalable hash router.
+  * ([[graft.ops.GroupStage.rankMod]]) instead of the scalable hash router
+  * ([[graft.ops.GroupStage.hash]]); both combine identical lines.
   *
   * `rawParity` (round 13) is the BYTE-exact tier: the job reads lines with
   * their real terminators ([[graft.sources.ParityLines.sortTasks]], which

@@ -1,40 +1,50 @@
 package graft.ops
 
-import org.apache.spark.Partitioner
-import org.apache.spark.rdd.RDD
+import org.apache.spark.{Aggregator, HashPartitioner, Partitioner}
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
 
 /** Group stage (reference O4+O5): globally sort the mapped `key\tvalue`
   * lines and split them into `numReducers` sorted reduce inputs.
   *
+  * Both routers combine identical lines map-side (the MapReduce combiner,
+  * Dean & Ghemawat OSDI 2004 §4.3): each distinct line crosses the shuffle
+  * once per map partition with its count, and the reduce side re-emits it
+  * `count` times after the merge and sort. Identical lines are
+  * interchangeable to any reducer, so the output is unchanged — the same
+  * lines in the same partition in the same order as an uncombined shuffle.
+  *
   * Two routing modes:
   *
-  *   - [[hash]] (default, the scalable path): shuffle on the line with a
-  *     hash partitioner + sort within partitions — one exchange, no global
-  *     ordering structure, survives any scale. Equal lines still land in
-  *     one partition and adjacent, which is the only property reducers
-  *     actually rely on (`wc_reduce.sh` counts adjacent equal keys).
+  *   - [[hash]] (default, the scalable path): partition on
+  *     `floorMod(line.hashCode, numReducers)` and sort within partitions —
+  *     one exchange, no global ordering structure, survives any scale.
+  *     Equal lines still land in one partition and adjacent, which is the
+  *     only property reducers actually rely on (`wc_reduce.sh` counts
+  *     adjacent equal keys).
   *
   *   - [[rankMod]] (golden-parity mode): reproduces the reference's
   *     distinct-line round-robin router byte-for-byte
   *     (`/root/reference/mapreduce/manager/__main__.py:587-593`): walk the
   *     merged sorted stream, increment a counter on each NEW distinct line,
   *     route the line to `counter % numReducers`. Implemented scalably as
-  *     sorted-distinct `zipWithIndex` (rank per distinct line; an O(1)-driver
-  *     metadata pass, not a global single-partition window) joined back to
-  *     the lines, then an explicit bucket partitioner + per-partition sort.
+  *     counted distinct lines, sorted and ranked with `zipWithIndex` (an
+  *     O(1)-driver metadata pass, not a global single-partition window),
+  *     then routed by `rank % numReducers` and expanded by count.
   *     Note the quirk kept deliberately: routing is per distinct *line*
   *     (key AND value), not per key — same key with different values can
   *     split across reducers, exactly like the reference.
   */
 object GroupStage {
 
-  /** Routes key `i` to partition `i` — the bucket id IS the partition. */
-  private final class BucketPartitioner(n: Int) extends Partitioner {
+  /** Routes rank `r` to partition `r % n` — the distinct-line counter's
+    * round-robin.
+    */
+  private final class RankPartitioner(n: Int) extends Partitioner {
     override def numPartitions: Int = n
-    override def getPartition(key: Any): Int = key.asInstanceOf[(Int, String)]._1
+    override def getPartition(key: Any): Int = (key.asInstanceOf[Long] % n).toInt
     override def equals(other: Any): Boolean = other match {
-      case p: BucketPartitioner => p.numPartitions == n
-      case _                    => false
+      case p: RankPartitioner => p.numPartitions == n
+      case _                  => false
     }
     override def hashCode(): Int = n
   }
@@ -44,12 +54,14 @@ object GroupStage {
     * The reference sorts lines WITH their trailing newline
     * (`readlines()` + `sort()`, `/root/reference/mapreduce/worker/__main__.py:180-182`),
     * which flips the order of a line that is a proper prefix of another
-    * continuing with '\t' (0x09 < 0x0A) — so we append '\n' to the sort key.
+    * continuing with '\t' (0x09 < 0x0A) — so lines compare as if each
+    * carried a trailing '\n'. [[compareLines]] does that without building
+    * the two strings.
     *
     * Parity on UNTERMINATED final lines (closed in round 12): the
     * reference keeps the REAL trailing bytes, so a final unterminated line
     * "foo" sorts/distincts separately from "foo\n". Spark's textFile
-    * strips newlines before [[sortKey]] re-appends one uniformly, merging
+    * strips newlines before this ordering re-appends one uniformly, merging
     * the two and shifting subsequent rank-mod bucket assignments — which
     * is fine for every golden fixture (all newline-terminated) but not
     * byte parity in general. [[rankModRaw]] + the
@@ -59,35 +71,51 @@ object GroupStage {
     * sentinel, matching the reference's `readlines()` semantics
     * byte-for-byte (GroupStageSpec pins an unterminated fixture).
     */
-  private def sortKey(l: String): String                 = l + "\n"
-  private implicit val lineOrd: Ordering[(Int, String)] = Ordering.by(t => sortKey(t._2))
+  private val lineOrdering: Ordering[String] = (a, b) => compareLines(a, b)
 
-  /** Scalable default: hash-route lines to reducers, sort within partitions.
-    * The shuffle key is (bucket, line): the partitioner reads the bucket,
-    * the within-partition sort orders by line.
+  /** Equals `(a + "\n") compareTo (b + "\n")`, allocation-free: compare
+    * the common prefix, then the longer line's next char against the
+    * shorter one's virtual '\n'.
+    */
+  private[graft] def compareLines(a: String, b: String): Int = {
+    val la = a.length
+    val lb = b.length
+    val n  = math.min(la, lb)
+    var i  = 0
+    while (i < n) {
+      val d = a.charAt(i) - b.charAt(i)
+      if (d != 0) return d
+      i += 1
+    }
+    if (la > lb) { val d = a.charAt(n) - '\n'; if (d != 0) d else la - lb }
+    else if (la < lb) { val d = '\n' - b.charAt(n); if (d != 0) d else la - lb }
+    else 0
+  }
+
+  /** Re-emit each counted line `count` times, in order. */
+  private def expand(counted: Iterator[(String, Long)]): Iterator[String] =
+    counted.flatMap { case (line, n) =>
+      new Iterator[String] {
+        private var left     = n
+        def hasNext: Boolean = left > 0
+        def next(): String   = { left -= 1; line }
+      }
+    }
+
+  /** Scalable default: hash-route lines to reducers (`HashPartitioner` is
+    * `floorMod(line.hashCode, numReducers)`), counting identical lines on
+    * both sides of the shuffle, then sort each partition by line.
     */
   def hash(lines: RDD[String], numReducers: Int): RDD[String] =
-    lines
-      .map(l => (((l.hashCode % numReducers + numReducers) % numReducers, l), null))
-      .repartitionAndSortWithinPartitions(new BucketPartitioner(numReducers))
-      .map(_._1._2)
+    new ShuffledRDD[String, Null, Long](lines.map(l => (l, null)), new HashPartitioner(numReducers))
+      .setAggregator(Aggregator[String, Null, Long](_ => 1L, (c, _) => c + 1L, _ + _))
+      .setMapSideCombine(true)
+      .setKeyOrdering(lineOrdering)
+      .mapPartitions(expand)
 
   /** Golden-parity rank-mod router (see object doc). */
-  def rankMod(lines: RDD[String], numReducers: Int): RDD[String] = {
-    // rank each DISTINCT line in global sorted order; zipWithIndex launches
-    // one job to count per-partition sizes — no single-partition bottleneck
-    val ranked: RDD[(String, Int)] = lines
-      .distinct()
-      .sortBy(sortKey)
-      .zipWithIndex()
-      .map { case (line, rank) => (line, (rank % numReducers).toInt) }
-    lines
-      .map(l => (l, ()))
-      .join(ranked) // shuffle join on the line; all copies meet their rank
-      .map { case (line, (_, bucket)) => ((bucket, line), null) }
-      .repartitionAndSortWithinPartitions(new BucketPartitioner(numReducers))
-      .map(_._1._2)
-  }
+  def rankMod(lines: RDD[String], numReducers: Int): RDD[String] =
+    rankRoute(lines, numReducers, lineOrdering)
 
   /** Byte-exact rank-mod router over lines that CARRY their real trailing
     * newline (from [[graft.sources.ParityLines]]): sort order, the
@@ -96,32 +124,27 @@ object GroupStage {
     * distinct line from "foo\n", sorting before it (nothing < '\n').
     * Output lines keep their raw bytes too; a sink that writes them
     * verbatim reproduces the reference's output files byte-for-byte
-    * including a missing final newline. Same scalable shape as
-    * [[rankMod]]: sorted-distinct zipWithIndex, join back, bucket
-    * partitioner + per-partition sort.
+    * including a missing final newline. Same path as [[rankMod]] under the
+    * identity ordering on the real bytes.
     */
-  def rankModRaw(rawLines: RDD[String], numReducers: Int): RDD[String] = {
-    // identity ordering on the REAL bytes — deliberately NOT the object's
-    // implicit lineOrd (which appends the '\n' these lines already carry,
-    // and would mis-order an unterminated prefix line); passed explicitly
-    // because the two Ordering[(Int, String)]s would otherwise be
-    // ambiguous at the enrichment site
-    val rawOrd: Ordering[(Int, String)] = Ordering.by(_._2)
-    val ranked: RDD[(String, Int)] = rawLines
-      .distinct()
-      .sortBy(identity)
+  def rankModRaw(rawLines: RDD[String], numReducers: Int): RDD[String] =
+    rankRoute(rawLines, numReducers, Ordering.String)
+
+  /** The one rank-mod router: count identical lines, sort the distinct
+    * ones under `ord` and rank them (`zipWithIndex` launches one job to
+    * count per-partition sizes — no single-partition bottleneck), then
+    * route rank `r` to bucket `r % numReducers`. Within a bucket, rank
+    * order IS `ord` order, so sorting on the rank sorts the lines.
+    */
+  private def rankRoute(lines: RDD[String], numReducers: Int, ord: Ordering[String]): RDD[String] =
+    lines
+      .map(l => (l, 1L))
+      .reduceByKey(_ + _)
+      .sortBy(_._1)(ord, implicitly)
       .zipWithIndex()
-      .map { case (line, rank) => (line, (rank % numReducers).toInt) }
-    val pairs: RDD[((Int, String), Null)] = rawLines
-      .map(l => (l, ()))
-      .join(ranked)
-      .map { case (line, (_, bucket)) => ((bucket, line), null) }
-    new org.apache.spark.rdd.OrderedRDDFunctions[(Int, String), Null, ((Int, String), Null)](
-      pairs
-    )(rawOrd, implicitly, implicitly, implicitly)
-      .repartitionAndSortWithinPartitions(new BucketPartitioner(numReducers))
-      .map(_._1._2)
-  }
+      .map(_.swap)
+      .repartitionAndSortWithinPartitions(new RankPartitioner(numReducers))
+      .mapPartitions(it => expand(it.map(_._2)))
 
   def apply(lines: RDD[String], numReducers: Int, parityMode: Boolean): RDD[String] =
     if (parityMode) rankMod(lines, numReducers) else hash(lines, numReducers)

@@ -12,17 +12,23 @@ object ReduceStage {
   /** wc_reduce semantics (`/root/reference/tests/testdata/exec/wc_reduce.sh:14`):
     * `cut -f1 | uniq -c | awk '{print $2"\t"$1}'` — count runs of adjacent
     * equal keys (the field before the first tab) in the already-sorted
-    * stream, emit `key\tcount`. Streaming: O(1) state per partition.
+    * stream, emit `key\tcount`. Streaming: O(1) state per partition;
+    * allocates per output key only — later lines of a run are matched in
+    * place against the run's first line.
     */
   def wcReduce(lines: Iterator[String]): Iterator[String] = new Iterator[String] {
-    private val it               = lines.buffered
-    private def keyOf(l: String) = { val i = l.indexOf('\t'); if (i < 0) l else l.substring(0, i) }
+    private val it                     = lines.buffered
+    private def keyEnd(l: String): Int = { val i = l.indexOf('\t'); if (i < 0) l.length else i }
+    // `l`'s key equals `first`'s key, which is first.substring(0, k)
+    private def sameKey(l: String, first: String, k: Int): Boolean =
+      l.regionMatches(0, first, 0, k) && (l.length == k || l.charAt(k) == '\t')
     def hasNext: Boolean = it.hasNext
     def next(): String = {
-      val k     = keyOf(it.next())
+      val first = it.next()
+      val k     = keyEnd(first)
       var count = 1L
-      while (it.hasNext && keyOf(it.head) == k) { it.next(); count += 1 }
-      s"$k\t$count"
+      while (it.hasNext && sameKey(it.head, first, k)) { it.next(); count += 1 }
+      s"${first.substring(0, k)}\t$count"
     }
   }
 

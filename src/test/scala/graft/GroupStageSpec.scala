@@ -1,11 +1,16 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+
 import graft.ops.GroupStage
 
 /** Golden parity of the rank-mod distinct-line router against the
   * reference's `test_manager_08` fixtures
   * (`/root/reference/tests/testdata/test_manager_08/correct/job-0/grouper-output/`),
-  * plus routing invariants on both modes.
+  * plus routing invariants on both modes and the hash router's map-side
+  * combine.
   */
 class GroupStageSpec extends SparkSpec {
 
@@ -37,6 +42,67 @@ class GroupStageSpec extends SparkSpec {
       val byLine = parts.groupBy(_._1).view.mapValues(_.map(_._2).distinct.length)
       assert(byLine.values.forall(_ == 1))
     }
+  }
+
+  /** Heavy duplicates, one key with several values, `"\t1"` lines, a
+    * proper-prefix pair continuing with '\t' and one continuing with a
+    * char below '\n' — both sort BEFORE their prefix under the reference's
+    * newline-terminated order.
+    */
+  private val combineData: Seq[String] =
+    (1 to 2000).map(i => s"w${i % 7}\t1") ++ (1 to 300).map(i => s"key\t${i % 3}") ++
+      Seq.fill(40)("\t1") ++ Seq.fill(5)("ab") ++ Seq.fill(3)("ab\tc") ++ Seq.fill(4)("ab\u0001c") ++
+      Seq("ab\n", "ab\nz")
+
+  test("hash router equals the driver-side model partition by partition") {
+    val lines = spark.sparkContext.parallelize(new scala.util.Random(7).shuffle(combineData), 8)
+    // n = 1 puts every prefix pair in one partition, so their order is pinned
+    for (n <- Seq(1, 3)) {
+      val parts = GroupStage
+        .hash(lines, n)
+        .mapPartitionsWithIndex { case (i, it) => Iterator((i, it.toList)) }
+        .collect()
+        .toMap
+      val model = combineData
+        .groupBy(l => Math.floorMod(l.hashCode, n))
+        .view
+        .mapValues(_.sortWith((a, b) => (a + "\n").compareTo(b + "\n") < 0).toList)
+        .toMap
+      assert(parts.keySet == (0 until n).toSet)
+      for (i <- 0 until n) assert(parts(i) == model.getOrElse(i, Nil), s"partition $i of $n")
+    }
+  }
+
+  test("hash router shuffles one record per distinct (map partition, line) pair") {
+    val sc    = spark.sparkContext
+    val lines = sc.parallelize(combineData, 8)
+    val distinctPairs = lines.glom().map(_.distinct.length.toLong).sum().toLong
+    val group         = "groupstage-combine-probe"
+    val stages        = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val mapTasks      = new AtomicLong(0L)
+    val records       = new AtomicLong(0L)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (js.properties != null && js.properties.getProperty("spark.jobGroup.id") == group)
+          js.stageIds.foreach(stages.add)
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+        if (stages.contains(te.stageId) && te.taskType == "ShuffleMapTask" && te.taskMetrics != null) {
+          records.addAndGet(te.taskMetrics.shuffleWriteMetrics.recordsWritten)
+          mapTasks.incrementAndGet(): Unit
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "count the hash router's shuffle records")
+      try GroupStage.hash(lines, 3).count()
+      finally sc.clearJobGroup()
+      // listener events arrive asynchronously: wait for all 8 map tasks
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (mapTasks.get() < 8 && System.nanoTime() < deadline) Thread.sleep(50)
+    } finally sc.removeSparkListener(listener)
+    assert(mapTasks.get() == 8L)
+    assert(records.get() == distinctPairs)
+    assert(distinctPairs * 20 < combineData.size, "fixture must be duplicate-heavy")
   }
 
   test("sort task reproduces the test_worker_06 merged golden (1 reducer)") {

@@ -62,6 +62,22 @@ class PropertySpec extends SparkSpec {
     })
   }
 
+  test("compareLines equals comparing the lines with a trailing newline appended") {
+    // chars straddling '\n' (0x0A): '\u0001' and '\t' sort below it
+    val charGen = Gen.oneOf('\u0001', '\t', '\n', '\u000b', ' ', 'a', 'b', '\u00e9')
+    val strGen  = Gen.oneOf(Gen.const(""), Gen.listOf(charGen).map(_.mkString))
+    val pairGen = for {
+      a      <- strGen
+      suffix <- strGen
+      other  <- strGen
+      b      <- Gen.oneOf(a, a + suffix, other)
+      swap   <- Gen.oneOf(true, false)
+    } yield if (swap) (b, a) else (a, b)
+    check(Prop.forAll(pairGen) { case (a, b) =>
+      GroupStage.compareLines(a, b) == (a + "\n").compareTo(b + "\n")
+    }, minSuccessful = 500)
+  }
+
   // ---- binary header parsers: total functions over arbitrary bytes ------
 
   private val bytesGen: Gen[Array[Byte]] =
