@@ -96,9 +96,9 @@ object Bench {
       // "contam" covers q_contamination/q_decontam_ngram, and the two
       // named queries read the near-dup pairs too — all of them consume
       // the signature/gram caches without carrying any of the family
-      // substrings, so an isolated run (SPARK_GRAFT_ONLY, or BandGate
-      // only=q_contamination) otherwise pays the whole cache build inside
-      // its first timed region (measured: the round-16 gate record's
+      // substrings, so an isolated run (SPARK_GRAFT_ONLY=q_contamination)
+      // otherwise pays the whole cache build inside its first timed region
+      // (measured: the round-16 band gate record in COVERAGE.md,
       // estimate_sec 1458 s with artifact_build_sec 0.0 at 5M docs)
       if (subsetNeeds(n => n.contains("minhash") || n.contains("lsh") || n.contains("dedup") ||
             n.contains("jaccard") || n.contains("contam") || n == "q_clean_corpus" ||

@@ -52,12 +52,6 @@ object AdaptiveWaves {
     def total: Long = shuffle.get() + spill.get()
   }
 
-  /** (planned, run) wave counts of the last campaign per context tag —
-    * the gates' `waves_planned` vs `waves_run` record.
-    */
-  private val lastRuns =
-    new java.util.concurrent.ConcurrentHashMap[String, (Int, Int)]()
-
   /** Test-only failure injection: set to k ≥ 1 and the NEXT campaign
     * throws after batch k completes (with units still remaining) — the
     * OOM/ENOSPC shape the wave regime designs for, placed exactly where a
@@ -68,12 +62,6 @@ object AdaptiveWaves {
     */
   private[graft] val abortAfterBatches =
     new java.util.concurrent.atomic.AtomicInteger(-1)
-
-  def snapshot: Map[String, (Int, Int)] = {
-    val b = Map.newBuilder[String, (Int, Int)]
-    lastRuns.forEach((k, v) => b += (k -> v))
-    b.result()
-  }
 
   /** Run `body` over all of `units` (disjoint residue/salt classes) in
     * adaptively-sized batches.
@@ -124,7 +112,7 @@ object AdaptiveWaves {
         val t0 = System.nanoTime()
         body(units.slice(i, i + take))
         // drain: poll until the byte counter holds still (the stricter
-        // SetJoinGate discipline — 30 s cap, 4 stable polls). The
+        // set-join gate's discipline — 30 s cap, 4 stable polls). The
         // direction matters: an UNDERCOUNT here lowers perUnit, which
         // RAISES the next batch's fit and SHRINKS its free-space precheck
         // — the unsafe side, not the conservative one — so hitting the
@@ -180,7 +168,6 @@ object AdaptiveWaves {
       // (cleanup is GC-driven)
       System.gc()
     }
-    lastRuns.put(tag, (wavesPlanned, wave)): Unit
     System.err.println(s"[$tag] campaign complete: waves_planned=$wavesPlanned waves_run=$wave")
     (wavesPlanned, wave)
   }

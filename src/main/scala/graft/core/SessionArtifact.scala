@@ -20,14 +20,8 @@ object SessionArtifact {
 
   private val sweptPaths = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   Runtime.getRuntime.addShutdownHook(new Thread(() => {
-    sweptPaths.forEach(p => deleteRecursively(new java.io.File(p)))
+    sweptPaths.forEach(p => graft.ops.Sinks.deleteQuietly(java.nio.file.Paths.get(p)))
   }))
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    val kids = f.listFiles()
-    if (kids != null) kids.foreach(deleteRecursively)
-    f.delete(): Unit
-  }
 
   /** Tmpdir path for an artifact of `prefix` over fixture `dir`, registered
     * for the exit sweep. Pid-scoped like every session artifact: a per-JVM

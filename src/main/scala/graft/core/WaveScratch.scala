@@ -4,6 +4,8 @@ import java.io.File
 
 import org.apache.spark.sql.SparkSession
 
+import graft.ops.Sinks
+
 /** Lifecycle of bounded-wave scratch directories (round 14).
   *
   * The wave loops ([[graft.ext.SetJoin.similarityJoinWaved]] and the band
@@ -49,23 +51,9 @@ object WaveScratch {
 
   private lazy val hookInstalled: Unit = {
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      registered.forEach(p => deleteRecursively(new File(p)))
+      registered.forEach(p => Sinks.deleteQuietly(new File(p).toPath))
     }))
     sweepStale()
-  }
-
-  /** Never follows symlinks: a link is deleted as a LINK (the target is
-    * untouched). `listFiles()` on a symlinked directory would happily
-    * traverse the target — in world-writable /tmp that turns a planted
-    * `graft-waves-*` symlink into a delete-anything primitive running with
-    * this process's privileges, so every recursion step re-checks.
-    */
-  private def deleteRecursively(f: File): Unit = {
-    if (!java.nio.file.Files.isSymbolicLink(f.toPath)) {
-      val children = f.listFiles()
-      if (children != null) children.foreach(deleteRecursively)
-    }
-    f.delete(): Unit
   }
 
   /** Remove wave dirs left by DEAD sessions: not this session's, not
@@ -96,7 +84,7 @@ object WaveScratch {
         owned(d)
     ) {
       System.err.println(s"[wave-scratch] sweeping stale wave dir ${d.getAbsolutePath}")
-      deleteRecursively(d)
+      Sinks.deleteQuietly(d.toPath)
     }
   }
 
@@ -132,7 +120,7 @@ object WaveScratch {
     if (dir.exists()) {
       System.err.println(
         s"[wave-scratch] clearing partial wave output from a prior failed campaign at $path")
-      deleteRecursively(dir)
+      Sinks.deleteRecursively(dir.toPath)
     }
     path
   }

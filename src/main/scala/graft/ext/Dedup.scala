@@ -320,11 +320,11 @@ object Dedup {
     * ≥ 8.4M enumerated pairs from ONE bucket — far beyond anything a
     * non-pathological corpus produces at the collapsed grain, so the
     * default keeps every fixture/bench plan on the certified band join;
-    * the scale gates lower it via SPARK_GRAFT_BAND_SAT to engage the
-    * re-route on saturation corpora.
+    * tests engage the re-route on small saturation corpora by passing a
+    * lower `sat` to [[ngramVerifiedPairs]], so no run-time setting is
+    * needed.
     */
-  private[graft] def bandSatThreshold: Int =
-    sys.env.get("SPARK_GRAFT_BAND_SAT").map(_.toInt).getOrElse(4096)
+  private[graft] val BandSatThreshold = 4096
 
   private val satProbeMemo =
     new java.util.concurrent.ConcurrentHashMap[(Int, Int), java.lang.Boolean]()
@@ -486,8 +486,8 @@ object Dedup {
     *     the candidate distinct, distinct pairs through the numbered d1
     *     spread, and the d2-routing exchange carrying the xxhash64 payload
     *     (whose SMJ sort also spills ~that volume; raw bytes kept, LZ4 is
-    *     the margin — the exact model SetJoinGate validated at three
-    *     scales, ratios 0.93/1.18/1.25).
+    *     the margin — the exact model the set-join scale gate validated
+    *     at three scales, ratios 0.93/1.18/1.25; COVERAGE.md).
     */
   final case class VerifyEstimate(
       enumPairs: Long,
@@ -1124,7 +1124,7 @@ object Dedup {
   private[graft] def ngramVerifiedPairs(
       docs: DataFrame,
       pruned: Boolean = true,
-      sat: Int = bandSatThreshold): DataFrame = {
+      sat: Int = BandSatThreshold): DataFrame = {
     // Round 14: budget-aware routing — the pruned path switches to bounded
     // hash(d1)-residue waves when the estimator predicts the verify
     // footprint above SPARK_GRAFT_SHUFFLE_BUDGET (the 5M-doc telemetry

@@ -158,8 +158,9 @@ object SetJoin {
     *     candidates entering the distinct at ~[[CandRowBytes]]/row plus the
     *     saltB× prefix replication at ~[[PrefRowBytes]]/row. The constants
     *     are UnsafeRow sizes after shuffle compression, validated against
-    *     measured shuffle-write bytes by `tools.SetJoinGate` (target: within
-    *     ~2×); they predict ORDER, not exact bytes.
+    *     measured shuffle-write bytes by the set-join scale gate recorded
+    *     in COVERAGE.md (target: within ~2×); they predict ORDER, not exact
+    *     bytes.
     */
   final case class CandidateEstimate(
       prefRows: Long,
@@ -177,7 +178,7 @@ object SetJoin {
   /** (d1: long, d2: long) UnsafeRow = 24 B; shuffle LZ4 on near-random ids
     * buys little — call it 20. `private[ext]`: the band family's verify
     * estimator ([[Dedup]]) models the same exchanges with the same
-    * constants, validated by the same SetJoinGate calibration.
+    * constants, validated by the same set-join gate calibration.
     */
   private[ext] val CandRowBytes = 20L
 

@@ -3,6 +3,8 @@ package graft.ops
 import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.rdd.RDD
 
 /** File sink (reference O7): write reduce partition N to
@@ -17,12 +19,25 @@ import org.apache.spark.rdd.RDD
   */
 object Sinks {
 
+  /** Never follows symlinks: `Files.walk` without `FOLLOW_LINKS` deletes a
+    * link as a LINK and leaves its target untouched. A traversal that
+    * followed a symlinked directory would, in world-writable /tmp, turn a
+    * planted link under a scratch name into a delete-anything primitive
+    * running with this process's privileges.
+    */
   def deleteRecursively(p: Path): Unit =
     if (Files.exists(p)) {
       val walk = Files.walk(p)
       try walk.sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
       finally walk.close()
     }
+
+  /** [[deleteRecursively]] for exit-time and stale-scratch sweeps: a path
+    * that cannot be deleted is skipped, so it never stops the others.
+    */
+  def deleteQuietly(p: Path): Unit =
+    try deleteRecursively(p)
+    catch { case NonFatal(_) => () }
 
   /** Write `reduced` as outputfileNN files; returns the file paths. */
   def outputFiles(reduced: RDD[String], outputDirectory: String): Seq[String] = {

@@ -719,39 +719,45 @@ object GraphQueries {
     "q_hits",
     (s, dir) => {
       val (e, nSup, nPart) = hitsEdges(s, dir)
-      def push(
-          scores: org.apache.spark.sql.DataFrame,
-          key: String,
-          nNodes: Long,
-          outKey: String): org.apache.spark.sql.DataFrame =
-        hitsPush(e, scores, key, nNodes, outKey).localCheckpoint()
-      var h = hitsSeed(e, nSup)
-      var a: org.apache.spark.sql.DataFrame = null
-      // per-half-step normalizer: the raw frame is ALREADY materialized by
-      // the eager localCheckpoint, so the global total is one bounded
-      // driver row read straight off the checkpoint (`first()`), folded
-      // into the plan as a literal — where the previous
-      // crossJoin(broadcast(agg)) shape re-planned an aggregate + a
-      // broadcast exchange + a BNLJ per half-step (measured r16: 8 extra
-      // AQE stage pairs, ~100-150 ms each, on identical values). Same
-      // 1-row-through-the-driver footprint as the broadcast at any scale.
-      def tot(raw: org.apache.spark.sql.DataFrame): Long =
-        raw.agg(sum("raw").as("tot")).first().getLong(0)
-      for (_ <- 1 to HitsIters) {
-        val rawA = push(h, "s", nSup, "p")
-        a = rawA.select(col("p"), expr(s"raw * ${HitsScale}L div ${tot(rawA)}L").as("v"))
-        val rawH = push(a, "p", nPart, "s")
-        h = rawH.select(col("s"), expr(s"raw * ${HitsScale}L div ${tot(rawH)}L").as("v"))
+      // an empty edge set has no hubs or authorities, and neither the
+      // seed's SCALE div |S| nor a round's Σraw normalizer is defined on it
+      if (nSup == 0L)
+        e.select(lit("hub").as("side"), col("s").as("node"), lit(0L).as("score"))
+      else {
+        def push(
+            scores: org.apache.spark.sql.DataFrame,
+            key: String,
+            nNodes: Long,
+            outKey: String): org.apache.spark.sql.DataFrame =
+          hitsPush(e, scores, key, nNodes, outKey).localCheckpoint()
+        var h = hitsSeed(e, nSup)
+        var a: org.apache.spark.sql.DataFrame = null
+        // per-half-step normalizer: the raw frame is ALREADY materialized by
+        // the eager localCheckpoint, so the global total is one bounded
+        // driver row read straight off the checkpoint (`first()`), folded
+        // into the plan as a literal — where the previous
+        // crossJoin(broadcast(agg)) shape re-planned an aggregate + a
+        // broadcast exchange + a BNLJ per half-step (measured r16: 8 extra
+        // AQE stage pairs, ~100-150 ms each, on identical values). Same
+        // 1-row-through-the-driver footprint as the broadcast at any scale.
+        def tot(raw: org.apache.spark.sql.DataFrame): Long =
+          raw.agg(sum("raw").as("tot")).first().getLong(0)
+        for (_ <- 1 to HitsIters) {
+          val rawA = push(h, "s", nSup, "p")
+          a = rawA.select(col("p"), expr(s"raw * ${HitsScale}L div ${tot(rawA)}L").as("v"))
+          val rawH = push(a, "p", nPart, "s")
+          h = rawH.select(col("s"), expr(s"raw * ${HitsScale}L div ${tot(rawH)}L").as("v"))
+        }
+        val hubs = h
+          .select(lit("hub").as("side"), col("s").as("node"), col("v").as("score"))
+          .orderBy(col("score").desc, col("node"))
+          .limit(20)
+        val auths = a
+          .select(lit("auth").as("side"), col("p").as("node"), col("v").as("score"))
+          .orderBy(col("score").desc, col("node"))
+          .limit(20)
+        hubs.unionByName(auths).orderBy(col("side"), col("score").desc, col("node"))
       }
-      val hubs = h
-        .select(lit("hub").as("side"), col("s").as("node"), col("v").as("score"))
-        .orderBy(col("score").desc, col("node"))
-        .limit(20)
-      val auths = a
-        .select(lit("auth").as("side"), col("p").as("node"), col("v").as("score"))
-        .orderBy(col("score").desc, col("node"))
-        .limit(20)
-      hubs.unionByName(auths).orderBy(col("side"), col("score").desc, col("node"))
     },
     Some(hitsOracleSql(HitsIters))
   )

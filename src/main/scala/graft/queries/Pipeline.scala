@@ -464,11 +464,7 @@ object Pipeline {
 
   private[graft] def contaminationReport(
       docs: org.apache.spark.sql.DataFrame,
-      spreadAt: Long = 4096L,
-      materialize: Boolean = true): org.apache.spark.sql.DataFrame = {
-    // `materialize = false` preserves the pre-round-15 sort-over-pipeline
-    // plan SOLELY for the heap-retainer forensics probe
-    // (tools.ContamProbe) — every production path materializes
+      spreadAt: Long = 4096L): org.apache.spark.sql.DataFrame = {
     // member grain (doc_id, rep) + split label — one documents scan via
     // the cached exact-group table the dedup family shares
     val mem = Dedup
@@ -574,7 +570,6 @@ object Pipeline {
       // parquet before a byte is written (same ~2x-compression refusal
       // shape as the gate's), and the memo lets bench reps re-read it.
       val expanded = crossA.union(crossB).union(within)
-      if (!materialize) return expanded.orderBy("test_id", "leak_id")
       val key = (docs.queryExecution.analyzed.semanticHash(), spreadAt)
       val dir = contamMemo.computeIfAbsent(
         key,

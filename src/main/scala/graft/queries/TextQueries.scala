@@ -267,7 +267,8 @@ object TextQueries {
     * (an `element_at(toks, i)` lambda would re-split the text per element —
     * the O(tokens²) HOF trap). Zero exchanges before the verification
     * sort, at any corpus scale. Docs with <2 tokens keep their null
-    * bigram stats via the guarded `when`.
+    * bigram stats via the guarded `when`. Null-text docs are dropped, as
+    * in the oracle, where unnesting a NULL split yields no rows.
     */
   val repetition: Q = Q(
     "q_repetition",
@@ -278,7 +279,9 @@ object TextQueries {
       // (StageProbe r17: 0.58 s + 0.84 s single-task stages). Identity on
       // any healthy multi-split layout.
       val docs = graft.core.Spread.compute(
-        Tables(s, dir).documents.select(col("doc_id"), col("text")))
+        Tables(s, dir).documents
+          .filter(col("text").isNotNull)
+          .select(col("doc_id"), col("text")))
       val toks = split(lower(col("text")), " ", -1)
       // max multiplicity = longest equal-run in the sorted array: fold
       // (prev, run, top) over elements; exact integer, matches max(count)

@@ -74,13 +74,44 @@ class CoreUtilSpec extends AnyFunSuite {
       s"graft-waves-${spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9_.-]", "_")}" +
         s"-pay-coreutilspec-deadbeef-4")
     assert(dir.exists(), s"expected payload scratch at $dir")
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRec)
-      f.delete(): Unit
-    }
-    deleteRec(dir)
+    graft.ops.Sinks.deleteRecursively(dir.toPath)
     val again = graft.core.BucketedPayload
       .ensure(spark, "coreutilspec", "deadbeef", "doc_id", 4)(build)
     assert(again.count() == 64, "stale memo entry must rebuild, not fail")
+  }
+
+  /** A scratch dir holding `link` → an outside dir with one file in it. */
+  private def plantedLink(scratch: java.nio.file.Path): java.nio.file.Path = {
+    import java.nio.file.Files
+    val outside = Files.createTempDirectory("coreutilspec-outside")
+    Files.writeString(outside.resolve("keep.txt"), "keep")
+    Files.createDirectories(scratch.resolve("sub"))
+    Files.writeString(scratch.resolve("sub/part-0"), "scratch")
+    Files.createSymbolicLink(scratch.resolve("link"), outside)
+    Files.createSymbolicLink(scratch.resolve("sub/link"), outside)
+    outside
+  }
+
+  test("deleteRecursively removes a symlink to an outside dir as a link, not its target") {
+    import java.nio.file.Files
+    val scratch = Files.createTempDirectory("coreutilspec-scratch")
+    val outside = plantedLink(scratch)
+    try {
+      graft.ops.Sinks.deleteRecursively(scratch)
+      assert(!Files.exists(scratch, java.nio.file.LinkOption.NOFOLLOW_LINKS))
+      assert(Files.readString(outside.resolve("keep.txt")) == "keep")
+    } finally graft.ops.Sinks.deleteRecursively(outside)
+  }
+
+  test("freshDirFor clears a planted symlink without touching its target") {
+    import java.nio.file.{Files, Paths}
+    val spark   = graft.core.SparkEnv.session("graft-test")
+    val path    = Paths.get(graft.core.WaveScratch.dirFor(spark, "coreutilspec", "link"))
+    val outside = plantedLink(path)
+    try {
+      assert(graft.core.WaveScratch.freshDirFor(spark, "coreutilspec", "link") == path.toString)
+      assert(!Files.exists(path, java.nio.file.LinkOption.NOFOLLOW_LINKS))
+      assert(Files.readString(outside.resolve("keep.txt")) == "keep")
+    } finally graft.ops.Sinks.deleteRecursively(outside)
   }
 }

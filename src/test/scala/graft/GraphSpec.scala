@@ -277,6 +277,19 @@ class GraphSpec extends SparkSpec {
     }
   }
 
+  test("q_hits on an empty edge set returns no rows with the query's schema") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-hits-empty")
+    try {
+      graft.core.Tables(spark, sf).lineitem.limit(0)
+        .write.parquet(dir.resolve("lineitem.parquet").toString)
+      val empty = graft.queries.Registry.queries("q_hits")(spark, dir.toString)
+      val full  = graft.queries.Registry.queries("q_hits")(spark, sf)
+      def shape(df: org.apache.spark.sql.DataFrame) = df.schema.map(f => (f.name, f.dataType))
+      assert(shape(empty) == shape(full))
+      assert(empty.collect().isEmpty)
+    } finally graft.ops.Sinks.deleteRecursively(dir)
+  }
+
   test("q_link_predict: only distance-2 non-edges, scores match a driver replay") {
     val out = graft.queries.Registry.queries("q_link_predict")(spark, sf).collect()
     assert(out.nonEmpty, "fixture graph has no predicted links")

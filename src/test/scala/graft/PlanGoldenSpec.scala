@@ -63,7 +63,12 @@ class PlanGoldenSpec extends SparkSpec {
     // plan every half-step executes: score-frame BroadcastHashJoin with
     // ZERO exchange on the cached edge side (a flip back to the
     // both-sides-reshuffled SMJ must show as a diff)
-    "q_hits"
+    "q_hits",
+    // the shuffle-free in-row repetition folds (a token-grain exchange
+    // coming back shows as a diff) and q_cooccur's double-cache SMJ (a
+    // reappearing self-join Exchange shows as a diff)
+    "q_repetition",
+    "q_cooccur"
   )
 
   private def goldenFile(name: String) =
@@ -83,7 +88,7 @@ class PlanGoldenSpec extends SparkSpec {
           .replaceAll("@[0-9a-f]+\\b", "@x")             // object identity hashes
           // Catalyst lambda variables are freshly numbered per SESSION, so
           // their names depend on how many lambdas earlier suites analyzed
-          .replaceAll("\\blambda x_\\d+", "lambda x_n")
+          .replaceAll("\\blambda ([xy])_\\d+", "lambda $1_n")
           .replaceAll("\\[id=#x\\]", "[id=#x]")
           // file-index locations carry absolute paths and path counts
           .replaceAll("InMemoryFileIndex\\([^)]*\\)\\[[^\\]]*\\]", "InMemoryFileIndex [<paths>]")

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Memory-pressure / spill gate: forks [[graft.tools.SpillProbe]] into a
@@ -12,19 +14,15 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class SpillSpec extends AnyFunSuite {
 
-  // must mirror build.sbt's jdk17AddOpens — Spark 4 on JDK 17 cannot build
-  // a SparkContext without them when launched outside spark-submit
-  private val addOpens = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar"
-  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
+  // Spark 4 on JDK 17 cannot build a SparkContext without build.sbt's
+  // jdk17AddOpens when launched outside spark-submit; the forked test JVM
+  // carries them, so the probe inherits exactly that list
+  private val addOpens =
+    java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments.asScala.toSeq
+      .filter(_.startsWith("--add-opens="))
 
   test("heavy family completes in a 2g JVM with a starved pool — spills, never OOMs") {
+    assert(addOpens.nonEmpty, "test JVM carries no --add-opens= flags to forward")
     val javaBin = s"${System.getProperty("java.home")}/bin/java"
     val cp   = Seq("target/scala-2.13/classes", "/opt/spark/jars/*").mkString(":")
     val cmd = Seq(javaBin) ++ addOpens ++ Seq(
