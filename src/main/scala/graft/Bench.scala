@@ -452,7 +452,7 @@ object Bench {
     // steady-state probe costs ONLY; the one-time index/cache builds are
     // accounted here and never double-counted into a query. Round 14 also
     // merges walls recorded DURING the sweep (graft.core.BuildWalls — the
-    // bounded-wave enumeration memos, whose later reps just re-read
+    // contamination expansion memo, whose later reps just re-read
     // parquet; min-of-N would otherwise silently drop the build cost).
     val artJson = (artifacts ++ graft.core.BuildWalls.snapshot).toSeq.sortBy(_._1)
       .map { case (k, v) => "\"" + esc(k) + "\":" + fmt(v) }

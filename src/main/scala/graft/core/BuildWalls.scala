@@ -1,11 +1,11 @@
 package graft.core
 
 /** Session registry of offline-build wall times that happen INSIDE a query
-  * construction rather than in Bench.warmUp — today the bounded-wave
-  * enumeration memos (q_set_join and the band family's waved verify),
-  * whose first construction materializes every wave to scratch parquet
-  * and whose later reps then just re-read it. Min-of-N timing would record
-  * the parquet-scan wall and silently drop the enumeration cost; Bench
+  * construction rather than in Bench.warmUp — today the contamination
+  * report's salted expansion memo, whose first construction writes the
+  * expansion to scratch parquet and whose later reps then just re-read
+  * it. Min-of-N timing would record the parquet-scan wall and silently
+  * drop the expansion cost; Bench
   * merges this map into its `artifacts` field instead, the same honest
   * accounting the memoized pipeline stages get.
   */
@@ -13,7 +13,7 @@ object BuildWalls {
   private val walls =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Double]()
 
-  /** A session that builds waves for MORE than one plan under the same
+  /** A session that builds an artifact for MORE than one plan under the same
     * name (multi-fixture gate, retry after a corpus rewrite) must not
     * silently overwrite the earlier wall: the first build keeps the bare
     * name (so round-over-round artifact diffs keep matching), later ones

@@ -12,34 +12,11 @@ import org.apache.spark.storage.StorageLevel
   * unpersist discipline) has a single point of change.
   */
 object Cached {
-  /** Storage level for every family cache. Default MEMORY_AND_DISK (the
-    * fastest correct choice at bench scale); SPARK_GRAFT_CACHE_LEVEL
-    * overrides it for runs whose cached structures exceed what
-    * DESERIALIZED caching can healthily hold in one JVM — the 100× spot
-    * gate caches dedup structures for two 5M-doc corpora at once, and
-    * deserialized object graphs at that volume GC-thrash the driver
-    * (observed: heartbeat death at 80g heap). MEMORY_AND_DISK_SER holds
-    * compact serialized blocks and evicts cleanly; DISK_ONLY removes the
-    * pressure entirely. This mirrors production reality: at 100 TB these
-    * caches are materialized on-disk indexes, not in-JVM object graphs.
+  /** Persist `df` at MEMORY_AND_DISK (the fastest correct choice at bench
+    * scale) unless the plan is already cached.
     */
-  private lazy val level: StorageLevel =
-    sys.env.get("SPARK_GRAFT_CACHE_LEVEL") match {
-      case None => StorageLevel.MEMORY_AND_DISK
-      case Some(name) =>
-        try StorageLevel.fromString(name)
-        catch {
-          case _: IllegalArgumentException =>
-            throw new IllegalArgumentException(
-              s"SPARK_GRAFT_CACHE_LEVEL='$name' is not a StorageLevel; use one of " +
-                "NONE, DISK_ONLY, DISK_ONLY_2, DISK_ONLY_3, MEMORY_ONLY, MEMORY_ONLY_2, " +
-                "MEMORY_ONLY_SER, MEMORY_ONLY_SER_2, MEMORY_AND_DISK, MEMORY_AND_DISK_2, " +
-                "MEMORY_AND_DISK_SER, MEMORY_AND_DISK_SER_2, OFF_HEAP")
-        }
-    }
-
   def frame(df: DataFrame): DataFrame =
-    if (df.storageLevel == StorageLevel.NONE) df.persist(level) else df
+    if (df.storageLevel == StorageLevel.NONE) df.persist(StorageLevel.MEMORY_AND_DISK) else df
 
   /** Memoized `df.count()`, keyed on the analyzed plan's semantic hash —
     * the measure-then-decide probes (LSH plane derivation, IVF centroid

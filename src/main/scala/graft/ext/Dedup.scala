@@ -256,29 +256,17 @@ object Dedup {
 
   /** The band self-join itself, over whatever signature table the caller
     * chose — [[candidatePairs]] feeds it the collapsed grain; tests feed it
-    * the raw grain to prove the collapse output-equivalent. `d1Wave`
-    * (round 14) restricts the D1 side to one hash(doc_id) residue class
-    * BEFORE any pair exists — the band family's bounded-wave partition:
-    * every emitted pair has d1 = a.doc_id, so each pair lands in exactly
-    * the wave owning its d1 and the union over waves is the full set.
+    * the raw grain to prove the collapse output-equivalent.
     */
-  private[graft] def candidatePairsFrom(
-      sigs: DataFrame,
-      d1Wave: Option[(Int, Seq[Int])] = None): DataFrame =
-    bandSelfJoin(bands(sigs), d1Wave).distinct()
+  private[graft] def candidatePairsFrom(sigs: DataFrame): DataFrame =
+    bandSelfJoin(bands(sigs)).distinct()
 
   /** The raw (pre-distinct) band-bucket pair enumeration over an arbitrary
     * band-row frame — split out so the saturation re-route can run it over
-    * the NON-saturated buckets only. The wave filter sits on the A side
-    * (the d1 producer), so a waved run's enumeration join INPUT is already
-    * 1/waves — the filter never waits for pairs to exist.
+    * the NON-saturated buckets only.
     */
-  private def bandSelfJoin(b: DataFrame, d1Wave: Option[(Int, Seq[Int])] = None): DataFrame = {
-    val a = d1Wave match {
-      case Some((n, ws)) => b.filter(pmod(hash(col("doc_id")), lit(n)).isin(ws: _*))
-      case None          => b
-    }
-    a.alias("a")
+  private def bandSelfJoin(b: DataFrame): DataFrame =
+    b.alias("a")
       .join(
         b.alias("b"),
         col("a.band_id") === col("b.band_id") &&
@@ -286,7 +274,6 @@ object Dedup {
           col("a.doc_id") < col("b.doc_id")
       )
       .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-  }
 
   /** Band-bucket occupancy histogram over the (collapsed-grain) band
     * table — the telemetry the 100× gates record (round 13): one row per
@@ -364,14 +351,11 @@ object Dedup {
     * 3/10 Jaccard prefix would prune — which is why the re-route lives
     * here and not in the shared [[candidatePairs]].
     */
-  private[graft] def ngramCandidatePairs(
-      docs: DataFrame,
-      sat: Int,
-      d1Wave: Option[(Int, Seq[Int])] = None): DataFrame = {
+  private[graft] def ngramCandidatePairs(docs: DataFrame, sat: Int): DataFrame = {
     val sigs =
       if (hasExactDups(docs)) cached(signatures(docs).join(repIds(docs), "doc_id"))
       else signatures(docs)
-    if (!hasSaturatedBuckets(docs, sigs, sat)) candidatePairsFrom(sigs, d1Wave)
+    if (!hasSaturatedBuckets(docs, sigs, sat)) candidatePairsFrom(sigs)
     else {
       val b = bands(sigs)
       val occ = b.groupBy("band_id", "band_val").agg(count(lit(1)).as("n"))
@@ -379,7 +363,7 @@ object Dedup {
       val satKeys = broadcast(
         occ.filter(col("n") > sat).select("band_id", "band_val"))
       val bKeys   = Seq("band_id", "band_val")
-      val candN   = bandSelfJoin(b.join(satKeys, bKeys, "left_anti"), d1Wave)
+      val candN   = bandSelfJoin(b.join(satKeys, bKeys, "left_anti"))
       val satDocs = b.join(satKeys, bKeys)
       // rare-first canonical gram order over the saturated members (any
       // global order preserves completeness; df over this subset is the
@@ -407,7 +391,7 @@ object Dedup {
         )
       val saltB = SetJoin.saltBFor(docs)
       candN
-        .union(SetJoin.groupedPrefixCandidates(sets, NgTNum, NgTDen, saltB, d1Wave))
+        .union(SetJoin.groupedPrefixCandidates(sets, NgTNum, NgTDen, saltB))
         .distinct()
     }
   }
@@ -467,120 +451,6 @@ object Dedup {
         )
     )
 
-  /** Predicted footprint of a band-candidate verify, computed BEFORE any
-    * pair is enumerated — [[SetJoin.CandidateEstimate]]'s analog for the
-    * band family (round 14; the 5M-doc telemetry predicted >100 GB of
-    * verify traffic against 78 GB free, and unlike set-join the family
-    * could SEE the ceiling but not bound it).
-    *
-    *   - `enumPairs`: Σ n·(n−1)/2 over band buckets at the collapsed grain
-    *     — one aggregate over the cached band table, an upper bound on the
-    *     rows entering the candidate distinct (for the saturation-re-routed
-    *     buckets the prefix principle enumerates FEWER, so the bound only
-    *     over-predicts — the safe side for a wave decision);
-    *   - `survival`: distinct-candidates / raw-enumeration measured on a
-    *     deterministic ~10% doc sample through the REAL band self-join +
-    *     distinct (pair volume scales as the sample rate squared, so the
-    *     sample join costs ~1% of the real enumeration);
-    *   - `bytes`: the three exchanges every verify pays — raw pairs into
-    *     the candidate distinct, distinct pairs through the numbered d1
-    *     spread, and the d2-routing exchange carrying the xxhash64 payload
-    *     (whose SMJ sort also spills ~that volume; raw bytes kept, LZ4 is
-    *     the margin — the exact model the set-join scale gate validated
-    *     at three scales, ratios 0.93/1.18/1.25; COVERAGE.md).
-    */
-  final case class VerifyEstimate(
-      enumPairs: Long,
-      survival: Double,
-      avgPayload: Double,
-      bytes: Long) {
-    def distinctPairs: Long = (enumPairs * survival).toLong
-  }
-
-  private val verifyEstMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), VerifyEstimate]()
-
-  /** Memoized per (documents plan, payload grain). `grain` picks the
-    * verify payload the d2 exchange carries: "gram" (char-4-gram hashes,
-    * [[ngramVerifiedPairs]]) or "shingle" (3-word-shingle hashes,
-    * [[verifiedPairs]] consumers). Runs Spark jobs at construction — only
-    * called when a [[SetJoin.shuffleBudget]] is set (gates), never on the
-    * plain bench/correctness path.
-    */
-  private[graft] def bandVerifyEstimate(docs: DataFrame, grain: String): VerifyEstimate = {
-    val sigs =
-      if (hasExactDups(docs)) cached(signatures(docs).join(repIds(docs), "doc_id"))
-      else signatures(docs)
-    verifyEstMemo.computeIfAbsent(
-      (docs.queryExecution.analyzed.semanticHash(), grain),
-      _ => {
-        def enumOf(b: DataFrame): Long =
-          b.groupBy("band_id", "band_val")
-            .agg(count(lit(1)).as("n"))
-            .agg(coalesce(expr("sum(n * (n - 1)) div 2"), lit(0L)).as("p"))
-            .first()
-            .getLong(0)
-        val enumPairs = enumOf(bands(sigs))
-        val sB        = bands(sigs.filter(pmod(xxhash64(col("doc_id")), lit(10)) === 0))
-        val sEnum     = enumOf(sB)
-        val survival =
-          if (sEnum == 0L) 1.0
-          else math.min(1.0, bandSelfJoin(sB).distinct().count().toDouble / sEnum)
-        val avgPayload = {
-          val c = if (grain == "gram") gramSets(docs).agg(avg(col("gsz")))
-                  else shingleHashes(docs).agg(avg(col("ssz")))
-          Option(c.first().get(0)).fold(0.0)(_.asInstanceOf[Double])
-        }
-        val surviving = (enumPairs * survival).toLong
-        val bytes = enumPairs * SetJoin.CandRowBytes +
-          surviving * SetJoin.CandRowBytes +
-          surviving * (SetJoin.VerifyRowOverhead + (avgPayload * SetJoin.HashTokBytes).toLong)
-        val est = VerifyEstimate(enumPairs, survival, avgPayload, bytes)
-        System.err.println(
-          f"[dedup] $grain verify estimate: enum_pairs=$enumPairs " +
-            f"sampled_survival=$survival%.3f distinct_pairs=${est.distinctPairs} " +
-            f"avg_payload=$avgPayload%.1f predicted_bytes=$bytes (~${bytes / 1048576.0}%.0f MiB)"
-        )
-        est
-      }
-    )
-  }
-
-  /** Wave count for a budgeted verify: ⌈bytes/budget⌉ capped like
-    * set-join's; None when the predicted footprint fits in one wave.
-    */
-  private def verifyWaves(est: VerifyEstimate, budget: Long): Option[Int] =
-    if (est.bytes > budget) Some(math.min(1024L, (est.bytes + budget - 1) / budget).toInt)
-    else None
-
-  /** Predicted volume of a CROSS-corpus candidate enumeration (seen×new,
-    * train×test — the grain the self-join estimators above do not cover):
-    * Σ_key |left|·|right| over the join-key groups, each key's counts from
-    * one aggregate per side — no pair is enumerated. Logged so every verify
-    * consumer states its footprint before enumerating; returns the
-    * predicted bytes. Only called when a budget is set (construction-time
-    * Spark jobs).
-    */
-  private[graft] def logCrossVerifyEstimate(
-      name: String,
-      left: DataFrame,
-      right: DataFrame,
-      keys: Seq[String],
-      perRowBytes: Double): Long = {
-    val lc = left.groupBy(keys.map(col): _*).agg(count(lit(1)).as("nl"))
-    val rc = right.groupBy(keys.map(col): _*).agg(count(lit(1)).as("nr"))
-    val pairs = lc
-      .join(rc, keys)
-      .agg(coalesce(sum(col("nl") * col("nr")), lit(0L)).as("p"))
-      .first()
-      .getLong(0)
-    val bytes = (pairs * perRowBytes).toLong
-    System.err.println(
-      f"[dedup] $name cross-verify estimate: enum_pairs=$pairs " +
-        f"predicted_bytes=$bytes (~${bytes / 1048576.0}%.0f MiB)")
-    bytes
-  }
-
   /** Candidates verified with exact Jaccard over distinct 3-shingle sets.
     * Candidate generation and verification share the cached [[shingleSets]]
     * table — one `documents` scan for the whole query. Pairs are at the
@@ -588,94 +458,9 @@ object Dedup {
     * exact copies never re-verify, so a 100k-copy group costs nothing here
     * instead of 5·10⁹ Jaccard evaluations; its multiplicity lives in
     * [[exactGroups]] and the member star of [[nearDupEdges]].
-    *
-    * Round 14: with a [[SetJoin.shuffleBudget]] configured and the
-    * [[bandVerifyEstimate]] above it, the candidate enumeration + verify
-    * runs as bounded hash(d1)-residue waves ([[nearDuplicatesWaved]]) —
-    * output-identical, per-wave footprint under the budget. Unset ⇒ the
-    * unchanged single-wave plan every fixture/bench run takes.
     */
   def nearDuplicates(docs: DataFrame, threshold: Double): DataFrame =
-    SetJoin.shuffleBudget match {
-      case Some(budget) =>
-        val est = bandVerifyEstimate(docs, "shingle")
-        verifyWaves(est, budget) match {
-          case Some(waves) =>
-            System.err.println(
-              s"[dedup] predicted ${est.bytes} B exceeds budget $budget B — " +
-                s"verifying shingle candidates in $waves bounded waves")
-            nearDuplicatesWaved(docs, threshold, waves, est.bytes / waves, Some(budget))
-          case None => verifiedPairs(candidatePairs(docs), docs, threshold)
-        }
-      case None => verifiedPairs(candidatePairs(docs), docs, threshold)
-    }
-
-  /** Bounded-wave shingle verify: each batch of hash(d1) residue classes
-    * owns the candidate pairs whose d1 falls in it — the wave filter sits
-    * on the band join's A side, so each wave's enumeration, distinct, and
-    * verify exchanges all carry only its batch's share of the volume; each
-    * wave is its own materialized action with shuffle files GC-cleaned
-    * before the next (the [[SetJoin.similarityJoinWaved]] machinery,
-    * applied to the band candidate grain). Union over waves ≡ the
-    * single-wave output because every pair has exactly one d1. Memoized per
-    * (docs plan, threshold, waves) so repeated constructions re-read the
-    * parquet. Round 15: the verify payload (shingle hash + string arrays)
-    * is materialized once per campaign as a doc_id-bucketed table so each
-    * wave's verify joins read it exchange-free ([[graft.core
-    * .BucketedPayload]]), and the wave count re-plans from measured bytes
-    * ([[graft.core.AdaptiveWaves]]; `budget` None ⇒ fixed batches, the
-    * spec entry point).
-    */
-  private[graft] def nearDuplicatesWaved(
-      docs: DataFrame,
-      threshold: Double,
-      waves: Int,
-      perWaveBytes: Long = 0L,
-      budget: Option[Long] = None): DataFrame = {
-    val spark = docs.sparkSession
-    val key   = (docs.queryExecution.analyzed.semanticHash(), threshold, waves)
-    val sigs =
-      if (hasExactDups(docs)) cached(signatures(docs).join(repIds(docs), "doc_id"))
-      else signatures(docs)
-    val dir = nearDupWavedMemo.computeIfAbsent(
-      key,
-      _ => {
-        // full threshold BITS in the dir key: the memo keys on the exact
-        // Double, so a truncated decimal here would let two thresholds
-        // equal at 3 decimals share one directory while holding distinct
-        // memo entries — the masked-key collision WaveScratch forbids.
-        // freshDirFor (round 16): the waves APPEND into this dir, so a
-        // retry after a mid-campaign failure must start from empty or the
-        // failed attempt's waves get duplicated (WaveRetrySpec pins it)
-        val out = graft.core.WaveScratch.freshDirFor(
-          spark,
-          "neardup",
-          f"${key._1}%08x-${java.lang.Double.doubleToLongBits(threshold).toHexString}-$waves")
-        val payKey = f"${key._1}%08x"
-        val nb     = spark.sparkContext.defaultParallelism
-        val hpay =
-          graft.core.BucketedPayload.ensure(spark, "shhash", payKey, "doc_id", nb)(
-            shingleHashes(docs))
-        val spay =
-          graft.core.BucketedPayload.ensure(spark, "shset", payKey, "doc_id", nb)(
-            shingleSets(docs))
-        val tAll = System.nanoTime()
-        graft.core.AdaptiveWaves.run(
-          spark, "neardup", 0 until waves, waves, perWaveBytes, budget) { ws =>
-          verifiedPairs(
-            candidatePairsFrom(sigs, Some((waves, ws))), docs, threshold,
-            Some((hpay, spay)))
-            .write.mode("append").parquet(out)
-        }
-        graft.core.BuildWalls.record("neardup_verify_waves", (System.nanoTime() - tAll) / 1e9)
-        out
-      }
-    )
-    spark.read.parquet(dir)
-  }
-
-  private val nearDupWavedMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, Double, Int), String]()
+    verifiedPairs(candidatePairs(docs), docs, threshold)
 
   /** Exact-Jaccard verification of a (d1, d2) candidate set against the
     * cached shingle-set table — the ONE definition both the collapsed and
@@ -694,18 +479,9 @@ object Dedup {
     * against the final double comparison (double rounding is ≤ ~1e-16
     * relative; the pruning power loses nothing at 1e-9).
     */
-  private def verifiedPairs(
-      cand: DataFrame,
-      docs: DataFrame,
-      threshold: Double,
-      payload: Option[(DataFrame, DataFrame)] = None): DataFrame = {
-    // `payload` (round 15): (hash-tier, string-tier) frames to read the
-    // verify columns from instead of the session caches — the wave loop
-    // passes once-per-campaign doc_id-bucketed tables so each wave's four
-    // verify joins scan them exchange-free instead of re-shuffling the
-    // full payload per wave (the round-14 per-wave fixed term)
-    val sets  = payload.fold(shingleSets(docs))(_._2)
-    val hsets = payload.fold(shingleHashes(docs))(_._1)
+  private def verifiedPairs(cand: DataFrame, docs: DataFrame, threshold: Double): DataFrame = {
+    val sets  = shingleSets(docs)
+    val hsets = shingleHashes(docs)
     val tm    = threshold - 1e-9
     // HASH-FIRST topology (round 13; SetJoin/ngram precedent): the
     // exchange that routes each candidate row to its d2 side used to carry
@@ -828,20 +604,6 @@ object Dedup {
       )
     )
     val bt = cached(bands(signaturesFromSets(feats, Seq("__is_new")), Seq("__is_new")))
-    // budget-gated footprint statement (round 14): the seen×new candidate
-    // grain has its own volume model — Σ_bucket |new|·|seen| — logged
-    // before any pair is enumerated, like every other verify consumer
-    if (SetJoin.shuffleBudget.isDefined) {
-      val avgSz =
-        Option(feats.agg(avg(size(col("sset")))).first().get(0)).fold(0.0)(_.asInstanceOf[Double])
-      logCrossVerifyEstimate(
-        "incremental_neardup",
-        bt.filter(col("__is_new")),
-        bt.filter(!col("__is_new")),
-        Seq("band_id", "band_val"),
-        SetJoin.VerifyRowOverhead + avgSz * 20.0
-      ): Unit
-    }
     val cand = bt
       .filter(col("__is_new"))
       .select(col("doc_id").as("new_id"), col("band_id"), col("band_val"))
@@ -1125,98 +887,17 @@ object Dedup {
       docs: DataFrame,
       pruned: Boolean = true,
       sat: Int = BandSatThreshold): DataFrame = {
-    // Round 14: budget-aware routing — the pruned path switches to bounded
-    // hash(d1)-residue waves when the estimator predicts the verify
-    // footprint above SPARK_GRAFT_SHUFFLE_BUDGET (the 5M-doc telemetry
-    // showed the family SEEING its >100 GB ceiling but not bounding it).
-    // Unset budget (every fixture/bench/correctness run) ⇒ the unchanged
-    // single-wave plan.
-    val waved =
-      if (pruned) SetJoin.shuffleBudget.flatMap { budget =>
-        val est = bandVerifyEstimate(docs, "gram")
-        verifyWaves(est, budget).map { waves =>
-          System.err.println(
-            s"[dedup] predicted ${est.bytes} B exceeds budget $budget B — " +
-              s"verifying gram candidates in $waves bounded waves")
-          (waves, est.bytes / waves, budget)
-        }
-      }
-      else None
-    waved match {
-      case Some((waves, perWave, budget)) =>
-        ngramVerifiedPairsWaved(docs, sat, waves, perWave, Some(budget))
-      case None =>
-        // saturation-aware candidate tier (round 13): identical output, but
-        // over-occupied band buckets enumerate through the exact prefix
-        // filter
-        val cand0 = if (pruned) ngramCandidatePairs(docs, sat) else candidatePairs(docs)
-        ngramVerify(docs, cand0, pruned).orderBy("d1", "d2")
-    }
+    // saturation-aware candidate tier (round 13): identical output, but
+    // over-occupied band buckets enumerate through the exact prefix filter
+    val cand0 = if (pruned) ngramCandidatePairs(docs, sat) else candidatePairs(docs)
+    ngramVerify(docs, cand0, pruned).orderBy("d1", "d2")
   }
 
-  /** Bounded-wave gram verify — [[nearDuplicatesWaved]]'s shape over the
-    * [[ngramVerify]] tiers: wave w verifies the candidates whose d1 falls
-    * in hash(d1) residue class w (the filter rides the band join's A side
-    * and the prefix re-route's A side, so every wave exchange carries
-    * ~1/waves), each wave its own materialized action. Union ≡ single
-    * wave; ExtSpec pins it.
+  /** The tiered gram verify over an arbitrary candidate frame (unsorted;
+    * [[ngramVerifiedPairs]] appends the orderBy).
     */
-  private[graft] def ngramVerifiedPairsWaved(
-      docs: DataFrame,
-      sat: Int,
-      waves: Int,
-      perWaveBytes: Long = 0L,
-      budget: Option[Long] = None): DataFrame = {
-    val spark = docs.sparkSession
-    val key   = (docs.queryExecution.analyzed.semanticHash(), sat, waves)
-    val dir = ngramWavedMemo.computeIfAbsent(
-      key,
-      _ => {
-        // freshDirFor: the waves append — retry-after-failure must not
-        // re-append the failed attempt's waves (WaveRetrySpec)
-        val out =
-          graft.core.WaveScratch.freshDirFor(spark, "ngram", f"${key._1}%08x-$sat-$waves")
-        // once-per-campaign doc_id-bucketed gram payload: each wave's
-        // verify joins scan it exchange-free (round 15 — the per-wave d2
-        // re-exchange was the dominant fixed term at 5M docs)
-        val gpay = graft.core.BucketedPayload.ensure(
-          spark,
-          "gram",
-          f"${key._1}%08x",
-          "doc_id",
-          spark.sparkContext.defaultParallelism)(gramSets(docs))
-        val tAll = System.nanoTime()
-        graft.core.AdaptiveWaves.run(
-          spark, "ngram", 0 until waves, waves, perWaveBytes, budget) { ws =>
-          ngramVerify(
-            docs, ngramCandidatePairs(docs, sat, Some((waves, ws))), pruned = true,
-            payload = Some(gpay))
-            .write.mode("append").parquet(out)
-        }
-        graft.core.BuildWalls.record("ngram_verify_waves", (System.nanoTime() - tAll) / 1e9)
-        out
-      }
-    )
-    spark.read.parquet(dir).orderBy("d1", "d2")
-  }
-
-  private val ngramWavedMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, Int, Int), String]()
-
-  /** The tiered gram verify over an arbitrary candidate frame — the
-    * [[ngramVerifiedPairs]] body shared verbatim by the single-wave path
-    * (which appends the orderBy) and the wave loop (which materializes
-    * each wave unsorted and sorts the union).
-    */
-  private def ngramVerify(
-      docs: DataFrame,
-      cand0: DataFrame,
-      pruned: Boolean,
-      payload: Option[DataFrame] = None): DataFrame = {
-    // `payload`: a gramSets-schema frame to read the verify columns from
-    // instead of the session cache — the wave loop passes the
-    // once-per-campaign doc_id-bucketed table (see nearDuplicatesWaved)
-    val sets = payload.getOrElse(gramSets(docs))
+  private def ngramVerify(docs: DataFrame, cand0: DataFrame, pruned: Boolean): DataFrame = {
+    val sets = gramSets(docs)
     val gated =
       if (pruned) {
         // HASH-FIRST topology (round 13, SetJoin.verifiedForSalts

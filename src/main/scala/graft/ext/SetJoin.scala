@@ -96,8 +96,7 @@ object SetJoin {
       sets: DataFrame,
       tNum: Long,
       tDen: Long,
-      saltB: Int,
-      d1Wave: Option[(Int, Seq[Int])] = None): DataFrame = {
+      saltB: Int): DataFrame = {
     val par = sets.sparkSession.sparkContext.defaultParallelism
     // |d| − ⌈t·|d|⌉ + 1 in exact integers: ⌈t·sz⌉ = (sz·tNum + tDen − 1) div tDen
     val plen =
@@ -109,15 +108,7 @@ object SetJoin {
       col("sz"),
       posexplode(slice(col("toks"), lit(1), plen)).as(Seq("pos", "tok"))
     )
-    // bounded-wave restriction (round 14; round 15 batches): every emitted
-    // pair has d1 = a.doc_id, so filtering the A side to a SET of
-    // hash(doc_id) residue classes partitions the pair set exactly — each
-    // pair lands in the single batch owning its d1
-    val prefA0 = d1Wave match {
-      case Some((n, ws)) => pref.filter(pmod(hash(col("doc_id")), lit(n)).isin(ws: _*))
-      case None          => pref
-    }
-    val prefA = prefA0
+    val prefA = pref
       .withColumn("salt", pmod(hash(col("doc_id")), lit(saltB)))
       .repartition(par, col("gid"), col("tok"), col("salt"))
     val prefB = pref
@@ -140,197 +131,6 @@ object SetJoin {
       .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
       .distinct()
   }
-
-  /** Predicted volume of the candidate-enumeration shuffle, computed from
-    * the prefix frame BEFORE any pair is enumerated (round 13; the 100×
-    * gate hit ENOSPC at minute ~80 of healthy enumeration — the one
-    * failure mode the engine could not see coming, because the quadratic
-    * term lives in the join OUTPUT, invisible to input-byte statistics).
-    *
-    *   - `prefRows`: Σ per-doc prefix length — the linear term (the salted
-    *     d2-side replicates it saltB×).
-    *   - `enumPairs`: Σ_tok cnt·(cnt−1)/2 over prefix-token groups — every
-    *     candidate the equi-join can emit meets at exactly one (tok, salt)
-    *     with d1 < d2, so this is an upper bound on enumerated rows (the
-    *     length/positional prunes only subtract). One cheap aggregate on
-    *     the already-cached ordered-set grain.
-    *   - `bytes`: predicted shuffle write of the enumeration stage —
-    *     candidates entering the distinct at ~[[CandRowBytes]]/row plus the
-    *     saltB× prefix replication at ~[[PrefRowBytes]]/row. The constants
-    *     are UnsafeRow sizes after shuffle compression, validated against
-    *     measured shuffle-write bytes by the set-join scale gate recorded
-    *     in COVERAGE.md (target: within ~2×); they predict ORDER, not exact
-    *     bytes.
-    */
-  final case class CandidateEstimate(
-      prefRows: Long,
-      enumPairs: Long,
-      avgSz: Double,
-      survival: Double,
-      bytes: Long) {
-    /** Predicted surviving candidate pairs — the quantity the sampling
-      * estimates directly (validated at the 150k-doc gate: predicted 169M
-      * vs 170.2M counted, 0.6% error).
-      */
-    def survivingPairs: Long = (enumPairs * survival).toLong
-  }
-
-  /** (d1: long, d2: long) UnsafeRow = 24 B; shuffle LZ4 on near-random ids
-    * buys little — call it 20. `private[ext]`: the band family's verify
-    * estimator ([[Dedup]]) models the same exchanges with the same
-    * constants, validated by the same set-join gate calibration.
-    */
-  private[ext] val CandRowBytes = 20L
-
-  /** (doc_id, sz, pos, tok-string ~3 words, salt) ≈ 64 B raw, text
-    * compresses ~2× — call it 32.
-    */
-  private val PrefRowBytes = 32L
-
-  /** One element of the xxhash64 array a surviving candidate row carries
-    * through the verify's d2 exchange: 8 B of incompressible hash + array
-    * slot overhead.
-    */
-  private[ext] val HashTokBytes = 9L
-
-  /** Fixed columns of a surviving verify row (two ids, two sizes, hok
-    * flags, UnsafeRow headers).
-    */
-  private[ext] val VerifyRowOverhead = 40L
-
-
-  private val estimateMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, Int), CandidateEstimate]()
-
-
-  /** Memoized per (ordered-set plan, saltB): the estimate is read on every
-    * [[similarityJoin]] construction (bench reps, verify, gates) but its
-    * jobs run once per session and corpus. Three cheap measurements, all
-    * BEFORE any full-corpus pair is enumerated:
-    *
-    *   1. exact prefix-token stats — Σ cnt, Σ cnt·(cnt−1)/2 over prefix
-    *     groups (the enumeration upper bound) and the mean set size (the
-    *     verify exchange's per-row payload);
-    *   2. a deterministic ~10% DOC sample (pmod(xxhash64(doc_id), 10) = 0)
-    *     through the REAL candidate conditions — tok equi-join, d1 < d2,
-    *     length ratio, positional bound, distinct — giving the survival
-    *     rate of the prefix prunes. Pair volume scales as the sample rate
-    *     SQUARED, so the sample join costs ~1% of the real enumeration,
-    *     and hot groups (where the volume lives) keep thousands of sampled
-    *     members — exactly where the rate estimate must be tight;
-    *   3. predicted bytes = surviving pairs × (fixed row + hash-array
-    *     payload) — the verify's d2 exchange, the stage both observed
-    *     ENOSPCs died in — plus the enumeration/distinct pair shuffle and
-    *     the saltB× prefix replication.
-    */
-  private[graft] def candidateEstimate(docs: DataFrame, saltBArg: Int = 0): CandidateEstimate = {
-    val saltB = if (saltBArg > 0) saltBArg else saltBFor(docs)
-    val base =
-      if (Dedup.hasExactDups(docs)) docs.join(Dedup.repIds(docs), "doc_id") else docs
-    val os = orderedSets(base)
-    estimateMemo.computeIfAbsent(
-      (os.queryExecution.analyzed.semanticHash(), saltB),
-      _ => {
-        val row = prefixFrame(os)
-          .groupBy("tok")
-          .agg(count(lit(1)).as("cnt"))
-          .agg(sum(col("cnt")).as("rows"), expr("sum(cnt * (cnt - 1)) div 2").as("pairs"))
-          .first()
-        val est =
-          if (row.isNullAt(0)) CandidateEstimate(0L, 0L, 0.0, 1.0, 0L)
-          else {
-            val prefRows = row.getLong(0)
-            val pairs    = row.getLong(1)
-            val avgSz =
-              os.agg(avg(col("sz"))).first().getDouble(0)
-            val sample = os.filter(pmod(xxhash64(col("doc_id")), lit(10)) === 0)
-            val sPref  = prefixFrame(sample)
-            val sEnum = sPref
-              .groupBy("tok")
-              .agg(count(lit(1)).as("cnt"))
-              .agg(expr("sum(cnt * (cnt - 1)) div 2").as("pairs"))
-              .first()
-            val sampleEnum = if (sEnum.isNullAt(0)) 0L else sEnum.getLong(0)
-            val survival =
-              if (sampleEnum == 0L) 1.0
-              else {
-                val sSurv = sPref
-                  .alias("a")
-                  .join(
-                    sPref.alias("b"),
-                    col("a.tok") === col("b.tok") &&
-                      col("a.doc_id") < col("b.doc_id") &&
-                      col("a.sz") * TNum <= col("b.sz") * TDen &&
-                      col("b.sz") * TNum <= col("a.sz") * TDen &&
-                      lit(1) + least(col("a.sz") - col("a.pos") - 1, col("b.sz") - col("b.pos") - 1) >=
-                      expr(
-                        s"(${TNum}L * (CAST(a.sz AS BIGINT) + b.sz) + ${TNum + TDen - 1}L) div ${TNum + TDen}L"
-                      )
-                  )
-                  .select(col("a.doc_id"), col("b.doc_id"))
-                  .distinct()
-                  .count()
-                math.min(1.0, sSurv.toDouble / sampleEnum)
-              }
-            val surviving = (pairs * survival).toLong
-            // the prunes are JOIN conditions, so only SURVIVORS reach any
-            // exchange: twice as bare pairs (distinct + the d1 spread),
-            // once carrying the hash-array payload (the d2 verify route,
-            // whose SMJ sort also SPILLS ~this volume — the r12/r13
-            // ENOSPCs died in that spill, so the footprint model keeps raw
-            // bytes; LZ4 savings on the shuffle files are the safety
-            // margin, not the estimate)
-            val raw = surviving * 2 * CandRowBytes +
-              surviving * (VerifyRowOverhead + (avgSz * HashTokBytes).toLong) +
-              prefRows * saltB * PrefRowBytes
-            CandidateEstimate(prefRows, pairs, avgSz, survival, raw)
-          }
-        System.err.println(
-          f"[setjoin] candidate estimate: prefix_rows=${est.prefRows} enum_pairs=${est.enumPairs} " +
-            f"avg_sz=${est.avgSz}%.1f sampled_survival=${est.survival}%.3f " +
-            f"surviving_pairs=${est.survivingPairs} " +
-            f"predicted_bytes=${est.bytes} (~${est.bytes / 1048576.0}%.0f MiB) saltB=$saltB"
-        )
-        est
-      }
-    )
-  }
-
-  /** Optional enumeration-shuffle budget in bytes (suffixes k/m/g accepted):
-    * when [[candidateEstimate]] predicts more, [[similarityJoin]] switches
-    * to bounded-wave enumeration sized so each wave stays under it. Unset ⇒
-    * single wave (the plan the 10× gate certified). This is the knob a
-    * single-node run sets to its free scratch disk; on a real cluster the
-    * shuffle distributes across executor disks and the budget is the
-    * per-node aggregate.
-    */
-  private[graft] def shuffleBudget: Option[Long] =
-    sys.env.get("SPARK_GRAFT_SHUFFLE_BUDGET").map { s =>
-      val b =
-        try parseBytes(s)
-        catch {
-          case _: NumberFormatException =>
-            throw new IllegalArgumentException(
-              s"SPARK_GRAFT_SHUFFLE_BUDGET='$s' is not a byte count; use e.g. 40g, 512m, 1000000")
-        }
-      // a zero budget would divide the wave computation by zero; a negative
-      // one silently selects the single-wave path — both are config errors
-      require(
-        b > 0,
-        s"SPARK_GRAFT_SHUFFLE_BUDGET='$s' parses to $b bytes; the budget must be positive")
-      b
-    }
-
-  private[graft] def parseBytes(s: String): Long = {
-    val t = s.trim.toLowerCase
-    val (num, mult) =
-      if (t.endsWith("g")) (t.dropRight(1), 1L << 30)
-      else if (t.endsWith("m")) (t.dropRight(1), 1L << 20)
-      else if (t.endsWith("k")) (t.dropRight(1), 1L << 10)
-      else (t, 1L)
-    (num.toDouble * mult).toLong
-  }
-
 
   /** Per-doc shingle sets ordered by the global rare-first canonical
     * order, with sizes — the grain both the prefix generator and the
@@ -394,37 +194,10 @@ object SetJoin {
     * size-derived fan-out was measured at sf0.1 and bought nothing (the
     * small-scale residual is the spread/hok correctness work, not the
     * salt), so the plan the 10× gate certified is the plan at every data
-    * scale; only the SESSION's core count moves the fan-out. When a
-    * [[shuffleBudget]] is configured and [[candidateEstimate]] predicts the
-    * enumeration shuffle exceeds it, the join switches to bounded-wave
-    * enumeration ([[similarityJoinWaved]]) — output-identical, footprint
-    * bounded per wave.
+    * scale; only the SESSION's core count moves the fan-out.
     */
-  def similarityJoin(docs: DataFrame): DataFrame = {
-    val saltB = saltBFor(docs)
-    // estimate only when a budget could act on it: the estimate's Spark
-    // jobs (prefix aggregate + 10% sample join) are cheap next to a gate
-    // run but NOT next to a plan-golden construction or a bench rep, and
-    // with no budget set the result cannot change the plan (the gates call
-    // candidateEstimate explicitly for their records)
-    shuffleBudget match {
-      case Some(budget) =>
-        val est = candidateEstimate(docs, saltB)
-        if (est.bytes > budget) {
-          val waves = math.min(1024L, (est.bytes + budget - 1) / budget).toInt
-          // waves partition the SALT space, so a finer split than saltB
-          // needs a wider fan-out — exactness holds at any saltB (each pair
-          // still meets exactly once at hash(d1) mod saltB); 1024 caps the
-          // prefix replication at a sane multiple
-          val saltW = math.max(saltB, waves)
-          System.err.println(
-            s"[setjoin] predicted ${est.bytes} B exceeds budget $budget B — " +
-              s"enumerating in $waves bounded waves over a $saltW-salt space")
-          similarityJoinWaved(docs, saltW, waves, est.bytes / waves, Some(budget))
-        } else similarityJoinWith(docs, saltB)
-      case None => similarityJoinWith(docs, saltB)
-    }
-  }
+  def similarityJoin(docs: DataFrame): DataFrame =
+    similarityJoinWith(docs, saltBFor(docs))
 
   /** [[similarityJoin]] at an explicit salt fan-out — split out so
     * SetJoinSpec can prove the salted enumeration equals brute force on a
@@ -434,116 +207,22 @@ object SetJoin {
     val base =
       if (Dedup.hasExactDups(docs)) docs.join(Dedup.repIds(docs), "doc_id") else docs
     val os = orderedSets(base)
-    verifiedForSalts(os, saltB, 0 until saltB).orderBy("d1", "d2")
+    verifiedForSalts(os, saltB).orderBy("d1", "d2")
   }
 
-  /** Bounded-wave enumeration: the salt space is partitioned into batches
-    * of residue classes and each batch's candidate enumeration + verify
-    * runs as its OWN action, appended to scratch parquet, before the next
-    * starts — so the peak enumeration-shuffle footprint on disk is
-    * ~budget-bounded instead of the single-wave plan's. Exactness is
-    * unchanged: each (d1, d2) pair meets at exactly one salt
-    * (= hash(d1) mod saltB), every salt lands in exactly one batch, so the
-    * union over batches is the single-wave candidate set with every pair
-    * exactly once — SetJoinSpec pins waved ≡ single-wave output at fixed
-    * AND re-planned batchings.
-    *
-    * Round 15, two wall-clock cuts on top of the round-14 bound:
-    *   - the verify payload (hash + string token arrays per doc) is
-    *     materialized ONCE per campaign as a doc_id-bucketed table
-    *     ([[graft.core.BucketedPayload]]), so each wave's verify joins read
-    *     it exchange-free instead of re-shuffling the full payload per
-    *     wave — the dominant per-wave fixed term at 5M docs;
-    *   - the wave count is re-planned from measured bytes after each batch
-    *     ([[graft.core.AdaptiveWaves]]): the byte model over-predicts
-    *     2.6–12.8× in the no-spill regime, and each over-bought wave paid
-    *     the fixed term above. The model's count stays the initial plan
-    *     (never exceeded); later batches grow to what the budget fits at
-    *     the measured per-salt rate.
-    *
-    * The materialized union is memoized per (ordered-set plan, saltB,
-    * waves) so repeated constructions (bench reps) re-read the parquet
-    * instead of re-enumerating. The budget is NOT part of the key: it
-    * shapes batching only, never output.
+  /** The verified-pairs pipeline over the ordered-set grain at salt
+    * fan-out `saltB` (unsorted; the caller orders): prefix-token candidate
+    * enumeration, then the hash-tier and exact string-tier verify.
     */
-  private[graft] def similarityJoinWaved(
-      docs: DataFrame,
-      saltB: Int,
-      wavesArg: Int,
-      perWaveBytes: Long = 0L,
-      budget: Option[Long] = None): DataFrame = {
-    val spark = docs.sparkSession
-    val base =
-      if (Dedup.hasExactDups(docs)) docs.join(Dedup.repIds(docs), "doc_id") else docs
-    val os    = orderedSets(base)
-    val waves = math.min(math.max(1, wavesArg), saltB)
-    val key   = (os.queryExecution.analyzed.semanticHash(), saltB, waves)
-    val dir = wavedMemo.computeIfAbsent(
-      key,
-      _ => {
-        // session-unique, full-hash path + exit-time deletion + stale sweep
-        // (graft.core.WaveScratch): leaked wave parquet would re-create the
-        // very ENOSPC hazard the budget exists to avoid. freshDirFor: the
-        // waves append, so a retried campaign must start empty or the
-        // failed attempt's waves duplicate (WaveRetrySpec)
-        val out = graft.core.WaveScratch.freshDirFor(
-          spark, "setjoin", f"${key._1}%08x-$saltB-$waves")
-        val pay = graft.core.BucketedPayload.ensure(
-          spark,
-          "setjoin",
-          f"${key._1}%08x",
-          "doc_id",
-          spark.sparkContext.defaultParallelism)(os)
-        val tAll = System.nanoTime()
-        graft.core.AdaptiveWaves.run(
-          spark, "setjoin", 0 until saltB, waves, perWaveBytes, budget) { salts =>
-          verifiedForSalts(os, saltB, salts, Some(pay))
-            .write.mode("append").parquet(out)
-        }
-        // min-of-N bench reps re-read the memoized parquet; the enumeration
-        // wall is reported as an artifact entry so it cannot vanish
-        graft.core.BuildWalls.record("setjoin_waves", (System.nanoTime() - tAll) / 1e9)
-        out
-      }
-    )
-    spark.read.parquet(dir).orderBy("d1", "d2")
-  }
-
-  private val wavedMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, Int, Int), String]()
-
-  /** Prefix frame: one row per (doc, prefix position, token) — the grain
-    * both the enumeration join and the volume estimator read.
-    */
-  private def prefixFrame(os: DataFrame): DataFrame =
-    os.select(
+  private def verifiedForSalts(os: DataFrame, saltB: Int): DataFrame = {
+    val par = os.sparkSession.sparkContext.defaultParallelism
+    // one row per (doc, prefix position, token)
+    val pref = os.select(
       col("doc_id"),
       col("sz"),
       posexplode(slice(col("stoks"), lit(1), prefixLen(col("sz"))))
         .as(Seq("pos", "tok"))
     )
-
-  /** The verified-pairs pipeline for a SUBSET of the salt space (unsorted;
-    * callers order). With the full salt set this is the single-wave plan
-    * unchanged; a proper subset restricts the d1 side to its own salts and
-    * replicates the d2 side across only those salts, enumerating exactly
-    * the pairs whose meeting salt falls in the subset.
-    *
-    * `payload` (round 15): an os-schema frame to read the verify columns
-    * (htoks/hok/sz/stoks) from instead of `os` — the wave loop passes the
-    * once-per-campaign doc_id-bucketed table so each wave's four verify
-    * joins scan it exchange-free rather than re-shuffling the full payload
-    * (the round-14 per-wave fixed term). The prefix/enumeration side keeps
-    * reading the memory-cached `os`.
-    */
-  private def verifiedForSalts(
-      os: DataFrame,
-      saltB: Int,
-      salts: Seq[Int],
-      payload: Option[DataFrame] = None): DataFrame = {
-    val par  = os.sparkSession.sparkContext.defaultParallelism
-    val pay  = payload.getOrElse(os)
-    val pref = prefixFrame(os)
     // SALTED enumeration (Vernica 2010's block split, the round-11 fix for
     // quadratic-OUTPUT skew): on a saturated token space a handful of hot
     // prefix tokens hold most rows, so a plain tok-equi-join concentrates
@@ -560,12 +239,11 @@ object SetJoin {
     // 500k docs); benefit: the quadratic stage engages every core. The
     // explicit numbered repartitions keep AQE's byte-based coalescing
     // (same root cause, small input bytes) from re-serializing the sort.
-    val prefA0 = pref.withColumn("salt", pmod(hash(col("doc_id")), lit(saltB)))
-    val prefA = (if (salts.size == saltB) prefA0
-                 else prefA0.filter(col("salt").isin(salts.map(Integer.valueOf): _*)))
+    val prefA = pref
+      .withColumn("salt", pmod(hash(col("doc_id")), lit(saltB)))
       .repartition(par, col("tok"), col("salt"))
     val prefB = pref
-      .withColumn("salt", explode(array(salts.map(lit): _*)))
+      .withColumn("salt", explode(array((0 until saltB).map(lit): _*)))
       .repartition(par, col("tok"), col("salt"))
     // Two output-neutral PPJoin prunes ride the candidate join itself (the
     // exact verify below only discards, so both are pure work savers — and
@@ -597,12 +275,12 @@ object SetJoin {
       )
       .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
       .distinct()
-    val h1 = pay.select(
+    val h1 = os.select(
       col("doc_id").as("d1"), col("htoks").as("h1"), col("hok").as("hok1"), col("sz").as("sza"))
-    val h2 = pay.select(
+    val h2 = os.select(
       col("doc_id").as("d2"), col("htoks").as("h2"), col("hok").as("hok2"), col("sz").as("szb"))
-    val s1 = pay.select(col("doc_id").as("d1"), col("stoks").as("s1"))
-    val s2 = pay.select(col("doc_id").as("d2"), col("stoks").as("s2"))
+    val s1 = os.select(col("doc_id").as("d1"), col("stoks").as("s1"))
+    val s2 = os.select(col("doc_id").as("d2"), col("stoks").as("s2"))
     val hashTier = cands
       // explicit numPartitions spread before the CPU-heavy verify: the
       // candidate frame is BYTE-small, so AQE's size-based coalescing packs

@@ -440,10 +440,9 @@ object Pipeline {
     * the quadratic part of the ANSWER itself (a 300k-copy group crossing
     * the 90/10 split boundary owes ~30k·270k ≈ 8·10⁹ contamination rows by
     * the query's own semantics — no engine can emit fewer). One aggregate over
-    * the cached member table; the gates read it to size (or refuse) a run
-    * BEFORE the expansion joins start, the same predict-don't-discover
-    * discipline as the verify estimators. Returns (rows, ~bytes at the
-    * 36 B/row report grain).
+    * the cached member table; the salted branch reads it to refuse a run
+    * the scratch volume cannot hold BEFORE the expansion joins start.
+    * Returns (rows, ~bytes at the 36 B/row report grain).
     */
   private[graft] def contaminationExpansionEstimate(
       docs: org.apache.spark.sql.DataFrame): (Long, Long) = {
@@ -981,12 +980,6 @@ object Pipeline {
       )
       val leak  = grams.filter(col("split") =!= "test").select("gram").distinct()
       val test  = grams.filter(col("split") === "test").select("doc_id", "gram")
-      // budget-gated footprint statement (round 14): the train×test gram
-      // grain is a semi join (fan-out 1 by construction — the estimate is
-      // the probe-side row count), logged before enumeration like every
-      // other verify consumer; ~56 B = doc_id + gram string + row overhead
-      if (graft.ext.SetJoin.shuffleBudget.isDefined)
-        Dedup.logCrossVerifyEstimate("decontam_ngram", test, leak, Seq("gram"), 56.0): Unit
       val total = test.groupBy("doc_id").agg(count(lit(1)).as("n_grams"))
       val matched = test
         .join(leak, Seq("gram"), "left_semi")

@@ -69,4 +69,26 @@ class CoverageSpec extends AnyFunSuite {
     }.toVector
     assert(hits.isEmpty, s"forbidden strings found: ${hits.mkString(", ")}")
   }
+
+  /** Knob inventory: every `SPARK_GRAFT_*` environment key the library
+    * reads appears as one string literal under src/main, and the set must
+    * equal this list — a new run-time knob cannot arrive without a visible
+    * edit here.
+    */
+  test("src/main reads exactly the listed SPARK_GRAFT_* environment knobs") {
+    val expected = Set("CPUS", "SF_DIR", "ONLY", "REPS", "FP_DUMP", "GATE_VARIANT", "GATE_CLEAN_ONLY")
+      .map("SPARK_GRAFT_" + _)
+    def walk(f: java.io.File): Iterator[java.io.File] =
+      if (f.isDirectory) Option(f.listFiles()).iterator.flatMap(_.iterator).flatMap(walk)
+      else Iterator(f).filter(_.getName.endsWith(".scala"))
+    val literal = "\"(SPARK_GRAFT_[A-Z_]+)\"".r
+    val found = walk(new java.io.File("src/main")).flatMap { f =>
+      literal.findAllMatchIn(new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")).map(_.group(1))
+    }.toSet
+    assert(found.nonEmpty, "no SPARK_GRAFT_ literal found — is the working directory the repo root?")
+    assert(
+      found == expected,
+      s"knobs added: ${(found -- expected).toSeq.sorted.mkString(", ")}; " +
+        s"knobs gone: ${(expected -- found).toSeq.sorted.mkString(", ")}")
+  }
 }

@@ -1160,69 +1160,5 @@ class ExtSpec extends SparkSpec {
       rerouted == pruned,
       s"saturation re-route changed the output:\n rerouted=$rerouted\n band-join=$pruned"
     )
-
-    // bounded-wave verify (round 14): wave w owns the pairs whose d1 falls
-    // in hash(d1) residue class w, so the union over waves must equal the
-    // single-wave output with no pair duplicated or dropped — pinned at
-    // two wave counts, and ALSO through the saturation re-route (sat = 4),
-    // whose prefix A-side carries the same wave filter
-    for (w <- Seq(2, 3)) {
-      val waved = Dedup
-        .ngramVerifiedPairsWaved(docs, sat = 4096, waves = w)
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-        .toSeq
-      assert(waved == pruned, s"waved verify diverges at waves=$w:\n waved=$waved\n single=$pruned")
-    }
-    val wavedRerouted = Dedup
-      .ngramVerifiedPairsWaved(docs, sat = 4, waves = 2)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .toSeq
-    assert(wavedRerouted == pruned, "waved + re-routed verify diverges from single-wave")
-  }
-
-  test("waved shingle verify equals the single-wave path and the estimator upper-bounds") {
-    import spark.implicits._
-    // reuse the collision-rich family shape: near-copies at several depths
-    // so the 0.3-threshold verify emits pairs, plus exact dups for the
-    // pre-collapse path
-    val base = "the quick brown fox jumps over the lazy dog while counting distinct tokens"
-    val docs = (0L until 48L)
-      .map { i =>
-        val v = i / 6
-        val t = (i % 6) match {
-          case 0 => base
-          case 1 => base + s" tail marker $v"
-          case 2 => base.replace("quick", s"swift$v")
-          case 3 => base + s" extra words here $v"
-          case 4 => base // exact dup of case 0
-          case _ => s"entirely unrelated content number $v with its own distinct words"
-        }
-        (i, t)
-      }
-      .toDF("doc_id", "text")
-    def key(r: org.apache.spark.sql.Row) = (r.getLong(0), r.getLong(1))
-    val single = Dedup.nearDuplicates(docs, 0.3).collect().map(key).toSet
-    assert(single.nonEmpty, "corpus produced no verified pairs — test corpus too weak")
-    for (w <- Seq(2, 3)) {
-      val waved = Dedup.nearDuplicatesWaved(docs, 0.3, waves = w).collect().map(key).toSet
-      assert(
-        waved == single,
-        s"waved shingle verify diverges at waves=$w: missing=${single -- waved} extra=${waved -- single}")
-    }
-    // the pre-enumeration estimate upper-bounds the real candidate volume:
-    // every distinct candidate pair is counted at least once in
-    // Σ_bucket n·(n−1)/2
-    val est = Dedup.bandVerifyEstimate(docs, "shingle")
-    assert(est.enumPairs > 0 && est.bytes > 0)
-    assert(est.survival > 0.0 && est.survival <= 1.0)
-    val candidates = Dedup.candidatePairs(docs).count()
-    assert(
-      est.enumPairs >= candidates,
-      s"estimate ${est.enumPairs} below the distinct candidate count $candidates — not an upper bound")
-    // the scratch guard refuses an impossible wave BEFORE it starts
-    intercept[IllegalArgumentException](
-      graft.core.WaveScratch.ensureFreeSpace(Long.MaxValue, "test wave"))
   }
 }

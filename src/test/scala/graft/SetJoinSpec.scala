@@ -76,63 +76,6 @@ class SetJoinSpec extends SparkSpec {
         s"salted path diverges at saltB=$b: missing=${expected -- salted} extra=${salted -- expected}"
       )
     }
-
-    // bounded-wave enumeration ≡ single wave: each pair meets at exactly
-    // one salt, each salt lands in exactly one wave, so the union over
-    // waves must be the same set with no pair duplicated or dropped —
-    // pinned at a wave count that divides the salt space (2 of 8), one
-    // that does not (3 of 8), and the degenerate full split (8 of 8)
-    for (w <- Seq(2, 3, 8)) {
-      val waved = SetJoin
-        .similarityJoinWaved(docs, saltB = 8, wavesArg = w)
-        .select("d1", "d2", "inter", "uni")
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-        .toSet
-      assert(
-        waved == expected,
-        s"waved path diverges at waves=$w: missing=${expected -- waved} extra=${waved -- expected}"
-      )
-    }
-
-    // adaptive re-waving (round 15) ≡ fixed-wave: with a budget the
-    // scheduler re-plans batch sizes from measured bytes — a tiny budget
-    // keeps every batch at the planned floor, a huge one collapses the
-    // remaining salts into one batch after the first — and BOTH must
-    // produce exactly the fixed-wave pair set (batching is
-    // output-invariant by construction). Fresh wave counts dodge the
-    // (plan, saltB, waves) memo of the fixed-wave runs above.
-    for ((w, b) <- Seq((4, 1L), (5, Long.MaxValue / 4))) {
-      val adaptive = SetJoin
-        .similarityJoinWaved(docs, saltB = 8, wavesArg = w, budget = Some(b))
-        .select("d1", "d2", "inter", "uni")
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-        .toSet
-      assert(
-        adaptive == expected,
-        s"re-planned waves diverge at waves=$w budget=$b: " +
-          s"missing=${expected -- adaptive} extra=${adaptive -- expected}"
-      )
-    }
-
-    // the pre-enumeration volume estimate is a true upper bound: every
-    // qualifying pair shares >= 1 prefix token (the completeness theorem),
-    // so it is counted at least once in sum_tok C(cnt, 2)
-    val est = SetJoin.candidateEstimate(docs)
-    assert(est.prefRows > 0 && est.bytes > 0)
-    assert(
-      est.enumPairs >= expected.size,
-      s"estimate ${est.enumPairs} below the true pair count ${expected.size} — not an upper bound"
-    )
-  }
-
-  test("byte-budget parser accepts plain bytes and k/m/g suffixes") {
-    assert(SetJoin.parseBytes("1000000") == 1000000L)
-    assert(SetJoin.parseBytes("512m") == 512L * 1024 * 1024)
-    assert(SetJoin.parseBytes("40g") == 40L * 1024 * 1024 * 1024)
-    assert(SetJoin.parseBytes("0.5g") == (0.5 * (1L << 30)).toLong)
-    intercept[NumberFormatException](SetJoin.parseBytes("lots"))
   }
 
   test("prefix filter prunes: candidate tokens per doc stay under the set size") {
