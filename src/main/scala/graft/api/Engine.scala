@@ -12,15 +12,14 @@ import graft.ops.{GroupStage, MapStage, ReduceStage, Sinks}
 /** The reference's job-server surface (O8/O12) on Spark: submit a
   * [[JobSpec]], it runs the three-stage dataflow
   *
-  *   read.text → map (flatMap | pipe) → group (shuffle+sort) →
+  *   read.text → map (flatMap | pipe) → group (combine, shuffle, sort) →
   *   reduce (mapPartitions | pipe) → outputfileNN sink
   *
-  * The group stage combines identical mapped lines map-side: each distinct
-  * line is shuffled once per map partition with its count and re-emitted
-  * `count` times after the sort, so a word count's `token\t1` lines cost
-  * one shuffle record per distinct token per mapper. Reducers still see
-  * every line, in the same partition and order as without the combine —
-  * native and piped map/reduce stages run unchanged.
+  * From map to reduce the job passes the counted stream `(line, count)`
+  * ([[graft.ops.GroupStage.counted]]): a word count's `token\t1` lines
+  * cost one shuffle record per distinct token per mapper, native reducers
+  * read the counts, and only a piped reducer sees the lines re-emitted
+  * `count` times. Each reduce task writes its own `outputfileNN`.
   *
   * Jobs run strictly FIFO by default, one at a time — the reference queues
   * new jobs while BUSY (`/root/reference/mapreduce/manager/__main__.py:
@@ -45,23 +44,19 @@ import graft.ops.{GroupStage, MapStage, ReduceStage, Sinks}
   *
   * `parityMode` selects the golden-parity rank-mod group router
   * ([[graft.ops.GroupStage.rankMod]]) instead of the scalable hash router
-  * ([[graft.ops.GroupStage.hash]]); both combine identical lines.
+  * ([[graft.ops.GroupStage.hash]]); both count identical lines.
   *
-  * `rawParity` (round 13) is the BYTE-exact tier: the job reads lines with
-  * their real terminators ([[graft.sources.ParityLines.sortTasks]], which
-  * also models the reference's per-sort-task file CONCATENATION — an
-  * unterminated file's tail merges with the next file's first line in the
-  * same task), groups through the full reference cascade
-  * ([[graft.ops.GroupStage.referenceGroup]]: worker sort-join glue,
-  * manager re-read, heapq-merge, distinct-count route) and writes bytes
-  * verbatim ([[graft.ops.Sinks.outputFilesRaw]]) — so an Engine-submitted
-  * job reproduces the reference's output files byte-for-byte even on
-  * unterminated inputs. Raw-parity jobs are group-only (`identity` map and
-  * reduce): external map/reduce executables are line-pipe-oriented and
-  * re-terminate every line, so behind a pipe the two tiers are
-  * indistinguishable — the stripped `parityMode` tier already covers them.
-  * `numMappers` plays the reference's sort-task-count role (there: the
-  * number of ready workers at grouping time).
+  * `rawParity` is the byte-exact tier: lines keep their real terminators
+  * ([[graft.sources.ParityLines.sortTasks]], which also models the
+  * reference's per-sort-task file concatenation), group through the full
+  * reference cascade ([[graft.ops.GroupStage.referenceGroup]]) and are
+  * written verbatim ([[graft.ops.Sinks.outputFilesRaw]]), so a job
+  * reproduces the reference's output files byte-for-byte even on
+  * unterminated inputs. Its jobs are group-only (`identity` map and
+  * reduce): a pipe re-terminates every line, so behind one the stripped
+  * `parityMode` tier is equivalent. `numMappers` plays the reference's
+  * sort-task-count role (there: the number of ready workers at grouping
+  * time).
   */
 final class Engine(
     spark: SparkSession,
@@ -101,8 +96,8 @@ final class Engine(
     } else {
       val lines   = spark.sparkContext.textFile(spec.inputDirectory, spec.numMappers)
       val mapped  = MapStage(lines, spec.mapperExecutable)
-      val grouped = GroupStage(mapped, spec.numReducers, parityMode)
-      val reduced = ReduceStage(grouped, spec.reducerExecutable)
+      val grouped = GroupStage.counted(mapped, spec.numReducers, parityMode)
+      val reduced = ReduceStage.counted(grouped, spec.reducerExecutable)
       JobResult(jobId, Sinks.outputFiles(reduced, spec.outputDirectory), t0, System.nanoTime())
     }
   }

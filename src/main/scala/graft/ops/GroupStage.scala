@@ -1,17 +1,19 @@
 package graft.ops
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.{Aggregator, HashPartitioner, Partitioner}
 import org.apache.spark.rdd.{RDD, ShuffledRDD}
 
 /** Group stage (reference O4+O5): globally sort the mapped `key\tvalue`
   * lines and split them into `numReducers` sorted reduce inputs.
   *
-  * Both routers combine identical lines map-side (the MapReduce combiner,
-  * Dean & Ghemawat OSDI 2004 §4.3): each distinct line crosses the shuffle
-  * once per map partition with its count, and the reduce side re-emits it
-  * `count` times after the merge and sort. Identical lines are
-  * interchangeable to any reducer, so the output is unchanged — the same
-  * lines in the same partition in the same order as an uncombined shuffle.
+  * Its output is the counted stream [[counted]]: each distinct line with
+  * its count, once, in the partition and place its copies would take. Each
+  * map task counts its lines in its own hash table ([[combine]], the MapReduce
+  * combiner, Dean & Ghemawat OSDI 2004 §4.3), so a distinct line crosses
+  * the shuffle once per map task. [[expand]] re-emits every copy for a
+  * pipe and for the line-stream entry points ([[apply]], [[hash]], ...).
   *
   * Two routing modes:
   *
@@ -29,7 +31,7 @@ import org.apache.spark.rdd.{RDD, ShuffledRDD}
   *     route the line to `counter % numReducers`. Implemented scalably as
   *     counted distinct lines, sorted and ranked with `zipWithIndex` (an
   *     O(1)-driver metadata pass, not a global single-partition window),
-  *     then routed by `rank % numReducers` and expanded by count.
+  *     then routed by `rank % numReducers`.
   *     Note the quirk kept deliberately: routing is per distinct *line*
   *     (key AND value), not per key — same key with different values can
   *     split across reducers, exactly like the reference.
@@ -37,16 +39,12 @@ import org.apache.spark.rdd.{RDD, ShuffledRDD}
 object GroupStage {
 
   /** Routes rank `r` to partition `r % n` — the distinct-line counter's
-    * round-robin.
+    * round-robin. Only [[rankRoute]]'s own shuffle uses it, so it needs no
+    * equality for Spark to match partitionings.
     */
   private final class RankPartitioner(n: Int) extends Partitioner {
     override def numPartitions: Int = n
     override def getPartition(key: Any): Int = (key.asInstanceOf[Long] % n).toInt
-    override def equals(other: Any): Boolean = other match {
-      case p: RankPartitioner => p.numPartitions == n
-      case _                  => false
-    }
-    override def hashCode(): Int = n
   }
 
   /** Lexicographic (UTF-16 code unit) line ordering — equals the reference's
@@ -58,18 +56,9 @@ object GroupStage {
     * carried a trailing '\n'. [[compareLines]] does that without building
     * the two strings.
     *
-    * Parity on UNTERMINATED final lines (closed in round 12): the
-    * reference keeps the REAL trailing bytes, so a final unterminated line
-    * "foo" sorts/distincts separately from "foo\n". Spark's textFile
-    * strips newlines before this ordering re-appends one uniformly, merging
-    * the two and shifting subsequent rank-mod bucket assignments — which
-    * is fine for every golden fixture (all newline-terminated) but not
-    * byte parity in general. [[rankModRaw]] + the
-    * [[graft.sources.ParityLines]] reader close the gap: lines arrive
-    * carrying their true trailing newline (or none), and the raw variant
-    * sorts/distincts/routes on those exact bytes with NO appended
-    * sentinel, matching the reference's `readlines()` semantics
-    * byte-for-byte (GroupStageSpec pins an unterminated fixture).
+    * Lines that carry their real terminator (the raw-parity tier,
+    * [[graft.sources.ParityLines]]) are ordered on their exact bytes
+    * instead, by [[rankModRaw]].
     */
   private val lineOrdering: Ordering[String] = (a, b) => compareLines(a, b)
 
@@ -93,7 +82,7 @@ object GroupStage {
   }
 
   /** Re-emit each counted line `count` times, in order. */
-  private def expand(counted: Iterator[(String, Long)]): Iterator[String] =
+  private[graft] def expand(counted: Iterator[(String, Long)]): Iterator[String] =
     counted.flatMap { case (line, n) =>
       new Iterator[String] {
         private var left     = n
@@ -102,20 +91,48 @@ object GroupStage {
       }
     }
 
-  /** Scalable default: hash-route lines to reducers (`HashPartitioner` is
-    * `floorMod(line.hashCode, numReducers)`), counting identical lines on
-    * both sides of the shuffle, then sort each partition by line.
+  /** Entry bound of [[combine]]'s table, so a map task's memory is bounded. */
+  private[graft] val CombineBound = 65536
+
+  private final class Count(var n: Long)
+
+  /** Fold a map task's lines into its own hash table and emit each
+    * distinct line with its count, in table order. A full table
+    * ([[CombineBound]] entries) is emitted and refilled, so a line may come
+    * out in several partial counts; the reduce side sums them.
     */
-  def hash(lines: RDD[String], numReducers: Int): RDD[String] =
-    new ShuffledRDD[String, Null, Long](lines.map(l => (l, null)), new HashPartitioner(numReducers))
-      .setAggregator(Aggregator[String, Null, Long](_ => 1L, (c, _) => c + 1L, _ + _))
-      .setMapSideCombine(true)
-      .setKeyOrdering(lineOrdering)
-      .mapPartitions(expand)
+  def combine(lines: Iterator[String]): Iterator[(String, Long)] = {
+    val table = new java.util.HashMap[String, Count]()
+    // flatMap refills the table only once its previous contents are emitted
+    Iterator.continually(lines).takeWhile(_.hasNext).flatMap { _ =>
+      table.clear()
+      while (lines.hasNext && table.size < CombineBound) {
+        val line = lines.next()
+        val c    = table.get(line)
+        if (c == null) table.put(line, new Count(1L)) else c.n += 1
+      }
+      table.entrySet.iterator.asScala.map(e => (e.getKey, e.getValue.n))
+    }
+  }
+
+  /** Shuffle [[combine]]'s counts to `p`; the reduce side sums them. */
+  private def shuffleCounts(lines: RDD[String], p: Partitioner): ShuffledRDD[String, Long, Long] =
+    new ShuffledRDD[String, Long, Long](lines.mapPartitions(combine), p)
+      .setAggregator(Aggregator[String, Long, Long](c => c, _ + _, _ + _))
+
+  /** The counted reduce inputs, hash- or (`parityMode`) rank-mod-routed. */
+  def counted(lines: RDD[String], numReducers: Int, parityMode: Boolean): RDD[(String, Long)] =
+    if (parityMode) rankRoute(lines, numReducers, lineOrdering)
+    else shuffleCounts(lines, new HashPartitioner(numReducers)).setKeyOrdering(lineOrdering)
+
+  def apply(lines: RDD[String], numReducers: Int, parityMode: Boolean): RDD[String] =
+    counted(lines, numReducers, parityMode).mapPartitions(expand)
+
+  /** Scalable default: route by `floorMod(line.hashCode, numReducers)`. */
+  def hash(lines: RDD[String], numReducers: Int): RDD[String] = apply(lines, numReducers, parityMode = false)
 
   /** Golden-parity rank-mod router (see object doc). */
-  def rankMod(lines: RDD[String], numReducers: Int): RDD[String] =
-    rankRoute(lines, numReducers, lineOrdering)
+  def rankMod(lines: RDD[String], numReducers: Int): RDD[String] = apply(lines, numReducers, parityMode = true)
 
   /** Byte-exact rank-mod router over lines that CARRY their real trailing
     * newline (from [[graft.sources.ParityLines]]): sort order, the
@@ -128,7 +145,7 @@ object GroupStage {
     * identity ordering on the real bytes.
     */
   def rankModRaw(rawLines: RDD[String], numReducers: Int): RDD[String] =
-    rankRoute(rawLines, numReducers, Ordering.String)
+    rankRoute(rawLines, numReducers, Ordering.String).mapPartitions(expand)
 
   /** The one rank-mod router: count identical lines, sort the distinct
     * ones under `ord` and rank them (`zipWithIndex` launches one job to
@@ -136,18 +153,13 @@ object GroupStage {
     * route rank `r` to bucket `r % numReducers`. Within a bucket, rank
     * order IS `ord` order, so sorting on the rank sorts the lines.
     */
-  private def rankRoute(lines: RDD[String], numReducers: Int, ord: Ordering[String]): RDD[String] =
-    lines
-      .map(l => (l, 1L))
-      .reduceByKey(_ + _)
+  private def rankRoute(lines: RDD[String], numReducers: Int, ord: Ordering[String]): RDD[(String, Long)] =
+    shuffleCounts(lines, Partitioner.defaultPartitioner(lines))
       .sortBy(_._1)(ord, implicitly)
       .zipWithIndex()
       .map(_.swap)
       .repartitionAndSortWithinPartitions(new RankPartitioner(numReducers))
-      .mapPartitions(it => expand(it.map(_._2)))
-
-  def apply(lines: RDD[String], numReducers: Int, parityMode: Boolean): RDD[String] =
-    if (parityMode) rankMod(lines, numReducers) else hash(lines, numReducers)
+      .values
 
   /** The reference's FULL group-stage cascade, byte-exact (round 13; input
     * is [[graft.sources.ParityLines.sortTasks]]'s per-task line streams):

@@ -17,14 +17,17 @@ import org.apache.spark.rdd.RDD
   */
 object MapStage {
 
+  /** wc_map's `tr` set, compiled once: `String.split` would recompile it per line. */
+  private val WcSeparators = java.util.regex.Pattern.compile("[ \t\\[\\]]")
+
   /** wc_map semantics (`/root/reference/tests/testdata/exec/wc_map.sh:12`):
     * `tr '[ \t]' '\n'` — the *set* includes the brackets themselves, a kept
     * artifact — then lowercase, then emit `token\t1` for every record
     * including empties (an empty input line yields the empty-string key).
     */
   def wcMap(line: String): Iterator[String] =
-    line.toLowerCase(java.util.Locale.ROOT) // ASCII tr semantics regardless of JVM default locale (tr-TR dotless-ı hazard)
-      .split("[ \t\\[\\]]", -1)
+    WcSeparators
+      .split(line.toLowerCase(java.util.Locale.ROOT), -1) // ASCII tr semantics regardless of JVM default locale (tr-TR dotless-ı hazard)
       .iterator
       .map(tok => tok + "\t1")
 

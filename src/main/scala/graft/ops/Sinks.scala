@@ -1,10 +1,12 @@
 package graft.ops
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.Comparator
 
 import scala.util.control.NonFatal
 
+import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 
 /** File sink (reference O7): write reduce partition N to
@@ -12,10 +14,10 @@ import org.apache.spark.rdd.RDD
   * pre-existing output directory — mirroring `_move_result_files`
   * (`/root/reference/mapreduce/manager/__main__.py:738-761`).
   *
-  * The data path is distributed: `saveAsTextFile` writes `part-NNNNN` files
-  * executor-side (at cluster scale these land on the shared/object store);
-  * only the final rename pass — a metadata operation over numReducers
-  * entries, not a data copy — runs on the driver.
+  * One writer serves both tiers: partition N's task writes `outputfileNN`
+  * under a name unique to its attempt, then renames it over the target
+  * atomically. A failed attempt deletes its temp file, so a retried or
+  * speculative attempt never leaves a torn or stray file.
   */
 object Sinks {
 
@@ -39,56 +41,39 @@ object Sinks {
     try deleteRecursively(p)
     catch { case NonFatal(_) => () }
 
-  /** Write `reduced` as outputfileNN files; returns the file paths. */
-  def outputFiles(reduced: RDD[String], outputDirectory: String): Seq[String] = {
-    val out = Paths.get(outputDirectory)
-    deleteRecursively(out)
-    val tmp = out.resolveSibling(out.getFileName.toString + ".spark-tmp")
-    deleteRecursively(tmp)
-    reduced.saveAsTextFile(tmp.toString)
-    Files.createDirectories(out)
-    val listing = Files.list(tmp)
-    val parts =
-      try listing
-        .filter(p => p.getFileName.toString.startsWith("part-"))
-        .sorted()
-        .toArray()
-        .map(_.asInstanceOf[Path])
-      finally listing.close()
-    val moved = parts.zipWithIndex.map { case (part, i) =>
-      val target = out.resolve(f"outputfile${i + 1}%02d")
-      Files.move(part, target)
-      target.toString
-    }
-    deleteRecursively(tmp)
-    moved.toSeq
-  }
+  /** Write `reduced` as '\n'-terminated outputfileNN files; returns their paths. */
+  def outputFiles(reduced: RDD[String], outputDirectory: String): Seq[String] =
+    write(reduced, outputDirectory, "\n")
 
   /** Byte-verbatim sink for the raw-parity tier: lines already CARRY their
     * real terminators (from [[graft.sources.ParityLines]] /
     * [[GroupStage.referenceGroup]]), so each partition's bytes are written
     * EXACTLY — no appended newline, reproducing the reference's output
-    * files including a missing final newline (`saveAsTextFile` terminates
-    * every record, which is the one byte it cannot represent). Partition i
-    * writes `outputfileNN` directly; the write runs executor-side like the
-    * text sink's (on a shared filesystem in cluster mode — parity jobs are
-    * golden-fixture scale on a local session by definition).
+    * files including a missing final newline.
     */
-  def outputFilesRaw(grouped: RDD[String], outputDirectory: String): Seq[String] = {
+  def outputFilesRaw(grouped: RDD[String], outputDirectory: String): Seq[String] =
+    write(grouped, outputDirectory, "")
+
+  /** The one writer: partition i's task writes `outputfile(i+1)`. */
+  private def write(rdd: RDD[String], outputDirectory: String, terminator: String): Seq[String] = {
     val out = Paths.get(outputDirectory)
     deleteRecursively(out)
     Files.createDirectories(out)
-    val dirStr = out.toAbsolutePath.toString
-    grouped
+    val dir = out.toAbsolutePath.toString
+    rdd
       .mapPartitionsWithIndex { case (i, it) =>
-        val target = Paths.get(dirStr, f"outputfile${i + 1}%02d")
-        val w = Files.newBufferedWriter(target, java.nio.charset.StandardCharsets.UTF_8)
-        try it.foreach(w.write)
-        finally w.close()
-        Iterator.single(target.toString)
+        val name = f"outputfile${i + 1}%02d"
+        val tmp  = Paths.get(dir, s".$name.${TaskContext.get().taskAttemptId()}")
+        try {
+          val w = Files.newBufferedWriter(tmp, StandardCharsets.UTF_8)
+          try it.foreach(line => w.append(line).append(terminator))
+          finally w.close()
+          Files.move(tmp, Paths.get(dir, name), StandardCopyOption.ATOMIC_MOVE)
+        } finally Files.deleteIfExists(tmp) // a no-op once moved
+        Iterator.single(name)
       }
       .collect()
+      .map(out.resolve(_).toString)
       .toSeq
-      .sorted
   }
 }

@@ -178,12 +178,16 @@ class EngineSpec extends SparkSpec {
   }
 
   test("output directory is clobbered on re-run (reference _move_result_files)") {
-    val engine = new Engine(spark, parityMode = true)
-    val out = tmpDir("clobber")
-    engine.runJob(JobSpec(inputDir, out, "grep_map", "grep_reduce", 2, 2))
-    val res = engine.runJob(JobSpec(inputDir, out, "grep_map", "grep_reduce", 2, 1))
-    assert(res.outputFiles.size == 1)
-    assert(new java.io.File(out).list().toSeq == Seq("outputfile01"))
+    // both routers; the directory holds exactly the outputfileNN files
+    for (parity <- Seq(true, false)) {
+      val engine = new Engine(spark, parityMode = parity)
+      val out = tmpDir(s"clobber-$parity")
+      engine.runJob(JobSpec(inputDir, out, "grep_map", "grep_reduce", 2, 2))
+      assert(new java.io.File(out).list().sorted.toSeq == Seq("outputfile01", "outputfile02"))
+      val res = engine.runJob(JobSpec(inputDir, out, "grep_map", "grep_reduce", 2, 1))
+      assert(res.outputFiles.size == 1)
+      assert(new java.io.File(out).list().toSeq == Seq("outputfile01"))
+    }
   }
 
   test("unknown mapper name fails with a clear error") {

@@ -1,7 +1,12 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.ops.Sinks
 
 /** Fault-tolerance parity (reference O10): the reference reassigns a dead
   * worker's in-flight task after missed heartbeats
@@ -20,7 +25,8 @@ object FaultToleranceSpec {
 
 class FaultToleranceSpec extends AnyFunSuite {
 
-  test("job survives an injected task failure via task re-execution") {
+  /** Run `body` on a fresh `local[4, 3]` session (3 task attempts). */
+  private def withRetrySession(body: SparkSession => Unit): Unit = {
     // release the shared default session so a new master config applies
     SparkSession.getActiveSession.foreach(_.stop())
     SparkSession.clearActiveSession()
@@ -33,10 +39,21 @@ class FaultToleranceSpec extends AnyFunSuite {
       .getOrCreate()
     try {
       FaultToleranceSpec.injected.set(0)
+      body(spark)
+    } finally {
+      // leave a clean slate for subsequent suites (they getOrCreate lazily)
+      spark.stop()
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+    }
+  }
+
+  test("job survives an injected task failure via task re-execution") {
+    withRetrySession { spark =>
       val rdd = spark.sparkContext
         .parallelize(1 to 1000, 8)
         .mapPartitions { it =>
-          val tc = org.apache.spark.TaskContext.get()
+          val tc = TaskContext.get()
           if (tc.partitionId() == 3 && tc.attemptNumber() == 0) {
             FaultToleranceSpec.injected.incrementAndGet()
             throw new RuntimeException("injected worker death")
@@ -45,11 +62,39 @@ class FaultToleranceSpec extends AnyFunSuite {
         }
       assert(rdd.sum() == (1 to 1000).sum.toDouble)
       assert(FaultToleranceSpec.injected.get() == 1, "the failure should have been injected exactly once")
-    } finally {
-      // leave a clean slate for subsequent suites (they getOrCreate lazily)
-      spark.stop()
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
+    }
+  }
+
+  test("sink task that fails mid-write leaves only whole outputfileNN files") {
+    withRetrySession { spark =>
+      val lines = (1 to 400).map(i => s"line $i")
+      // partition 1's first attempt yields 10 lines, then dies
+      def run(inject: Boolean): Seq[String] = {
+        val rdd = spark.sparkContext.parallelize(lines, 4).mapPartitionsWithIndex { (p, it) =>
+          val tc = TaskContext.get()
+          if (inject && p == 1 && tc.attemptNumber() == 0)
+            it.zipWithIndex.map { case (l, k) =>
+              if (k == 10) {
+                FaultToleranceSpec.injected.incrementAndGet()
+                throw new RuntimeException("injected failure mid-write")
+              }
+              l
+            }
+          else it
+        }
+        val out = Files.createTempDirectory("sink-retry").resolve("out").toString
+        Sinks.outputFiles(rdd, out)
+      }
+      val clean  = run(inject = false)
+      val failed = run(inject = true)
+      assert(FaultToleranceSpec.injected.get() == 1, "the failure should have been injected exactly once")
+      val names = (1 to 4).map(i => f"outputfile$i%02d")
+      assert(failed.map(f => Paths.get(f).getFileName.toString) == names)
+      assert(Paths.get(failed.head).getParent.toFile.list().sorted.toSeq == names)
+      clean.zip(failed).foreach { case (c, f) =>
+        assert(Files.readAllBytes(Paths.get(f)).sameElements(Files.readAllBytes(Paths.get(c))), f)
+      }
+      assert(Files.size(Paths.get(failed(1))) > 0)
     }
   }
 }

@@ -105,6 +105,36 @@ class GroupStageSpec extends SparkSpec {
     assert(distinctPairs * 20 < combineData.size, "fixture must be duplicate-heavy")
   }
 
+  /** More distinct lines than [[GroupStage.CombineBound]], interleaved
+    * with heavy duplicates that therefore span several table flushes.
+    */
+  private lazy val overBound: Seq[String] =
+    new scala.util.Random(11).shuffle(
+      (0 until GroupStage.CombineBound + 4000).map(i => s"d$i\t1") ++ (1 to 30000).map(i => s"w${i % 13}\t${i % 2}")
+    )
+
+  test("combine flushes at its entry bound and still counts the input multiset") {
+    val counts = GroupStage.combine(overBound.iterator).toList
+    // the duplicated lines come out in several partial counts
+    assert(counts.size > counts.map(_._1).distinct.size)
+    assert(counts.groupMapReduce(_._1)(_._2)(_ + _) == overBound.groupMapReduce(identity)(_ => 1L)(_ + _))
+  }
+
+  test("hash router over one partition past the combine bound equals the driver-side model") {
+    val n = 3
+    val parts = GroupStage
+      .hash(spark.sparkContext.parallelize(overBound, 1), n)
+      .mapPartitionsWithIndex { case (i, it) => Iterator((i, it.toList)) }
+      .collect()
+      .toMap
+    val model = overBound
+      .groupBy(l => Math.floorMod(l.hashCode, n))
+      .view
+      .mapValues(_.sortWith((a, b) => (a + "\n").compareTo(b + "\n") < 0).toList)
+      .toMap
+    for (i <- 0 until n) assert(parts(i) == model(i), s"partition $i of $n")
+  }
+
   test("sort task reproduces the test_worker_06 merged golden (1 reducer)") {
     // the reference's worker sort task: concat group inputs, line-sort
     // (`/root/reference/tests/test_worker_06.py:109-122` asserts the

@@ -66,4 +66,15 @@ class PipeSpec extends SparkSpec {
     val got = res.outputFiles.flatMap(readLines).sorted
     assert(got == readLines(resource("wc/word_count_correct.txt")).sorted)
   }
+
+  test("hash router: native mapper, piped reducer, 2 reducers: union equals golden") {
+    // the pipe reads the counted reduce input expanded back into every line
+    val engine = new Engine(spark)
+    val res = engine.runJob(
+      JobSpec(resource("wc/input"), tmpOut("hashpipe"), "wc_map", exec("wc_reduce.sh"), 4, 2)
+    )
+    assert(res.outputFiles.size == 2)
+    val got = res.outputFiles.flatMap(readLines).sorted
+    assert(got == readLines(resource("wc/word_count_correct.txt")).sorted)
+  }
 }

@@ -23,7 +23,7 @@ class PropertySpec extends SparkSpec {
     check(Prop.forAll(corpusGen) { corpus =>
       val mapped  = corpus.flatMap(MapStage.wcMap)
       val grouped = mapped.sorted
-      val reduced = ReduceStage.wcReduce(grouped.iterator).toList
+      val reduced = ReduceStage.wcReduce(grouped.iterator.map((_, 1L))).toList
       val totalFromCounts = reduced.map(_.split("\t")(1).toLong).sum
       totalFromCounts == mapped.size.toLong
     })
@@ -32,7 +32,7 @@ class PropertySpec extends SparkSpec {
   test("grep output lines are a subset of (stripped) input lines") {
     check(Prop.forAll(corpusGen) { corpus =>
       val mapped  = corpus.flatMap(MapStage.grepMap("a"))
-      val reduced = ReduceStage.grepReduce(mapped.iterator).toList
+      val reduced = ReduceStage.grepReduce(mapped.iterator.map((_, 1L))).toList
       reduced.forall(l => corpus.map(_.trim).contains(l))
     })
   }
@@ -56,10 +56,53 @@ class PropertySpec extends SparkSpec {
   test("wcReduce output keys are the distinct input keys in order") {
     check(Prop.forAll(corpusGen) { corpus =>
       val grouped = corpus.flatMap(MapStage.wcMap).sorted
-      val keys    = ReduceStage.wcReduce(grouped.iterator).map(_.split("\t")(0)).toList
+      val keys    = ReduceStage.wcReduce(grouped.iterator.map((_, 1L))).map(_.split("\t")(0)).toList
       val expect  = grouped.map(l => l.substring(0, l.indexOf('\t'))).distinct
       keys == expect
     })
+  }
+
+  /** A sorted reduce input — wc and grep mapper lines, lines with no tab
+    * and with two, always one duplicated line — cut into a counted stream
+    * at random: each run of equal lines becomes one or more adjacent
+    * `(line, count)` entries, and the first run of several copies is
+    * always split.
+    */
+  private val countedGen: Gen[List[(String, Long)]] = for {
+    corpus <- corpusGen
+    extra  <- Gen.listOf(Gen.oneOf("a\tb\tc", "notab", " 1\tpad ", "a\t", "\t"))
+    seed   <- Gen.long
+  } yield {
+    val lines = (corpus.flatMap(MapStage.wcMap) ++ corpus.flatMap(MapStage.grepMap("a")) ++ extra ++
+      Seq("dup\t1", "dup\t1")).sortWith(GroupStage.compareLines(_, _) < 0)
+    val rnd   = new scala.util.Random(seed)
+    var split = false
+    runs(lines).flatMap { case (line, n) =>
+      val pieces = if (n > 1 && !split) { split = true; 2 + rnd.nextInt(n.toInt - 1) } else 1 + rnd.nextInt(n.toInt)
+      val cuts   = (rnd.shuffle((1L until n).toList).take(pieces - 1) :+ 0L :+ n).sorted
+      cuts.lazyZip(cuts.drop(1)).map((a, b) => (line, b - a))
+    }
+  }
+
+  /** Runs of adjacent equal elements, with their lengths. */
+  private def runs(xs: List[String]): List[(String, Long)] =
+    xs.foldLeft(List.empty[(String, Long)]) {
+      case ((x, n) :: rest, y) if x == y => (x, n + 1) :: rest
+      case (acc, y)                      => (y, 1L) :: acc
+    }.reverse
+
+  test("wcReduce and grepReduce over the counted stream equal their line-by-line models") {
+    def wcModel(lines: List[String]): List[String] =
+      runs(lines.map(l => l.takeWhile(_ != '\t'))).map { case (k, n) => s"$k\t$n" }
+    def grepModel(lines: List[String]): List[String] =
+      lines.map(_.trim.split("\t", -1)).collect { case Array(_, v) => v }
+    check(Prop.forAll(countedGen) { counted =>
+      val lines = counted.flatMap { case (l, n) => List.fill(n.toInt)(l) }
+      val split = counted.lazyZip(counted.drop(1)).exists((a, b) => a._1 == b._1)
+      split &&
+      ReduceStage.wcReduce(counted.iterator).toList == wcModel(lines) &&
+      ReduceStage.grepReduce(counted.iterator).toList == grepModel(lines)
+    }, minSuccessful = 200)
   }
 
   test("compareLines equals comparing the lines with a trailing newline appended") {
