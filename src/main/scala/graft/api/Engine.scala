@@ -8,18 +8,24 @@ import scala.concurrent.{ExecutionContext, ExecutionContextExecutorService, Futu
 import org.apache.spark.sql.SparkSession
 
 import graft.ops.{GroupStage, MapStage, ReduceStage, Sinks}
+import graft.sources.{LineSource, ParityLines}
 
 /** The reference's job-server surface (O8/O12) on Spark: submit a
   * [[JobSpec]], it runs the three-stage dataflow
   *
-  *   read.text → map (flatMap | pipe) → group (combine, shuffle, sort) →
-  *   reduce (mapPartitions | pipe) → outputfileNN sink
+  *   local line source → map + combine (fused wc kernel | flatMap | pipe)
+  *   → group (shuffle, sort) → reduce (mapPartitions | pipe) → outputfileNN sink
   *
-  * From map to reduce the job passes the counted stream `(line, count)`
-  * ([[graft.ops.GroupStage.counted]]): a word count's `token\t1` lines
-  * cost one shuffle record per distinct token per mapper, native reducers
-  * read the counts, and only a piped reducer sees the lines re-emitted
-  * `count` times. Each reduce task writes its own `outputfileNN`.
+  * Both ends are local paths, as in the reference: the input is read
+  * through java.nio ([[graft.sources.LineSource]], Hadoop's splits and
+  * line breaks without a Hadoop `FileSystem`), and each reduce task writes
+  * its own `outputfileNN`. Each map task counts its own output
+  * ([[graft.ops.MapStage.counted]]; native `wc_map` runs fused with that
+  * count), and from map to reduce the job passes the counted stream
+  * `(line, count)` ([[graft.ops.GroupStage.counted]]): a word count's
+  * `token\t1` lines cost one shuffle record per distinct token per mapper,
+  * native reducers read the counts, and only a piped reducer sees the
+  * lines re-emitted `count` times.
   *
   * Jobs run strictly FIFO by default, one at a time — the reference queues
   * new jobs while BUSY (`/root/reference/mapreduce/manager/__main__.py:
@@ -89,14 +95,13 @@ final class Engine(
           s"'${spec.mapperExecutable}'/'${spec.reducerExecutable}'): external executables " +
           "are line-pipe-oriented and re-terminate lines, erasing the bytes this tier exists to keep"
       )
-      val tasks   = graft.sources.ParityLines.sortTasks(
-        spark.sparkContext, spec.inputDirectory, spec.numMappers)
+      val tasks   = ParityLines.sortTasks(spark.sparkContext, spec.inputDirectory, spec.numMappers)
       val grouped = GroupStage.referenceGroup(tasks, spec.numReducers)
       JobResult(jobId, Sinks.outputFilesRaw(grouped, spec.outputDirectory), t0, System.nanoTime())
     } else {
-      val lines   = spark.sparkContext.textFile(spec.inputDirectory, spec.numMappers)
-      val mapped  = MapStage(lines, spec.mapperExecutable)
-      val grouped = GroupStage.counted(mapped, spec.numReducers, parityMode)
+      val lines   = LineSource(spark.sparkContext, spec.inputDirectory, spec.numMappers)
+      val counts  = MapStage.counted(lines, spec.mapperExecutable)
+      val grouped = GroupStage.counted(counts, spec.numReducers, parityMode)
       val reduced = ReduceStage.counted(grouped, spec.reducerExecutable)
       JobResult(jobId, Sinks.outputFiles(reduced, spec.outputDirectory), t0, System.nanoTime())
     }

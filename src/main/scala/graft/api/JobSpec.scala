@@ -4,6 +4,14 @@ package graft.api
   * message fields (`/root/reference/mapreduce/submit.py:68-76`): input and
   * output directories, a mapper and a reducer, and the stage parallelism.
   *
+  * `inputDirectory` is a local directory or a single local file. A
+  * directory's regular files are read in name order; names starting with
+  * `_` or `.` are skipped (Hadoop's hidden-file rule), and a subdirectory
+  * or a missing path fails the job with an `IllegalArgumentException`
+  * before any Spark job runs ([[graft.sources.LineSource.files]]).
+  * `numMappers` sets the split size as Hadoop's FileInputFormat does:
+  * total bytes / `numMappers`, at most 32 MiB.
+  *
   * `mapperExecutable` / `reducerExecutable` accept either
   *   - a native operator name registered in [[graft.ops.MapStage]] /
   *     [[graft.ops.ReduceStage]] ("wc_map", "grep_map", "wc_reduce",

@@ -1,7 +1,5 @@
 package graft.ops
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.{Aggregator, HashPartitioner, Partitioner}
 import org.apache.spark.rdd.{RDD, ShuffledRDD}
 
@@ -10,10 +8,11 @@ import org.apache.spark.rdd.{RDD, ShuffledRDD}
   *
   * Its output is the counted stream [[counted]]: each distinct line with
   * its count, once, in the partition and place its copies would take. Each
-  * map task counts its lines in its own hash table ([[combine]], the MapReduce
-  * combiner, Dean & Ghemawat OSDI 2004 §4.3), so a distinct line crosses
-  * the shuffle once per map task. [[expand]] re-emits every copy for a
-  * pipe and for the line-stream entry points ([[apply]], [[hash]], ...).
+  * map task has already counted its lines in its own table
+  * ([[MapStage.counted]]: [[combine]] or the fused wc kernel), so
+  * [[counted]] only routes, and a distinct line crosses the shuffle once
+  * per map task. [[expand]] re-emits every copy for a pipe and for the
+  * line-stream entry points ([[apply]], [[hash]], ...).
   *
   * Two routing modes:
   *
@@ -91,42 +90,33 @@ object GroupStage {
       }
     }
 
-  /** Entry bound of [[combine]]'s table, so a map task's memory is bounded. */
+  /** Entry bound of a map task's count table ([[combine]],
+    * [[MapStage.wcCounts]]), so a map task's memory is bounded.
+    */
   private[graft] val CombineBound = 65536
 
-  private final class Count(var n: Long)
-
-  /** Fold a map task's lines into its own hash table and emit each
+  /** Fold a map task's lines into its own count table and emit each
     * distinct line with its count, in table order. A full table
     * ([[CombineBound]] entries) is emitted and refilled, so a line may come
     * out in several partial counts; the reduce side sums them.
     */
-  def combine(lines: Iterator[String]): Iterator[(String, Long)] = {
-    val table = new java.util.HashMap[String, Count]()
-    // flatMap refills the table only once its previous contents are emitted
-    Iterator.continually(lines).takeWhile(_.hasNext).flatMap { _ =>
-      table.clear()
-      while (lines.hasNext && table.size < CombineBound) {
-        val line = lines.next()
-        val c    = table.get(line)
-        if (c == null) table.put(line, new Count(1L)) else c.n += 1
-      }
-      table.entrySet.iterator.asScala.map(e => (e.getKey, e.getValue.n))
-    }
-  }
+  def combine(lines: Iterator[String]): Iterator[(String, Long)] =
+    CountTable.counting(lines)(_ add _)
 
-  /** Shuffle [[combine]]'s counts to `p`; the reduce side sums them. */
-  private def shuffleCounts(lines: RDD[String], p: Partitioner): ShuffledRDD[String, Long, Long] =
-    new ShuffledRDD[String, Long, Long](lines.mapPartitions(combine), p)
+  /** Shuffle map-side counts to `p`; the reduce side sums them. */
+  private def shuffleCounts(counts: RDD[(String, Long)], p: Partitioner): ShuffledRDD[String, Long, Long] =
+    new ShuffledRDD[String, Long, Long](counts, p)
       .setAggregator(Aggregator[String, Long, Long](c => c, _ + _, _ + _))
 
-  /** The counted reduce inputs, hash- or (`parityMode`) rank-mod-routed. */
-  def counted(lines: RDD[String], numReducers: Int, parityMode: Boolean): RDD[(String, Long)] =
-    if (parityMode) rankRoute(lines, numReducers, lineOrdering)
-    else shuffleCounts(lines, new HashPartitioner(numReducers)).setKeyOrdering(lineOrdering)
+  /** Route the map tasks' counts ([[MapStage.counted]]) to `numReducers`
+    * counted reduce inputs, hash- or (`parityMode`) rank-mod-routed.
+    */
+  def counted(counts: RDD[(String, Long)], numReducers: Int, parityMode: Boolean): RDD[(String, Long)] =
+    if (parityMode) rankRoute(counts, numReducers, lineOrdering)
+    else shuffleCounts(counts, new HashPartitioner(numReducers)).setKeyOrdering(lineOrdering)
 
   def apply(lines: RDD[String], numReducers: Int, parityMode: Boolean): RDD[String] =
-    counted(lines, numReducers, parityMode).mapPartitions(expand)
+    counted(lines.mapPartitions(combine), numReducers, parityMode).mapPartitions(expand)
 
   /** Scalable default: route by `floorMod(line.hashCode, numReducers)`. */
   def hash(lines: RDD[String], numReducers: Int): RDD[String] = apply(lines, numReducers, parityMode = false)
@@ -145,16 +135,16 @@ object GroupStage {
     * identity ordering on the real bytes.
     */
   def rankModRaw(rawLines: RDD[String], numReducers: Int): RDD[String] =
-    rankRoute(rawLines, numReducers, Ordering.String).mapPartitions(expand)
+    rankRoute(rawLines.mapPartitions(combine), numReducers, Ordering.String).mapPartitions(expand)
 
-  /** The one rank-mod router: count identical lines, sort the distinct
-    * ones under `ord` and rank them (`zipWithIndex` launches one job to
-    * count per-partition sizes — no single-partition bottleneck), then
+  /** The one rank-mod router: sum each distinct line's counts, sort the
+    * distinct lines under `ord` and rank them (`zipWithIndex` launches one
+    * job to count per-partition sizes — no single-partition bottleneck), then
     * route rank `r` to bucket `r % numReducers`. Within a bucket, rank
     * order IS `ord` order, so sorting on the rank sorts the lines.
     */
-  private def rankRoute(lines: RDD[String], numReducers: Int, ord: Ordering[String]): RDD[(String, Long)] =
-    shuffleCounts(lines, Partitioner.defaultPartitioner(lines))
+  private def rankRoute(counts: RDD[(String, Long)], numReducers: Int, ord: Ordering[String]): RDD[(String, Long)] =
+    shuffleCounts(counts, Partitioner.defaultPartitioner(counts))
       .sortBy(_._1)(ord, implicitly)
       .zipWithIndex()
       .map(_.swap)

@@ -1,14 +1,18 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
 
 /** Newline-PRESERVING text reader for reference-parity byte semantics.
   *
-  * `SparkContext.textFile` strips line terminators, erasing the one
-  * distinction the reference's group stage can observe: its workers sort
-  * map output with `readlines()` — lines KEEP their trailing newline, and
-  * a file's final line keeps its real bytes, newline or not
+  * A line reader that strips terminators ([[LineSource]], like Hadoop's
+  * TextInputFormat) erases the one distinction the reference's group
+  * stage can observe: its workers sort map output with `readlines()` —
+  * lines KEEP their trailing newline, and a file's final line keeps its
+  * real bytes, newline or not
   * (`/root/reference/mapreduce/worker/__main__.py:180-182`). So to the
   * reference, an unterminated final line `"foo"` is a DIFFERENT line from
   * `"foo\n"` elsewhere in the input: it sorts before it and increments the
@@ -21,16 +25,16 @@ import org.apache.spark.rdd.RDD
   * [[graft.ops.GroupStage.rankModRaw]] can sort/distinct on the real
   * bytes — no appended sentinel, no merged distinct groups.
   *
-  * Built on `wholeTextFiles`, which is the right tool for the PARITY tier
-  * only: it reads each file unsplit, exactly like the reference's
-  * one-worker-per-file sort, and parity fixtures are file-per-mapper
-  * sized. The scalable tier ([[graft.ops.GroupStage.hash]]) keeps
-  * `textFile`'s splittable stripped-line reads — at 100 TB the trailing
-  * byte of one file is not worth giving up record-level splits, which is
-  * the same trade Hadoop's TextInputFormat makes. (A splittable
-  * newline-preserving InputFormat is possible — carry a per-line
-  * has-terminator flag — but parity mode is the only consumer and runs at
-  * golden-fixture scale by definition.)
+  * It reads each file whole, as the reference's one-worker-per-file sort
+  * does, which suits the PARITY tier only: parity fixtures are
+  * file-per-mapper sized. The scalable tier ([[graft.ops.GroupStage.hash]])
+  * reads splits of files through [[LineSource]], stripping terminators —
+  * at 100 TB the trailing byte of one file is not worth giving up
+  * record-level splits, which is the same trade Hadoop's TextInputFormat
+  * makes. (A splittable newline-preserving reader is possible — carry a
+  * per-line has-terminator flag — but parity mode is the only consumer and
+  * runs at golden-fixture scale by definition.) Both tiers list their
+  * input with [[LineSource.files]].
   */
 object ParityLines {
 
@@ -50,11 +54,13 @@ object ParityLines {
     out.toSeq
   }
 
+  /** A whole file, malformed UTF-8 replaced as Hadoop's `Text` does. */
+  private def content(file: String): String =
+    new String(Files.readAllBytes(Paths.get(file)), StandardCharsets.UTF_8)
+
   /** All lines under `path` (a file or directory), newlines preserved. */
   def apply(sc: SparkContext, path: String, minPartitions: Int): RDD[String] =
-    sc.wholeTextFiles(path, minPartitions).flatMap { case (_, content) =>
-      splitKeepingNewlines(content)
-    }
+    sc.parallelize(LineSource.files(path).map(_.toString), minPartitions).flatMap(f => splitKeepingNewlines(content(f)))
 
   /** The reference's SORT-TASK grain, byte-exact (round 13, closing the
     * multi-file-per-task gap ADVICE r12 flagged): the manager sorts the
@@ -64,19 +70,16 @@ object ParityLines {
     * CONCATENATES its files' raw bytes before splitting into lines
     * (`worker/__main__.py:174-177` `input_merge += file.read()`) — so a
     * file that ends mid-line merges its tail with the NEXT file's first
-    * line within the same task. Returns one element per task:
-    * (taskIndex, lines-with-real-newlines after the concat).
+    * line within the same task. Empty files take their turn in the deal,
+    * as they do in the reference's glob. Returns one element per task
+    * that holds a file: (taskIndex, lines-with-real-newlines after the
+    * concat).
     *
-    * The file-name collect is the same driver-side metadata pass the
-    * reference's manager performs (its glob + sort); contents stay
-    * executor-side.
+    * The listing is the same driver-side metadata pass the reference's
+    * manager performs (its glob + sort); contents stay executor-side.
     */
   def sortTasks(sc: SparkContext, path: String, numTasks: Int): RDD[(Int, Seq[String])] = {
-    val files = sc.wholeTextFiles(path, numTasks)
-    val order = files.keys.collect().sorted.zipWithIndex.toMap
-    files
-      .map { case (f, content) => (order(f) % numTasks, (order(f), content)) }
-      .groupByKey(numTasks)
-      .mapValues(fs => splitKeepingNewlines(fs.toSeq.sortBy(_._1).map(_._2).mkString("")))
+    val tasks = LineSource.files(path).map(_.toString).zipWithIndex.groupMap(_._2 % numTasks)(_._1).toSeq.sortBy(_._1)
+    sc.parallelize(tasks, math.max(tasks.size, 1)).mapValues(fs => splitKeepingNewlines(fs.map(content).mkString))
   }
 }

@@ -115,6 +115,34 @@ class EngineSpec extends SparkSpec {
     } finally graft.ops.Sinks.deleteRecursively(dir)
   }
 
+  test("rawParity deals empty files round-robin like the reference's glob") {
+    // Sorted listing: file01, file02 (empty), file03. The reference deals
+    // partition[index % 2]: task0 = [file01, file03], task1 = [file02].
+    //   task0 concat: "b\t1\nfoo\t1" + "a\t1\nzz\t1\n" → lines b\n, foo1a1\n, zz\n
+    //     (file01's unterminated tail glues onto file03's first line);
+    //     sorted and joined the same three lines; task1 has none
+    //   distinct walk: b→0, foo1a1→1, zz→2; % 2 → file01: b zz ; file02: foo1a1
+    // Skipping the empty file would deal file03 to task1 and glue nothing.
+    val dir = Files.createTempDirectory("rawparity-empty")
+    def put(name: String, bytes: String): Unit = {
+      Files.write(dir.resolve(name), bytes.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      ()
+    }
+    put("file01", "b\t1\nfoo\t1")
+    put("file02", "")
+    put("file03", "a\t1\nzz\t1\n")
+    val engine = new Engine(spark, rawParity = true)
+    val out    = tmpDir("rawparity-empty")
+    try {
+      val res = engine.runJob(JobSpec(dir.toString, out, "identity", "identity", 2, 2))
+      def bytes(f: String) =
+        new String(Files.readAllBytes(java.nio.file.Paths.get(f)), "UTF-8")
+      assert(res.outputFiles.size == 2)
+      assert(bytes(res.outputFiles(0)) == "b\t1\nzz\t1\n")
+      assert(bytes(res.outputFiles(1)) == "foo\t1a\t1\n")
+    } finally graft.ops.Sinks.deleteRecursively(dir)
+  }
+
   test("hash router mode produces the same multiset of results") {
     val engine = new Engine(spark, parityMode = false)
     val out = tmpDir("wchash")

@@ -6,7 +6,8 @@ import org.apache.spark.TaskContext
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.Sinks
+import graft.ops.{GroupStage, MapStage, ReduceStage, Sinks}
+import graft.sources.LineSource
 
 /** Fault-tolerance parity (reference O10): the reference reassigns a dead
   * worker's in-flight task after missed heartbeats
@@ -95,6 +96,40 @@ class FaultToleranceSpec extends AnyFunSuite {
         assert(Files.readAllBytes(Paths.get(f)).sameElements(Files.readAllBytes(Paths.get(c))), f)
       }
       assert(Files.size(Paths.get(failed(1))) > 0)
+    }
+  }
+
+  test("map task that fails after reading part of its split still writes byte-identical outputfileNN files") {
+    withRetrySession { spark =>
+      val input = Files.createTempDirectory("source-retry")
+      for (f <- 0 until 3)
+        Files.write(input.resolve(s"part$f"), (0 until 600).map(i => s"w${(f * 7 + i) % 97} W${i % 13}\t[x]").mkString("", "\n", "\n").getBytes("UTF-8"))
+      // map partition 2's first attempt reads 20 lines of its split, then dies
+      def run(inject: Boolean): Seq[String] = {
+        val lines = LineSource(spark.sparkContext, input.toString, 4).mapPartitionsWithIndex { (p, it) =>
+          if (inject && p == 2 && TaskContext.get().attemptNumber() == 0)
+            it.zipWithIndex.map { case (l, k) =>
+              if (k == 20) {
+                FaultToleranceSpec.injected.incrementAndGet()
+                throw new RuntimeException("injected failure mid-split")
+              }
+              l
+            }
+          else it
+        }
+        val grouped = GroupStage.counted(MapStage.counted(lines, "wc_map"), 2, parityMode = false)
+        val out     = Files.createTempDirectory("source-retry-out").resolve("out").toString
+        Sinks.outputFiles(ReduceStage.counted(grouped, "wc_reduce"), out)
+      }
+      try {
+        val clean  = run(inject = false)
+        val failed = run(inject = true)
+        assert(FaultToleranceSpec.injected.get() == 1, "the failure should have been injected exactly once")
+        assert(clean.size == 2 && failed.size == 2)
+        clean.zip(failed).foreach { case (c, f) =>
+          assert(Files.readAllBytes(Paths.get(f)).sameElements(Files.readAllBytes(Paths.get(c))), f)
+        }
+      } finally Sinks.deleteRecursively(input)
     }
   }
 }

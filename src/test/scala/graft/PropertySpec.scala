@@ -105,6 +105,34 @@ class PropertySpec extends SparkSpec {
     }, minSuccessful = 200)
   }
 
+  /** Summed counts per line: equal for two count streams that flushed their
+    * tables at different points.
+    */
+  private def totals(counts: Iterator[(String, Long)]): Map[String, Long] =
+    counts.toList.groupMapReduce(_._1)(_._2)(_ + _)
+
+  test("fused wcCounts equals combine over wcMap's lines") {
+    // mixed-case ASCII, runs of the four separators (at line ends too),
+    // empty lines, and non-ASCII lines: İ lowercases to two chars, Σ to ς
+    // at a word's end and σ inside one, ß stays, and a surrogate pair
+    val piece = Gen.frequency(
+      6 -> Gen.alphaStr.map(_.take(5)),
+      3 -> Gen.oneOf(" ", "\t", "[", "]", "  ", " \t[", "]]", "[ ]\t"),
+      1 -> Gen.oneOf("\u0130", "\u039f\u0394\u039f\u03a3", "\u03a3A", "stra\u00dfe", "\ud83d\ude00", "x\u00c9")
+    )
+    val lines = Gen.listOf(Gen.oneOf(Gen.const(""), Gen.listOf(piece).map(_.mkString)))
+    check(Prop.forAll(lines) { ls =>
+      totals(MapStage.wcCounts(ls.iterator)) == totals(GroupStage.combine(ls.iterator.flatMap(MapStage.wcMap)))
+    }, minSuccessful = 300)
+    // more distinct tokens than the table bound: it flushes, and "The" /
+    // "the" come out in several partial counts that still sum right
+    val wide = (0 until GroupStage.CombineBound + 5000 by 8)
+      .map(i => (i until i + 8).map(j => s"T$j").mkString("The ", " ", "\tthe"))
+    val flushed = MapStage.wcCounts(wide.iterator).toList
+    assert(flushed.count(_._1 == "the\t1") > 1)
+    assert(totals(flushed.iterator) == totals(GroupStage.combine(wide.iterator.flatMap(MapStage.wcMap))))
+  }
+
   test("compareLines equals comparing the lines with a trailing newline appended") {
     // chars straddling '\n' (0x0A): '\u0001' and '\t' sort below it
     val charGen = Gen.oneOf('\u0001', '\t', '\n', '\u000b', ' ', 'a', 'b', '\u00e9')

@@ -1,10 +1,14 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
 
+import org.apache.hadoop.io.{LongWritable, Text}
+import org.apache.hadoop.mapred.{FileSplit, TextInputFormat}
+import org.apache.spark.rdd.HadoopRDD
 import org.apache.spark.sql.functions._
 
-import graft.sources.{AvroIO, Sources}
+import graft.api.{Engine, JobSpec}
+import graft.sources.{AvroIO, LineSource, Sources}
 
 /** Round-trip specs for every source/sink format, plus partition pruning
   * through a partitioned parquet layout.
@@ -152,5 +156,94 @@ class SourcesSpec extends SparkSpec {
     // limit() abandons iterators mid-file — the task-completion listener
     // must close the readers without error (the ADVICE leak regression)
     assert(AvroIO.readAvro(spark, out, splitBytes = 16 * 1024).limit(7).count() == 7)
+  }
+
+  /** A generated input directory: 1-5 files of lines ended by random
+    * `\n`, `\r` and `\r\n`, holding lone 0xC3 / 0xA9 bytes and `é`,
+    * sometimes opening with a UTF-8 byte-order mark and sometimes ending
+    * in an unterminated tail; plus an empty file and the hidden `_SUCCESS`
+    * and `.hidden`, which a read must skip.
+    */
+  private def lineDir(seed: Int): Path = {
+    val rnd   = new scala.util.Random(seed)
+    val dir   = Files.createTempDirectory(s"lines-$seed")
+    val atoms = Seq("a", "Bb", "ccc", "\u00e9", " ", "\t").map(_.getBytes("UTF-8")) ++
+      Seq(Array(0xc3.toByte), Array(0xa9.toByte))
+    val ends = Seq("\n", "\r", "\r\n").map(_.getBytes("UTF-8"))
+    for (i <- 0 until 1 + rnd.nextInt(5)) {
+      val out = new java.io.ByteArrayOutputStream
+      if (rnd.nextInt(3) == 0) out.write(Array(0xef, 0xbb, 0xbf).map(_.toByte))
+      for (_ <- 0 until rnd.nextInt(60)) {
+        for (_ <- 0 until rnd.nextInt(6)) out.write(atoms(rnd.nextInt(atoms.size)))
+        out.write(ends(rnd.nextInt(ends.size)))
+      }
+      if (rnd.nextBoolean()) out.write("tail".getBytes("UTF-8"))
+      Files.write(dir.resolve(f"part$i%02d"), out.toByteArray)
+    }
+    Files.write(dir.resolve("part-empty"), Array.emptyByteArray)
+    Files.write(dir.resolve("_SUCCESS"), "hidden\n".getBytes("UTF-8"))
+    Files.write(dir.resolve(".hidden"), "hidden\n".getBytes("UTF-8"))
+    dir
+  }
+
+  test("line source equals a Hadoop text read: lines, partition count and partition contents") {
+    val sc = spark.sparkContext
+    // `sc.textFile`'s own read, each partition keyed by its split. Hadoop
+    // lists a directory in file-system order, the line source in name
+    // order, so partitions are compared split by split.
+    def hadoop(path: String, n: Int): Seq[((String, Long, Long), List[String])] =
+      sc.hadoopFile(path, classOf[TextInputFormat], classOf[LongWritable], classOf[Text], n)
+        .asInstanceOf[HadoopRDD[LongWritable, Text]]
+        .mapPartitionsWithInputSplit { (split, it) =>
+          val s = split.asInstanceOf[FileSplit]
+          Iterator(((s.getPath.toUri.getPath, s.getStart, s.getLength), it.map(_._2.toString).toList))
+        }
+        .collect()
+        .toSeq
+    def ours(path: String, n: Int): Seq[((String, Long, Long), List[String])] = {
+      val splits = LineSource.splits(LineSource.files(path).map(f => (f.toString, Files.size(f))), n)
+      splits.map(s => (s.file, s.start, s.length))
+        .zip(LineSource(sc, path, n).mapPartitions(it => Iterator(it.toList)).collect())
+    }
+    // 30 bytes at 3 mappers: splits [0,10) [10,20) [20,30), and the
+    // `\r\n` at bytes 9-10 straddles the first boundary
+    val straddle = Files.createTempDirectory("lines-straddle")
+    Files.write(straddle.resolve("part00"), "012345678\r\nabcdefghijklmnopq\r\n".getBytes("UTF-8"))
+    val dirs = straddle +: (1 to 10).map(lineDir)
+    val cuts = scala.collection.mutable.Set.empty[String]
+    try {
+      for (dir <- dirs.map(_.toString) :+ dirs(1).resolve("part00").toString; n <- Seq(1, 3, 7, 50)) {
+        val got = ours(dir, n)
+        val at  = s"$dir at $n mappers"
+        val textFile = sc.textFile(dir, n)
+        assert(got.size == textFile.getNumPartitions, at)
+        assert(got.flatMap(_._2).sorted == textFile.collect().toSeq.sorted, at)
+        assert(got == hadoop(dir, n).sortBy(_._1), at)
+        // record which terminators the split boundaries fell after
+        for (((file, start, _), _) <- got if start > 0) {
+          val bytes = Files.readAllBytes(java.nio.file.Paths.get(file))
+          if (bytes(start.toInt - 1) == '\r') cuts += (if (bytes(start.toInt) == '\n') "cr|lf" else "cr|")
+        }
+      }
+      assert(cuts == Set("cr|lf", "cr|"), "the inputs must cut both inside a \\r\\n and after a lone \\r")
+    } finally dirs.foreach(graft.ops.Sinks.deleteRecursively)
+  }
+
+  test("line source rejects a missing path or a subdirectory before any Spark job runs") {
+    val dir = Files.createTempDirectory("lines-bad")
+    Files.write(dir.resolve("part00"), "a\n".getBytes("UTF-8"))
+    Files.createDirectory(dir.resolve("sub"))
+    val missing = dir.resolve("missing").toString
+    val outDir  = Files.createTempDirectory("lines-bad-out")
+    val out     = outDir.resolve("out")
+    try {
+      // the source is lazy past its listing, so a throw here is before any job
+      assert(intercept[IllegalArgumentException](LineSource(spark.sparkContext, missing, 2)).getMessage.contains(missing))
+      assert(intercept[IllegalArgumentException](LineSource(spark.sparkContext, dir.toString, 2))
+        .getMessage.contains(dir.resolve("sub").toString))
+      // a job fails before its sink clears and creates the output directory
+      intercept[IllegalArgumentException](new Engine(spark).runJob(JobSpec(missing, out.toString)))
+      assert(!Files.exists(out))
+    } finally Seq(dir, outDir).foreach(graft.ops.Sinks.deleteRecursively)
   }
 }
