@@ -1,40 +1,25 @@
 package graft.ext
 
-/** Pure-JVM GIF87a/89a codec — no codec library, `java.io` alone.
+/** Pure-JVM GIF87a/89a decoder, `java.io` alone. Every other image
+  * codec path is [[ImageCodec]]'s `javax.imageio` call; this one stays
+  * because JDK 17's GIF reader returns wrong pixels for interlaced GIFs
+  * 2–4 rows tall (ExtSpec pins those shapes against the source raster).
   *
-  * Like [[Png]], both directions are REAL so the encode→decode round-trip
-  * (and the cross-check against `javax.imageio`'s independent GIF
-  * reader/writer in ExtSpec) verifies actual pixel work, not a stub:
-  * decode implements the full GIF LZW scheme (variable code width 3..12
-  * bits, LSB-first bit packing, sub-block framing, Clear/EOI codes, the
-  * KwKwK self-reference case, deferred clear) plus the 4-pass Adam-style
-  * row interlace; encode emits a real LZW compressor (prefix-table
-  * construction with a Clear reset when the 12-bit table fills) over an
-  * indexed palette. Reference: GIF89a specification §§15-22 (logical
-  * screen descriptor, color tables, image descriptor, table-based image
-  * data) — mirrored by `/root/reference` nowhere; the reference engine has
-  * no media surface, this belongs to the LLM-pipeline multimodal family.
-  *
-  * Scope: one image per stream is decoded (the first image descriptor —
-  * animation frame k>1 is a `sampleFrames` concern, not a pixel one);
-  * global and local color tables, interlace, and all extension blocks
-  * (skipped) are handled. Transparency is ignored — palette RGB is
-  * returned as stored, which keeps the decode a pure function of the byte
-  * stream. Output is row-major RGB triplets, the same shape as
-  * [[Png.Image]] with channels=3.
+  * The full GIF LZW scheme (variable code width 3..12 bits, LSB-first bit
+  * packing, sub-block framing, Clear/EOI codes, the KwKwK self-reference
+  * case, deferred clear) plus the 4-pass row interlace. Reference: GIF89a
+  * specification §§15-22. One image per stream is decoded (the first
+  * image descriptor); global and local color tables and all extension
+  * blocks (skipped) are handled. Transparency is ignored: palette RGB is
+  * returned as stored, so the decode is a pure function of the bytes.
   */
 object Gif {
-
-  /** Decoded image: row-major RGB triplets (channels fixed at 3). */
-  final case class Image(width: Int, height: Int, pixels: Array[Byte])
-
-  // ---- decode -------------------------------------------------------------
 
   /** Strict structural decode; None on anything malformed or truncated
     * (never throws on arbitrary bytes — the walk is totality-checked the
     * same way as [[Multimodal.mp4Meta]]).
     */
-  def decode(b: Array[Byte]): Option[Image] = {
+  def decode(b: Array[Byte]): Option[ImageCodec.Image] = {
     if (b.length < 13) return None
     if (!(b(0) == 'G' && b(1) == 'I' && b(2) == 'F' && b(3) == '8' &&
         (b(4) == '7' || b(4) == '9') && b(5) == 'a')) return None
@@ -131,7 +116,7 @@ object Gif {
       var y = 0
       while (y < h) { writeRow(y); y += 1 }
     }
-    if (src != w * h) None else Some(Image(w, h, out))
+    if (src != w * h) None else Some(ImageCodec.Image(w, h, 3, out))
   }
 
   /** GIF-flavor LZW decompression: returns exactly `expected` index bytes
@@ -222,102 +207,5 @@ object Gif {
       }
     }
     if (outLen == expected) Some(out) else None
-  }
-
-  // ---- encode -------------------------------------------------------------
-
-  /** Encode an indexed image as a non-interlaced GIF89a with a global
-    * color table. `palette` is RGB triplets (length 3·nColors, nColors a
-    * power of two in [2, 256] — a 2-color palette works because
-    * minCodeSize is clamped to 2 per the GIF89a spec); `indices` is
-    * row-major, one byte per
-    * pixel, each < nColors. A REAL LZW compressor: longest-prefix-match
-    * table growth, Clear emitted when the 12-bit table fills.
-    */
-  def encode(width: Int, height: Int, palette: Array[Byte], indices: Array[Byte]): Array[Byte] = {
-    val nColors = palette.length / 3
-    require(nColors >= 2 && nColors <= 256 && Integer.bitCount(nColors) == 1,
-      s"palette must hold a power-of-two color count in [2,256], got $nColors")
-    require(indices.length == width * height, "one index byte per pixel")
-    val sizeField   = 31 - Integer.numberOfLeadingZeros(nColors) - 1 // log2 - 1
-    val minCodeSize = math.max(2, 31 - Integer.numberOfLeadingZeros(nColors))
-    val out         = new java.io.ByteArrayOutputStream()
-    def w16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    out.write("GIF89a".getBytes("US-ASCII"))
-    w16(width); w16(height)
-    out.write(0x80 | sizeField) // GCT present, 2^(sizeField+1) entries
-    out.write(0)                // background color index
-    out.write(0)                // no aspect ratio
-    out.write(palette, 0, palette.length)
-    out.write(0x2c) // image descriptor
-    w16(0); w16(0); w16(width); w16(height)
-    out.write(0) // no LCT, not interlaced
-    out.write(minCodeSize)
-
-    // LZW compress the index stream
-    val clear = 1 << minCodeSize
-    val eoi   = clear + 1
-    val table = new java.util.HashMap[Integer, Integer]() // (prefixCode<<8 | byte) -> code
-    var free  = eoi + 1
-    var width_ = minCodeSize + 1
-    val bits   = new java.io.ByteArrayOutputStream()
-    var bitBuf = 0L
-    var bitCnt = 0
-    @inline def putCode(c: Int): Unit = {
-      bitBuf |= c.toLong << bitCnt
-      bitCnt += width_
-      while (bitCnt >= 8) { bits.write((bitBuf & 0xff).toInt); bitBuf >>= 8; bitCnt -= 8 }
-    }
-    putCode(clear)
-    var prev = -1
-    var i    = 0
-    while (i < indices.length) {
-      val k = indices(i) & 0xff
-      if (prev == -1) prev = k
-      else {
-        val key = Integer.valueOf((prev << 8) | k)
-        val hit = table.get(key)
-        if (hit != null) prev = hit.intValue()
-        else {
-          putCode(prev)
-          if (free < 4096) {
-            table.put(key, Integer.valueOf(free))
-            free += 1
-            // the decoder grows its width when ITS table hits 2^width right
-            // after this code is added — mirror that exactly
-            if (free == (1 << width_) + 1 && width_ < 12) width_ += 1
-          } else {
-            putCode(clear)
-            table.clear()
-            free = eoi + 1
-            width_ = minCodeSize + 1
-          }
-          prev = k
-        }
-      }
-      i += 1
-    }
-    if (prev != -1) putCode(prev)
-    // the decoder adds one more table entry after the final data code and
-    // grows its code width if that lands exactly on 2^width — mirror it,
-    // or the EOI is written narrower than the decoder reads it (the
-    // encoder's counter runs one ahead in-loop, which is why the in-loop
-    // threshold is 2^width + 1 and this one is 2^width)
-    if (free == (1 << width_) && width_ < 12) width_ += 1
-    putCode(eoi)
-    if (bitCnt > 0) bits.write((bitBuf & 0xff).toInt)
-
-    // sub-block framing
-    val stream = bits.toByteArray
-    var off    = 0
-    while (off < stream.length) {
-      val n = math.min(255, stream.length - off)
-      out.write(n)
-      out.write(stream, off, n)
-      off += n
-    }
-    out.write(0)    // block terminator
-    out.write(0x3b) // trailer
-    out.toByteArray
   }
 }

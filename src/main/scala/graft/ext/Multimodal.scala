@@ -15,19 +15,16 @@ import graft.queries.Q
   * Image DIMENSION extraction is REAL: [[Multimodal.imageDims]] byte-parses
   * PNG/GIF/JPEG container headers (pure JVM, no codec library — production
   * metadata extraction works the same way to avoid decompressing pixels).
-  * PNG pixel decode is ALSO real: [[Png.decode]] inflates IDAT and reverses
-  * the five scanline filters with `java.util.zip` alone (cross-checked
-  * bit-exactly against `javax.imageio` in ExtSpec; `q_multimodal_pixels`
-  * runs the encode→decode round-trip end-to-end against an independent
-  * oracle). GIF pixel decode is real too: [[Gif]] implements the full LZW
-  * scheme both directions (`q_multimodal_gif`, same oracle trick, ImageIO
-  * cross-check), as are baseline-JPEG decode ([[Jpeg]] — Huffman + dequant
-  * + reference IDCT, tolerance-checked because T.81 makes bit-exactness
-  * undefined for lossy JPEG; `q_multimodal_jpeg`) and nearest-neighbor
-  * resize ([[resizePixels]], `q_multimodal_resize`). The only remaining
-  * DETERMINISTIC STUB is learned feature extraction (a trained embedding
-  * model cannot exist in this container), plus [[decodeStub]] kept as the
-  * registered pipeline's engine-replayable path. Everything around them — the schema,
+  * Pixel work is real too. [[ImageCodec]] encodes PNG, JPEG and GIF and
+  * decodes PNG and JPEG through `javax.imageio`; GIF decode is
+  * [[Gif.decode]]'s LZW decoder. `q_multimodal_pixels`, `_resize`, `_gif`,
+  * `_features` and `_embed` round-trip formula pixels and hash-check them
+  * against an independent oracle; `q_multimodal_jpeg` and `_jpeg_rt` check
+  * the lossy codec within per-row bounds. Interlaced PNG and progressive
+  * JPEG decode. The only remaining DETERMINISTIC STUB is learned feature
+  * extraction (a trained embedding model cannot exist in this container),
+  * plus [[decodeStub]] kept as the registered pipeline's engine-replayable
+  * path. Everything around them — the schema,
   * the Dataset encoders, the mapPartitions batch shape (one reusable
   * MessageDigest per partition, streaming iterator, no materialization) —
   * is the real 100 TB-shaped plumbing a production pipeline would drop
@@ -215,7 +212,7 @@ object Multimodal {
 
   /** A complete PCM WAV file: canonical header + little-endian 16-bit
     * sample payload ([[wavHeaderBytes]] writes the header-only fixture;
-    * this is the audio analog of [[Png.encode]] — a real, playable file).
+    * this is the audio analog of [[ImageCodec.encodePng]] — a real, playable file).
     */
   def wavPcmBytes(sampleRate: Int, channels: Int, samples: Array[Short]): Array[Byte] = {
     val data = samples.length * 2
@@ -353,26 +350,8 @@ object Multimodal {
   /** A fixed-width feature vector extracted from a media payload. */
   final case class MediaFeature(id: Long, kind: String, feature: Array[Float])
 
-  /** Decode any of the three real codecs to a raster:
-    * (width, height, channels, row-major samples). Tries the cheap
-    * signature checks in order; None if no codec claims the payload.
-    */
-  private[graft] def decodeRaster(b: Array[Byte]): Option[(Int, Int, Int, Array[Byte])] = {
-    val png = Png.decode(b)
-    if (png.isDefined) {
-      val i = png.get
-      return Some((i.width, i.height, i.channels, i.pixels))
-    }
-    val gif = Gif.decode(b)
-    if (gif.isDefined) {
-      val i = gif.get
-      return Some((i.width, i.height, 3, i.pixels))
-    }
-    Jpeg.decode(b).map(i => (i.width, i.height, i.channels, i.pixels))
-  }
-
   /** REAL classical feature extraction (replaces [[featureStub]] for any
-    * payload the [[Png]]/[[Gif]]/[[Jpeg]] codecs decode): an integer luma
+    * payload [[ImageCodec.decode]] decodes): an integer luma
     * histogram over the ACTUAL pixels — luma = (299·R + 587·G + 114·B)
     * div 1000 (ITU BT.601 weights in exact integer form), `bins` equal
     * bins, normalized to fractions, plus mean luma as the last component.
@@ -411,7 +390,7 @@ object Multimodal {
     import records.sparkSession.implicits._
     records.mapPartitions { it =>
       it.flatMap { r =>
-        decodeRaster(r.media).map { case (w, h, ch, px) =>
+        ImageCodec.decode(r.media).map { case ImageCodec.Image(w, h, ch, px) =>
           val (counts, lumaSum) = lumaHistogram(w, h, ch, px, bins)
           val n = w * h
           val f = new Array[Float](bins + 1)
@@ -478,8 +457,8 @@ object Multimodal {
     records.mapPartitions { it =>
       val md = MessageDigest.getInstance("SHA-256") // one per partition, reused
       it.map { r =>
-        decodeRaster(r.media) match {
-          case Some((w, h, ch, px)) =>
+        ImageCodec.decode(r.media) match {
+          case Some(ImageCodec.Image(w, h, ch, px)) =>
             val (sums, counts) = lumaBlockSums(w, h, ch, px, grid)
             val f = new Array[Float](grid * grid)
             var i = 0
@@ -634,17 +613,17 @@ object Multimodal {
       px_sum: Long
   )
 
-  /** REAL pixel-decode stage: [[Png.decode]] per payload (inflate +
-    * unfilter), emitting raster dimensions and the unsigned pixel-byte sum.
-    * Same mapPartitions batch shape as [[decode]]; rows that are not a
-    * supported PNG are dropped (a production pipeline would route them to a
-    * dead-letter sink).
+  /** REAL pixel-decode stage: [[ImageCodec.decode]] per payload,
+    * emitting raster dimensions and the unsigned pixel-byte sum. Same
+    * mapPartitions batch shape as [[decode]]; rows that are not a
+    * decodable image are dropped (a production pipeline would route them
+    * to a dead-letter sink).
     */
   def decodePixels(records: Dataset[MediaRecord]): Dataset[PixelMeta] = {
     import records.sparkSession.implicits._
     records.mapPartitions { it =>
       it.flatMap { r =>
-        Png.decode(r.media).map { img =>
+        ImageCodec.decode(r.media).map { img =>
           var sum = 0L
           var i   = 0
           while (i < img.pixels.length) { sum += img.pixels(i) & 0xff; i += 1 }
@@ -654,14 +633,29 @@ object Multimodal {
     }
   }
 
+  /** The closed-form RGB raster the PNG queries synthesize per document:
+    * byte (x, y, c) = (x + 31·y + 7·c + id) mod 251. Their oracles replay
+    * the same formula in SQL.
+    */
+  private def formulaRgb(w: Int, h: Int, id: Long): Array[Byte] = {
+    val px = new Array[Byte](w * h * 3)
+    var p  = 0
+    while (p < px.length) {
+      val xy = p / 3
+      px(p) = ((xy % w + 31L * (xy / w) + 7L * (p % 3) + id) % 251).toByte
+      p += 1
+    }
+    px
+  }
+
   /** Registered query: REAL pixel round-trip end-to-end. Each document
     * synthesizes a small RGB image whose pixel bytes follow a closed-form
-    * rule of (x, y, channel, doc_id), [[Png.encode]] writes a spec-valid
-    * PNG (real deflate, real CRCs), [[Png.decode]] inflates and unfilters
+    * rule of (x, y, channel, doc_id) ([[formulaRgb]]),
+    * [[ImageCodec.encodePng]] writes a PNG, [[ImageCodec.decode]] reads
     * it back, and the query emits the decoded dimensions and pixel sum.
     * The DuckDB oracle computes the expected sum INDEPENDENTLY from the
-    * same closed form — a bug anywhere in the codec (chunk layout, zlib
-    * framing, filter reversal, byte order) breaks the hash compare. Images
+    * same closed form — a bug anywhere in the codec path (channel order,
+    * row stride, sample conversion) breaks the hash compare. Images
     * are ≤ 8×6 so the oracle's per-row expansion stays trivial; the Spark
     * side's cost model is the real one (bounded per-row decode inside one
     * scan-stage mapPartitions, no shuffle before the final sort).
@@ -675,21 +669,7 @@ object Multimodal {
         .map { id =>
           val w  = (1 + id % 8).toInt
           val h  = (1 + (id * 3) % 6).toInt
-          val px = new Array[Byte](w * h * 3)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              var c = 0
-              while (c < 3) {
-                px((y * w + x) * 3 + c) = ((x + 31L * y + 7L * c + id) % 251).toByte
-                c += 1
-              }
-              x += 1
-            }
-            y += 1
-          }
-          MediaRecord(id, "image", Png.encode(w, h, 3, px))
+          MediaRecord(id, "image", ImageCodec.encodePng(w, h, 3, formulaRgb(w, h, id)))
         }
       decodePixels(recs).toDF().orderBy("id")
     },
@@ -952,8 +932,8 @@ object Multimodal {
       px_sum: Long
   )
 
-  /** REAL pixel-resize stage (replaces [[resizeStub]] for PNG payloads):
-    * decode → nearest-neighbor downscale to fit `maxDim` → [[Png.encode]]
+  /** REAL pixel-resize stage (replaces [[resizeStub]] for decodable payloads):
+    * decode → nearest-neighbor downscale to fit `maxDim` → [[ImageCodec.encodePng]]
     * the result → re-decode the emitted artifact for the output stats, so
     * the reported numbers can only be right if the produced PNG is. The
     * resample is the pure-integer index map `src = out_idx * in_dim /
@@ -966,7 +946,7 @@ object Multimodal {
     import records.sparkSession.implicits._
     records.mapPartitions { it =>
       it.flatMap { r =>
-        Png.decode(r.media).flatMap { img =>
+        ImageCodec.decode(r.media).flatMap { img =>
           val m = math.max(img.width, img.height)
           val (ow, oh) =
             if (m <= maxDim) (img.width, img.height)
@@ -988,7 +968,7 @@ object Multimodal {
             }
             y += 1
           }
-          Png.decode(Png.encode(ow, oh, ch, out)).map { rimg =>
+          ImageCodec.decode(ImageCodec.encodePng(ow, oh, ch, out)).map { rimg =>
             var sum = 0L
             var i   = 0
             while (i < rimg.pixels.length) { sum += rimg.pixels(i) & 0xff; i += 1 }
@@ -1001,7 +981,7 @@ object Multimodal {
   }
 
   /** Registered query: the REAL resize pipeline end-to-end — synthetic
-    * formula pixels → [[Png.encode]] → [[resizePixels]] (decode,
+    * formula pixels → [[ImageCodec.encodePng]] → [[resizePixels]] (decode,
     * integer nearest-neighbor, re-encode, re-decode) — against an oracle
     * that replays generation AND resample arithmetic in SQL. Dims span
     * both sides of `maxDim` = 5 so the pass-through and downscale branches
@@ -1016,21 +996,7 @@ object Multimodal {
         .map { id =>
           val w  = (2 + id % 9).toInt
           val h  = (2 + (id * 3) % 7).toInt
-          val px = new Array[Byte](w * h * 3)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              var c = 0
-              while (c < 3) {
-                px((y * w + x) * 3 + c) = ((x + 31L * y + 7L * c + id) % 251).toByte
-                c += 1
-              }
-              x += 1
-            }
-            y += 1
-          }
-          MediaRecord(id, "image", Png.encode(w, h, 3, px))
+          MediaRecord(id, "image", ImageCodec.encodePng(w, h, 3, formulaRgb(w, h, id)))
         }
       resizePixels(recs, maxDim = 5).toDF().orderBy("id")
     },
@@ -1055,34 +1021,14 @@ object Multimodal {
     )
   )
 
-  /** REAL GIF pixel-decode stage: [[Gif.decode]] per payload (full LZW +
-    * palette resolution + interlace), same batch shape and output grain as
-    * [[decodePixels]]. Non-GIF payloads are dropped.
-    */
-  def decodeGifPixels(records: Dataset[MediaRecord]): Dataset[PixelMeta] = {
-    import records.sparkSession.implicits._
-    records.mapPartitions { it =>
-      it.flatMap { r =>
-        Gif.decode(r.media).map { img =>
-          var sum = 0L
-          var i   = 0
-          while (i < img.pixels.length) { sum += img.pixels(i) & 0xff; i += 1 }
-          PixelMeta(r.id, img.width, img.height, img.pixels.length.toLong, sum)
-        }
-      }
-    }
-  }
-
   /** Registered query: GIF encode→LZW-decode round-trip end-to-end against
-    * an independent oracle — the [[multimodalPixels]] trick applied to the
-    * second real codec: per-doc synthetic 16-color palette + index raster
-    * from integer formulas, [[Gif.encode]] (real LZW compressor) to bytes,
-    * [[decodeGifPixels]] (real LZW decompressor) back, and the oracle
-    * replays the formulas directly — so the hash check passes only if
-    * compressor and decompressor both implement GIF's variable-width code
-    * scheme correctly. ([[Gif]]'s ExtSpec cross-checks against
-    * `javax.imageio`'s independent reader/writer pin conformance; this
-    * pins it per-row through the Spark batch path.)
+    * an independent oracle — the [[multimodalPixels]] trick applied to
+    * GIF: per-doc synthetic 16-color palette + index raster from integer
+    * formulas, [[ImageCodec.encodeGif]] (the JDK's LZW compressor) to
+    * bytes, [[decodePixels]] ([[Gif.decode]]'s LZW decompressor) back, and
+    * the oracle replays the formulas directly — so the hash check passes
+    * only if compressor and decompressor agree on GIF's variable-width
+    * code scheme.
     */
   val multimodalGif: Q = Q(
     "q_multimodal_gif",
@@ -1107,9 +1053,9 @@ object Multimodal {
             while (x < w) { idx(y * w + x) = ((x + 3L * y + id) % 16).toByte; x += 1 }
             y += 1
           }
-          MediaRecord(id, "image", Gif.encode(w, h, pal, idx))
+          MediaRecord(id, "image", ImageCodec.encodeGif(w, h, pal, idx))
         }
-      decodeGifPixels(recs).toDF().orderBy("id")
+      decodePixels(recs).toDF().orderBy("id")
     },
     Some(
       """SELECT doc_id AS id,
@@ -1123,20 +1069,40 @@ object Multimodal {
     )
   )
 
-  /** Registered query: REAL baseline-JPEG decode ([[Jpeg.decode]] — the
-    * full SOF0 Huffman + dequant + IDCT path) through the Spark batch
-    * stage. JPEG is LOSSY and T.81 permits IDCT variance, so unlike the
-    * PNG/GIF round-trips the pixels cannot replay exactly in any oracle;
-    * the result therefore reduces to exactly-checkable dimensions plus
-    * bounded-deviation booleans against the known source pixels — the
-    * same reduce-to-bound pattern as the HLL/KLL sketch queries
-    * (`q_approx_distinct`/`q_approx_quantiles`). Per doc: a smooth
-    * formula gradient (no mod wraps — smoothness keeps quantization loss
-    * small and the bound meaningful) is JPEG-encoded by the JDK's
-    * independent `javax.imageio` writer at q=0.95 and decoded by OUR
-    * decoder; max |err| ≤ 8 and mean×100 ≤ 200 must hold for every row.
-    * A decode failure drops the row and fails the row-count gate loudly.
-    * (ExtSpec separately pins ours-vs-ImageIO agreement within ±2 gray.)
+  /** A smooth gradient through a quality-0.95 JPEG and back: the decoded
+    * image, its worst per-sample error and its mean error ×100. Sample
+    * (x, y, c) = 30 + 150·x/(w−1) + rise·y/(h−1) + 5·c, with no mod wraps,
+    * so quantization loss stays small and the bounds mean something. A
+    * decode that fails or changes the raster size is None.
+    */
+  private def jpegGradient(w: Int, h: Int, ch: Int, rise: Int): Option[(ImageCodec.Image, Int, Long)] = {
+    val px = Array.tabulate[Byte](w * h * ch) { i =>
+      val x = i / ch % w
+      val y = i / ch / w
+      (30 + x * 150 / math.max(w - 1, 1) + y * rise / math.max(h - 1, 1) + 5 * (i % ch)).toByte
+    }
+    ImageCodec.decode(ImageCodec.encodeJpeg(w, h, ch, px, 0.95f)).filter(_.pixels.length == px.length).map { d =>
+      var worst = 0
+      var sum   = 0L
+      var i     = 0
+      while (i < px.length) {
+        val e = math.abs((d.pixels(i) & 0xff) - (px(i) & 0xff))
+        if (e > worst) worst = e
+        sum += e
+        i += 1
+      }
+      (d, worst, sum * 100 / px.length)
+    }
+  }
+
+  /** Registered query: JPEG decode through the Spark batch stage. JPEG is
+    * LOSSY, so unlike the PNG/GIF round-trips the pixels cannot replay
+    * exactly in any oracle; the result reduces to exactly-checkable
+    * dimensions plus bounded-deviation booleans against the known source
+    * pixels — the same reduce-to-bound pattern as the HLL/KLL sketch
+    * queries (`q_approx_distinct`/`q_approx_quantiles`). Per doc a gray
+    * [[jpegGradient]] must hold max |err| ≤ 8 and mean×100 ≤ 200. A
+    * decode failure drops the row and fails the row-count gate loudly.
     */
   val multimodalJpeg: Q = Q(
     "q_multimodal_jpeg",
@@ -1144,59 +1110,11 @@ object Multimodal {
       import s.implicits._
       val recs = docRows(s, dir, col("doc_id"))
         .as[Long]
-        .mapPartitions { it =>
-          // one writer + param per PARTITION (the same reuse discipline as
-          // the per-partition MessageDigest in decodeWith) — only the
-          // output stream is per-row
-          val writer = javax.imageio.ImageIO.getImageWritersByFormatName("jpeg").next()
-          val param  = writer.getDefaultWriteParam
-          param.setCompressionMode(javax.imageio.ImageWriteParam.MODE_EXPLICIT)
-          param.setCompressionQuality(0.95f)
-          it.flatMap { id =>
-            val w = (16 + id % 17).toInt
-            val h = (16 + (id * 5) % 13).toInt
-            val img = new java.awt.image.BufferedImage(
-              w, h, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                img.getRaster.setSample(x, y, 0,
-                  30 + x * 150 / math.max(w - 1, 1) + y * 60 / math.max(h - 1, 1))
-                x += 1
-              }
-              y += 1
-            }
-            val baos = new java.io.ByteArrayOutputStream()
-            // MemoryCacheImageOutputStream, NOT ImageIO.createImageOutputStream:
-            // the latter consults the global use-cache flag and by default
-            // backs every stream with a temp FILE — per-row disk I/O behind a
-            // shared registry, which serialized fine on one task but
-            // contends pathologically once the spread scan runs 32 encode
-            // tasks concurrently (measured r16: 1.6 s → 4.9 s). The in-memory
-            // stream is lock-free and allocation-only.
-            val ios = new javax.imageio.stream.MemoryCacheImageOutputStream(baos)
-            writer.setOutput(ios)
-            writer.write(null, new javax.imageio.IIOImage(img, null, null), param)
-            ios.close()
-            Jpeg.decode(baos.toByteArray).map { d =>
-              var worst = 0
-              var sum   = 0L
-              var yy = 0
-              while (yy < h) {
-                var xx = 0
-                while (xx < w) {
-                  val want = 30 + xx * 150 / math.max(w - 1, 1) + yy * 60 / math.max(h - 1, 1)
-                  val got  = d.pixels(yy * d.width + xx) & 0xff
-                  val e    = math.abs(got - want)
-                  if (e > worst) worst = e
-                  sum += e
-                  xx += 1
-                }
-                yy += 1
-              }
-              (id, d.width, d.height, worst <= 8, sum * 100 / (w.toLong * h) <= 200)
-            }
+        .flatMap { id =>
+          val w = (16 + id % 17).toInt
+          val h = (16 + (id * 5) % 13).toInt
+          jpegGradient(w, h, 1, rise = 60).map { case (d, worst, mean100) =>
+            (id, d.width, d.height, worst <= 8, mean100 <= 200)
           }
         }
         .toDF("id", "width", "height", "ok_max", "ok_mean")
@@ -1212,7 +1130,7 @@ object Multimodal {
   )
 
   /** Registered query: REAL feature extraction end-to-end — formula
-    * pixels → [[Png.encode]] → [[decodeRaster]] → [[lumaHistogram]] —
+    * pixels → [[ImageCodec.encodePng]] → [[ImageCodec.decode]] → [[lumaHistogram]] —
     * hash-checked EXACTLY: the luma weights and binning are pure integer
     * arithmetic, so the oracle replays pixel generation, BT.601 luma and
     * the 8-bin histogram in SQL. The float vector [[featurePixels]] hands
@@ -1228,23 +1146,9 @@ object Multimodal {
         .flatMap { id =>
           val w  = (1 + id % 8).toInt
           val h  = (1 + (id * 3) % 6).toInt
-          val px = new Array[Byte](w * h * 3)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              var c = 0
-              while (c < 3) {
-                px((y * w + x) * 3 + c) = ((x + 31L * y + 7L * c + id) % 251).toByte
-                c += 1
-              }
-              x += 1
-            }
-            y += 1
-          }
-          decodeRaster(Png.encode(w, h, 3, px)).map { case (dw, dh, ch, dpx) =>
-            val (counts, lumaSum) = lumaHistogram(dw, dh, ch, dpx, 8)
-            (id, dw, dh, counts(0), counts(1), counts(2), counts(3), counts(4), counts(5),
+          ImageCodec.decode(ImageCodec.encodePng(w, h, 3, formulaRgb(w, h, id))).map { d =>
+            val (counts, lumaSum) = lumaHistogram(d.width, d.height, d.channels, d.pixels, 8)
+            (id, d.width, d.height, counts(0), counts(1), counts(2), counts(3), counts(4), counts(5),
               counts(6), counts(7), lumaSum)
           }
         }
@@ -1318,14 +1222,10 @@ object Multimodal {
     )
   )
 
-  /** Registered query: the FULL in-library JPEG loop — [[Jpeg.encode]]
-    * (forward DCT + uniform quant + fixed-table Huffman) feeding
-    * [[Jpeg.decode]] — where [[multimodalJpeg]] pairs our decoder with
-    * the JDK's independent encoder. Both a grayscale and an RGB image per
-    * doc (odd/even split), reduced to exact dims + bounded-deviation
-    * booleans (lossy codec ⟹ the reduce-to-bound oracle pattern; the
-    * ±8 bound is the q=4 quantization error through the orthonormal
-    * IDCT, asserted per-row for every document).
+  /** Registered query: the JPEG loop on gray AND RGB images (odd/even
+    * doc split; [[multimodalJpeg]] is gray only), reduced to exact dims
+    * and channels plus bounded-deviation booleans: a [[jpegGradient]]
+    * must hold max |err| ≤ 8 and mean×100 ≤ 300 for every document.
     */
   val multimodalJpegRt: Q = Q(
     "q_multimodal_jpeg_rt",
@@ -1337,32 +1237,8 @@ object Multimodal {
           val w  = (16 + id % 13).toInt
           val h  = (16 + (id * 3) % 11).toInt
           val ch = if (id % 2 == 0) 1 else 3
-          val px = new Array[Byte](w * h * ch)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              var c = 0
-              while (c < ch) {
-                px((y * w + x) * ch + c) =
-                  (30 + x * 150 / math.max(w - 1, 1) + y * 50 / math.max(h - 1, 1) + 5 * c).toByte
-                c += 1
-              }
-              x += 1
-            }
-            y += 1
-          }
-          Jpeg.decode(Jpeg.encode(w, h, ch, px, q = 4)).map { d =>
-            var worst = 0
-            var sum   = 0L
-            var i = 0
-            while (i < px.length) {
-              val e = math.abs((d.pixels(i) & 0xff) - (px(i) & 0xff))
-              if (e > worst) worst = e
-              sum += e
-              i += 1
-            }
-            (id, d.width, d.height, d.channels, worst <= 8, sum * 100 / px.length <= 300)
+          jpegGradient(w, h, ch, rise = 50).map { case (d, worst, mean100) =>
+            (id, d.width, d.height, d.channels, worst <= 8, mean100 <= 300)
           }
         }
         .toDF("id", "width", "height", "channels", "ok_max", "ok_mean")
@@ -1379,7 +1255,7 @@ object Multimodal {
   )
 
   /** Registered query: REAL classical embedding end-to-end — formula
-    * pixels → [[Png.encode]] → [[decodeRaster]] → [[lumaBlockSums]] —
+    * pixels → [[ImageCodec.encodePng]] → [[ImageCodec.decode]] → [[lumaBlockSums]] —
     * hash-checked EXACTLY. Emits the 4×4 block-luma SUMS (pure integers)
     * rather than the normalized floats: the float vector [[embedPixels]]
     * hands to [[Similarity]]/[[Ivf]] is sum/count/255 of precisely these
@@ -1398,23 +1274,9 @@ object Multimodal {
         .flatMap { id =>
           val w  = (4 + id % 13).toInt
           val h  = (4 + (id * 7) % 11).toInt
-          val px = new Array[Byte](w * h * 3)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              var c = 0
-              while (c < 3) {
-                px((y * w + x) * 3 + c) = ((x + 31L * y + 7L * c + id) % 251).toByte
-                c += 1
-              }
-              x += 1
-            }
-            y += 1
-          }
-          decodeRaster(Png.encode(w, h, 3, px)).map { case (dw, dh, ch, dpx) =>
-            val (b, _) = lumaBlockSums(dw, dh, ch, dpx, 4)
-            (id, dw, dh, b(0), b(1), b(2), b(3), b(4), b(5), b(6), b(7), b(8), b(9), b(10),
+          ImageCodec.decode(ImageCodec.encodePng(w, h, 3, formulaRgb(w, h, id))).map { d =>
+            val (b, _) = lumaBlockSums(d.width, d.height, d.channels, d.pixels, 4)
+            (id, d.width, d.height, b(0), b(1), b(2), b(3), b(4), b(5), b(6), b(7), b(8), b(9), b(10),
               b(11), b(12), b(13), b(14), b(15))
           }
         }

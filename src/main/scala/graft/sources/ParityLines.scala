@@ -58,10 +58,6 @@ object ParityLines {
   private def content(file: String): String =
     new String(Files.readAllBytes(Paths.get(file)), StandardCharsets.UTF_8)
 
-  /** All lines under `path` (a file or directory), newlines preserved. */
-  def apply(sc: SparkContext, path: String, minPartitions: Int): RDD[String] =
-    sc.parallelize(LineSource.files(path).map(_.toString), minPartitions).flatMap(f => splitKeepingNewlines(content(f)))
-
   /** The reference's SORT-TASK grain, byte-exact (round 13, closing the
     * multi-file-per-task gap ADVICE r12 flagged): the manager sorts the
     * input file list by path and deals files round-robin over `numTasks`

@@ -224,25 +224,6 @@ object StressGen {
     copiedAsIs.foreach(t => out(t, spark.read.parquet(s"$baseDir/$t.parquet"), 1))
   }
 
-  /** Documents-only blow-up — the 100× spot-gate corpus (round 12): the
-    * candidate-volume-bound dedup/set-join family reads nothing else, and
-    * a full 100× of lineitem/events/embeddings would cost 10× the disk and
-    * build wall for tables the gated queries never open. Same clean/hot
-    * semantics as [[write]], same replica striping.
-    */
-  def writeDocsOnly(
-      spark: SparkSession,
-      baseDir: String,
-      outDir: String,
-      mult: Int,
-      hot: Boolean,
-      partsScale: Int = 1): Unit =
-    documents(spark, baseDir, mult, hot)
-      .repartition(4 * partsScale)
-      .write
-      .mode("overwrite")
-      .parquet(s"$outDir/documents.parquet")
-
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: StressGen <baseDir> <outRoot> [mult]")
     val mult  = if (args.length > 2) args(2).toInt else 10

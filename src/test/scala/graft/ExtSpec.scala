@@ -360,12 +360,11 @@ class ExtSpec extends SparkSpec {
     assert(Multimodal.mp4Meta(Multimodal.mp4HeaderBytes("isom", 600, 100, 1).take(16)).isEmpty)
   }
 
-  test("Png.decode matches javax.imageio pixel-for-pixel on ImageIO-written PNGs") {
+  test("ImageCodec.decode returns the raster samples of ImageIO-written PNGs") {
     import java.awt.image.BufferedImage
     import javax.imageio.ImageIO
-    // ImageIO's PNG writer uses adaptive per-scanline filtering, so this
-    // round-trip exercises the Sub/Up/Average/Paeth reversal paths our own
-    // filter-0 encoder never produces
+    // gray must come from the raster (getRGB converts linear CS_GRAY), and
+    // RGB/RGBA must come out in R, G, B(, A) order whatever the image type
     def deterministicImage(w: Int, h: Int, imgType: Int): BufferedImage = {
       val img = new BufferedImage(w, h, imgType)
       for (y <- 0 until h; x <- 0 until w) {
@@ -383,7 +382,7 @@ class ExtSpec extends SparkSpec {
       val img  = deterministicImage(w, h, imgType)
       val baos = new java.io.ByteArrayOutputStream()
       assert(ImageIO.write(img, "png", baos))
-      val decoded = graft.ext.Png.decode(baos.toByteArray)
+      val decoded = graft.ext.ImageCodec.decode(baos.toByteArray)
       assert(decoded.isDefined, s"decode failed for type=$imgType ${w}x$h")
       val d = decoded.get
       assert((d.width, d.height) == (w, h))
@@ -408,11 +407,10 @@ class ExtSpec extends SparkSpec {
     }
   }
 
-  test("Png.decode resolves palette (color type 3) PNGs written by javax.imageio") {
+  test("ImageCodec.decode resolves palette (color type 3) PNGs to RGB") {
     import java.awt.image.{BufferedImage, IndexColorModel}
     import javax.imageio.ImageIO
-    // a 256-entry IndexColorModel forces ImageIO's writer to 8-bit palette
-    // depth (the supported form; sub-byte palette depths still decline)
+    // a 256-entry IndexColorModel forces ImageIO's writer to 8-bit palette depth
     val rnd = new scala.util.Random(5)
     val pal = Array.tabulate(256 * 3)(_ => rnd.nextInt(256).toByte)
     val icm = new IndexColorModel(
@@ -430,7 +428,7 @@ class ExtSpec extends SparkSpec {
     // assert the file really is color type 3 (IHDR byte at offset 25) so
     // this test cannot silently degrade to the RGB path
     assert((bytes(25) & 0xff) == 3, s"writer did not emit a palette PNG (colorType=${bytes(25)})")
-    val d = graft.ext.Png.decode(bytes).getOrElse(fail("palette decode failed"))
+    val d = graft.ext.ImageCodec.decode(bytes).getOrElse(fail("palette decode failed"))
     assert(d.width == w && d.height == h && d.channels == 3)
     for (y <- 0 until h; x <- 0 until w) {
       val argb = img.getRGB(x, y)
@@ -441,44 +439,47 @@ class ExtSpec extends SparkSpec {
     }
   }
 
-  test("Png.encode round-trips through javax.imageio and Png.decode; malformed inputs yield None") {
-    import javax.imageio.ImageIO
+  test("ImageCodec.encodePng round-trips through ImageCodec.decode; malformed PNGs yield None") {
+    import graft.ext.ImageCodec
     val w = 9; val h = 4
     val px = Array.tabulate(w * h * 3)(i => ((i * 17 + 5) % 256).toByte)
-    val bytes = graft.ext.Png.encode(w, h, 3, px)
-    // our own decoder round-trips bit-exactly
-    val own = graft.ext.Png.decode(bytes).get
+    val bytes = ImageCodec.encodePng(w, h, 3, px)
+    val own = ImageCodec.decode(bytes).get
     assert(own.width == w && own.height == h && own.channels == 3)
     assert(own.pixels.sameElements(px))
-    // a conformant third-party reader accepts the file (CRCs, zlib framing)
-    val img = ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-    assert(img != null && img.getWidth == w && img.getHeight == h)
-    for (y <- 0 until h; x <- 0 until w) {
-      val off  = (y * w + x) * 3
-      val want = (0xff << 24) | ((px(off) & 0xff) << 16) | ((px(off + 1) & 0xff) << 8) | (px(off + 2) & 0xff)
-      assert(img.getRGB(x, y) == want, s"ImageIO disagrees at ($x,$y)")
-    }
-    // malformed inputs: truncated file, forged chunk length, bad filter type
-    assert(graft.ext.Png.decode(bytes.take(bytes.length - 9)).isEmpty, "missing IEND accepted")
+    // malformed inputs: truncated file (the JDK reader alone accepts a PNG
+    // cut inside IEND), forged chunk length, header only, junk
+    assert(ImageCodec.decode(bytes.take(bytes.length - 9)).isEmpty, "missing IEND accepted")
+    assert(ImageCodec.decode(bytes.take(bytes.length - 1)).isEmpty, "IEND without its CRC accepted")
     val forged = bytes.clone()
     forged(8) = 0x7f.toByte // IHDR length forged huge
-    assert(graft.ext.Png.decode(forged).isEmpty)
-    assert(graft.ext.Png.decode(Multimodal.pngHeaderBytes(5, 5)).isEmpty, "header-only PNG has no IDAT/IEND")
-    assert(graft.ext.Png.decode("not a png at all".getBytes).isEmpty)
+    assert(ImageCodec.decode(forged).isEmpty)
+    assert(ImageCodec.decode(Multimodal.pngHeaderBytes(5, 5)).isEmpty, "header-only PNG has no IDAT/IEND")
+    assert(ImageCodec.decode("not a png at all".getBytes).isEmpty)
+    // samples wider than 8 bits do not fit the byte raster
+    val deep = new java.awt.image.BufferedImage(3, 2, java.awt.image.BufferedImage.TYPE_USHORT_GRAY)
+    val deepPng = new java.io.ByteArrayOutputStream()
+    assert(javax.imageio.ImageIO.write(deep, "png", deepPng))
+    assert(deepPng.toByteArray()(24) == 16, "expected a 16-bit PNG")
+    assert(ImageCodec.decode(deepPng.toByteArray).isEmpty, "16-bit PNG accepted")
     // forged IHDR claiming a ~256 MiB raster over an empty IDAT must be
     // rejected BEFORE the raster allocation (the zlib 1032:1 expansion
-    // bound), not after a half-GiB transient per adversarial row
-    val forged2 = java.nio.ByteBuffer.allocate(8 + 25 + 12 + 12)
-    forged2.put(Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte))
-    forged2.putInt(13).put("IHDR".getBytes)
-    forged2.putInt(1).putInt(1 << 28) // 1 x 268435456 gray
-    forged2.put(8.toByte).put(0.toByte).put(0.toByte).put(0.toByte).put(0.toByte)
-    forged2.putInt(0) // crc
-    forged2.putInt(0).put("IDAT".getBytes).putInt(0)
-    forged2.putInt(0).put("IEND".getBytes).putInt(0)
-    val t0 = System.nanoTime()
-    assert(graft.ext.Png.decode(forged2.array()).isEmpty)
-    assert((System.nanoTime() - t0) / 1e9 < 1.0, "forged-IHDR rejection allocated/inflated")
+    // bound): the JDK reader allocates the declared raster before it reads
+    // any pixel data. The second IEND CRC is the real one, so that input
+    // gets past the trailer check to the header guard
+    for (iendCrc <- Seq(0, 0xae426082)) {
+      val forged2 = java.nio.ByteBuffer.allocate(8 + 25 + 12 + 12)
+      forged2.put(Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte))
+      forged2.putInt(13).put("IHDR".getBytes)
+      forged2.putInt(1).putInt(1 << 28) // 1 x 268435456 gray
+      forged2.put(8.toByte).put(0.toByte).put(0.toByte).put(0.toByte).put(0.toByte)
+      forged2.putInt(0) // crc
+      forged2.putInt(0).put("IDAT".getBytes).putInt(0)
+      forged2.putInt(0).put("IEND".getBytes).putInt(iendCrc)
+      val t0 = System.nanoTime()
+      assert(ImageCodec.decode(forged2.array()).isEmpty)
+      assert((System.nanoTime() - t0) / 1e9 < 1.0, "forged-IHDR rejection allocated/inflated")
+    }
   }
 
   test("Gif.decode matches javax.imageio pixel-for-pixel on ImageIO-written GIFs") {
@@ -518,47 +519,60 @@ class ExtSpec extends SparkSpec {
     import java.awt.image.{BufferedImage, IndexColorModel}
     import javax.imageio.ImageIO
     val nColors = 16
-    val (w, h)  = (13, 23) // odd dims so all four interlace passes carry rows
     val icm = new IndexColorModel(
       8, nColors,
       Array.tabulate(nColors)(i => (i * 16).toByte),
       Array.tabulate(nColors)(i => (255 - i * 16).toByte),
       Array.tabulate(nColors)(i => (i * 5 + 3).toByte)
     )
-    val img = new BufferedImage(w, h, BufferedImage.TYPE_BYTE_INDEXED, icm)
-    for (y <- 0 until h; x <- 0 until w) img.getRaster.setSample(x, y, 0, (x + 3 * y) % nColors)
-    val writer = ImageIO.getImageWritersByFormatName("gif").next()
-    val param  = writer.getDefaultWriteParam
-    param.setProgressiveMode(javax.imageio.ImageWriteParam.MODE_DEFAULT) // GIF: interlace
-    val baos = new java.io.ByteArrayOutputStream()
-    val ios  = ImageIO.createImageOutputStream(baos)
-    writer.setOutput(ios)
-    writer.write(null, new javax.imageio.IIOImage(img, null, null), param)
-    ios.close()
-    val bytes = baos.toByteArray
-    // locate the image descriptor and assert the writer really interlaced —
-    // otherwise this test would silently degrade to the sequential path
-    var p = 13 + 3 * (2 << (bytes(10) & 0x07))
-    while ((bytes(p) & 0xff) == 0x21) {
-      p += 2
-      while ((bytes(p) & 0xff) != 0) p += 1 + (bytes(p) & 0xff)
-      p += 1
-    }
-    assert((bytes(p) & 0xff) == 0x2c, "expected image descriptor")
-    assert((bytes(p + 9) & 0x40) != 0, "ImageIO did not write an interlaced GIF")
-    val d = graft.ext.Gif.decode(bytes).getOrElse(fail("interlaced decode failed"))
-    for (y <- 0 until h; x <- 0 until w) {
-      val argb = img.getRGB(x, y)
-      val off  = (y * w + x) * 3
-      assert((d.pixels(off) & 0xff) == ((argb >> 16) & 0xff), s"R ($x,$y)")
-      assert((d.pixels(off + 1) & 0xff) == ((argb >> 8) & 0xff), s"G ($x,$y)")
-      assert((d.pixels(off + 2) & 0xff) == (argb & 0xff), s"B ($x,$y)")
+    // 13x23: odd dims so all four interlace passes carry rows. Heights 2-4
+    // are the shapes JDK 17's own GIF reader decodes wrong, the reason
+    // Gif.decode is kept; they are checked against the source raster only
+    for ((w, h) <- Seq((13, 23), (1, 2), (5, 2), (12, 2), (3, 3), (9, 3), (1, 4), (7, 4), (12, 4))) {
+      val img = new BufferedImage(w, h, BufferedImage.TYPE_BYTE_INDEXED, icm)
+      for (y <- 0 until h; x <- 0 until w) img.getRaster.setSample(x, y, 0, (x + 3 * y) % nColors)
+      val writer = ImageIO.getImageWritersByFormatName("gif").next()
+      val param  = writer.getDefaultWriteParam
+      param.setProgressiveMode(javax.imageio.ImageWriteParam.MODE_DEFAULT) // GIF: interlace
+      val baos = new java.io.ByteArrayOutputStream()
+      val ios  = ImageIO.createImageOutputStream(baos)
+      writer.setOutput(ios)
+      writer.write(null, new javax.imageio.IIOImage(img, null, null), param)
+      ios.close()
+      val bytes = baos.toByteArray
+      // locate the image descriptor and assert the writer really interlaced —
+      // otherwise this test would silently degrade to the sequential path
+      var p = 13 + 3 * (2 << (bytes(10) & 0x07))
+      while ((bytes(p) & 0xff) == 0x21) {
+        p += 2
+        while ((bytes(p) & 0xff) != 0) p += 1 + (bytes(p) & 0xff)
+        p += 1
+      }
+      assert((bytes(p) & 0xff) == 0x2c, "expected image descriptor")
+      assert((bytes(p + 9) & 0x40) != 0, s"ImageIO did not write an interlaced GIF (${w}x$h)")
+      val d = graft.ext.Gif.decode(bytes).getOrElse(fail(s"interlaced decode failed (${w}x$h)"))
+      assert((d.width, d.height) == ((w, h)))
+      for (y <- 0 until h; x <- 0 until w) {
+        val c   = img.getRaster.getSample(x, y, 0)
+        val off = (y * w + x) * 3
+        assert((d.pixels(off) & 0xff) == icm.getRed(c), s"R ($x,$y) ${w}x$h")
+        assert((d.pixels(off + 1) & 0xff) == icm.getGreen(c), s"G ($x,$y) ${w}x$h")
+        assert((d.pixels(off + 2) & 0xff) == icm.getBlue(c), s"B ($x,$y) ${w}x$h")
+      }
     }
   }
 
-  test("Gif.encode round-trips through javax.imageio and Gif.decode; malformed inputs yield None") {
-    import javax.imageio.ImageIO
+  test("ImageCodec.encodeGif round-trips through Gif.decode; malformed inputs yield None") {
+    import graft.ext.{Gif, ImageCodec}
     val rnd = new scala.util.Random(42)
+    def assertPalette(d: ImageCodec.Image, pal: Array[Byte], idx: Array[Byte], what: String): Unit = {
+      assert(d.pixels.length == 3 * idx.length, what)
+      for (p <- idx.indices) {
+        val c = idx(p) & 0xff
+        assert(d.pixels(3 * p) == pal(3 * c) && d.pixels(3 * p + 1) == pal(3 * c + 1) &&
+          d.pixels(3 * p + 2) == pal(3 * c + 2), s"px $p $what")
+      }
+    }
     for (trial <- 0 until 12) {
       val nColors = Seq(4, 16, 64, 256)(trial % 4)
       val w       = 1 + rnd.nextInt(40)
@@ -573,143 +587,68 @@ class ExtSpec extends SparkSpec {
         var j   = 0
         while (j < run && i < idx.length) { idx(i) = v; i += 1; j += 1 }
       }
-      val bytes = graft.ext.Gif.encode(w, h, pal, idx)
-      // our own decoder round-trips to the palette-resolved RGB
-      val own = graft.ext.Gif.decode(bytes).getOrElse(fail(s"own decode failed trial=$trial"))
-      assert(own.width == w && own.height == h)
-      for (p <- 0 until w * h) {
-        val c = idx(p) & 0xff
-        assert(own.pixels(3 * p) == pal(3 * c) && own.pixels(3 * p + 1) == pal(3 * c + 1) &&
-          own.pixels(3 * p + 2) == pal(3 * c + 2), s"own px $p trial=$trial")
-      }
-      // a conformant third-party reader agrees (LZW width growth, framing)
-      val img = ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-      assert(img != null && img.getWidth == w && img.getHeight == h, s"ImageIO rejected trial=$trial")
-      for (y <- 0 until h; x <- 0 until w) {
-        val c = idx(y * w + x) & 0xff
-        val want = (0xff << 24) | ((pal(3 * c) & 0xff) << 16) |
-          ((pal(3 * c + 1) & 0xff) << 8) | (pal(3 * c + 2) & 0xff)
-        assert(img.getRGB(x, y) == want, s"ImageIO disagrees at ($x,$y) trial=$trial")
-      }
+      val d = Gif.decode(ImageCodec.encodeGif(w, h, pal, idx))
+        .getOrElse(fail(s"decode failed trial=$trial"))
+      assert(d.width == w && d.height == h && d.channels == 3)
+      assertPalette(d, pal, idx, s"trial=$trial")
     }
     // a large low-entropy image forces the 12-bit table to fill: the
-    // Clear-and-reset path must survive both our decoder and ImageIO's
+    // Clear-and-reset path must survive the decoder
     val w2  = 200; val h2 = 150
     val pal = Array.tabulate(256 * 3)(i => (i * 37 % 256).toByte)
     val idx = Array.tabulate(w2 * h2)(i => ((i / 3 + i % 7) % 256).toByte)
-    val big = graft.ext.Gif.encode(w2, h2, pal, idx)
-    val ownBig = graft.ext.Gif.decode(big).getOrElse(fail("table-fill decode failed"))
-    assert(ownBig.pixels.length == w2 * h2 * 3)
-    val imgBig = ImageIO.read(new java.io.ByteArrayInputStream(big))
-    assert(imgBig != null && imgBig.getWidth == w2)
-    for (p <- Seq(0, w2 * h2 / 2, w2 * h2 - 1)) {
-      val c    = idx(p) & 0xff
-      val want = (0xff << 24) | ((pal(3 * c) & 0xff) << 16) |
-        ((pal(3 * c + 1) & 0xff) << 8) | (pal(3 * c + 2) & 0xff)
-      assert(imgBig.getRGB(p % w2, p / w2) == want, s"ImageIO disagrees at flat $p after table fill")
-    }
+    val big = ImageCodec.encodeGif(w2, h2, pal, idx)
+    assertPalette(Gif.decode(big).getOrElse(fail("table-fill decode failed")), pal, idx, "after table fill")
     // malformed: truncation, bad signature, oversize dims, missing data
-    val ok = graft.ext.Gif.encode(3, 3, Array.tabulate(12)(_.toByte), Array.fill(9)(1.toByte))
-    assert(graft.ext.Gif.decode(ok.take(ok.length - 2)).isEmpty, "missing terminator accepted")
-    assert(graft.ext.Gif.decode("GIF90a garbage".getBytes).isEmpty)
-    assert(graft.ext.Gif.decode(Array[Byte]()).isEmpty)
+    val ok = ImageCodec.encodeGif(3, 3, Array.tabulate(12)(_.toByte), Array.fill(9)(1.toByte))
+    assert(Gif.decode(ok).isDefined)
+    assert(Gif.decode(ok.take(ok.length - 2)).isEmpty, "missing terminator accepted")
+    assert(Gif.decode("GIF90a garbage".getBytes).isEmpty)
+    assert(Gif.decode(Array[Byte]()).isEmpty)
     // forge the IMAGE DESCRIPTOR width (the decode authority; the logical
-    // screen dims are display metadata): header 13 + GCT 12 + 0x2c, width
-    // at descriptor offset +5
+    // screen dims are display metadata): after header 13 + GCT 12 and any
+    // extension blocks, width at descriptor offset +5
+    var p = 13 + 12
+    while ((ok(p) & 0xff) == 0x21) {
+      p += 2
+      while ((ok(p) & 0xff) != 0) p += 1 + (ok(p) & 0xff)
+      p += 1
+    }
+    assert((ok(p) & 0xff) == 0x2c, "expected image descriptor")
     val forged = ok.clone()
-    forged(13 + 12 + 5) = 0xff.toByte; forged(13 + 12 + 6) = 0x7f.toByte
-    assert(graft.ext.Gif.decode(forged).isEmpty, "dims/stream mismatch accepted")
+    forged(p + 5) = 0xff.toByte; forged(p + 6) = 0x7f.toByte
+    assert(Gif.decode(forged).isEmpty, "dims/stream mismatch accepted")
   }
 
-  test("Jpeg.decode tracks javax.imageio within the T.81 IDCT tolerance") {
-    import java.awt.image.BufferedImage
-    import javax.imageio.ImageIO
-    // JPEG decoders are spec-permitted to differ in the low bits (T.81
-    // §A.3.3), so unlike the PNG/GIF equality checks this one is bounded:
-    // per-sample |ours − ImageIO's| must stay tiny. Smooth gradients keep
-    // the chroma-upsampling method difference (our nearest vs libjpeg's
-    // triangle filter) inside the same bound for subsampled color images.
-    def maxDev(img: BufferedImage, quality: Float): (Int, Int) = {
-      val baos   = new java.io.ByteArrayOutputStream()
-      val writer = ImageIO.getImageWritersByFormatName("jpeg").next()
-      val param  = writer.getDefaultWriteParam
-      param.setCompressionMode(javax.imageio.ImageWriteParam.MODE_EXPLICIT)
-      param.setCompressionQuality(quality)
-      val ios = ImageIO.createImageOutputStream(baos)
-      writer.setOutput(ios)
-      writer.write(null, new javax.imageio.IIOImage(img, null, null), param)
-      ios.close()
-      val bytes = baos.toByteArray
-      val ours = graft.ext.Jpeg.decode(bytes)
-        .getOrElse(fail(s"decode failed ${img.getWidth}x${img.getHeight} q=$quality"))
-      assert(ours.width == img.getWidth && ours.height == img.getHeight)
-      val ref = ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-      var worst = 0
-      var sumAbs = 0L
-      for (y <- 0 until ours.height; x <- 0 until ours.width; c <- 0 until ours.channels) {
-        val argb = ref.getRGB(x, y)
-        val rc   = ours.channels match {
-          case 1 => ref.getRaster.getSample(x, y, 0)
-          case _ => (argb >> (16 - 8 * c)) & 0xff
-        }
-        val d = math.abs((ours.pixels((y * ours.width + x) * ours.channels + c) & 0xff) - rc)
-        worst = math.max(worst, d)
-        sumAbs += d
-      }
-      (worst, (sumAbs / (ours.width.toLong * ours.height * ours.channels)).toInt)
-    }
-    // grayscale: no upsampling, no color convert — differences are IDCT-only
-    val gray = new BufferedImage(37, 23, BufferedImage.TYPE_BYTE_GRAY)
-    for (y <- 0 until 23; x <- 0 until 37)
-      gray.getRaster.setSample(x, y, 0, (x * 5 + y * 9 + (x * y) % 31) % 256)
-    val (gw, gm) = maxDev(gray, 0.95f)
-    assert(gw <= 2, s"gray max deviation $gw > 2")
-    assert(gm <= 1, s"gray mean deviation $gm > 1")
-    // color gradient (default writer subsampling): bounded by IDCT + chroma
-    // filter differences on a smooth field
-    val rgb = new BufferedImage(48, 32, BufferedImage.TYPE_INT_RGB)
-    for (y <- 0 until 32; x <- 0 until 48) {
-      val r = 40 + x * 3
-      val g = 30 + y * 4
-      val b = 200 - x - y * 2
-      rgb.setRGB(x, y, (r << 16) | (g << 8) | b)
-    }
-    val (cw, cm) = maxDev(rgb, 0.9f)
-    assert(cw <= 6, s"color max deviation $cw > 6")
-    assert(cm <= 2, s"color mean deviation $cm > 2")
-    // structural grayscale detail at a dimension that is not a multiple of
-    // 8 (partial edge MCUs) and a second quality point
-    val det = new BufferedImage(65, 17, BufferedImage.TYPE_BYTE_GRAY)
-    for (y <- 0 until 17; x <- 0 until 65)
-      det.getRaster.setSample(x, y, 0, if (((x / 4) + (y / 4)) % 2 == 0) 40 else 215)
-    val (dw, _) = maxDev(det, 0.85f)
-    assert(dw <= 2, s"detail max deviation $dw > 2")
-    // malformed inputs: truncated entropy segment, progressive SOF2, junk
-    val baos = new java.io.ByteArrayOutputStream()
-    assert(ImageIO.write(gray, "jpeg", baos))
-    val ok = baos.toByteArray
-    assert(graft.ext.Jpeg.decode(ok.take(ok.length / 2)).isEmpty, "truncated stream accepted")
-    assert(graft.ext.Jpeg.decode("not a jpeg".getBytes).isEmpty)
+  test("ImageCodec.decode rejects truncated, junk and SOF2-patched JPEGs; 2x2-declared gray decodes unchanged") {
+    import graft.ext.ImageCodec
+    val (w, h) = (37, 23)
+    val px = Array.tabulate[Byte](w * h)(i => ((i % w * 5 + i / w * 9 + (i % w * (i / w)) % 31) % 256).toByte)
+    val ok = ImageCodec.encodeJpeg(w, h, 1, px, 0.75f)
+    val base = ImageCodec.decode(ok).getOrElse(fail("baseline gray decode failed"))
+    assert(base.width == w && base.height == h && base.channels == 1)
+    // the JDK reader decodes a stream cut short and reports it only as a
+    // read warning ("Missing EOI marker", "premature end of data segment")
+    for (cut <- Seq(2, 9, ok.length / 2))
+      assert(ImageCodec.decode(ok.take(ok.length - cut)).isEmpty, s"stream cut by $cut bytes accepted")
+    assert(ImageCodec.decode("not a jpeg".getBytes).isEmpty)
+    assert(ImageCodec.decode(Array(0xff, 0xd8, 0xff, 0xe0).map(_.toByte)).isEmpty, "SOI alone accepted")
+    // flip the SOF0 marker to SOF2 (progressive) over baseline scan
+    // parameters: must be rejected, not misparsed
+    var sp = 2
+    while (!((ok(sp) & 0xff) == 0xff && (ok(sp + 1) & 0xff) == 0xc0)) sp += 1
     val sof2 = ok.clone()
-    // flip the SOF0 marker to SOF2 (progressive): must be rejected, not
-    // misparsed — locate the 0xFFC0 marker first
-    var mp = 2
-    while (!((sof2(mp) & 0xff) == 0xff && (sof2(mp + 1) & 0xff) == 0xc0)) mp += 1
-    sof2(mp + 1) = 0xc2.toByte
-    assert(graft.ext.Jpeg.decode(sof2).isEmpty, "progressive accepted by baseline decoder")
+    sof2(sp + 1) = 0xc2.toByte
+    assert(ImageCodec.decode(sof2).isEmpty, "baseline scan accepted under a progressive SOF2")
     // T.81 §A.2.2: a single-component scan is NON-interleaved, so declared
     // sampling factors in SOF0 are irrelevant — a grayscale file patched to
-    // claim 2x2 sampling must decode to the SAME pixels, not garbled 4-block
-    // MCUs (the frame header layout is otherwise untouched)
-    val hv22 = ok.clone()
-    var sp = 2
-    while (!((hv22(sp) & 0xff) == 0xff && (hv22(sp + 1) & 0xff) == 0xc0)) sp += 1
+    // claim 2x2 sampling must decode to the SAME pixels
     // SOF0 segment: marker(2) len(2) prec(1) h(2) w(2) nc(1) [cid hv tq]
-    assert((hv22(sp + 9) & 0xff) == 1, "expected a single-component SOF0")
-    assert((hv22(sp + 11) & 0xff) == 0x11, "expected declared 1x1 sampling")
+    assert((ok(sp + 9) & 0xff) == 1, "expected a single-component SOF0")
+    assert((ok(sp + 11) & 0xff) == 0x11, "expected declared 1x1 sampling")
+    val hv22 = ok.clone()
     hv22(sp + 11) = 0x22.toByte
-    val base    = graft.ext.Jpeg.decode(ok).getOrElse(fail("baseline gray decode failed"))
-    val patched = graft.ext.Jpeg.decode(hv22).getOrElse(fail("2x2-sampled gray rejected"))
+    val patched = ImageCodec.decode(hv22).getOrElse(fail("2x2-sampled gray rejected"))
     assert(patched.width == base.width && patched.height == base.height)
     assert(patched.pixels.sameElements(base.pixels),
       "grayscale pixels changed when SOF0 declared 2x2 sampling")
@@ -718,16 +657,16 @@ class ExtSpec extends SparkSpec {
   test("featurePixels: identical features through the PNG and GIF routes; JPEG within tolerance") {
     import spark.implicits._
     // one underlying image, three container encodings: the lossless codecs
-    // must produce the SAME classical feature vector, and decodeRaster must
-    // route each payload to the right decoder by signature
+    // must produce the SAME classical feature vector, and ImageCodec.decode
+    // must route each payload to the right decoder by signature
     val nColors = 16
     val (w, h)  = (24, 18)
     val pal     = Array.tabulate(nColors * 3)(i => ((i / 3) * 16 + 8).toByte) // 16 gray levels
     val idx     = Array.tabulate(w * h)(p => ((p % w) / 2 % nColors).toByte)
     val rgb = new Array[Byte](w * h * 3)
     for (p <- 0 until w * h; c <- 0 until 3) rgb(3 * p + c) = pal(3 * (idx(p) & 0xff) + c)
-    val pngBytes = graft.ext.Png.encode(w, h, 3, rgb)
-    val gifBytes = graft.ext.Gif.encode(w, h, pal, idx)
+    val pngBytes = graft.ext.ImageCodec.encodePng(w, h, 3, rgb)
+    val gifBytes = graft.ext.ImageCodec.encodeGif(w, h, pal, idx)
     val img = new java.awt.image.BufferedImage(w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
     for (y <- 0 until h; x <- 0 until w) {
       val o = (y * w + x) * 3
@@ -750,12 +689,8 @@ class ExtSpec extends SparkSpec {
       s"JPEG mean luma drifted: ${fs(0)(8)} vs ${fs(2)(8)}")
   }
 
-  test("Jpeg.encode streams decode in both Jpeg.decode and javax.imageio within the quant bound") {
-    import javax.imageio.ImageIO
-    // uniform q=4 bounds every dequantized coefficient error by 2; through
-    // the orthonormal IDCT that is a per-pixel error of a few levels on
-    // any input (not just smooth ones) — both independent decoders must
-    // agree with the source within that bound
+  test("ImageCodec.encodeJpeg at quality 0.95 round-trips within 8 levels, gray and RGB") {
+    import graft.ext.ImageCodec
     val rnd = new scala.util.Random(11)
     for ((w, h, ch) <- Seq((16, 16, 1), (37, 23, 1), (24, 17, 3), (64, 48, 3), (8, 8, 3), (9, 1, 1))) {
       // smooth base + mild noise: representative yet not adversarial
@@ -763,33 +698,20 @@ class ExtSpec extends SparkSpec {
       for (y <- 0 until h; x <- 0 until w; c <- 0 until ch)
         px((y * w + x) * ch + c) =
           (40 + x * 140 / math.max(w - 1, 1) + y * 50 / math.max(h - 1, 1) + rnd.nextInt(7)).toByte
-      val bytes = graft.ext.Jpeg.encode(w, h, ch, px, q = 4)
-      val own = graft.ext.Jpeg.decode(bytes).getOrElse(fail(s"own decode rejected ${w}x$h ch=$ch"))
-      assert(own.width == w && own.height == h && own.channels == ch)
-      var worstOwn = 0
-      for (i <- px.indices) worstOwn = math.max(worstOwn, math.abs((own.pixels(i) & 0xff) - (px(i) & 0xff)))
-      assert(worstOwn <= 8, s"own round-trip deviation $worstOwn > 8 (${w}x$h ch=$ch)")
-      val ref = ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-      assert(ref != null && ref.getWidth == w && ref.getHeight == h, s"ImageIO rejected ${w}x$h ch=$ch")
-      var worstRef = 0
-      for (y <- 0 until h; x <- 0 until w; c <- 0 until ch) {
-        val want = px((y * w + x) * ch + c) & 0xff
-        val got =
-          if (ch == 1) ref.getRaster.getSample(x, y, 0)
-          else (ref.getRGB(x, y) >> (16 - 8 * c)) & 0xff
-        worstRef = math.max(worstRef, math.abs(got - want))
-      }
-      assert(worstRef <= 8, s"ImageIO deviation $worstRef > 8 (${w}x$h ch=$ch)")
+      val d = ImageCodec.decode(ImageCodec.encodeJpeg(w, h, ch, px, 0.95f))
+        .getOrElse(fail(s"decode rejected ${w}x$h ch=$ch"))
+      assert(d.width == w && d.height == h && d.channels == ch)
+      val worst = px.indices.map(i => math.abs((d.pixels(i) & 0xff) - (px(i) & 0xff))).max
+      assert(worst <= 8, s"round-trip deviation $worst > 8 (${w}x$h ch=$ch)")
     }
-    // the 12-bit worst case: a full-amplitude checkerboard maximizes the
-    // highest-frequency coefficient (|F| -> ~1024) — encode must stay inside
-    // the fixed Huffman size categories and still round-trip
-    val w2 = 16; val h2 = 16
-    val checker = Array.tabulate[Byte](w2 * h2)(i =>
-      if (((i % w2) + (i / w2)) % 2 == 0) 0.toByte else 255.toByte)
-    val cb = graft.ext.Jpeg.encode(w2, h2, 1, checker, q = 4)
-    assert(graft.ext.Jpeg.decode(cb).isDefined, "checkerboard stream rejected by own decoder")
-    assert(ImageIO.read(new java.io.ByteArrayInputStream(cb)) != null, "checkerboard rejected by ImageIO")
+    // a full-amplitude checkerboard maximizes the highest-frequency
+    // coefficient; it must still encode and decode
+    val checker = Array.tabulate[Byte](16 * 16)(i =>
+      if (((i % 16) + (i / 16)) % 2 == 0) 0.toByte else 255.toByte)
+    assert(ImageCodec.decode(ImageCodec.encodeJpeg(16, 16, 1, checker, 0.95f)).isDefined,
+      "checkerboard stream rejected")
+    // the writer takes no alpha: 2 and 4 channels are a caller error
+    intercept[IllegalArgumentException](ImageCodec.encodeJpeg(2, 2, 4, new Array[Byte](16), 0.95f))
   }
 
   test("featurePixels handles gray+alpha (2-channel) PNGs; luma is the gray sample") {
@@ -798,7 +720,7 @@ class ExtSpec extends SparkSpec {
     // sample (alpha ignored), not an RGB read past the row end
     val (w, h) = (6, 4)
     val px = Array.tabulate[Byte](w * h * 2)(i => if (i % 2 == 0) (i * 5).toByte else 200.toByte)
-    val recs = Seq(Multimodal.MediaRecord(1L, "image", graft.ext.Png.encode(w, h, 2, px))).toDS()
+    val recs = Seq(Multimodal.MediaRecord(1L, "image", graft.ext.ImageCodec.encodePng(w, h, 2, px))).toDS()
     val fs = Multimodal.featurePixels(recs, bins = 8).collect()
     assert(fs.length == 1)
     val grays   = (0 until w * h).map(p => px(2 * p) & 0xff)
@@ -946,12 +868,12 @@ class ExtSpec extends SparkSpec {
     val idx     = Array.tabulate(w * h)(p => (((p % w) / 2 + (p / w) / 3) % nColors).toByte)
     val rgb = new Array[Byte](w * h * 3)
     for (p <- 0 until w * h; c <- 0 until 3) rgb(3 * p + c) = pal(3 * (idx(p) & 0xff) + c)
-    val pngBytes = graft.ext.Png.encode(w, h, 3, rgb)
-    val gifBytes = graft.ext.Gif.encode(w, h, pal, idx)
-    val jpgBytes = graft.ext.Jpeg.encode(w, h, 3, rgb, q = 2)
+    val pngBytes = graft.ext.ImageCodec.encodePng(w, h, 3, rgb)
+    val gifBytes = graft.ext.ImageCodec.encodeGif(w, h, pal, idx)
+    val jpgBytes = graft.ext.ImageCodec.encodeJpeg(w, h, 3, rgb, 0.95f)
     // a brighter variant: every palette level shifted up — a DIFFERENT image
     val rgb2 = rgb.map(b => math.min(255, (b & 0xff) + 90).toByte)
-    val png2 = graft.ext.Png.encode(w, h, 3, rgb2)
+    val png2 = graft.ext.ImageCodec.encodePng(w, h, 3, rgb2)
     val junk = "definitely not an image payload".getBytes
     val recs = Seq(
       Multimodal.MediaRecord(1L, "image", pngBytes),
@@ -964,7 +886,7 @@ class ExtSpec extends SparkSpec {
     val byId  = feats.collect().map(f => f.id -> f.feature).toMap
     assert(byId.values.forall(_.length == 16))
     assert(byId(1L).sameElements(byId(2L)), "PNG and GIF routes disagree on a lossless image")
-    // JPEG is lossy but q=2 keeps block means within a few luma levels
+    // JPEG is lossy but quality 0.95 keeps block means within a few luma levels
     for (i <- 0 until 16)
       assert(math.abs(byId(1L)(i) - byId(3L)(i)) < 0.03f, s"JPEG block $i drifted")
     // the undecodable payload must take the featureStub arithmetic exactly

@@ -212,7 +212,7 @@ class GroupStageSpec extends SparkSpec {
     put("file01", "bar\t1\nfoo\t1\nzap\t1\n")
     put("file02", "bar\t1\nqux\t1\nfoo\t1") // no trailing newline
     try {
-      val raw = graft.sources.ParityLines(spark.sparkContext, dir.toString, 2)
+      val raw = graft.sources.ParityLines.sortTasks(spark.sparkContext, dir.toString, 2).flatMap(_._2)
       // the reader preserved the real bytes: exactly one unterminated line
       val rawLines = raw.collect().toSeq
       assert(rawLines.count(!_.endsWith("\n")) == 1)

@@ -55,7 +55,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming media ingest: featurePixels runs per-micro-batch and agrees with batch") {
     import spark.implicits._
-    import graft.ext.{Multimodal, Png}
+    import graft.ext.{ImageCodec, Multimodal}
     implicit val sqlCtx = spark.sqlContext
     // the multimodal stages are stateless mapPartitions transforms, so the
     // same code runs unchanged over a stream — the media-ingest analog of
@@ -64,7 +64,7 @@ class StreamingSpec extends SparkSpec {
       val w = 4 + (id % 5).toInt
       val h = 3 + (id % 4).toInt
       val px = Array.tabulate(w * h * 3)(i => ((i * 13 + id * 7) % 256).toByte)
-      Multimodal.MediaRecord(id, "image", Png.encode(w, h, 3, px))
+      Multimodal.MediaRecord(id, "image", ImageCodec.encodePng(w, h, 3, px))
     }
     val input = MemoryStream[Multimodal.MediaRecord]
     val q = Multimodal
