@@ -31,8 +31,8 @@ object Bench {
     * (q_kcore: 49.5 s isolated vs ~0.2 s amortized at the r10 10× gate);
     * emitting build time separately keeps round-over-round per-query
     * diffs from being confounded by artifact-warmth order. The
-    * artifact→consumer map is documented in COVERAGE.md ("Artifact
-    * economics" section).
+    * artifact→consumer map is the "Artifact economics" section of
+    * `git show 625dc0f:COVERAGE.md`.
     */
   def warmUp(
       spark: org.apache.spark.sql.SparkSession,
@@ -98,7 +98,8 @@ object Bench {
       // the signature/gram caches without carrying any of the family
       // substrings, so an isolated run (SPARK_GRAFT_ONLY=q_contamination)
       // otherwise pays the whole cache build inside its first timed region
-      // (measured: the round-16 band gate record in COVERAGE.md,
+      // (measured: the round-16 band gate record in
+      // `git show 625dc0f:COVERAGE.md`,
       // estimate_sec 1458 s with artifact_build_sec 0.0 at 5M docs)
       if (subsetNeeds(n => n.contains("minhash") || n.contains("lsh") || n.contains("dedup") ||
             n.contains("jaccard") || n.contains("contam") || n == "q_clean_corpus" ||

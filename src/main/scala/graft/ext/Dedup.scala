@@ -467,17 +467,14 @@ object Dedup {
     * the uncollapsed pair paths share.
     *
     * Round-12 verify discipline (the 100× spot gate caught q_contamination
-    * grinding ~40 min with 2 of 32 cores in this very intersect): the
-    * candidate frame is BYTE-small, so AQE's size-based coalescing packs it
-    * onto a handful of partitions and the per-pair array work runs nearly
-    * serial — the identical mechanism SetJoin/ngramJaccard already defuse.
-    * A user-NUMBERED repartition (exempt from AQE coalescing), keyed by d1
-    * so the first verify join reuses the exchange, restores full-width
-    * parallelism; and a length-ratio prefilter (J ≥ t forces t ≤
-    * |s1|/|s2| ≤ 1/t) drops grossly mismatched pairs before any array is
-    * touched. The 1e-9 margin keeps the prune provably conservative
-    * against the final double comparison (double rounding is ≤ ~1e-16
-    * relative; the pruning power loses nothing at 1e-9).
+    * grinding ~40 min with 2 of 32 cores in this very intersect): a
+    * [[graft.core.Width.compute]] spread keyed by d1, so the first verify
+    * join reuses the exchange, restores full-width parallelism; and a
+    * length-ratio prefilter (J ≥ t forces t ≤ |s1|/|s2| ≤ 1/t) drops
+    * grossly mismatched pairs before any array is touched. The 1e-9
+    * margin keeps the prune provably conservative against the final
+    * double comparison (double rounding is ≤ ~1e-16 relative; the pruning
+    * power loses nothing at 1e-9).
     */
   private def verifiedPairs(cand: DataFrame, docs: DataFrame, threshold: Double): DataFrame = {
     val sets  = shingleSets(docs)
@@ -491,8 +488,8 @@ object Dedup {
     // (~8 B/shingle vs ~20+), and the string arrays attach only to hash-
     // tier survivors (≈ true pairs: the bound below restates J ≥ t exactly
     // under `hok`; collisions and the 1e-9 margin only over-admit).
-    val hashTier = cand
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("d1"))
+    val hashTier = graft.core.Width
+      .compute(cand, col("d1"))
       .join(
         hsets.select(col("doc_id").as("d1"), col("hs").as("h1"), col("hok").as("hok1"),
           col("ssz").as("z1")), "d1")
@@ -618,11 +615,10 @@ object Dedup {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("new_id")
       .orderBy(col("jaccard").desc, col("seen_id"))
-    cand
-      // spread before the per-pair array work (verifiedPairs discipline);
-      // keyed by new_id so both the first verify join AND the best-partner
-      // window reuse the exchange
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("new_id"))
+    // keyed by new_id so both the first verify join AND the best-partner
+    // window reuse the exchange
+    graft.core.Width
+      .compute(cand, col("new_id"))
       .join(sets.select(col("doc_id").as("new_id"), col("sset").as("s1")), "new_id")
       .join(sets.select(col("doc_id").as("seen_id"), col("sset").as("s2")), "seen_id")
       .withColumn(
@@ -856,11 +852,9 @@ object Dedup {
     * naive string-array verify drifting 11.8 → 40.1 s with an unchanged
     * plan, because per-candidate cost is corpus-shaped, not plan-shaped):
     *
-    *  1. numbered repartition of the byte-small candidate frame before the
-    *     CPU-heavy verify (`SetJoin.similarityJoinWith` precedent: AQE's
-    *     byte-based coalescing packs small-byte/heavy-CPU stages onto a
-    *     handful of tasks; a user-NUMBERED repartition is exempt, and
-    *     keying by d1 lets the first verify join reuse the exchange);
+    *  1. [[graft.core.Width.compute]] spread of the candidate frame before
+    *     the CPU-heavy verify, keyed by d1 so the first verify join reuses
+    *     the exchange;
     *  2. length-ratio prefilter in exact integers: J ≥ t forces
     *     t ≤ |g1|/|g2| ≤ 1/t, i.e. 3·|g1| ≤ 10·|g2| ∧ 3·|g2| ≤ 10·|g1| —
     *     evaluated on the `gsz` counts before any array is touched;
@@ -913,8 +907,8 @@ object Dedup {
         val h2 = sets.select(
           col("doc_id").as("d2"), col("hg").as("h2"), col("hok").as("hok2"),
           col("gsz").as("sz2"))
-        cand0
-          .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("d1"))
+        graft.core.Width
+          .compute(cand0, col("d1"))
           .join(h1, "d1")
           .join(h2, "d2")
           .filter(
@@ -1003,12 +997,10 @@ object Dedup {
     */
   def containmentPairs(docs: DataFrame, tau: Double): DataFrame = {
     val sets = shingleSets(docs)
-    candidatePairs(docs)
-      // numbered-repartition spread before the per-pair array work (the
-      // shared verify discipline — see verifiedPairs); no length prefilter
-      // here: containment's two ratios are reciprocal, so one of them
-      // always clears any tau < 1 on sizes alone
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("d1"))
+    // no length prefilter here: containment's two ratios are reciprocal,
+    // so one of them always clears any tau < 1 on sizes alone
+    graft.core.Width
+      .compute(candidatePairs(docs), col("d1"))
       .join(sets.select(col("doc_id").as("d1"), col("sset").as("s1")), "d1")
       .join(sets.select(col("doc_id").as("d2"), col("sset").as("s2")), "d2")
       .withColumn("inter", size(array_intersect(col("s1"), col("s2"))).cast("long"))
@@ -1235,11 +1227,8 @@ object Dedup {
       val agree = (0 until K)
         .map(i => when(col(s"a$i") === col(s"b$i"), 1).otherwise(0))
         .reduce(_ + _)
-      candidatePairs(docs)
-        // spread before the per-pair signature/array work (verifiedPairs
-        // discipline): the candidate frame is byte-small and AQE would
-        // coalesce the exact-Jaccard columns onto a handful of tasks
-        .repartition(s.sparkContext.defaultParallelism, col("d1"))
+      graft.core.Width
+        .compute(candidatePairs(docs), col("d1"))
         .join(
           sig.select(col("doc_id").as("d1") +: (0 until K).map(i => col(s"mh$i").as(s"a$i")): _*),
           "d1"
@@ -1304,15 +1293,9 @@ object Dedup {
       // computes the same kept set with the same exact distances; the -1
       // sentinel rows are the pairs the unbounded version would have
       // filtered on rel. The double filter is kept for the emitted rel.
-      candidatePairs(docs)
-        // spread before the O(len²) per-pair verify (the minhashEstimate
-        // discipline): the candidate frame is byte-small, so AQE coalesces
-        // it onto a handful of tasks and the banded Levenshtein then runs
-        // nearly serial (measured r17: 0.57 → 2.28 s when the family
-        // caches narrowed under AQE). A user-NUMBERED repartition is
-        // exempt from coalescing; keying by d1 lets the first text join
-        // reuse the exchange.
-        .repartition(s.sparkContext.defaultParallelism, col("d1"))
+      // keying the spread by d1 lets the first text join reuse the exchange
+      graft.core.Width
+        .compute(candidatePairs(docs), col("d1"))
         .join(texts.select(col("doc_id").as("d1"), col("text").as("t1")), "d1")
         .join(texts.select(col("doc_id").as("d2"), col("text").as("t2")), "d2")
         .withColumn(

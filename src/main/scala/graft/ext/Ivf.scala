@@ -712,10 +712,9 @@ object Ivf {
       // per-vector quantization + C-centroid argmin is the whole cost and
       // the single-row-group embeddings scan plans one task (StageProbe
       // r16: ~3 s across single-task stages) — spread the narrow scan so
-      // the ingest expressions run at full parallelism; identity at any
-      // healthy multi-split layout
+      // the ingest expressions run at full parallelism
       val q = quantized(
-        graft.core.Spread.compute(Tables(s, dir).embeddings.filter(col("vec_id") >= IncrSeenMax)))
+        graft.core.Width.compute(Tables(s, dir).embeddings.filter(col("vec_id") >= IncrSeenMax)))
       streamingIngest(q, frozenQuantizer(s, dir))
         .orderBy("vec_id")
     },

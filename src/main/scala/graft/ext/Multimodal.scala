@@ -36,15 +36,14 @@ object Multimodal {
     * per-row codec work over these rows, and the single-row-group fixture
     * scan plans ONE task, serializing that codec work onto one core
     * (StageProbe r16: q_multimodal_jpeg spent ~2.1 s in two single-task
-    * stages on the 32-core box). [[graft.core.Spread]] repartitions only
-    * when the planned scan cannot already provide default parallelism —
-    * the identity on any healthy multi-row-group layout (guide §2.5).
+    * stages on the 32-core box), so [[graft.core.Width.compute]] spreads
+    * it (guide §2.5).
     */
   private def docRows(
       s: org.apache.spark.sql.SparkSession,
       dir: String,
       cols: org.apache.spark.sql.Column*): DataFrame =
-    graft.core.Spread.compute(Tables(s, dir).documents.select(cols: _*))
+    graft.core.Width.compute(Tables(s, dir).documents.select(cols: _*))
 
   /** An opaque media payload: `media` is the raw bytes (image/audio/video). */
   final case class MediaRecord(id: Long, kind: String, media: Array[Byte])

@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Tables, Width}
 import graft.queries.Q
 
 /** EXACT set-similarity self-join with prefix filtering — the
@@ -97,7 +97,6 @@ object SetJoin {
       tNum: Long,
       tDen: Long,
       saltB: Int): DataFrame = {
-    val par = sets.sparkSession.sparkContext.defaultParallelism
     // |d| − ⌈t·|d|⌉ + 1 in exact integers: ⌈t·sz⌉ = (sz·tNum + tDen − 1) div tDen
     val plen =
       (col("sz") - call_function("div", col("sz").cast("long") * tNum + lit(tDen - 1), lit(tDen)) +
@@ -108,12 +107,12 @@ object SetJoin {
       col("sz"),
       posexplode(slice(col("toks"), lit(1), plen)).as(Seq("pos", "tok"))
     )
-    val prefA = pref
-      .withColumn("salt", pmod(hash(col("doc_id")), lit(saltB)))
-      .repartition(par, col("gid"), col("tok"), col("salt"))
-    val prefB = pref
-      .withColumn("salt", explode(array((0 until saltB).map(lit): _*)))
-      .repartition(par, col("gid"), col("tok"), col("salt"))
+    val prefA = Width.compute(
+      pref.withColumn("salt", pmod(hash(col("doc_id")), lit(saltB))),
+      col("gid"), col("tok"), col("salt"))
+    val prefB = Width.compute(
+      pref.withColumn("salt", explode(array((0 until saltB).map(lit): _*))),
+      col("gid"), col("tok"), col("salt"))
     prefA
       .alias("a")
       .join(
@@ -149,11 +148,7 @@ object SetJoin {
     // 500k-row exchange of the set rows buys 32-way map parallelism for
     // everything downstream; at production scale the scan has thousands
     // of splits and the exchange is a no-op-sized rebalance.
-    val par = docs.sparkSession.sparkContext.defaultParallelism
-    val sets = Dedup
-      .shingleSets(docs)
-      .filter(size(col("sset")) > 0)
-      .repartition(par)
+    val sets = Width.compute(Dedup.shingleSets(docs).filter(size(col("sset")) > 0))
     val tk = sets.select(col("doc_id"), explode(col("sset")).as("tok"))
     val dfs = tk.groupBy("tok").agg(count(lit(1)).as("df"))
     graft.core.Cached.frame(
@@ -215,7 +210,6 @@ object SetJoin {
     * enumeration, then the hash-tier and exact string-tier verify.
     */
   private def verifiedForSalts(os: DataFrame, saltB: Int): DataFrame = {
-    val par = os.sparkSession.sparkContext.defaultParallelism
     // one row per (doc, prefix position, token)
     val pref = os.select(
       col("doc_id"),
@@ -236,15 +230,11 @@ object SetJoin {
     // across all SaltB salts, so each (d1, d2) pair still meets EXACTLY
     // once — at salt = hash(d1) — and the candidate set is unchanged.
     // Cost: SaltB× replication of the narrow prefix frame (a few GB at
-    // 500k docs); benefit: the quadratic stage engages every core. The
-    // explicit numbered repartitions keep AQE's byte-based coalescing
-    // (same root cause, small input bytes) from re-serializing the sort.
-    val prefA = pref
-      .withColumn("salt", pmod(hash(col("doc_id")), lit(saltB)))
-      .repartition(par, col("tok"), col("salt"))
-    val prefB = pref
-      .withColumn("salt", explode(array((0 until saltB).map(lit): _*)))
-      .repartition(par, col("tok"), col("salt"))
+    // 500k docs); benefit: the quadratic stage engages every core.
+    val prefA = Width.compute(
+      pref.withColumn("salt", pmod(hash(col("doc_id")), lit(saltB))), col("tok"), col("salt"))
+    val prefB = Width.compute(
+      pref.withColumn("salt", explode(array((0 until saltB).map(lit): _*))), col("tok"), col("salt"))
     // Two output-neutral PPJoin prunes ride the candidate join itself (the
     // exact verify below only discards, so both are pure work savers — and
     // necessary ones: on the 10× stress corpus the small synthetic
@@ -281,15 +271,11 @@ object SetJoin {
       col("doc_id").as("d2"), col("htoks").as("h2"), col("hok").as("hok2"), col("sz").as("szb"))
     val s1 = os.select(col("doc_id").as("d1"), col("stoks").as("s1"))
     val s2 = os.select(col("doc_id").as("d2"), col("stoks").as("s2"))
-    val hashTier = cands
-      // explicit numPartitions spread before the CPU-heavy verify: the
-      // candidate frame is BYTE-small, so AQE's size-based coalescing packs
-      // it into a handful of partitions and the per-row array-intersect
-      // then runs nearly serial (measured: 4 tasks busy, 28 cores idle on
-      // the 10× corpus). A user-NUMBERED repartition is exempt from AQE
-      // coalescing, and keying it by d1 lets the first verify join reuse
-      // the exchange.
-      .repartition(par, col("d1"))
+    // spread before the CPU-heavy verify (measured without it: 4 tasks
+    // busy, 28 cores idle on the 10× corpus), keyed by d1 so the first
+    // verify join reuses the exchange
+    val hashTier = Width
+      .compute(cands, col("d1"))
       // HASH-FIRST topology (round 13): the mult=30/100 single-node gates
       // died of ENOSPC in the exchange that routes candidate rows to their
       // d2 side — each row was carrying the d1 side's FULL payload (string
@@ -310,9 +296,11 @@ object SetJoin {
           expr(s"${TNum}L * (CAST(sza AS BIGINT) + szb)")
       )
       .select(col("d1"), col("d2"), col("sza"), col("szb"))
+    // d2 first: the hash tier's last join left the stream d2-partitioned,
+    // so the s2 join reuses that exchange and only the s1 join reshuffles
     hashTier
-      .join(s1, "d1")
       .join(s2, "d2")
+      .join(s1, "d1")
       .withColumn("inter", size(array_intersect(col("s1"), col("s2"))).cast("long"))
       .withColumn("uni", col("sza").cast("long") + col("szb") - col("inter"))
       .filter(col("inter") * TDen >= col("uni") * TNum)

@@ -59,8 +59,8 @@ object SimHash {
     import spark.implicits._
     // spread the narrow scan so the per-doc simhash pass runs at full
     // parallelism (single-task on the one-row-group fixture scan
-    // otherwise — guide §2.5; identity on a multi-split layout)
-    graft.core.Spread.compute(docs.select(col("doc_id"), col("text")))
+    // otherwise — guide §2.5)
+    graft.core.Width.compute(docs.select(col("doc_id"), col("text")))
       .as[(Long, String)]
       .map { case (id, text) => (id, simhash64(tokenize(text))) }
       .toDF("doc_id", "simhash")

@@ -92,8 +92,8 @@ object Winnow {
   def summary(spark: SparkSession, docs: DataFrame): DataFrame = {
     import spark.implicits._
     // same spread rationale as [[sharedPassagePairs]]: parallelize the
-    // per-doc fingerprint pass (identity on a multi-split layout)
-    graft.core.Spread.compute(docs.select(col("doc_id"), col("text")))
+    // per-doc fingerprint pass
+    graft.core.Width.compute(docs.select(col("doc_id"), col("text")))
       .as[(Long, String)]
       .map { case (id, text) =>
         val fps = fingerprints(text)
@@ -123,8 +123,8 @@ object Winnow {
     import spark.implicits._
     // spread the narrow scan so the Rabin-Karp fingerprint pass runs at
     // full parallelism (single-task on the one-row-group fixture scan
-    // otherwise — guide §2.5; identity on a multi-split layout)
-    val raw = graft.core.Spread.compute(docs.select(col("doc_id"), col("text")))
+    // otherwise — guide §2.5)
+    val raw = graft.core.Width.compute(docs.select(col("doc_id"), col("text")))
       .as[(Long, String)]
       .flatMap { case (id, text) => fingerprints(text).map(f => (id, f)) }
       .toDF("doc_id", "fp")

@@ -79,7 +79,7 @@ object GraphQueries {
         ).as("e")
       )
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-    // Size-derived edge-grain partitioning (guide §2.2; Grain scaladoc):
+    // Size-derived edge-grain partitioning (guide §2.2; Width.grain):
     // every superstep's SMJ aligns the rank frame to adj's partition
     // count, so the session default (32) multiplied into 5 iterations of
     // 32-task stages over a sub-MB grain — StageProbe r17 attributed most
@@ -89,8 +89,8 @@ object GraphQueries {
     // window's exchange rather than adding one; at 100 TB the formula
     // yields thousands of partitions.
     val adj = graft.core.Cached.frame(
-      edges
-        .repartition(graft.core.Grain.sized(edges), col("src"))
+      graft.core.Width
+        .grain(edges, col("src"))
         .withColumn(
           "outdeg",
           count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy("src"))

@@ -1133,9 +1133,10 @@ object Pipeline {
     * NOT share one multi-distinct aggregate: Spark's
     * RewriteDistinctAggregates plans that as an Expand whose gid slots
     * follow session exprId ORDER, so byte-identical plans fingerprinted
-    * differently depending on what ran earlier in the session (COVERAGE
-    * §Round 11, reproduced with SPARK_GRAFT_FP_DUMP both ways) — and the
-    * Expand also 4×-multiplied the projection's rows before the shuffle.
+    * differently depending on what ran earlier in the session (§Round 11
+    * of `git show 625dc0f:COVERAGE.md`, reproduced with SPARK_GRAFT_FP_DUMP
+    * both ways) — and the Expand also 4×-multiplied the projection's rows
+    * before the shuffle.
     * Single-distinct legs plan as plain two-phase aggregates: no Expand,
     * no gid, one fp regardless of in-session company, and each leg
     * shuffles only its own column. Acceptable for a once-per-release

@@ -1634,16 +1634,11 @@ object Relational {
   ) { (s, dir) =>
     val raw = Tables(s, dir).lineitem
       .select(col("l_returnflag"), col("l_extendedprice"))
-    // widen ONLY when the scan under-parallelizes (the sf-fixture parquet
-    // is 3 splits, which serialized every cached pass onto 3 of 32 cores —
-    // the whole residual wall of the pre-r11 form). At 100 TB the scan has
-    // thousands of splits, the condition is false, and no exchange is
-    // added; locally the one 2-column round-robin exchange is repaid 3×
-    // by the consumers below.
-    val par = s.sparkContext.defaultParallelism
-    val base = graft.core.Cached.frame(
-      if (raw.rdd.getNumPartitions < par) raw.repartition(par) else raw
-    )
+    // the sf-fixture parquet is 3 splits, which serialized every cached
+    // pass onto 3 of 32 cores — the whole residual wall of the pre-r11
+    // form; the one 2-column round-robin exchange is repaid 3× by the
+    // consumers below
+    val base = graft.core.Cached.frame(graft.core.Width.compute(raw))
     // ONE sketch serves everything: the 19 ventile bounds spread/prune
     // the sort AND contain the approximate companions as elements 10
     // (0.50 = 10/20) and 19 (0.95 = 19/20) — the previous form paid for

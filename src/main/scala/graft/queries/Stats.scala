@@ -485,8 +485,8 @@ object StatsQueries {
       // fixture scan plans ONE task, so without the spread the ~32·|orders|
       // hash evaluations serialize on one core (StageProbe r16: two ~6 s
       // single-task stages — this subtree runs twice, once under the ci
-      // broadcast). Spread is a no-op when the scan already parallelizes.
-      val rmeans = graft.core.Spread.compute(base)
+      // broadcast).
+      val rmeans = graft.core.Width.compute(base)
         .select(col("o_orderkey"), col("p"), explode(sequence(lit(0), lit(31))).as("b"))
         .filter(keep)
         .groupBy(col("b").cast("long").as("b"))

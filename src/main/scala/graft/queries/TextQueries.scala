@@ -276,9 +276,8 @@ object TextQueries {
       // Spread before the per-row folds (the r16 single-row-group lesson):
       // the fixture scan plans ONE task, and with every statistic now
       // computed in-row the whole query would serialize on one core
-      // (StageProbe r17: 0.58 s + 0.84 s single-task stages). Identity on
-      // any healthy multi-split layout.
-      val docs = graft.core.Spread.compute(
+      // (StageProbe r17: 0.58 s + 0.84 s single-task stages).
+      val docs = graft.core.Width.compute(
         Tables(s, dir).documents
           .filter(col("text").isNotNull)
           .select(col("doc_id"), col("text")))

@@ -10,6 +10,14 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class CoverageSpec extends AnyFunSuite {
 
+  /** Every Scala source file under src/main. */
+  private def mainSources: Iterator[java.io.File] = {
+    def walk(f: java.io.File): Iterator[java.io.File] =
+      if (f.isDirectory) Option(f.listFiles()).iterator.flatMap(_.iterator).flatMap(walk)
+      else Iterator(f).filter(_.getName.endsWith(".scala"))
+    walk(new java.io.File("src/main"))
+  }
+
   private def queryToken(s: String): Boolean =
     s.startsWith("q_") || s == "q1_agg" || s == "word_count" || s == "grep"
 
@@ -78,11 +86,8 @@ class CoverageSpec extends AnyFunSuite {
   test("src/main reads exactly the listed SPARK_GRAFT_* environment knobs") {
     val expected = Set("CPUS", "SF_DIR", "ONLY", "REPS", "FP_DUMP")
       .map("SPARK_GRAFT_" + _)
-    def walk(f: java.io.File): Iterator[java.io.File] =
-      if (f.isDirectory) Option(f.listFiles()).iterator.flatMap(_.iterator).flatMap(walk)
-      else Iterator(f).filter(_.getName.endsWith(".scala"))
     val literal = "\"(SPARK_GRAFT_[A-Z_]+)\"".r
-    val found = walk(new java.io.File("src/main")).flatMap { f =>
+    val found = mainSources.flatMap { f =>
       literal.findAllMatchIn(new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")).map(_.group(1))
     }.toSet
     assert(found.nonEmpty, "no SPARK_GRAFT_ literal found — is the working directory the repo root?")
@@ -99,15 +104,44 @@ class CoverageSpec extends AnyFunSuite {
     */
   test("src/main calls no file-backed javax.imageio entry point") {
     val forbidden = Seq("ImageIO.read(", "ImageIO.write(", "ImageIO.createImage")
-    def walk(f: java.io.File): Iterator[java.io.File] =
-      if (f.isDirectory) Option(f.listFiles()).iterator.flatMap(_.iterator).flatMap(walk)
-      else Iterator(f).filter(_.getName.endsWith(".scala"))
-    val hits = walk(new java.io.File("src/main")).flatMap { f =>
+    val hits = mainSources.flatMap { f =>
       val text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
       text.linesIterator.zipWithIndex.collect {
         case (line, i) if forbidden.exists(line.contains) => s"${f.getPath}:${i + 1}"
       }
     }.toVector
     assert(hits.isEmpty, s"file-backed Image I/O calls: ${hits.mkString(", ")}")
+  }
+
+  /** Stage width has one owner, [[graft.core.Width]]: a stage that reads
+    * `defaultParallelism` itself bypasses the policy (and its AQE
+    * exemption). Each other code site that may read it is named here,
+    * once, with its reason; comments are ignored.
+    */
+  test("src/main reads defaultParallelism only in core/Width and the two salt fan-outs") {
+    val allowed = Map(
+      "core/Width.scala" -> "the stage-width policy itself",
+      // skew fan-outs: how many ways a hot group's pair enumeration
+      // splits, not how wide a stage runs
+      "ext/SetJoin.scala"      -> "saltBFor, the salted candidate enumeration's fan-out",
+      "queries/Pipeline.scala" -> "q_contamination's member-expansion salt set"
+    )
+    val code = mainSources.flatMap { f =>
+      val text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      text.linesIterator.zipWithIndex.collect {
+        case (line, i)
+            if !line.trim.startsWith("*") && !line.trim.startsWith("/*") &&
+              line.split("//", 2)(0).contains("defaultParallelism") =>
+          (f.getPath.stripPrefix("src/main/scala/graft/"), i + 1)
+      }
+    }.toVector
+    val stray = code.filterNot { case (path, _) => allowed.contains(path) }
+    assert(
+      stray.isEmpty,
+      s"defaultParallelism at ${stray.mkString(", ")}; allowed only in " +
+        allowed.map { case (path, why) => s"$path ($why)" }.mkString("; "))
+    assert(code.count(_._1 == "ext/SetJoin.scala") == 1, s"SetJoin sites: $code")
+    assert(code.count(_._1 == "queries/Pipeline.scala") == 1, s"Pipeline sites: $code")
+    assert(code.exists(_._1 == "core/Width.scala"), "is the working directory the repo root?")
   }
 }

@@ -55,7 +55,7 @@ class PlanGoldenSpec extends SparkSpec {
     // round 17: pin the two r16 headline plan changes against silent
     // reversion — pagerank's merge-hint SMJ on the cached adj (a flip back
     // to a per-superstep |E| broadcast must show as a diff) and
-    // bootstrap_ci's Spread exchange on the 32× md5 fan-out
+    // bootstrap_ci's Width.compute exchange on the 32× md5 fan-out
     "q_pagerank",
     "q_bootstrap_ci",
     // round 17: the HITS half-step push — the registered query's final

@@ -86,4 +86,33 @@ class SetJoinSpec extends SparkSpec {
     val out = SetJoin.similarityJoin(docs)
     assert(out.count() == 0) // single doc: no pairs, but the plan builds
   }
+
+  test("unbroadcast verify chain reshuffles the candidate stream by d1, d2, d1 only") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val docs = Seq((1L, "a b c d e f"), (2L, "a b c d e g"), (3L, "x y z w v u"))
+      .toDF("doc_id", "text")
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val was = spark.conf.getOption(key)
+    // at scale every verify join is a sort-merge join; the fixtures are
+    // small enough that each one broadcasts, so switch broadcast off
+    spark.conf.set(key, "-1")
+    val keys =
+      try
+        adaptiveNodes(SetJoin.similarityJoin(docs).queryExecution.executedPlan).collect {
+          case e: ShuffleExchangeExec =>
+            e.outputPartitioning match {
+              case HashPartitioning(Seq(a: AttributeReference), _) => a.name
+              case _                                               => ""
+            }
+        }
+      finally was.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    // d1: the Width spread, the h1 and s1 sides, one stream reshuffle;
+    // d2: the h2 and s2 sides and ONE stream reshuffle — the string tier
+    // joins s2 first, reusing the hash tier's d2 partitioning
+    assert(keys.count(_ == "d1") == 4, keys)
+    assert(keys.count(_ == "d2") == 3, keys)
+  }
 }
