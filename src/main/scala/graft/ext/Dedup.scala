@@ -155,38 +155,16 @@ object Dedup {
   private def bandValCols: Seq[Column] =
     (0 until K / 2).map(b => concat_ws("_", col(s"mh${2 * b}"), col(s"mh${2 * b + 1}")))
 
-  /** One-row driver-side probe over the cached [[exactGroups]] table: does
-    * any text occur more than once? The same bounded measure-then-decide
-    * discipline as the adaptive skew join — the answer routes the whole
-    * pair family between the plain path and the pre-collapsed path.
-    *
-    * Memoized per analyzed-plan semantic hash: ~10 pair-family queries run
-    * the probe at CONSTRUCTION time, and even over the cached group table
-    * each head() is a scheduled job (~0.1-0.2 s of pure latency × reps in
-    * Bench — measured ~0.5 s/query of probe tax before the memo). Same
-    * staleness contract as Spark's own CacheManager and the family caches:
-    * a fixture dir rewritten mid-session must not reuse the session.
-    */
-  private val dupProbeMemo =
-    new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]()
-
-  /** Memoized max exact-copy multiplicity — the boolean routes the pair
-    * family between the plain and pre-collapsed paths; the MAGNITUDE
-    * (round 14) sizes the member-expansion spread in q_contamination (a
-    * 300k-copy group's quadratic expansion must not land on one task; an
-    * 8-copy group must not pay a salted plan for it).
+  /** Max exact-copy multiplicity, one memoized driver-side probe over the
+    * cached [[exactGroups]] table ([[graft.core.Cached.scalar]]): the
+    * boolean ([[hasExactDups]]) routes the pair family between the plain
+    * path and the pre-collapsed path; the MAGNITUDE sizes the
+    * member-expansion spread in q_contamination (a 300k-copy group's
+    * quadratic expansion must not land on one task; an 8-copy group must
+    * not pay a salted plan for it).
     */
   private[graft] def maxCopies(docs: DataFrame): Long =
-    dupProbeMemo
-      .computeIfAbsent(
-        docs.queryExecution.analyzed.semanticHash(),
-        _ =>
-          exactGroups(docs)
-            .agg(coalesce(max("copies"), lit(0L)).as("m"))
-            .head()
-            .getLong(0)
-      )
-      .longValue()
+    graft.core.Cached.scalar(exactGroups(docs).agg(coalesce(max("copies"), lit(0L))))
 
   private[graft] def hasExactDups(docs: DataFrame): Boolean = maxCopies(docs) > 1L
 
@@ -240,19 +218,20 @@ object Dedup {
     * [[hasExactDups]] probe keeps the plain path with zero overhead —
     * where collapse and no-collapse are output-identical anyway.
     */
-  def candidatePairs(docs: DataFrame): DataFrame = {
-    // the collapsed signature table is cached in its own right: ~10 pair
-    // queries route through here, and an uncached (signatures ⋈ reps)
-    // join re-paid a per-query shuffle over the signature table (measured
-    // q_edit_neardup 0.53 s → 2.7 s at sf0.1, which holds 8 dup texts).
-    // Cached.frame keys on the plan, so the whole family shares ONE
-    // materialization — the rep-level signature index production keeps
-    // next to the full one.
-    val sigs =
-      if (hasExactDups(docs)) cached(signatures(docs).join(repIds(docs), "doc_id"))
-      else signatures(docs)
-    candidatePairsFrom(sigs)
-  }
+  def candidatePairs(docs: DataFrame): DataFrame = candidatePairsFrom(repSignatures(docs))
+
+  /** The signature table at the pair family's grain: one row per distinct
+    * text when the corpus has exact duplicates, else [[signatures]] itself.
+    * The collapsed table is cached in its own right: ~10 pair queries route
+    * through here, and an uncached (signatures ⋈ reps) join re-paid a
+    * per-query shuffle over the signature table (measured q_edit_neardup
+    * 0.53 s → 2.7 s at sf0.1, which holds 8 dup texts). Cached.frame keys
+    * on the plan, so the whole family shares ONE materialization — the
+    * rep-level signature index production keeps next to the full one.
+    */
+  private def repSignatures(docs: DataFrame): DataFrame =
+    if (hasExactDups(docs)) cached(signatures(docs).join(repIds(docs), "doc_id"))
+    else signatures(docs)
 
   /** The band self-join itself, over whatever signature table the caller
     * chose — [[candidatePairs]] feeds it the collapsed grain; tests feed it
@@ -284,11 +263,8 @@ object Dedup {
     * superlinearly with corpus size, and this histogram pins the growth to
     * occupancy instead of arguing it.
     */
-  def bandOccupancy(docs: DataFrame): DataFrame = {
-    val sigs =
-      if (hasExactDups(docs)) cached(signatures(docs).join(repIds(docs), "doc_id"))
-      else signatures(docs)
-    bands(sigs)
+  def bandOccupancy(docs: DataFrame): DataFrame =
+    bands(repSignatures(docs))
       .groupBy("band_id", "band_val")
       .agg(count(lit(1)).as("n"))
       .select(floor(log(2.0, col("n"))).cast("int").as("log2_occupancy"), col("n"))
@@ -299,7 +275,6 @@ object Dedup {
         max(col("n")).as("max_occupancy")
       )
       .orderBy("log2_occupancy")
-  }
 
   /** Saturation threshold for the ngram verify's bucket re-route: buckets
     * with more members than this route their enumeration through the exact
@@ -313,33 +288,12 @@ object Dedup {
     */
   private[graft] val BandSatThreshold = 4096
 
-  private val satProbeMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, Int), java.lang.Boolean]()
-
-  /** Memoized measure-then-decide probe (the [[hasExactDups]] discipline):
-    * does any band bucket exceed `sat` members? One agg over the cached
-    * band grain at construction time; on every fixture corpus the answer
-    * is no and the query plan is EXACTLY the pre-round-13 one.
-    */
-  private def hasSaturatedBuckets(docs: DataFrame, sigs: DataFrame, sat: Int): Boolean =
-    satProbeMemo
-      .computeIfAbsent(
-        (docs.queryExecution.analyzed.semanticHash(), sat),
-        _ =>
-          bands(sigs)
-            .groupBy("band_id", "band_val")
-            .agg(count(lit(1)).as("n"))
-            .agg(coalesce(max("n"), lit(0L)).as("m"))
-            .head()
-            .getLong(0) > sat
-      )
-      .booleanValue()
-
   /** Candidate pairs for the n-gram verifier with the band-SATURATION
     * re-route (round 13): buckets whose occupancy exceeds `sat` skip the
     * |B|² band self-join; their members' pairs are enumerated by the exact
     * prefix principle over the SAME distinct char-4-gram sets the verify
-    * reads, at the verify threshold 3/10 ([[SetJoin.groupedPrefixCandidates]]).
+    * reads, at the verify threshold 3/10 ([[SetSim.prefixCandidates]] keyed
+    * by bucket).
     *
     * Output-identical to [[candidatePairs]] FOR THE NGRAM CONSUMER, by
     * construction: every within-bucket pair is a band candidate, the
@@ -352,46 +306,31 @@ object Dedup {
     * here and not in the shared [[candidatePairs]].
     */
   private[graft] def ngramCandidatePairs(docs: DataFrame, sat: Int): DataFrame = {
-    val sigs =
-      if (hasExactDups(docs)) cached(signatures(docs).join(repIds(docs), "doc_id"))
-      else signatures(docs)
-    if (!hasSaturatedBuckets(docs, sigs, sat)) candidatePairsFrom(sigs)
+    val sigs = repSignatures(docs)
+    val b    = bands(sigs)
+    val occ  = b.groupBy("band_id", "band_val").agg(count(lit(1)).as("n"))
+    // measure-then-decide (the [[hasExactDups]] discipline): one memoized
+    // agg over the cached band grain at construction time; on every
+    // fixture corpus no bucket exceeds the default and the plan is the
+    // plain band join
+    if (graft.core.Cached.scalar(occ.agg(coalesce(max("n"), lit(0L)))) <= sat)
+      candidatePairsFrom(sigs)
     else {
-      val b = bands(sigs)
-      val occ = b.groupBy("band_id", "band_val").agg(count(lit(1)).as("n"))
       // pathological buckets are few by definition — broadcast the keys
-      val satKeys = broadcast(
-        occ.filter(col("n") > sat).select("band_id", "band_val"))
+      val satKeys = broadcast(occ.filter(col("n") > sat).select("band_id", "band_val"))
       val bKeys   = Seq("band_id", "band_val")
       val candN   = bandSelfJoin(b.join(satKeys, bKeys, "left_anti"))
       val satDocs = b.join(satKeys, bKeys)
-      // rare-first canonical gram order over the saturated members (any
-      // global order preserves completeness; df over this subset is the
+      // rare-first gram order over the saturated members (any global
+      // order preserves completeness; df over this subset is the
       // pruning-power choice)
-      val g = gramSets(docs)
-        .join(satDocs.select("doc_id").distinct(), "doc_id")
-        .select(col("doc_id"), explode(col("gset")).as("tok"))
-      val dfs = g.groupBy("tok").agg(count(lit(1)).as("df"))
-      val ordered = g
-        .join(dfs, "tok")
-        .groupBy("doc_id")
-        .agg(array_sort(collect_list(struct(col("df"), col("tok")))).as("ord"))
-        .select(
-          col("doc_id"),
-          transform(col("ord"), x => x.getField("tok")).as("toks"),
-          size(col("ord")).as("sz")
-        )
+      val ordered = SetSim.rareFirst(
+        gramSets(docs).join(satDocs.select("doc_id").distinct(), "doc_id"), "gset")
       val sets = satDocs
         .join(ordered, "doc_id")
-        .select(
-          concat_ws("#", col("band_id"), col("band_val")).as("gid"),
-          col("doc_id"),
-          col("toks"),
-          col("sz")
-        )
-      val saltB = SetJoin.saltBFor(docs)
+        .select(concat_ws("#", col("band_id"), col("band_val")).as("gid"), col("doc_id"), col("toks"))
       candN
-        .union(SetJoin.groupedPrefixCandidates(sets, NgTNum, NgTDen, saltB))
+        .union(SetSim.prefixCandidates(sets, NgTNum, NgTDen, SetSim.saltBFor(docs), "gid"))
         .distinct()
     }
   }
@@ -400,8 +339,8 @@ object Dedup {
     * the equivalence proofs in StressSpec (never a registered query's
     * path). On a dup-free corpus equals [[nearDuplicates]] exactly.
     */
-  private[graft] def nearDuplicatesUncollapsed(docs: DataFrame, threshold: Double): DataFrame =
-    verifiedPairs(candidatePairsFrom(signatures(docs)), docs, threshold)
+  private[graft] def nearDuplicatesUncollapsed(docs: DataFrame, tNum: Long, tDen: Long): DataFrame =
+    shingleJaccard(candidatePairsFrom(signatures(docs)), docs, tNum, tDen)
 
   /** Character 4-grams of lowercased text (empty array below 4 chars) —
     * same zip-of-shifted-slices shape as [[shingles3]] so the char split
@@ -423,118 +362,54 @@ object Dedup {
     ).otherwise(array().cast("array<string>"))
   }
 
-  /** Cached (doc_id, gset, hg, hok, gsz) distinct char-4-gram sets —
-    * [[shingleSets]]'s analog for the n-gram verifier, so `q_ngram_jaccard`
-    * pays one `documents` scan for its gram sets (its candidates reuse the
-    * shingle cache). Round 12 carries [[SetJoin]]'s verify-tier columns:
-    * `hg` is the xxhash64 image of `gset` (long-array intersection is
-    * several times cheaper than string-array — no per-element string
-    * hashing/equality in the hot loop), `hok` records that the hashes are
-    * collision-free WITHIN this doc (a cross-doc collision only inflates
-    * the hash intersect, which the exact string tier discards; an intra-doc
-    * collision collapses two grams to one hash and could DEFLATE it, so the
-    * cheap tier is only trusted when both sides are `hok` — the ~2⁻⁶⁴
-    * fall-through re-verifies on strings unpruned), and `gsz` is the
-    * distinct-gram count the size prefilters read without touching arrays.
+  /** Cached (doc_id, gset, h, hok, sz) distinct char-4-gram sets with
+    * their [[SetSim.image]] — [[shingleSets]]'s analog for the n-gram
+    * verifier, so `q_ngram_jaccard` pays one `documents` scan for its gram
+    * sets (its candidates reuse the shingle cache). One cache holds both
+    * the strings and the hash-tier columns: the gram family's only copy of
+    * its string arrays.
     */
   def gramSets(docs: DataFrame): DataFrame =
     cached(
       docs
         .select(col("doc_id"), array_distinct(charGrams4(col("text"))).as("gset"))
-        .select(
-          col("doc_id"),
-          col("gset"),
-          transform(col("gset"), g => xxhash64(g)).as("hg"),
-          (size(array_distinct(transform(col("gset"), g => xxhash64(g)))) ===
-            size(col("gset"))).as("hok"),
-          size(col("gset")).as("gsz")
-        )
+        .select(col("doc_id") +: col("gset") +: SetSim.image(col("gset")): _*)
     )
 
-  /** Candidates verified with exact Jaccard over distinct 3-shingle sets.
-    * Candidate generation and verification share the cached [[shingleSets]]
-    * table — one `documents` scan for the whole query. Pairs are at the
-    * DISTINCT-TEXT grain ([[candidatePairs]]' exact-dup pre-collapse):
-    * exact copies never re-verify, so a 100k-copy group costs nothing here
-    * instead of 5·10⁹ Jaccard evaluations; its multiplicity lives in
-    * [[exactGroups]] and the member star of [[nearDupEdges]].
+  /** Candidates verified with exact Jaccard ≥ tNum/tDen over distinct
+    * 3-shingle sets. Candidate generation and verification share the
+    * cached [[shingleSets]] table — one `documents` scan for the whole
+    * query. Pairs are at the DISTINCT-TEXT grain ([[candidatePairs]]'
+    * exact-dup pre-collapse): exact copies never re-verify, so a
+    * 100k-copy group costs nothing here instead of 5·10⁹ Jaccard
+    * evaluations; its multiplicity lives in [[exactGroups]] and the member
+    * star of [[nearDupEdges]].
     */
-  def nearDuplicates(docs: DataFrame, threshold: Double): DataFrame =
-    verifiedPairs(candidatePairs(docs), docs, threshold)
+  def nearDuplicates(docs: DataFrame, tNum: Long, tDen: Long): DataFrame =
+    shingleJaccard(candidatePairs(docs), docs, tNum, tDen)
 
-  /** Exact-Jaccard verification of a (d1, d2) candidate set against the
-    * cached shingle-set table — the ONE definition both the collapsed and
-    * the uncollapsed pair paths share.
-    *
-    * Round-12 verify discipline (the 100× spot gate caught q_contamination
-    * grinding ~40 min with 2 of 32 cores in this very intersect): a
-    * [[graft.core.Width.compute]] spread keyed by d1, so the first verify
-    * join reuses the exchange, restores full-width parallelism; and a
-    * length-ratio prefilter (J ≥ t forces t ≤ |s1|/|s2| ≤ 1/t) drops
-    * grossly mismatched pairs before any array is touched. The 1e-9
-    * margin keeps the prune provably conservative against the final
-    * double comparison (double rounding is ≤ ~1e-16 relative; the pruning
-    * power loses nothing at 1e-9).
+  /** (d1, d2, inter, uni, jaccard) for the candidates whose shingle-set
+    * Jaccard reaches tNum/tDen — [[SetSim.verify]] over the family's
+    * shingle caches, then the double comparison the oracles replay. The
+    * ONE definition the collapsed and the uncollapsed pair paths share.
     */
-  private def verifiedPairs(cand: DataFrame, docs: DataFrame, threshold: Double): DataFrame = {
-    val sets  = shingleSets(docs)
-    val hsets = shingleHashes(docs)
-    val tm    = threshold - 1e-9
-    // HASH-FIRST topology (round 13; SetJoin/ngram precedent): the
-    // exchange that routes each candidate row to its d2 side used to carry
-    // the d1 side's full STRING shingle array — at the 5M-doc saturation
-    // gate that exchange's sort spill ENOSPC'd a 78-GB-free node inside
-    // q_contamination. The narrow hash cache rides that exchange instead
-    // (~8 B/shingle vs ~20+), and the string arrays attach only to hash-
-    // tier survivors (≈ true pairs: the bound below restates J ≥ t exactly
-    // under `hok`; collisions and the 1e-9 margin only over-admit).
-    val hashTier = graft.core.Width
-      .compute(cand, col("d1"))
-      .join(
-        hsets.select(col("doc_id").as("d1"), col("hs").as("h1"), col("hok").as("hok1"),
-          col("ssz").as("z1")), "d1")
-      .join(
-        hsets.select(col("doc_id").as("d2"), col("hs").as("h2"), col("hok").as("hok2"),
-          col("ssz").as("z2")), "d2")
-      .filter(
-        col("z1").cast("double") >= lit(tm) * col("z2") &&
-          col("z2").cast("double") >= lit(tm) * col("z1")
-      )
-      // J ≥ t ⟺ (1+t)·|∩| ≥ t·(|s1|+|s2|); evaluated at tm < t the bound
-      // only widens, and a non-hok side falls through unpruned
-      .filter(
-        !col("hok1") || !col("hok2") ||
-          size(array_intersect(col("h1"), col("h2"))).cast("double") * lit(1.0 + tm) >=
-          lit(tm) * (col("z1") + col("z2")).cast("double")
-      )
-      .select(col("d1"), col("d2"))
-    hashTier
-      .join(sets.select(col("doc_id").as("d1"), col("sset").as("s1")), "d1")
-      .join(sets.select(col("doc_id").as("d2"), col("sset").as("s2")), "d2")
-      .withColumn("inter", size(array_intersect(col("s1"), col("s2"))).cast("long"))
-      .withColumn("uni", size(array_union(col("s1"), col("s2"))).cast("long"))
-      .withColumn("jaccard", col("inter").cast("double") / col("uni"))
-      .filter(col("jaccard") >= threshold)
-      .select("d1", "d2", "inter", "uni", "jaccard")
+  private def shingleJaccard(cand: DataFrame, docs: DataFrame, tNum: Long, tDen: Long): DataFrame = {
+    val sets = shingleSets(docs)
+    // the hash tier's columns cached apart from, and WITHOUT, the strings:
+    // the family keeps one copy of its text-derived arrays, this one only
+    // longs
+    val hashes = cached(sets.select(col("doc_id") +: SetSim.image(col("sset")): _*))
+    atLeast(SetSim.verify(cand, hashes, sets, "sset", tNum, tDen), tNum, tDen)
   }
 
-  /** Narrow hash-tier companion of [[shingleSets]]: per doc, the xxhash64
-    * image of the shingle set, the intra-doc collision-free marker, and
-    * the set size — the columns the verify's heavy exchange carries so the
-    * string arrays never ride it (see [[verifiedPairs]]). Cached
-    * separately and WITHOUT the strings: the family cache keeps one copy
-    * of the text-derived arrays, this one only longs.
+  /** `jaccard` = inter/uni, kept where it is ≥ tNum/tDen as a double — the
+    * comparison the DuckDB oracles make. tNum/tDen is computed by one IEEE
+    * division, the same double as the decimal literal (1/5 is 0.2).
     */
-  private def shingleHashes(docs: DataFrame): DataFrame =
-    cached(
-      shingleSets(docs).select(
-        col("doc_id"),
-        transform(col("sset"), x => xxhash64(x)).as("hs"),
-        (size(array_distinct(transform(col("sset"), x => xxhash64(x)))) ===
-          size(col("sset"))).as("hok"),
-        size(col("sset")).as("ssz")
-      )
-    )
+  private def atLeast(pairs: DataFrame, tNum: Long, tDen: Long): DataFrame =
+    pairs
+      .withColumn("jaccard", col("inter").cast("double") / col("uni"))
+      .filter(col("jaccard") >= tNum.toDouble / tDen)
 
   /** Incremental near-dedup: flag NEW docs that near-duplicate the SEEN
     * corpus — the shape of a production ingest gate, where each day's batch
@@ -818,10 +693,10 @@ object Dedup {
     )
   )
 
-  /** LSH candidates verified by exact Jaccard >= 0.2 over shingle sets. */
+  /** LSH candidates verified by exact Jaccard >= 1/5 over shingle sets. */
   val minhashNearDup: Q = Q(
     "q_minhash_neardup",
-    (s, dir) => nearDuplicates(Tables(s, dir).documents, 0.2).orderBy("d1", "d2"),
+    (s, dir) => nearDuplicates(Tables(s, dir).documents, 1, 5).orderBy("d1", "d2"),
     Some(
       s"""WITH sig AS ($sqlSigRep),
          |bands AS ($sqlBands),
@@ -841,103 +716,45 @@ object Dedup {
     )
   )
 
-  /** n-gram Jaccard threshold 3/10 as an exact rational — the prefilters
-    * below are integer cross-multiplications of this, never doubles.
+  /** n-gram Jaccard threshold 3/10 as an exact rational — the prefix and
+    * hash-tier bounds ([[SetSim]]) are integer cross-multiplications of
+    * this, never doubles.
     */
   private val NgTNum = 3L
   private val NgTDen = 10L
 
-  /** The `q_ngram_jaccard` verify pipeline, with [[SetJoin]]'s verify
-    * discipline ported in (round 12 — the round-11 10× sweep measured the
-    * naive string-array verify drifting 11.8 → 40.1 s with an unchanged
-    * plan, because per-candidate cost is corpus-shaped, not plan-shaped):
-    *
-    *  1. [[graft.core.Width.compute]] spread of the candidate frame before
-    *     the CPU-heavy verify, keyed by d1 so the first verify join reuses
-    *     the exchange;
-    *  2. length-ratio prefilter in exact integers: J ≥ t forces
-    *     t ≤ |g1|/|g2| ≤ 1/t, i.e. 3·|g1| ≤ 10·|g2| ∧ 3·|g2| ≤ 10·|g1| —
-    *     evaluated on the `gsz` counts before any array is touched;
-    *  3. xxhash64 cheap tier: |∩h|·(3+10) ≥ 3·(|g1|+|g2|) is EXACTLY
-    *     J ≥ 3/10 restated (via |∪| = |g1|+|g2|−|∩|) when both sides are
-    *     intra-doc collision-free (`hok`); otherwise the pair falls
-    *     through to the exact tier unpruned. Long-array intersection
-    *     replaces most string-array intersections at a fraction of the
-    *     cost; cross-doc collisions only over-admit.
-    *  4. exact string-gram tier — unchanged semantics, but |∪| is now
-    *     computed as |g1|+|g2|−|∩| (the sets are distinct by
-    *     construction), saving the second O(n) array op per survivor.
-    *
-    * Steps 2–3 are output-neutral work savers; the final double-division
-    * filter is byte-identical to the oracle's. The integer forms coincide
-    * with the double `>= 0.3` comparison for every realizable set size
-    * (a disagreement needs |∪| within ~1e-17 relative of 3/10 without
-    * equaling it — a denominator > 10¹⁶, far beyond any document's gram
-    * count), and DedupSpec pins pruned ≡ unpruned on a collision-rich
-    * corpus. `pruned = false` preserves the round-11 naive path for that
-    * equivalence proof.
+  /** The `q_ngram_jaccard` verify pipeline: the saturation-aware
+    * candidates ([[ngramCandidatePairs]]) through [[SetSim.verify]] at
+    * 3/10 over the cached [[gramSets]] (the round-11 10× sweep measured
+    * the naive string-array verify drifting 11.8 → 40.1 s with an
+    * unchanged plan, because per-candidate cost is corpus-shaped, not
+    * plan-shaped). The hash and length bounds are output-neutral work
+    * savers; the final double filter is byte-identical to the oracle's.
+    * The integer forms coincide with the double `>= 0.3` comparison for
+    * every realizable set size (a disagreement needs |∪| within ~1e-17
+    * relative of 3/10 without equaling it — a denominator > 10¹⁶, far
+    * beyond any document's gram count), and ExtSpec pins pruned ≡
+    * unpruned on a collision-rich corpus. `pruned = false` keeps the naive
+    * path (plain band candidates, string intersect on every candidate)
+    * for that equivalence proof.
     */
   private[graft] def ngramVerifiedPairs(
       docs: DataFrame,
       pruned: Boolean = true,
       sat: Int = BandSatThreshold): DataFrame = {
-    // saturation-aware candidate tier (round 13): identical output, but
-    // over-occupied band buckets enumerate through the exact prefix filter
-    val cand0 = if (pruned) ngramCandidatePairs(docs, sat) else candidatePairs(docs)
-    ngramVerify(docs, cand0, pruned).orderBy("d1", "d2")
-  }
-
-  /** The tiered gram verify over an arbitrary candidate frame (unsorted;
-    * [[ngramVerifiedPairs]] appends the orderBy).
-    */
-  private def ngramVerify(docs: DataFrame, cand0: DataFrame, pruned: Boolean): DataFrame = {
     val sets = gramSets(docs)
-    val gated =
-      if (pruned) {
-        // HASH-FIRST topology (round 13, SetJoin.verifiedForSalts
-        // precedent): the exchange that routes candidate rows to their d2
-        // side used to carry the d1 side's string gram array AND hash
-        // array per row — the disk term the single-node ENOSPCs died in.
-        // Attach only the long-hash columns before that exchange; the
-        // string arrays join after the hash tier has pruned candidates to
-        // ~true-pair volume.
-        val h1 = sets.select(
-          col("doc_id").as("d1"), col("hg").as("h1"), col("hok").as("hok1"),
-          col("gsz").as("sz1"))
-        val h2 = sets.select(
-          col("doc_id").as("d2"), col("hg").as("h2"), col("hok").as("hok2"),
-          col("gsz").as("sz2"))
-        graft.core.Width
-          .compute(cand0, col("d1"))
-          .join(h1, "d1")
-          .join(h2, "d2")
-          .filter(
-            col("sz1") * NgTNum <= col("sz2") * NgTDen &&
-              col("sz2") * NgTNum <= col("sz1") * NgTDen
-          )
-          .filter(
-            !col("hok1") || !col("hok2") ||
-              size(array_intersect(col("h1"), col("h2"))) * (NgTNum + NgTDen) >=
-              (col("sz1").cast("long") + col("sz2")) * NgTNum
-          )
-          .select(col("d1"), col("d2"), col("sz1"), col("sz2"))
-          .join(sets.select(col("doc_id").as("d1"), col("gset").as("g1")), "d1")
-          .join(sets.select(col("doc_id").as("d2"), col("gset").as("g2")), "d2")
-      } else {
-        val s1 = sets.select(
-          col("doc_id").as("d1"), col("gset").as("g1"), col("gsz").as("sz1"))
-        val s2 = sets.select(
-          col("doc_id").as("d2"), col("gset").as("g2"), col("gsz").as("sz2"))
-        cand0.join(s1, "d1").join(s2, "d2")
+    val pairs =
+      if (pruned) SetSim.verify(ngramCandidatePairs(docs, sat), sets, sets, "gset", NgTNum, NgTDen)
+      else {
+        def side(i: Int) =
+          sets.select(col("doc_id").as(s"d$i"), col("gset").as(s"g$i"), col("sz").as(s"sz$i"))
+        candidatePairs(docs)
+          .join(side(1), "d1")
+          .join(side(2), "d2")
+          .withColumn("inter", size(array_intersect(col("g1"), col("g2"))).cast("long"))
+          .withColumn("uni", col("sz1").cast("long") + col("sz2") - col("inter"))
       }
-    gated
-      .withColumn("inter", size(array_intersect(col("g1"), col("g2"))).cast("long"))
-      .withColumn(
-        "jaccard",
-        col("inter").cast("double") / (col("sz1").cast("long") + col("sz2") - col("inter"))
-      )
-      .filter(col("jaccard") >= 0.3)
-      .select("d1", "d2", "jaccard")
+    atLeast(pairs, NgTNum, NgTDen).select("d1", "d2", "jaccard").orderBy("d1", "d2")
   }
 
   /** n-gram Jaccard near-dup: LSH band candidates verified by CHARACTER
@@ -1091,37 +908,28 @@ object Dedup {
       .agg(min("doc_id").as("rep"), count(lit(1)).as("copies"))
   )
 
-  private[graft] def nearDupEdges(docs: DataFrame, threshold: Double): DataFrame = {
+  private[graft] def nearDupEdges(docs: DataFrame, tNum: Long, tDen: Long): DataFrame = {
     // rep-level verified pairs: since the pre-collapse moved INTO
     // [[candidatePairs]] (family-wide), [[nearDuplicates]] already emits
     // one representative per distinct text — this function only adds the
     // member star on top. On a dup-free corpus the pair set IS the full
     // verified-pair set and no star exists.
-    val repPairs = nearDuplicates(docs, threshold).select("d1", "d2")
-    if (!hasExactDups(docs)) return repPairs
-    val keyed   = docs.select(col("doc_id"), md5(col("text").cast("binary")).as("tkey"))
-    val members = keyed
-      .join(exactGroups(docs), "tkey")
-      .select(col("doc_id"), col("rep"), col("copies"))
-    // identical SETLESS docs (< 3 tokens ⟹ no shingles ⟹ null jaccard)
-    // are not pairwise-verified in the clique shape, so their groups get
-    // no star either. Restricting the FAMILY-SHARED cached shingle table
-    // to reps is a plain filter over the cache (recomputing features from
-    // a (docs ⋈ reps) frame would be a different plan the CacheManager
-    // can't dedup — measured: 8.5 s vs 3 s at sf0.1).
-    val eligible = shingleSets(docs)
-      .join(repIds(docs), "doc_id")
-      .filter(size(col("sset")) > 0)
-      .select(col("doc_id").as("rep"))
-    val star = members
-      .filter(col("copies") > 1 && col("doc_id") =!= col("rep"))
-      .join(eligible, "rep")
-      .select(col("rep").as("d1"), col("doc_id").as("d2"))
-    repPairs.union(star)
+    val repPairs = nearDuplicates(docs, tNum, tDen).select("d1", "d2")
+    if (!hasExactDups(docs)) repPairs
+    else
+      // identical SETLESS docs (< 3 tokens ⟹ no shingles ⟹ null jaccard)
+      // are not pairwise-verified in the clique shape, so their groups get
+      // no star either ([[eligibleReps]])
+      repPairs.union(
+        members(docs)
+          .filter(col("doc_id") =!= col("rep"))
+          .join(eligibleReps(docs), "rep")
+          .select(col("rep").as("d1"), col("doc_id").as("d2"))
+      )
   }
 
-  def nearDupClusters(docs: DataFrame, threshold: Double, maxIters: Int = 10): DataFrame = {
-    val pairs = nearDupEdges(docs, threshold)
+  def nearDupClusters(docs: DataFrame, tNum: Long, tDen: Long, maxIters: Int = 10): DataFrame = {
+    val pairs = nearDupEdges(docs, tNum, tDen)
     // both directions PLUS a self-loop per endpoint: min over (neighbors ∪
     // self) IS the whole propagation step, so each iteration is ONE join +
     // ONE min-aggregate (the earlier shape needed a second join to merge
@@ -1335,7 +1143,7 @@ object Dedup {
     */
   val dedupClusters: Q = Q(
     "q_dedup_clusters",
-    (s, dir) => nearDupClusters(Tables(s, dir).documents, 0.2),
+    (s, dir) => nearDupClusters(Tables(s, dir).documents, 1, 5),
     Some(
       s"""WITH RECURSIVE sig AS ($sqlSig),
          |bands AS ($sqlBands),
@@ -1375,7 +1183,7 @@ object Dedup {
     "q_cluster_survivors",
     (s, dir) => {
       val docs   = Tables(s, dir).documents
-      val labels = nearDupClusters(docs, 0.2)
+      val labels = nearDupClusters(docs, 1, 5)
       val full = docs
         .select(col("doc_id"), col("n_chars"))
         .join(labels, Seq("doc_id"), "left")
@@ -1582,7 +1390,7 @@ object Dedup {
           .groupBy("rep", "source")
           .agg(count(lit(1)).as("cnt"))
       )
-      val cross = nearDuplicates(docs, 0.2)
+      val cross = nearDuplicates(docs, 1, 5)
         .select("d1", "d2")
         .join(gs.select(col("rep").as("d1"), col("source").as("src1"), col("cnt").as("c1")), "d1")
         .join(gs.select(col("rep").as("d2"), col("source").as("src2"), col("cnt").as("c2")), "d2")
@@ -1647,7 +1455,7 @@ object Dedup {
     (s, dir) => {
       val docs  = Tables(s, dir).documents
       val cand  = candidatePairs(docs).agg(count(lit(1)).as("n_candidates"))
-      val pairs = nearDuplicates(docs, 0.2).agg(count(lit(1)).as("n_verified"))
+      val pairs = nearDuplicates(docs, 1, 5).agg(count(lit(1)).as("n_verified"))
       cand
         .crossJoin(pairs) // two 1-row frames
         .select(
@@ -1695,7 +1503,7 @@ object Dedup {
   val jaccardHistogram: Q = Q(
     "q_jaccard_histogram",
     (s, dir) =>
-      nearDuplicates(Tables(s, dir).documents, 0.0)
+      nearDuplicates(Tables(s, dir).documents, 0, 1)
         .withColumn("bucket", expr("(inter * 20L) div uni"))
         .groupBy("bucket")
         .agg(count(lit(1)).as("n_pairs"))

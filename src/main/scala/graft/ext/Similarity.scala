@@ -951,7 +951,7 @@ object Similarity {
     "q_crossmodal_agree",
     (s, dir) => {
       val tp = graft.ext.Dedup
-        .nearDuplicates(Tables(s, dir).documents, 0.2)
+        .nearDuplicates(Tables(s, dir).documents, 1, 5)
         .select(col("d1"), col("d2"), col("jaccard"))
       val ep = cachedNearDupPairs(Tables(s, dir).embeddings)
         .select(col("v1"), col("v2"))

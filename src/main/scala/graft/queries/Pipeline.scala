@@ -110,7 +110,7 @@ object Pipeline {
       )
       val wFp   = Window.partitionBy("fp")
       val drops = Dedup
-        .nearDuplicates(docs, 0.2)
+        .nearDuplicates(docs, 1, 5)
         .select(col("d2").as("doc_id"))
         .distinct()
         .withColumn("neardup_drop", lit(true))
@@ -472,7 +472,7 @@ object Pipeline {
     val mTest = mem.filter(col("split") === "test").select(col("rep"), col("doc_id"))
     val mLeak =
       mem.filter(col("split") =!= "test").select(col("rep"), col("doc_id"), col("split"))
-    val rp = Dedup.nearDuplicates(docs, 0.2).select("d1", "d2", "jaccard")
+    val rp = Dedup.nearDuplicates(docs, 1, 5).select("d1", "d2", "jaccard")
     if (Dedup.maxCopies(docs) <= spreadAt) {
       val crossA = rp
         .join(mTest.select(col("rep").as("d1"), col("doc_id").as("test_id")), "d1")
@@ -1433,7 +1433,7 @@ object Pipeline {
       jobs += eng.submitStage { sp =>
         val s2docs = sp.read.parquet(a2)
         val drops = Dedup
-          .nearDuplicatesUncollapsed(s2docs.select("doc_id", "text"), 0.2)
+          .nearDuplicatesUncollapsed(s2docs.select("doc_id", "text"), 1, 5)
           .select(col("d2").as("doc_id"))
           .distinct()
         s2docs

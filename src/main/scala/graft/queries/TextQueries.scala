@@ -2069,7 +2069,7 @@ object TextQueries {
       )
       val topR = graft.ext.Dedup.members(docs).join(broadcast(top), "doc_id")
       val pos  = topR.filter(col("bm25_rank") === 1).select(col("rep").as("pos_rep"))
-      val rp   = graft.ext.Dedup.nearDuplicates(docs, 0.2).select("d1", "d2")
+      val rp   = graft.ext.Dedup.nearDuplicates(docs, 1, 5).select("d1", "d2")
       val partners = rp
         .join(broadcast(pos), col("d1") === col("pos_rep"))
         .select(col("d2").as("rep"))

@@ -18,6 +18,21 @@ class CoverageSpec extends AnyFunSuite {
     walk(new java.io.File("src/main"))
   }
 
+  /** (path under src/main/scala/graft/, 1-based line) of every code line in
+    * src/main whose code — comment lines and trailing `//` comments
+    * stripped — satisfies `p`.
+    */
+  private def codeSites(p: String => Boolean): Vector[(String, Int)] =
+    mainSources.flatMap { f =>
+      val text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      text.linesIterator.zipWithIndex.collect {
+        case (line, i)
+            if !line.trim.startsWith("*") && !line.trim.startsWith("/*") &&
+              p(line.split("//", 2)(0)) =>
+          (f.getPath.stripPrefix("src/main/scala/graft/"), i + 1)
+      }
+    }.toVector
+
   private def queryToken(s: String): Boolean =
     s.startsWith("q_") || s == "q1_agg" || s == "word_count" || s == "grep"
 
@@ -123,25 +138,30 @@ class CoverageSpec extends AnyFunSuite {
       "core/Width.scala" -> "the stage-width policy itself",
       // skew fan-outs: how many ways a hot group's pair enumeration
       // splits, not how wide a stage runs
-      "ext/SetJoin.scala"      -> "saltBFor, the salted candidate enumeration's fan-out",
+      "ext/SetSim.scala"       -> "saltBFor, the salted candidate enumeration's fan-out",
       "queries/Pipeline.scala" -> "q_contamination's member-expansion salt set"
     )
-    val code = mainSources.flatMap { f =>
-      val text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      text.linesIterator.zipWithIndex.collect {
-        case (line, i)
-            if !line.trim.startsWith("*") && !line.trim.startsWith("/*") &&
-              line.split("//", 2)(0).contains("defaultParallelism") =>
-          (f.getPath.stripPrefix("src/main/scala/graft/"), i + 1)
-      }
-    }.toVector
+    val code  = codeSites(_.contains("defaultParallelism"))
     val stray = code.filterNot { case (path, _) => allowed.contains(path) }
     assert(
       stray.isEmpty,
       s"defaultParallelism at ${stray.mkString(", ")}; allowed only in " +
         allowed.map { case (path, why) => s"$path ($why)" }.mkString("; "))
-    assert(code.count(_._1 == "ext/SetJoin.scala") == 1, s"SetJoin sites: $code")
+    assert(code.count(_._1 == "ext/SetSim.scala") == 1, s"SetSim sites: $code")
     assert(code.count(_._1 == "queries/Pipeline.scala") == 1, s"Pipeline sites: $code")
     assert(code.exists(_._1 == "core/Width.scala"), "is the working directory the repo root?")
+  }
+
+  /** The exact-Jaccard hash tier has one owner, [[graft.ext.SetSim]]: the
+    * intra-doc collision marker `hok`, the hash-array intersect, their
+    * bounds and the verify's join order are written once, so the
+    * pair-family callers cannot drift apart.
+    */
+  test("src/main builds and reads the Jaccard hash tier only in ext/SetSim") {
+    val hashTier = """"hok"|array_intersect\(col\("h""".r
+    val code     = codeSites(line => hashTier.findFirstIn(line).nonEmpty)
+    val stray    = code.filterNot(_._1 == "ext/SetSim.scala")
+    assert(stray.isEmpty, s"hash-tier code outside ext/SetSim: ${stray.mkString(", ")}")
+    assert(code.nonEmpty, "is the working directory the repo root?")
   }
 }

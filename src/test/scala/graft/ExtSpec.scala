@@ -47,7 +47,7 @@ class ExtSpec extends SparkSpec {
     assert(hist.map(_._2).sum == nCand, s"histogram mass ${hist.map(_._2).sum} != candidates $nCand")
     // bucket >= 4 ⟺ 20·inter >= 4·uni ⟺ jaccard >= 1/5 exactly, which is
     // the same pair set the 0.2-threshold verify tier admits
-    val nVerified = Dedup.nearDuplicates(Tables(spark, sf).documents, 0.2).count()
+    val nVerified = Dedup.nearDuplicates(Tables(spark, sf).documents, 1, 5).count()
     assert(
       hist.collect { case (b, n) if b >= 4L => n }.sum == nVerified,
       "buckets >= 4 disagree with the 0.2 verify tier"
@@ -730,8 +730,28 @@ class ExtSpec extends SparkSpec {
 
   test("nearDupClusters returns empty (not NPE) on an empty corpus") {
     import spark.implicits._
+    import graft.ext.{Dedup, SetJoin}
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
-    assert(graft.ext.Dedup.nearDupClusters(empty, 0.2).count() == 0L)
+    assert(Dedup.nearDupClusters(empty, 1, 5).count() == 0L)
+    // the pair-family entry points on the degenerate corpora: no corpus
+    // has two distinct texts, so no entry point may emit a pair
+    val text = "the quick brown fox jumps over the lazy dog"
+    val corpora = Seq(
+      "empty"     -> empty,
+      "one doc"   -> Seq((1L, text)).toDF("doc_id", "text"),
+      "identical" -> (1L to 6L).map(i => (i, text)).toDF("doc_id", "text")
+    )
+    for ((corpus, docs) <- corpora) {
+      val entries = Seq(
+        "similarityJoin"            -> (() => SetJoin.similarityJoin(docs)),
+        "nearDuplicates"            -> (() => Dedup.nearDuplicates(docs, 1, 5)),
+        "ngramVerifiedPairs"        -> (() => Dedup.ngramVerifiedPairs(docs)),
+        "ngramVerifiedPairs(sat=1)" -> (() => Dedup.ngramVerifiedPairs(docs, sat = 1)),
+        "containmentPairs"          -> (() => Dedup.containmentPairs(docs, 0.6))
+      )
+      for ((name, run) <- entries)
+        assert(run().count() == 0L, s"$name on the $corpus corpus")
+    }
   }
 
   test("wavPcmBytes parses in javax.sound.sampled with bit-identical samples") {
@@ -979,7 +999,7 @@ class ExtSpec extends SparkSpec {
     // finds a pair linking it to a seen doc (pairs are d1 < d2, so the new
     // side of a cross-boundary pair is always d2)
     val expected = Dedup
-      .nearDuplicates(docs, 0.2)
+      .nearDuplicates(docs, 1, 5)
       .filter(col("d1") < 400 && col("d2") >= 400)
       .collect()
       .map(_.getLong(1))

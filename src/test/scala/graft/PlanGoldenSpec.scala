@@ -69,9 +69,13 @@ class PlanGoldenSpec extends SparkSpec {
     // reappearing self-join Exchange shows as a diff)
     "q_repetition",
     "q_cooccur",
-    // the exact prefix-filter set join (salted enumeration, hash-first
-    // verify) and the char-4-gram band verify: one plan each, so a shared
-    // verify helper that starts branching on its caller shows as a diff
+    // the exact prefix-filter set join and the char-4-gram band verify.
+    // Both run ext/SetSim's one tiered verify (with q_minhash_neardup
+    // above): d1 spread, hash tier, then the string tier joining d2 before
+    // d1. q_set_join also pins SetSim's salted prefix enumeration, and
+    // q_ngram_jaccard the gram cache's hashed image (h, hok, sz). A verify
+    // that starts branching on its caller, or a string tier that joins d1
+    // first again, shows as a diff
     "q_set_join",
     "q_ngram_jaccard"
   )

@@ -89,30 +89,50 @@ class SetJoinSpec extends SparkSpec {
 
   test("unbroadcast verify chain reshuffles the candidate stream by d1, d2, d1 only") {
     import spark.implicits._
+    import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.catalyst.expressions.AttributeReference
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import graft.ext.Dedup
     val docs = Seq((1L, "a b c d e f"), (2L, "a b c d e g"), (3L, "x y z w v u"))
       .toDF("doc_id", "text")
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val was = spark.conf.getOption(key)
+    // single-key hash exchanges: (key, whether the exchanged rows are the
+    // candidate stream, i.e. carry both d1 and d2)
+    def exchanges(df: DataFrame): Seq[(String, Boolean)] =
+      adaptiveNodes(df.queryExecution.executedPlan).collect {
+        case e: ShuffleExchangeExec =>
+          e.outputPartitioning match {
+            case HashPartitioning(Seq(a: AttributeReference), _) =>
+              (a.name, Seq("d1", "d2").forall(c => e.child.output.exists(_.name == c)))
+            case _ => ("", false)
+          }
+      }
     // at scale every verify join is a sort-merge join; the fixtures are
     // small enough that each one broadcasts, so switch broadcast off
     spark.conf.set(key, "-1")
-    val keys =
+    val plans =
       try
-        adaptiveNodes(SetJoin.similarityJoin(docs).queryExecution.executedPlan).collect {
-          case e: ShuffleExchangeExec =>
-            e.outputPartitioning match {
-              case HashPartitioning(Seq(a: AttributeReference), _) => a.name
-              case _                                               => ""
-            }
-        }
+        Seq(
+          "similarityJoin"     -> SetJoin.similarityJoin(docs),
+          "nearDuplicates"     -> Dedup.nearDuplicates(docs, 1, 5),
+          "ngramVerifiedPairs" -> Dedup.ngramVerifiedPairs(docs)
+        ).map { case (name, df) => name -> exchanges(df) }
       finally was.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-    // d1: the Width spread, the h1 and s1 sides, one stream reshuffle;
-    // d2: the h2 and s2 sides and ONE stream reshuffle — the string tier
-    // joins s2 first, reusing the hash tier's d2 partitioning
-    assert(keys.count(_ == "d1") == 4, keys)
-    assert(keys.count(_ == "d2") == 3, keys)
+    for ((name, ex) <- plans) {
+      val stream = ex.collect { case (k, true) if k.nonEmpty => k }
+      // the Width spread and the string tier's last join on d1; ONE d2
+      // reshuffle, which the hash tier's h2 join and the string tier's s2
+      // join share
+      assert(stream.count(_ == "d1") == 2, s"$name: $ex")
+      assert(stream.count(_ == "d2") == 1, s"$name: $ex")
+    }
+    // similarityJoin in full — d1: the Width spread, the h1 and s1 sides,
+    // one stream reshuffle; d2: the h2 and s2 sides and the one stream
+    // reshuffle
+    val setJoinKeys = plans.head._2.map(_._1)
+    assert(setJoinKeys.count(_ == "d1") == 4, setJoinKeys)
+    assert(setJoinKeys.count(_ == "d2") == 3, setJoinKeys)
   }
 }

@@ -102,7 +102,7 @@ class StressSpec extends SparkSpec {
 
   test("exact-dup pre-collapse keeps the cluster edge set linear under a 1000-copy group") {
     val docs  = graft.core.Tables(spark, hot).documents
-    val edges = graft.ext.Dedup.nearDupEdges(docs, 0.2).count()
+    val edges = graft.ext.Dedup.nearDupEdges(docs, 1, 5).count()
     // clique shape would be ≥ 1000·999/2 = 499500 intra-group pairs alone;
     // collapsed: 999 star edges + rep-level pairs over 4001 distinct texts
     assert(edges >= 999, s"star edges missing: $edges")
@@ -170,14 +170,14 @@ class StressSpec extends SparkSpec {
       dups.select(col("doc_id") + 1000 as "doc_id", col("text"), col("lang"), col("source"), col("n_chars"))
     )
     val got = graft.ext.Dedup
-      .nearDupClusters(corpus, 0.2)
+      .nearDupClusters(corpus, 1, 5)
       .collect()
       .map(r => r.getLong(0) -> r.getLong(1))
       .toMap
     // brute force: raw pairwise verified edges (quadratic on dup groups) —
     // the UNCOLLAPSED shape, which registered queries never run
     val rawPairs = graft.ext.Dedup
-      .nearDuplicatesUncollapsed(corpus, 0.2)
+      .nearDuplicatesUncollapsed(corpus, 1, 5)
       .select("d1", "d2")
       .collect()
       .map(r => (r.getLong(0), r.getLong(1)))
@@ -233,7 +233,7 @@ class StressSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getString(1))
       .toMap
     val want = graft.ext.Dedup
-      .nearDuplicatesUncollapsed(docs, 0.2)
+      .nearDuplicatesUncollapsed(docs, 1, 5)
       .select("d1", "d2", "jaccard")
       .collect()
       .flatMap { r =>
@@ -271,7 +271,7 @@ class StressSpec extends SparkSpec {
     val docs  = graft.core.Tables(spark, dupMixDir).documents
     val srcOf = docs.select("doc_id", "source").collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     val raw = graft.ext.Dedup
-      .nearDuplicatesUncollapsed(docs, 0.2)
+      .nearDuplicatesUncollapsed(docs, 1, 5)
       .select("d1", "d2", "jaccard")
       .collect()
     assert(
