@@ -929,11 +929,35 @@ object Dedup {
   }
 
   def nearDupClusters(docs: DataFrame, tNum: Long, tDen: Long, maxIters: Int = 10): DataFrame = {
-    val pairs = nearDupEdges(docs, tNum, tDen)
-    // both directions PLUS a self-loop per endpoint: min over (neighbors ∪
-    // self) IS the whole propagation step, so each iteration is ONE join +
-    // ONE min-aggregate (the earlier shape needed a second join to merge
-    // the node's own label back in, and a third to count changed rows).
+    val run = nearDupClusterRun(docs, tNum, tDen, maxIters)
+    // a cap hit before convergence means PARTIAL labels that disagree with
+    // the true components (and the oracle's recursive fixpoint) — fail
+    // loudly rather than return silently wrong clusters
+    require(
+      run.fixpoint,
+      s"nearDupClusters did not converge in $maxIters iterations — component diameter exceeds the cap"
+    )
+    run.last.frame.select(col("id").as("doc_id"), col("label").as("cluster_id")).orderBy("doc_id")
+  }
+
+  /** The (id, label) min-propagation rounds behind [[nearDupClusters]],
+    * run to the label-sum fixpoint ([[graft.core.Iterate]]). (Superstep
+    * batching — two propagation rounds per materialization to halve the
+    * barriers — was MEASURED and rejected: near-dup components are shallow
+    * (diameter 2-3), so the mandatory overshoot round costs more join work
+    * than the saved barrier: 4.3 s → 5.2 s at sf0.1.)
+    */
+  private[graft] def nearDupClusterRun(docs: DataFrame, tNum: Long, tDen: Long, maxIters: Int,
+      toFixpoint: Boolean = true): graft.core.Iterate.Run = {
+    val edges = clusterEdges(docs, tNum, tDen)
+    graft.core.Iterate(clusterSeed(edges), "label", maxIters, toFixpoint)(clusterStep(edges))
+  }
+
+  /** The directed (src, dst) propagation edges: both directions PLUS a
+    * self-loop per endpoint, so min over (neighbors ∪ self) IS the whole
+    * propagation step — each round is ONE join + ONE min-aggregate.
+    */
+  private[graft] def clusterEdges(docs: DataFrame, tNum: Long, tDen: Long): DataFrame = {
     // `min` is duplicate-insensitive, so the repeated self-loops need no
     // distinct pass. The 4 directed/self variants come from ONE explode
     // over the pair rows, NOT a 4-way union of `pairs` projections: union
@@ -942,7 +966,7 @@ object Dedup {
     // candidate join + Jaccard verify + star build) four times while this
     // cache materialized — measured 4x this form's build time at sf0.1.
     val edgesGrain = cached(
-      pairs
+      nearDupEdges(docs, tNum, tDen)
         .select(
           explode(
             array(
@@ -959,63 +983,28 @@ object Dedup {
     // large plans: planning time itself becomes the bottleneck"): the
     // cached edge frame still CARRIES the whole LSH+verify+star lineage
     // in its logical plan — the q_cluster_survivors formatted plan was
-    // 21k lines — and every loop iteration re-analyzes that tree twice
-    // (the stepped cache + the labelSum action). StageProbe r17: only
-    // ~0.8 s of q_cluster_survivors' 3.3 s was stage wall; the rest was
-    // the driver planning. The eager localCheckpoint reads the tiny
+    // 21k lines — and every loop round re-analyzes its inputs. StageProbe
+    // r17: only ~0.8 s of q_cluster_survivors' 3.3 s was stage wall; the
+    // rest was the driver planning. The truncation reads the tiny
     // pair-bounded grain out of the cache once and hands the loop a
     // constant-depth LogicalRDD; the cache itself stays keyed on the
     // logical plan, so the family sharing across queries is unchanged.
-    val edges = edgesGrain.localCheckpoint()
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(sum(col("label").cast(org.apache.spark.sql.types.DecimalType(38, 0))).as("s"))
-        .first()
-        .getDecimal(0) // null on an empty graph — the null==null compare below converges it
-    // Initialization IS the first propagation step: with self-loops in the
-    // edge set, min(dst) per src equals min(own id, neighbor ids) — so the
-    // groupBy that would otherwise seed labels with identity does one real
-    // iteration's work for free (one fewer distributed round per query).
-    var labels = cached(edges.groupBy(col("src").as("id")).agg(min("dst").as("label")))
-    // Convergence via the label-sum fixpoint: labels only ever DECREASE
-    // under min-propagation, so the (exact decimal — no int64 overflow at
-    // any corpus size) sum strictly decreases on every changing iteration
-    // and is stationary exactly at the fixpoint. One scalar action per
-    // iteration on the already-materialized frame, no compare join.
-    // (Superstep batching — two propagation rounds per materialization to
-    // halve the barriers — was MEASURED and rejected: near-dup components
-    // are shallow (diameter 2-3), so the mandatory overshoot round costs
-    // more join work than the saved barrier: 4.3 s → 5.2 s at sf0.1.
-    // It would win only on deep-chain graphs this operator never sees.)
-    var prevSum: Option[java.math.BigDecimal] = Some(labelSum(labels))
-    var prevCached: DataFrame                 = labels
-    var it                                    = 0
-    var converged                             = false
-    while (it < maxIters && !converged) {
-      val stepped = cached(
-        edges
-          .join(labels.select(col("id").as("dst"), col("label")), "dst")
-          .groupBy(col("src").as("id"))
-          .agg(min("label").as("label"))
-      )
-      val s = labelSum(stepped)
-      converged = prevSum.exists { p =>
-        if (p == null || s == null) p == s else p.compareTo(s) == 0
-      }
-      if (prevCached != null) prevCached.unpersist()
-      prevCached = stepped
-      labels = stepped
-      prevSum = Some(s)
-      it += 1
-    }
-    // a cap hit before convergence means PARTIAL labels that disagree with
-    // the true components (and the oracle's recursive fixpoint) — fail
-    // loudly rather than return silently wrong clusters
-    require(
-      converged,
-      s"nearDupClusters did not converge in $maxIters iterations — component diameter exceeds the cap"
-    )
-    labels.select(col("id").as("doc_id"), col("label").as("cluster_id")).orderBy("doc_id")
+    graft.core.Iterate.truncate(edgesGrain)
   }
+
+  /** Initialization IS the first propagation step: with self-loops in the
+    * edge set, min(dst) per src equals min(own id, neighbor ids). Measured
+    * like every later round, so the fixpoint rule compares round 1 with it.
+    */
+  private[graft] def clusterSeed(edges: DataFrame): graft.core.Iterate.Round =
+    graft.core.Iterate.measure(edges.groupBy(col("src").as("id")).agg(min("dst").as("label")), "label")
+
+  /** One min-propagation round (shape pinned in PlanGoldenSpec). */
+  private[graft] def clusterStep(edges: DataFrame)(r: graft.core.Iterate.Round): DataFrame =
+    edges
+      .join(r.side(r.frame.select(col("id").as("dst"), col("label"))), "dst")
+      .groupBy(col("src").as("id"))
+      .agg(min("label").as("label"))
 
   /** MinHash-estimator quality, AS a query: for every LSH candidate pair,
     * the sketch's Jaccard estimate (fraction of agreeing signature

@@ -1,8 +1,9 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Cached, Iterate, Tables, Width}
 
 /** Iterative graph analytics — the genre the MapReduce lineage is named
   * for (PageRank was THE canonical multi-job MapReduce workload; the
@@ -45,27 +46,20 @@ object GraphQueries {
   /** Power-iteration count (fixed — the oracle unrolls it). */
   val Iters = 5
 
+  /** Lineage-truncation cadence: every [[CheckpointEvery]] supersteps the
+    * rank frame is `localCheckpoint`ed (eager) — the [[graft.core.Iterate]]
+    * analyzer lesson, sparse, because each superstep reads its predecessor
+    * once. Never fires at the registered K=5, so the oracle-checked
+    * query's plan is byte-identical to the unchained form.
+    */
+  private val CheckpointEvery = 5
+
   /** The full (node, kind, rank_scaled) table after [[Iters]] supersteps —
     * exposed separately from the registered top-20 query so invariants
     * (mass conservation, node-set preservation) are testable on the whole
     * frame.
     */
-  /** Lineage-truncation cadence: every [[CheckpointEvery]] supersteps the
-    * rank frame is `localCheckpoint`ed (eager), so the analyzed plan stays
-    * O([[CheckpointEvery]]) deep no matter how large K grows — without it,
-    * K≫5 made ANALYSIS time itself super-linear (each step re-analyzes the
-    * whole chained lineage). Never fires at the registered K=5, so the
-    * oracle-checked query's plan is byte-identical to the unchained form.
-    * `localCheckpoint` trades fault-tolerance for speed (blocks are not
-    * replicated); a production run at K≫5 swaps in reliable
-    * `checkpoint()` against the cluster checkpoint dir — same call site.
-    */
-  private val CheckpointEvery = 5
-
-  def pagerankRanks(
-      s: org.apache.spark.sql.SparkSession,
-      dir: String,
-      iters: Int = Iters): org.apache.spark.sql.DataFrame = {
+  def pagerankRanks(s: SparkSession, dir: String, iters: Int = Iters): DataFrame = {
     val pairs = Tables(s, dir).lineitem
       .select(col("l_suppkey").as("sk"), col("l_partkey").as("pk"))
       .distinct()
@@ -88,8 +82,8 @@ object GraphQueries {
     // the outdeg window's ClusteredDistribution(src), so it REPLACES the
     // window's exchange rather than adding one; at 100 TB the formula
     // yields thousands of partitions.
-    val adj = graft.core.Cached.frame(
-      graft.core.Width
+    val adj = Cached.frame(
+      Width
         .grain(edges, col("src"))
         .withColumn(
           "outdeg",
@@ -102,7 +96,7 @@ object GraphQueries {
     // REFERENCE — StageProbe r16 counted six identical 32-task stage pairs
     // per run. Runtime exchange reuse does not collapse them across AQE
     // broadcast stages; the cache does.
-    val nN = graft.core.Cached.frame(nodes.agg(count(lit(1)).as("n")))
+    val nN = Cached.frame(nodes.agg(count(lit(1)).as("n")))
     var ranks = nodes
       .crossJoin(broadcast(nN))
       .select(col("node"), expr(s"${Scale}L div n").as("rank"))
@@ -177,35 +171,19 @@ object GraphQueries {
   }
 
   /** Label-propagation rounds for [[labelProp]] (fixed — the oracle
-    * unrolls them). Each round is neighbor-min THEN pointer-jump, so the
-    * compressed reach doubles per round (2¹⁰ ≥ any plausible component
-    * diameter at verify scales); plain neighbor-min alone needs
-    * diameter-many rounds, and the sf0.001 mutual-kNN graph already has
-    * diameter > 8. Convergence is asserted in GraphSpec.
+    * unrolls them). Each round is neighbor-min THEN pointer-jump. The jump
+    * shortens label chains but does not guarantee doubling reach per
+    * round, so K=10 is NOT a convergence bound: measured per-round Σlbl
+    * converges exactly at round 10 at sf0.001 (the scale GraphSpec checks),
+    * still falls at rounds 11 and 12 at sf0.01, and holds only from round
+    * 15 at sf0.1. The oracle replays the same fixed K, so the hash check
+    * is exact at every scale.
     */
   val LpIters = 10
 
-  /** Per-node community labels after `iters` rounds of hash-to-min-style
-    * propagation over the MUTUAL k-NN graph — each round takes the min
-    * label over self+neighbors, then pointer-jumps (every node adopts
-    * its current label's label, the path-compression step that makes
-    * convergence O(log n) rounds instead of O(diameter)). Exposed
-    * separately from the registered query so GraphSpec can assert
-    * convergence (one more round changes nothing on the fixture).
-    */
   /** The symmetrized mutual-edge frame one propagation run reads. */
-  private[graft] def lpSymEdges(
-      s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame =
-    // NOT src-repartitioned (round-17 negative result): a src-keyed sorted
-    // cache was built and measured — label prop 2.53→2.86 s, k-core
-    // 2.48→3.61 s, BFS 1.35→1.79 s at sf0.1/32c — because the per-round
-    // SMJs do not reuse the cached partitioning across the checkpoint
-    // boundary (each round's probe side is a LogicalRDD with unknown
-    // partitioning, so EnsureRequirements re-exchanges BOTH sides) and the
-    // extra exchange+sort at cache build is pure cost. Reverted; the plain
-    // cache stands.
-    graft.core.Cached.frame(
+  private[graft] def lpSymEdges(s: SparkSession, dir: String): DataFrame =
+    Cached.frame(
       graft.ext.Similarity
         .mutualKnnEdges(s, dir)
         .select(
@@ -219,45 +197,48 @@ object GraphQueries {
         .select(col("e.src").as("src"), col("e.dst").as("dst"))
     )
 
-  /** One neighbor-min + pointer-jump round — exposed un-checkpointed so
-    * PlanGoldenSpec pins the per-round shape (partial+final `min`
-    * aggregate, then the jump's self-equi-join) that every superstep
-    * re-executes; a lost map-side combine or a join-strategy flip here
-    * multiplies by K.
+  /** The cached (src, dst, w) grain every label-prop, k-core and BFS round
+    * reads: the [[lpSymEdges]] edges at w = 1 plus one w = 0 self-loop per
+    * embedding (the round's "self" term), `Width.grain`-partitioned on dst,
+    * the key every round aggregates on. With the measured state broadcast
+    * ([[graft.core.Iterate]]) a round scans it, hash-joins and aggregates
+    * with no exchange. (Round 17's src-partitioned cache lost because its
+    * merge joins re-exchanged both sides across every checkpoint.)
     */
-  private[graft] def lpRound(
-      sym: org.apache.spark.sql.DataFrame,
-      lbl: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val m = lbl
-      .unionByName(
-        sym.join(lbl, sym("src") === lbl("node")).select(col("dst").as("node"), col("lbl"))
+  private[graft] def loopEdges(s: SparkSession, dir: String): DataFrame =
+    Cached.frame(
+      Width.grain(
+        lpSymEdges(s, dir)
+          .select(col("src"), col("dst"), lit(1L).as("w"))
+          .unionByName(
+            Tables(s, dir).embeddings
+              .select(col("vec_id").as("src"), col("vec_id").as("dst"), lit(0L).as("w"))
+          ),
+        col("dst")
       )
-      .groupBy("node")
+    )
+
+  /** Identity labels over every embedding, off the grain's self-loops. */
+  private[graft] def lpSeed(edges: DataFrame): Iterate.Round =
+    Iterate.seed(edges.filter(col("w") === 0L).select(col("src").as("node"), col("dst").as("lbl")))
+
+  /** One neighbor-min + pointer-jump round (shape pinned in PlanGoldenSpec). */
+  private[graft] def lpStep(edges: DataFrame)(r: Iterate.Round): DataFrame = {
+    val m = edges
+      .join(r.side(r.frame), col("src") === col("node"))
+      .groupBy(col("dst").as("node"))
       .agg(min("lbl").as("lbl"))
-    // pointer jump: labels are node ids of the same component, so every
-    // label resolves against the (node, lbl) frame itself
+    // pointer jump: every label is a node id of m, which has exactly the
+    // state's rows (the node set is fixed), so the same gate applies
     m.as("p")
-      .join(m.as("q"), col("p.lbl") === col("q.node"))
+      .join(r.side(m.as("q")), col("p.lbl") === col("q.node"))
       .select(col("p.node").as("node"), col("q.lbl").as("lbl"))
   }
 
-  def labelPropLabels(
-      s: org.apache.spark.sql.SparkSession,
-      dir: String,
-      iters: Int = LpIters): org.apache.spark.sql.DataFrame = {
-    val sym = lpSymEdges(s, dir)
-    var lbl = Tables(s, dir).embeddings.select(col("vec_id").as("node"), col("vec_id").as("lbl"))
-    for (_ <- 0 until iters) {
-      // EVERY round truncates lineage (vs PageRank's sparse ladder): the
-      // round references its predecessor twice (self-union + neighbor
-      // push) and m twice (the jump's join sides), so the ANALYZED plan —
-      // not just the executed work; caching cannot help the analyzer —
-      // would grow 4^K without truncation (measured: 109 s at sf0.1 for
-      // K=10 vs sub-second truncated). The checkpoint is |V| rows per
-      // round — metadata-sized at any corpus scale.
-      lbl = lpRound(sym, lbl).localCheckpoint()
-    }
-    lbl
+  private[graft] def labelPropRun(s: SparkSession, dir: String, iters: Int = LpIters,
+      toFixpoint: Boolean = true): Iterate.Run = {
+    val edges = loopEdges(s, dir)
+    Iterate(lpSeed(edges), "lbl", iters, toFixpoint)(lpStep(edges))
   }
 
   /** Community detection by min-label propagation WITH pointer jumping
@@ -266,29 +247,24 @@ object GraphQueries {
     * graph-native complement to the k-means topic audit
     * (`q_topic_clusters`): communities emerge from the high-precision
     * mutual-neighbor relation itself, no centroid model. The output row
-    * is (vec_id, community) where `community` is the component's minimum
-    * vec_id once converged — asserted against a union-find replay in
-    * GraphSpec; the fixed-K-round semantics is what the oracle replays,
-    * so the hash check is exact either way.
+    * is (vec_id, community) after [[LpIters]] rounds. Where propagation
+    * has converged, `community` is the component's minimum vec_id
+    * (asserted against a union-find replay in GraphSpec at sf0.001); at
+    * larger scales K rounds stop short of that fixpoint (see [[LpIters]])
+    * and a node may carry a larger label of its own component. The oracle
+    * replays the same fixed K, so the hash check is exact either way.
     *
     * Scale shape: the [[graft.ext.Similarity.mutualKnnEdges]] grain is
-    * built once (cached, shared with `q_graph_triangles`) and symmetrized
-    * into a ≤ k·n edge frame; every round shuffles only the (node, lbl)
-    * frame — |V|-sized, with map-side `min` combine absorbing hub fan-in
-    * (the PageRank discipline) and one self-equi-join for the pointer
-    * jump; a PER-ROUND eager localCheckpoint keeps the analyzed plan
-    * constant-size (each round references its predecessor twice, so the
-    * tree would otherwise grow 4^K — an analyzer cost no cache can fix),
-    * and O(log n) rounds suffice at ANY corpus
-    * scale because the jump doubles compressed reach per round — the
-    * property that makes this the 100 TB connected-components algorithm
-    * rather than diameter-many neighbor rounds. Isolated vectors keep
-    * themselves as singleton communities by the identity seed union.
+    * built once (cached, shared with `q_graph_triangles`) into the ≤ k·n
+    * [[loopEdges]] frame; each [[graft.core.Iterate]] round joins the
+    * measured |V|-row (node, lbl) state onto it, takes a partial+final
+    * `min` per node and resolves one pointer jump. Isolated vectors keep
+    * themselves as singleton communities through their self-loop.
     */
   val labelProp: Q = Q(
     "q_label_prop",
     (s, dir) =>
-      labelPropLabels(s, dir)
+      labelPropRun(s, dir).last.frame
         .select(col("node").as("vec_id"), col("lbl").as("community"))
         .orderBy("vec_id"),
     Some(labelPropOracleSql(LpIters))
@@ -336,14 +312,12 @@ object GraphQueries {
        |$steps""".stripMargin
   }
 
-  /** Peel rounds for the k-core decomposition. A bulk peel needs
-    * "peeling depth" rounds to reach the fixpoint, and a dangling path
-    * peels one node per round — so the depth is data-dependent (measured:
-    * 8 rounds at sf0.01, 11 at sf0.1). 16 covers the fixtures with margin
-    * (fixpoint asserted in GraphSpec); production chains fixed-pass jobs
-    * until `alive` stops shrinking — the multi-job iteration the engine's
-    * FIFO queue exists for — so the per-round lineage truncation here IS
-    * the production shape, just driven to convergence.
+  /** Peel rounds for the k-core decomposition. A dangling path peels one
+    * node per round, so the peeling depth is data-dependent; 16 covers the
+    * fixtures with margin (fixpoint asserted in GraphSpec), and
+    * [[graft.core.Iterate]] stops once a round repeats its predecessor —
+    * after round 10 at sf0.01 and 13 at sf0.1. That is the production
+    * shape: chain fixed-pass jobs until `alive` stops shrinking.
     */
   val KcoreRounds = 16
 
@@ -355,40 +329,34 @@ object GraphQueries {
     */
   val KcoreK = 2
 
-  /** Final-round induced degrees after `rounds` peels — exposed separately
-    * so GraphSpec can assert the fixpoint (one more round changes
-    * nothing).
+  /** Peel round 1, (v, deg): every node starts alive, so its full degree. */
+  private[graft] def kcoreSeed(edges: DataFrame): Iterate.Round =
+    Iterate.seed(edges.groupBy(col("dst").as("v")).agg(count(lit(1)).as("deg")))
+
+  /** One peel round: each node's degree within the subgraph induced by the
+    * previous round's alive set (deg ≥ [[KcoreK]]) — two key joins against
+    * the broadcast alive frame, then a partial+final count by dst (the
+    * count by src, as the edge set is symmetric). Shape pinned in
+    * PlanGoldenSpec.
     */
-  private[graft] def kcoreDegrees(
-      s: org.apache.spark.sql.SparkSession,
-      dir: String,
-      rounds: Int): org.apache.spark.sql.DataFrame = {
-    val sym   = lpSymEdges(s, dir)
-    var alive = sym.select(col("src").as("v")).distinct()
-    var deg   = alive.select(col("v").as("src"), lit(0L).as("deg"))
-    for (_ <- 1 to rounds) {
-      // degree within the subgraph induced by the current alive set: two
-      // key joins against the (distinct) alive frame, then a partial+final
-      // count. The per-round eager localCheckpoint is the labelProp
-      // discipline — alive is derived from deg, which references the
-      // previous alive twice, so the analyzed plan would grow 2^K without
-      // truncation; the checkpoint is |alive| rows per round.
-      // (Round-17 negative result, kept as the original shape: counting by
-      // dst — legal by the symmetry of sym and of the alive predicate — to
-      // reuse the second join's exchange was built and MEASURED WORSE,
-      // 2.48 → 3.7 s at sf0.1/32c: the eliminated aggregate exchange was
-      // also the AQE coalesce point, so the per-round checkpoint kept the
-      // join's width and every later round paid more tasks than the
-      // exchange cost.)
-      deg = sym
-        .join(alive.withColumnRenamed("v", "src"), "src")
-        .join(alive.withColumnRenamed("v", "dst"), "dst")
-        .groupBy("src")
-        .agg(count(lit(1)).as("deg"))
-        .localCheckpoint()
-      alive = deg.filter(col("deg") >= KcoreK).select(col("src").as("v"))
-    }
-    deg
+  private[graft] def kcoreStep(edges: DataFrame)(r: Iterate.Round): DataFrame = {
+    val alive = r.side(r.frame.filter(col("deg") >= KcoreK).select("v"))
+    edges
+      .join(alive.as("a"), col("src") === col("a.v"))
+      .join(alive.as("b"), col("dst") === col("b.v"))
+      .groupBy(col("dst").as("v"))
+      .agg(count(lit(1)).as("deg"))
+  }
+
+  /** The undirected mutual edges of [[loopEdges]], self-loops dropped. */
+  private[graft] def kcoreEdges(s: SparkSession, dir: String): DataFrame =
+    loopEdges(s, dir).filter(col("w") === 1L)
+
+  /** The peel's (v, deg) frames, round 1 (the seed) through `rounds`. */
+  private[graft] def kcoreRun(s: SparkSession, dir: String, rounds: Int = KcoreRounds,
+      toFixpoint: Boolean = true): Iterate.Run = {
+    val edges = kcoreEdges(s, dir)
+    Iterate(kcoreSeed(edges), "deg", rounds - 1, toFixpoint)(kcoreStep(edges))
   }
 
   /** k-core decomposition (Seidman 1983) of the mutual k-NN graph by the
@@ -401,20 +369,18 @@ object GraphQueries {
     * these regions, while hub-free sparse nodes (peeled early) are the
     * unique long-tail documents a curation pass protects.
     *
-    * Scale shape: the [[lpSymEdges]] frame is the cached ≤ 2k·n mutual
-    * edge grain shared with `q_label_prop`; each round is two hash joins
-    * against the |alive| node frame plus one partial+final count — never
-    * an all-pairs structure — and the per-round localCheckpoint keeps the
-    * analyzed plan constant-size (the labelProp 4^K lesson). Rounds are
-    * fixed at [[KcoreRounds]] so the oracle can unroll; GraphSpec asserts
-    * the fixture reaches its fixpoint within them.
+    * Scale shape: each [[graft.core.Iterate]] round is two hash joins of
+    * the cached ≤ 2k·n [[loopEdges]] grain (shared with `q_label_prop`)
+    * against the measured |alive| node frame plus one partial+final count.
+    * Rounds are capped at [[KcoreRounds]] so the oracle can unroll;
+    * GraphSpec asserts the fixture reaches its fixpoint within them.
     */
   val kcore: Q = Q(
     "q_kcore",
     (s, dir) =>
-      kcoreDegrees(s, dir, KcoreRounds)
+      kcoreRun(s, dir).last.frame
         .filter(col("deg") >= KcoreK)
-        .select(col("src").as("vec_id"), col("deg").as("degree"))
+        .select(col("v").as("vec_id"), col("deg").as("degree"))
         .orderBy("vec_id"),
     Some(kcoreOracleSql(KcoreRounds))
   )
@@ -452,39 +418,26 @@ object GraphQueries {
     * run-to-convergence: a bounded-radius neighborhood is itself the
     * product (how far does influence from the seed set propagate through
     * the near-neighbor graph), and a fixed K is what an unrolled-CTE
-    * oracle can replay. GraphSpec separately drives the same lineage to a
-    * fixpoint and checks it against a driver-side BFS.
+    * oracle can replay. [[graft.core.Iterate]] stops earlier only when a
+    * round changes nothing, which leaves the K-round table unchanged.
     */
   val BfsRounds = 8
 
-  /** Hop distances after `rounds` min-plus relaxations from the seed set —
-    * exposed separately from the registered query for GraphSpec's
-    * convergence/replay assertions.
+  /** One min-plus relaxation: dist'(v) = min over the in-edges (u, v, w)
+    * of [[loopEdges]] of dist(u) + w (the w = 0 self-loop is dist(v)).
     */
-  private[graft] def bfsHops(
-      s: org.apache.spark.sql.SparkSession,
-      dir: String,
-      rounds: Int): org.apache.spark.sql.DataFrame = {
-    val sym = lpSymEdges(s, dir)
-    var dist = Tables(s, dir).embeddings
-      .filter(col("label") === 0)
-      .select(col("vec_id").as("node"), lit(0L).as("hops"))
-    for (_ <- 0 until rounds) {
-      // min-plus relaxation: dist'(v) = min(dist(v), 1 + min over in-
-      // neighbors u of dist(u)). References dist twice (self-union +
-      // neighbor push), so the per-round eager localCheckpoint is the
-      // labelProp 4^K discipline; the checkpoint is ≤ |V| rows.
-      dist = dist
-        .unionByName(
-          sym
-            .join(dist, sym("src") === dist("node"))
-            .select(col("dst").as("node"), (col("hops") + 1).as("hops"))
-        )
-        .groupBy("node")
-        .agg(min("hops").as("hops"))
-        .localCheckpoint()
-    }
-    dist
+  private[graft] def bfsStep(edges: DataFrame)(r: Iterate.Round): DataFrame =
+    edges
+      .join(r.side(r.frame), col("src") === col("node"))
+      .groupBy(col("dst").as("node"))
+      .agg(min(col("hops") + col("w")).as("hops"))
+
+  /** Hop distances after `rounds` relaxations from the label-0 seed set. */
+  private[graft] def bfsRun(s: SparkSession, dir: String, rounds: Int = BfsRounds,
+      toFixpoint: Boolean = true): Iterate.Run = {
+    val seeds = Tables(s, dir).embeddings.filter(col("label") === 0)
+    val seed  = Iterate.seed(seeds.select(col("vec_id").as("node"), lit(0L).as("hops")))
+    Iterate(seed, "hops", rounds, toFixpoint)(bfsStep(loopEdges(s, dir)))
   }
 
   /** Multi-source BFS (bounded-radius min-plus / Bellman–Ford relaxation,
@@ -496,11 +449,10 @@ object GraphQueries {
     * — documents 1–2 hops from curated data are expansion candidates,
     * unreached nodes are semantically disconnected from it.
     *
-    * Scale shape: the cached [[lpSymEdges]] grain (shared with
-    * `q_label_prop`/`q_kcore`) is the only edge structure; each round
-    * shuffles the (node, hops) frame — ≤ |V| rows, map-side `min` combine
-    * absorbing hub fan-in — plus one hash join against the ≤ 2k·n edge
-    * frame; per-round lineage truncation keeps analysis O(1) per round. A
+    * Scale shape: each [[graft.core.Iterate]] round joins the measured
+    * ≤ |V|-row (node, hops) state onto the cached [[loopEdges]] grain
+    * (shared with `q_label_prop`/`q_kcore`) and takes a partial+final
+    * `min` per node. A
     * frontier-delta variant (propagate only changed nodes) halves traffic
     * on late rounds but changes no semantics; at the fixture diameters the
     * dense relaxation is already sub-second. Unreached nodes carry no row
@@ -509,7 +461,7 @@ object GraphQueries {
   val bfs: Q = Q(
     "q_bfs_hops",
     (s, dir) =>
-      bfsHops(s, dir, BfsRounds)
+      bfsRun(s, dir).last.frame
         .select(col("node").as("vec_id"), col("hops"))
         .orderBy("vec_id"),
     Some(bfsOracleSql(BfsRounds))
@@ -625,14 +577,41 @@ object GraphQueries {
     */
   val HitsScale = 1000000000L
 
-  /** Per-half-step score-frame broadcast cutoff (guide §3.1): at or below
-    * this many nodes the |V|-sized score frame broadcasts (~16 MB framed at
-    * the cutoff — bounded driver/executor cost) and the cached |E| grain is
-    * never exchanged; above it the half-step falls back to a merge SMJ,
-    * since a corpus-scale node set cannot broadcast. Decided per side from
-    * node counts measured once at construction.
+  /** The cached distinct supplier→part edge set. */
+  private[graft] def hitsEdges(s: SparkSession, dir: String): DataFrame =
+    Cached.frame(
+      Tables(s, dir).lineitem
+        .select(col("l_suppkey").as("s"), col("l_partkey").as("p"))
+        .distinct()
+    )
+
+  /** The uniform seed as a raw frame, raw 1 per supplier and Σraw = |S|
+    * (its memoized row count), so the first normalization raw · SCALE div
+    * Σraw is exactly h0 = SCALE div |S|.
     */
-  val HitsBroadcastNodes = 1000000L
+  private[graft] def hitsSeed(e: DataFrame): Iterate.Round = {
+    val h0 = Iterate.seed(e.select(col("s").as("n")).distinct().withColumn("raw", lit(1L)))
+    h0.copy(sum = java.math.BigDecimal.valueOf(h0.rows))
+  }
+
+  /** The round's raw frame normalized to total mass [[HitsScale]] by its
+    * folded Σraw, as (`key`, v).
+    */
+  private def hitsScores(r: Iterate.Round, key: String): DataFrame =
+    r.frame.select(col("n").as(key), expr(s"raw * ${HitsScale}L div ${r.sum.longValueExact}L").as("v"))
+
+  /** One HITS half-step: even rounds hold hub raw scores and push them to
+    * authorities, odd rounds the reverse, each onto the edge grain
+    * partitioned on the side it sums onto. Shape pinned in PlanGoldenSpec.
+    */
+  private[graft] def hitsStep(e: DataFrame): Iterate.Round => DataFrame = {
+    val bySup  = Cached.frame(Width.grain(e, col("s")))
+    val byPart = Cached.frame(Width.grain(e, col("p")))
+    r => {
+      val (edges, key, out) = if (r.index % 2 == 0) (byPart, "s", "p") else (bySup, "p", "s")
+      edges.join(r.side(hitsScores(r, key)), key).groupBy(col(out).as("n")).agg(sum("v").as("raw"))
+    }
+  }
 
   /** HITS hubs-and-authorities (Kleinberg 1999) over the DIRECTED
     * supplier→part relation observed in lineitem — the second classic
@@ -646,117 +625,33 @@ object GraphQueries {
     * square root; L1 is the standard integer-exact substitute and keeps
     * the same fixpoint direction).
     *
-    * Scale shape: the distinct edge set builds once and is cached; each
-    * half-step attaches the |V|-sized score frame to it by a MEASURED
-    * size decision (§3.1 "pick the join strategy deliberately"): below
-    * [[HitsBroadcastNodes]] nodes the score frame broadcasts — the cached
-    * edge grain is then never exchanged at all, the cheapest possible
-    * half-step — and above it the join falls back to a merge SMJ (a
-    * billion-node score frame cannot broadcast). The two node counts come
-    * from ONE bounded driver read at construction, which also folds the
-    * h0 seed divisor in as a literal. Each half-step ends in one
-    * partial+final sum onto the |V| grain, and the
-    * normalizer is a 1-row aggregate broadcast back via
-    * `crossJoin(broadcast(...))` — the house keyless-window replacement,
-    * here exercised PER SUPERSTEP. Each normalized frame references its
-    * raw frame TWICE (once directly, once inside the total), so the plan
-    * would quadruple per round (4^K — the labelProp analyzer lesson, and
-    * measured here: the un-checkpointed K=4 lineage hung analysis); the
-    * per-half-step eager `localCheckpoint` on the ≤|V|-row raw grain
-    * truncates it. Top-20 per side is two TakeOrderedAndProject heaps
-    * under a total (score, node) order.
+    * Scale shape: the distinct edge set is cached once per side it sums
+    * onto; the 2K half-steps run through [[graft.core.Iterate]] with no
+    * fixpoint exit (the normalized power iteration has no monotone order).
+    * Each half-step's Σraw is the probe its own checkpoint job folds in,
+    * so the normalizer costs no job and enters the next half-step as a
+    * literal. Top-20 per side is two TakeOrderedAndProject heaps under a
+    * total (score, node) order.
     */
-  /** The cached distinct supplier→part edge set plus its two node counts
-    * (ONE bounded driver read) — shared by the registered query and the
-    * plan-golden pin on the half-step shape.
-    */
-  private[graft] def hitsEdges(
-      s: org.apache.spark.sql.SparkSession,
-      dir: String): (org.apache.spark.sql.DataFrame, Long, Long) = {
-    val e = graft.core.Cached.frame(
-      Tables(s, dir).lineitem
-        .select(col("l_suppkey").as("s"), col("l_partkey").as("p"))
-        .distinct()
-    )
-    val cnts = e.agg(countDistinct("s").as("ns"), countDistinct("p").as("np")).first()
-    (e, cnts.getLong(0), cnts.getLong(1))
-  }
-
-  /** The uniform seed frame: h0(s) = SCALE div |S| with the divisor folded
-    * in as a literal from the one bounded driver read (same
-    * 1-row-through-the-driver footprint as the previous
-    * crossJoin(broadcast(agg)) at any scale, minus its plan machinery).
-    */
-  private[graft] def hitsSeed(
-      e: org.apache.spark.sql.DataFrame,
-      nSup: Long): org.apache.spark.sql.DataFrame =
-    e.select("s").distinct().select(col("s"), lit(HitsScale / nSup).as("v"))
-
-  /** One HITS half-step push (pre-checkpoint, pre-normalize): attach the
-    * |V|-sized score frame to the cached edge grain and partial+final sum
-    * onto the opposite node set. Join strategy is a MEASURED size decision
-    * (guide §3.1): StageProbe r17 caught the previous merge shape
-    * re-exchanging the cached |E| frame in EVERY half-step's job (the
-    * score side is a checkpoint LogicalRDD whose partitioning/size
-    * Catalyst cannot see, so the SMJ re-shuffled both sides); broadcasting
-    * the measured-small score frame leaves the edge grain entirely
-    * unshuffled per half-step, and past [[HitsBroadcastNodes]] the merge
-    * SMJ stands. Pinned in PlanGoldenSpec.
-    */
-  private[graft] def hitsPush(
-      e: org.apache.spark.sql.DataFrame,
-      scores: org.apache.spark.sql.DataFrame,
-      key: String,
-      nNodes: Long,
-      outKey: String): org.apache.spark.sql.DataFrame = {
-    val joined =
-      if (nNodes <= HitsBroadcastNodes) e.join(broadcast(scores), key)
-      else e.hint("merge").join(scores, key)
-    joined.groupBy(outKey).agg(sum("v").as("raw"))
-  }
-
   val hits: Q = Q(
     "q_hits",
     (s, dir) => {
-      val (e, nSup, nPart) = hitsEdges(s, dir)
+      val e    = hitsEdges(s, dir)
+      val seed = hitsSeed(e)
       // an empty edge set has no hubs or authorities, and neither the
       // seed's SCALE div |S| nor a round's Σraw normalizer is defined on it
-      if (nSup == 0L)
+      if (seed.rows == 0L)
         e.select(lit("hub").as("side"), col("s").as("node"), lit(0L).as("score"))
       else {
-        def push(
-            scores: org.apache.spark.sql.DataFrame,
-            key: String,
-            nNodes: Long,
-            outKey: String): org.apache.spark.sql.DataFrame =
-          hitsPush(e, scores, key, nNodes, outKey).localCheckpoint()
-        var h = hitsSeed(e, nSup)
-        var a: org.apache.spark.sql.DataFrame = null
-        // per-half-step normalizer: the raw frame is ALREADY materialized by
-        // the eager localCheckpoint, so the global total is one bounded
-        // driver row read straight off the checkpoint (`first()`), folded
-        // into the plan as a literal — where the previous
-        // crossJoin(broadcast(agg)) shape re-planned an aggregate + a
-        // broadcast exchange + a BNLJ per half-step (measured r16: 8 extra
-        // AQE stage pairs, ~100-150 ms each, on identical values). Same
-        // 1-row-through-the-driver footprint as the broadcast at any scale.
-        def tot(raw: org.apache.spark.sql.DataFrame): Long =
-          raw.agg(sum("raw").as("tot")).first().getLong(0)
-        for (_ <- 1 to HitsIters) {
-          val rawA = push(h, "s", nSup, "p")
-          a = rawA.select(col("p"), expr(s"raw * ${HitsScale}L div ${tot(rawA)}L").as("v"))
-          val rawH = push(a, "p", nPart, "s")
-          h = rawH.select(col("s"), expr(s"raw * ${HitsScale}L div ${tot(rawH)}L").as("v"))
-        }
-        val hubs = h
-          .select(lit("hub").as("side"), col("s").as("node"), col("v").as("score"))
-          .orderBy(col("score").desc, col("node"))
-          .limit(20)
-        val auths = a
-          .select(lit("auth").as("side"), col("p").as("node"), col("v").as("score"))
-          .orderBy(col("score").desc, col("node"))
-          .limit(20)
-        hubs.unionByName(auths).orderBy(col("side"), col("score").desc, col("node"))
+        val run = Iterate(seed, "raw", 2 * HitsIters, toFixpoint = false)(hitsStep(e))
+        def top(r: Iterate.Round, side: String) =
+          hitsScores(r, "node")
+            .select(lit(side).as("side"), col("node"), col("v").as("score"))
+            .orderBy(col("score").desc, col("node"))
+            .limit(20)
+        top(run.last, "hub")
+          .unionByName(top(run.rounds(2 * HitsIters - 1), "auth"))
+          .orderBy(col("side"), col("score").desc, col("node"))
       }
     },
     Some(hitsOracleSql(HitsIters))
@@ -887,7 +782,7 @@ object GraphQueries {
     * undirected edges, cut edges, and conductance cut/vol in ppm
     * (vol = directed edge endpoints in members = 2·internal + cut). Near-0
     * ⇒ the centroid partition respects the neighbor structure; high ⇒ the
-    * cluster is a centroid artifact. NOT run on the [[labelPropLabels]]
+    * cluster is a centroid artifact. NOT run on the [[labelProp]]
     * components — a converged component has zero cut edges by definition,
     * so that audit is vacuous; the independently-derived centroid
     * partition is the one whose boundary quality is in question.
@@ -906,7 +801,7 @@ object GraphQueries {
   val conductance: Q = Q(
     "q_conductance",
     (s, dir) => {
-      val asg = graft.core.Cached.frame(
+      val asg = Cached.frame(
         s.read
           .parquet(graft.ext.Ivf.indexFor(s, dir).path)
           .select(col("vec_id"), col("cid").cast("int").as("cid"))

@@ -152,6 +152,29 @@ class CoverageSpec extends AnyFunSuite {
     assert(code.exists(_._1 == "core/Width.scala"), "is the working directory the repo root?")
   }
 
+  /** Loop rounds have one owner, [[graft.core.Iterate]]: a hand-rolled
+    * `localCheckpoint` loop re-grows its own probe jobs, stop rule and
+    * join-strategy choice. Each other site that may checkpoint is named
+    * here with its reason; comments are ignored.
+    */
+  test("src/main calls localCheckpoint only in core/Iterate and the two named ladders") {
+    val allowed = Map(
+      "core/Iterate.scala" -> "the loop's per-round materialization",
+      // lazy or sparse lineage ladders, not per-round materializations
+      "queries/TextQueries.scala" -> "the BPE trainer's lazy per-merge ladder",
+      "queries/Graph.scala"       -> "q_pagerank's every-5-supersteps ladder"
+    )
+    val code  = codeSites(_.contains("localCheckpoint("))
+    val stray = code.filterNot { case (path, _) => allowed.contains(path) }
+    assert(
+      stray.isEmpty,
+      s"localCheckpoint at ${stray.mkString(", ")}; allowed only in " +
+        allowed.map { case (path, why) => s"$path ($why)" }.mkString("; "))
+    assert(code.count(_._1 == "queries/TextQueries.scala") == 2, s"TextQueries sites: $code")
+    assert(code.count(_._1 == "queries/Graph.scala") == 1, s"Graph sites: $code")
+    assert(code.exists(_._1 == "core/Iterate.scala"), "is the working directory the repo root?")
+  }
+
   /** The exact-Jaccard hash tier has one owner, [[graft.ext.SetSim]]: the
     * intra-doc collision marker `hok`, the hash-array intersect, their
     * bounds and the verify's join order are written once, so the

@@ -58,12 +58,12 @@ class PlanGoldenSpec extends SparkSpec {
     // bootstrap_ci's Width.compute exchange on the 32× md5 fan-out
     "q_pagerank",
     "q_bootstrap_ci",
-    // round 17: the HITS half-step push — the registered query's final
-    // frame is checkpoint-truncated, so this BuildPlans entry pins the
-    // plan every half-step executes: score-frame BroadcastHashJoin with
-    // ZERO exchange on the cached edge side (a flip back to the
-    // both-sides-reshuffled SMJ must show as a diff)
+    // the loop rounds core/Iterate runs (BuildPlans below): the HITS
+    // half-step and the k-core peel, each a broadcast state joined onto a
+    // cached edge grain with ZERO exchange on the edge side (a flip back
+    // to a both-sides-reshuffled SMJ must show as a diff)
     "q_hits",
+    "q_kcore",
     // the shuffle-free in-row repetition folds (a token-grain exchange
     // coming back shows as a diff) and q_cooccur's double-cache SMJ (a
     // reappearing self-join Exchange shows as a diff)
@@ -154,27 +154,26 @@ class PlanGoldenSpec extends SparkSpec {
     Map(
       "q_knn_join" -> ((s, dir) =>
         graft.ext.Similarity.knnJoin(graft.core.Tables(s, dir).embeddings, graft.ext.Similarity.KnnK)),
-      // the registered query's final frame is checkpoint-truncated (an RDD
-      // scan); the plan that matters is the ONE ROUND every superstep
-      // re-executes
+      // the registered loop queries' final frames are checkpoint-truncated
+      // (an RDD scan); the plan that matters is the ONE ROUND core/Iterate
+      // materializes per superstep, pinned here as the first round off the
+      // seed: the broadcast state joined onto the cached edge grain
       "q_label_prop" -> ((s, dir) => {
-        import org.apache.spark.sql.functions.col
-        graft.queries.GraphQueries.lpRound(
-          graft.queries.GraphQueries.lpSymEdges(s, dir),
-          graft.core.Tables(s, dir).embeddings
-            .select(col("vec_id").as("node"), col("vec_id").as("lbl"))
-        )
+        val edges = graft.queries.GraphQueries.loopEdges(s, dir)
+        graft.queries.GraphQueries.lpStep(edges)(graft.queries.GraphQueries.lpSeed(edges))
       }),
-      // the registered query's frames are checkpoint-truncated; the plan
-      // that matters is the half-step push every iteration re-executes
+      "q_kcore" -> ((s, dir) => {
+        val edges = graft.queries.GraphQueries.kcoreEdges(s, dir)
+        graft.queries.GraphQueries.kcoreStep(edges)(graft.queries.GraphQueries.kcoreSeed(edges))
+      }),
       "q_hits" -> ((s, dir) => {
-        val (e, nSup, _) = graft.queries.GraphQueries.hitsEdges(s, dir)
-        graft.queries.GraphQueries.hitsPush(
-          e,
-          graft.queries.GraphQueries.hitsSeed(e, nSup),
-          "s",
-          nSup,
-          "p")
+        val e = graft.queries.GraphQueries.hitsEdges(s, dir)
+        graft.queries.GraphQueries.hitsStep(e)(graft.queries.GraphQueries.hitsSeed(e))
+      }),
+      // the near-dup fixpoint's propagation round off its measured seed
+      "q_dedup_clusters" -> ((s, dir) => {
+        val edges = graft.ext.Dedup.clusterEdges(graft.core.Tables(s, dir).documents, 1, 5)
+        graft.ext.Dedup.clusterStep(edges)(graft.ext.Dedup.clusterSeed(edges))
       })
     )
 

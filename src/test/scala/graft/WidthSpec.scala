@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{Repartition, RepartitionByExpression}
 import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
@@ -24,37 +23,6 @@ class WidthSpec extends SparkSpec {
 
   private def hasRoundRobin(df: DataFrame): Boolean =
     df.queryExecution.sparkPlan.toString.contains("RoundRobinPartitioning")
-
-  /** Spark jobs started on this thread while `body` runs. A marker job
-    * after `body` flushes the listener queue: events arrive in order, so
-    * once the marker's start is seen every earlier start has been too.
-    */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc     = spark.sparkContext
-    val probe  = s"width-probe-${System.nanoTime()}"
-    val marker = s"$probe-marker"
-    val jobs   = new java.util.concurrent.atomic.AtomicInteger(0)
-    val seen   = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        Option(js.properties).map(_.getProperty("spark.jobGroup.id")).foreach { g =>
-          if (g == probe) jobs.incrementAndGet(): Unit
-          else if (g == marker) seen.countDown()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(probe, "jobs started by Width")
-      val out =
-        try body
-        finally sc.clearJobGroup()
-      sc.setJobGroup(marker, "listener flush")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.clearJobGroup()
-      assert(seen.await(30, java.util.concurrent.TimeUnit.SECONDS), "marker job start never arrived")
-      (out, jobs.get())
-    } finally sc.removeSparkListener(listener)
-  }
 
   test("identity on a multi-split file scan") {
     val df  = parquet("width-multi", 10000, spark.sparkContext.defaultParallelism)
