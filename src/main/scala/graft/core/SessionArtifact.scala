@@ -4,7 +4,8 @@ package graft.core
   * IVF-index / z-order-layout / base-MV / k-NN-graph shape: a build that
   * production schedules as its own job, materialized once per (JVM,
   * fixture dir) under tmpdir and read by every consuming query in the
-  * session.
+  * session. Query scratch uses the same paths and memo, keyed on a plan
+  * hash instead of a fixture dir (q_contamination's salted expansion).
   *
   * Centralized because the idiom had already drifted four ways: each
   * builder hand-rolled the md5 tag, the pid-scoped path, the FutureTask
@@ -68,5 +69,21 @@ object SessionArtifact {
         cache.remove(key, task)
         throw Option(e.getCause).getOrElse(e)
     }
+  }
+
+  /** Fail fast when the scratch volume cannot hold `needBytes`: a caller
+    * whose estimate already knows an artifact's footprint reports it
+    * instead of running into ENOSPC mid-write. Conservative on purpose —
+    * shuffle scratch and the written parquet share this volume on a single
+    * node.
+    */
+  def ensureFreeSpace(needBytes: Long, context: String): Unit = {
+    val root = new java.io.File(System.getProperty("java.io.tmpdir"))
+    val free = root.getUsableSpace
+    require(
+      needBytes <= 0 || free >= needBytes,
+      s"$context needs ~$needBytes B of scratch but ${root.getAbsolutePath} has only " +
+        s"$free B free — free disk or point java.io.tmpdir at a larger volume"
+    )
   }
 }

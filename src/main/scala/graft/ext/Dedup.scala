@@ -117,28 +117,6 @@ object Dedup {
   def signatures(docs: DataFrame): DataFrame =
     cached(signaturesFromSets(shingleSets(docs)))
 
-  /** Shuffle-free signature computation: same VALUES as [[signatures]]
-    * (asserted in ExtSpec) but per-row — no explode, no groupBy exchange.
-    * The md5 runs inside HOF lambdas (CodegenFallback, interpreted), which
-    * measured ~1.7x SLOWER than the codegen'd explode+groupBy path at
-    * sf0.1 — so the BATCH queries keep [[signatures]]. This variant exists
-    * for STREAMING ingest: a streaming source cannot run the stateful
-    * explode+groupBy without watermark-managed aggregation state, while a
-    * per-row projection is stateless per micro-batch. Empty-shingle docs
-    * yield null mins, matching explode_outer + min.
-    */
-  def signaturesNarrow(docs: DataFrame): DataFrame = {
-    val withHashes = docs.select(
-      col("doc_id"),
-      transform(shingles3(tokens(col("text"))), x => baseHash(x)).as("hs")
-    )
-    val mins = (0 until K).map { i =>
-      when(size(col("hs")) > 0, array_min(transform(col("hs"), h => (h * A(i) + B(i)) % P)))
-        .as(s"mh$i")
-    }
-    withHashes.select(col("doc_id") +: mins: _*)
-  }
-
   /** (doc_id, band_id, band_val): 4 bands of 2 signature rows each. Docs
     * with null signatures (no shingles) are excluded — an empty doc is not
     * a near-dup candidate of other empty docs by shingle definition.
@@ -253,28 +231,6 @@ object Dedup {
           col("a.doc_id") < col("b.doc_id")
       )
       .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-
-  /** Band-bucket occupancy histogram over the (collapsed-grain) band
-    * table — the telemetry the 100× gates record (round 13): one row per
-    * log₂ occupancy class with the bucket count, the total within-bucket
-    * pair enumeration Σ n·(n−1)/2 that class feeds the candidate join, and
-    * the class max. The enumeration column is the quantitative form of
-    * "band saturation": on a fixed synthetic vocabulary it rises
-    * superlinearly with corpus size, and this histogram pins the growth to
-    * occupancy instead of arguing it.
-    */
-  def bandOccupancy(docs: DataFrame): DataFrame =
-    bands(repSignatures(docs))
-      .groupBy("band_id", "band_val")
-      .agg(count(lit(1)).as("n"))
-      .select(floor(log(2.0, col("n"))).cast("int").as("log2_occupancy"), col("n"))
-      .groupBy("log2_occupancy")
-      .agg(
-        count(lit(1)).as("buckets"),
-        expr("sum(n * (n - 1)) div 2").as("enum_pairs"),
-        max(col("n")).as("max_occupancy")
-      )
-      .orderBy("log2_occupancy")
 
   /** Saturation threshold for the ngram verify's bucket re-route: buckets
     * with more members than this route their enumeration through the exact
@@ -507,72 +463,6 @@ object Dedup {
       .select(col("new_id"), col("seen_id").as("dup_of"), col("jaccard"))
   }
 
-  /** STREAMING ingest gate: [[incrementalNearDups]] as a continuously
-    * running pipeline — `newDocs` is a STREAMING DataFrame of documents,
-    * `seen` the static accepted corpus. Every stage is stateless per
-    * micro-batch, so the query runs in append mode with NO state store:
-    * per-row [[signaturesNarrow]] + band explode on the stream, then two
-    * stream-static joins (band index, then shingle sets — re-planned per
-    * batch), then the exact-Jaccard filter.
-    *
-    * The static side carries NO broadcast hint on purpose: the accepted
-    * corpus grows without bound in an ingest-gate deployment, and a forced
-    * broadcast (which overrides autoBroadcastJoinThreshold) would
-    * eventually OOM the driver. The planner broadcasts while `seen` is
-    * small and falls back to a shuffled join when it is not; at production
-    * scale the seen band table is a materialized bucketed index (the
-    * [[incrementalNearDups]] scale story) and only the per-batch stream
-    * side stays small.
-    *
-    * Emits one row per (new_id, dup_of, jaccard) per MATCHING BAND — the
-    * per-pair dedup that batch mode does with `distinct()` would be a
-    * stateful stream aggregation, so it is deliberately left to the
-    * consumer (an idempotent sink keyed on the pair, or a per-batch
-    * `dropDuplicates` inside foreachBatch).
-    *
-    * SCALE INVARIANT: `seen` must be the ACCEPTED corpus — i.e. already
-    * deduplicated, which an ingest-gate deployment guarantees by
-    * construction (a doc flagged here never joins `seen`). That is what
-    * bounds the fan-out: a new doc matches at most a handful of unique
-    * near-dup partners. Feeding a seen side that itself contains a text
-    * duplicated N× would multiply every matching new doc's output by N —
-    * the hot-band pathology [[nearDupEdges]] pre-collapses for the batch
-    * cluster path, prevented here by the accepted-corpus contract instead.
-    */
-  def streamingIngestGate(newDocs: DataFrame, seen: DataFrame, threshold: Double): DataFrame = {
-    val seenBands = bands(signatures(seen))
-      .select(col("doc_id").as("seen_id"), col("band_id"), col("band_val"))
-    val seenSets = seen
-      .select(col("doc_id").as("seen_id2"), array_distinct(shingles3(tokens(col("text")))).as("s2"))
-    // ONE per-row projection carries the shingle set alongside the
-    // signature (joining bands back to newDocs would be a stateful
-    // stream-stream self-join — exactly what this pipeline must avoid)
-    val sh = shingles3(tokens(col("text")))
-    val hashed = newDocs.select(
-      col("doc_id"),
-      array_distinct(sh).as("s1"),
-      transform(sh, x => baseHash(x)).as("hs")
-    )
-    val mins = (0 until K).map { i =>
-      when(size(col("hs")) > 0, array_min(transform(col("hs"), h => (h * A(i) + B(i)) % P)))
-        .as(s"mh$i")
-    }
-    val newKeyed = hashed
-      .select(col("doc_id") +: col("s1") +: mins: _*)
-      .filter(col("mh0").isNotNull)
-      .select(col("doc_id"), col("s1"), posexplode(array(bandValCols: _*)).as(Seq("band_id", "band_val")))
-    newKeyed
-      .join(seenBands, Seq("band_id", "band_val"))
-      .join(seenSets, col("seen_id") === col("seen_id2"))
-      .withColumn(
-        "jaccard",
-        size(array_intersect(col("s1"), col("s2"))).cast("double") /
-          size(array_union(col("s1"), col("s2")))
-      )
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_id").as("new_id"), col("seen_id").as("dup_of"), col("jaccard"))
-  }
-
   // ---- SQL fragments shared by the DuckDB oracles -------------------------
 
   /** Shingle CTE body over an arbitrary (doc_id, text) relation — the
@@ -733,27 +623,13 @@ object Dedup {
     * The integer forms coincide with the double `>= 0.3` comparison for
     * every realizable set size (a disagreement needs |∪| within ~1e-17
     * relative of 3/10 without equaling it — a denominator > 10¹⁶, far
-    * beyond any document's gram count), and ExtSpec pins pruned ≡
-    * unpruned on a collision-rich corpus. `pruned = false` keeps the naive
-    * path (plain band candidates, string intersect on every candidate)
-    * for that equivalence proof.
+    * beyond any document's gram count), and ExtSpec pins the output to
+    * a naive band-candidate, string-intersect reference on a
+    * collision-rich corpus.
     */
-  private[graft] def ngramVerifiedPairs(
-      docs: DataFrame,
-      pruned: Boolean = true,
-      sat: Int = BandSatThreshold): DataFrame = {
+  private[graft] def ngramVerifiedPairs(docs: DataFrame, sat: Int = BandSatThreshold): DataFrame = {
     val sets = gramSets(docs)
-    val pairs =
-      if (pruned) SetSim.verify(ngramCandidatePairs(docs, sat), sets, sets, "gset", NgTNum, NgTDen)
-      else {
-        def side(i: Int) =
-          sets.select(col("doc_id").as(s"d$i"), col("gset").as(s"g$i"), col("sz").as(s"sz$i"))
-        candidatePairs(docs)
-          .join(side(1), "d1")
-          .join(side(2), "d2")
-          .withColumn("inter", size(array_intersect(col("g1"), col("g2"))).cast("long"))
-          .withColumn("uni", col("sz1").cast("long") + col("sz2") - col("inter"))
-      }
+    val pairs = SetSim.verify(ngramCandidatePairs(docs, sat), sets, sets, "gset", NgTNum, NgTDen)
     atLeast(pairs, NgTNum, NgTDen).select("d1", "d2", "jaccard").orderBy("d1", "d2")
   }
 

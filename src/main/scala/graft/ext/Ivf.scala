@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField, StructType}
 
 import graft.core.Tables
 import graft.queries.Q
@@ -117,10 +118,19 @@ object Ivf {
       (acc, x) => acc + x
     )
 
+  /** The centroids as an `array<struct<cid, cvec>>` literal. Zero
+    * centroids (an empty embeddings table) still type the array: a bare
+    * `array()` has element type VOID, which no field access accepts.
+    */
   private[ext] def centroidArrayLit(centroids: Array[(Int, Array[Long])]): Column =
-    array(centroids.toIndexedSeq.map { case (i, v) =>
-      struct(lit(i).as("cid"), array(v.toIndexedSeq.map(lit): _*).as("cvec"))
-    }: _*)
+    if (centroids.isEmpty)
+      array().cast(ArrayType(StructType(Seq(
+        StructField("cid", IntegerType, nullable = false),
+        StructField("cvec", ArrayType(LongType, containsNull = false), nullable = false)))))
+    else
+      array(centroids.toIndexedSeq.map { case (i, v) =>
+        struct(lit(i).as("cid"), array(v.toIndexedSeq.map(lit): _*).as("cvec"))
+      }: _*)
 
   /** Nearest-centroid assignment: adds `cid` (argmin squared-L2) and `d2`
     * (the winning distance). array_min over (d, cid) structs compares d
@@ -267,6 +277,21 @@ object Ivf {
       .limit(k)
       .select("vec_id", "label")
   }
+
+  /** The query vector `id` of a [[quantized]] table as (embedding, qv);
+    * None when the table holds no such row.
+    */
+  private def queryVec(q: DataFrame, id: Long): Option[(Array[Float], Array[Long])] =
+    q.filter(col("vec_id") === id)
+      .select("embedding", "qv")
+      .collect()
+      .headOption
+      .map(r => (r.getSeq[Float](0).toArray, r.getSeq[Long](1).toArray))
+
+  /** The empty (vec_id, label) answer of a top-k whose query vector is
+    * absent — what the oracles' join against the missing row returns.
+    */
+  private def noHits(q: DataFrame): DataFrame = q.select("vec_id", "label").limit(0)
 
   /** Inline IVF top-k (fit + assign + probe in one lineage, no persisted
     * index) — the ExtSpec surface; the registered query goes through
@@ -416,11 +441,8 @@ object Ivf {
     "q_ann_ivf",
     (s, dir) => {
       val index = indexFor(s, dir)
-      val qRow = quantized(Tables(s, dir).embeddings)
-        .filter(col("vec_id") === 0L)
-        .select("embedding", "qv")
-        .collect()(0)
-      probe(s, index, qRow.getSeq[Float](0).toArray, qRow.getSeq[Long](1).toArray, k = 10)
+      val q     = quantized(Tables(s, dir).embeddings)
+      queryVec(q, 0L).fold(noHits(q)) { case (qEmb, qQ) => probe(s, index, qEmb, qQ, k = 10) }
     },
     Some(oracleSql(0L, 10, Iters))
   )
@@ -556,43 +578,39 @@ object Ivf {
     (s, dir) => {
       val books = pqCodebooks(s, dir)
       val q     = quantized(Tables(s, dir).embeddings)
-      val qRow = q
-        .filter(col("vec_id") === 0L)
-        .select("embedding", "qv")
-        .collect()(0)
-      val qEmb = qRow.getSeq[Float](0).toArray
-      val qQ   = qRow.getSeq[Long](1).toArray
-      // per-subspace ADC lookup tables: exact int64 query→centroid
-      // distances, cid order (M·K driver-side integers)
-      val luts: Array[Array[Long]] = Array.tabulate(PqM) { sub =>
-        val qs = qQ.slice(sub * PqSubDim, (sub + 1) * PqSubDim)
-        books(sub).sortBy(_._1).map { case (_, cv) => d2Local(qs, cv) }
-      }
-      val coded = (0 until PqM).foldLeft(q) { (df, sub) =>
-        val sv = slice(col("qv"), sub * PqSubDim + 1, PqSubDim)
-        val scored = transform(
-          centroidArrayLit(books(sub)),
-          c => struct(subDist(sv, c.getField("cvec")).as("d"), c.getField("cid").as("cid"))
-        )
-        df.withColumn(s"code$sub", array_min(scored).getField("cid"))
-      }
-      val adc = (0 until PqM)
-        .map(sub =>
-          element_at(
-            array(luts(sub).toIndexedSeq.map(lit): _*),
-            col(s"code$sub") + 1
+      queryVec(q, 0L).fold(noHits(q)) { case (qEmb, qQ) =>
+        // per-subspace ADC lookup tables: exact int64 query→centroid
+        // distances, cid order (M·K driver-side integers)
+        val luts: Array[Array[Long]] = Array.tabulate(PqM) { sub =>
+          val qs = qQ.slice(sub * PqSubDim, (sub + 1) * PqSubDim)
+          books(sub).sortBy(_._1).map { case (_, cv) => d2Local(qs, cv) }
+        }
+        val coded = (0 until PqM).foldLeft(q) { (df, sub) =>
+          val sv = slice(col("qv"), sub * PqSubDim + 1, PqSubDim)
+          val scored = transform(
+            centroidArrayLit(books(sub)),
+            c => struct(subDist(sv, c.getField("cvec")).as("d"), c.getField("cid").as("cid"))
           )
-        )
-        .reduce(_ + _)
-      val qvLit = array(qEmb.toIndexedSeq.map(lit): _*)
-      coded
-        .withColumn("adist", adc)
-        .orderBy(col("adist"), col("vec_id"))
-        .limit(PqShort)
-        .withColumn("cos", call_function("graft_cosine", col("embedding"), qvLit))
-        .orderBy(col("cos").desc, col("vec_id"))
-        .limit(10)
-        .select("vec_id", "label")
+          df.withColumn(s"code$sub", array_min(scored).getField("cid"))
+        }
+        val adc = (0 until PqM)
+          .map(sub =>
+            element_at(
+              array(luts(sub).toIndexedSeq.map(lit): _*),
+              col(s"code$sub") + 1
+            )
+          )
+          .reduce(_ + _)
+        val qvLit = array(qEmb.toIndexedSeq.map(lit): _*)
+        coded
+          .withColumn("adist", adc)
+          .orderBy(col("adist"), col("vec_id"))
+          .limit(PqShort)
+          .withColumn("cos", call_function("graft_cosine", col("embedding"), qvLit))
+          .orderBy(col("cos").desc, col("vec_id"))
+          .limit(10)
+          .select("vec_id", "label")
+      }
     },
     Some(pqOracleSql(0L, 10))
   )

@@ -21,10 +21,9 @@ import graft.queries.Q
   * `_features` and `_embed` round-trip formula pixels and hash-check them
   * against an independent oracle; `q_multimodal_jpeg` and `_jpeg_rt` check
   * the lossy codec within per-row bounds. Interlaced PNG and progressive
-  * JPEG decode. The only remaining DETERMINISTIC STUB is learned feature
-  * extraction (a trained embedding model cannot exist in this container),
-  * plus [[decodeStub]] kept as the registered pipeline's engine-replayable
-  * path. Everything around them — the schema,
+  * JPEG decode. The only remaining DETERMINISTIC STUB is [[decodeStub]],
+  * kept as the registered pipeline's engine-replayable path. Everything
+  * around it — the schema,
   * the Dataset encoders, the mapPartitions batch shape (one reusable
   * MessageDigest per partition, streaming iterator, no materialization) —
   * is the real 100 TB-shaped plumbing a production pipeline would drop
@@ -346,23 +345,12 @@ object Multimodal {
     }
   }
 
-  /** A fixed-width feature vector extracted from a media payload. */
-  final case class MediaFeature(id: Long, kind: String, feature: Array[Float])
-
-  /** REAL classical feature extraction (replaces [[featureStub]] for any
-    * payload [[ImageCodec.decode]] decodes): an integer luma
-    * histogram over the ACTUAL pixels — luma = (299·R + 587·G + 114·B)
-    * div 1000 (ITU BT.601 weights in exact integer form), `bins` equal
-    * bins, normalized to fractions, plus mean luma as the last component.
-    * Classical histogram features are what pre-neural CBIR ran, and the
-    * output shape (fixed-dim float vector per row) is exactly what
-    * [[Similarity]]/[[Ivf]] consume downstream. The arithmetic is pure
-    * integer until the final normalization, so `q_multimodal_features`
-    * hash-checks the underlying counts exactly; the learned-encoder stub
-    * ([[featureStub]]) remains only for payloads no classical decoder
-    * claims.
+  /** Exact integer luma histogram of a raster: (per-bin counts, luma
+    * sum). Luma = (299·R + 587·G + 114·B) div 1000 (ITU BT.601 weights in
+    * exact integer form) over `bins` equal bins — the classical CBIR
+    * histogram feature, pure integer so `q_multimodal_features`
+    * hash-checks the counts exactly.
     */
-  /** Exact integer luma histogram of a raster: (per-bin counts, luma sum). */
   private[graft] def lumaHistogram(
       w: Int, h: Int, ch: Int, px: Array[Byte], bins: Int): (Array[Long], Long) = {
     val counts  = new Array[Long](bins)
@@ -385,31 +373,12 @@ object Multimodal {
     (counts, lumaSum)
   }
 
-  def featurePixels(records: Dataset[MediaRecord], bins: Int = 8): Dataset[MediaFeature] = {
-    import records.sparkSession.implicits._
-    records.mapPartitions { it =>
-      it.flatMap { r =>
-        ImageCodec.decode(r.media).map { case ImageCodec.Image(w, h, ch, px) =>
-          val (counts, lumaSum) = lumaHistogram(w, h, ch, px, bins)
-          val n = w * h
-          val f = new Array[Float](bins + 1)
-          var i = 0
-          while (i < bins) { f(i) = counts(i).toFloat / n; i += 1 }
-          f(bins) = (lumaSum.toDouble / n / 255.0).toFloat
-          MediaFeature(r.id, r.kind, f)
-        }
-      }
-    }
-  }
-
   /** Exact integer block-luma sums of a raster: the image is cut into a
     * `grid`×`grid` lattice (pixel (x, y) lands in block
     * (y·grid div h, x·grid div w) — pure integer arithmetic, every block
     * non-empty once w, h ≥ grid) and each block accumulates its BT.601
     * luma sum and pixel count. These integer sums are the exact quantity
-    * `q_multimodal_embed`'s DuckDB oracle replays; the float embedding
-    * [[embedPixels]] ships downstream is a normalization of precisely
-    * these sums.
+    * `q_multimodal_embed`'s DuckDB oracle replays.
     */
   private[graft] def lumaBlockSums(
       w: Int, h: Int, ch: Int, px: Array[Byte], grid: Int): (Array[Long], Array[Long]) = {
@@ -431,75 +400,6 @@ object Multimodal {
       p += 1
     }
     (sums, counts)
-  }
-
-  /** REAL classical embedding — the classical stand-in for a learned
-    * vision encoder, and the path that makes [[featureStub]] reachable
-    * ONLY for payloads no codec decodes: a `grid`×`grid` block-mean
-    * BT.601 luma vector (default 16-dim) over the ACTUAL decoded pixels
-    * of any PNG/GIF/JPEG payload, each component the block's mean luma
-    * normalized to [0, 1]. Block-mean grids are the classical CBIR
-    * "tiny image" descriptor; the output shape is exactly what
-    * [[Similarity]]/[[Ivf]] consume, so decoded media flows into the ANN
-    * family with no stub in the path (ExtSpec round-trips it). Payloads
-    * no classical decoder claims fall back to the sha-derived
-    * [[featureStub]] arithmetic — the honest boundary, since a learned
-    * encoder cannot exist in this container.
-    */
-  def embedPixels(records: Dataset[MediaRecord], grid: Int = 4): Dataset[MediaFeature] = {
-    // mirror featureStub's bound, and fail on the DRIVER at plan time: the
-    // undecodable-payload fallback below indexes sha(i) for i < grid*grid
-    // against SHA-256's 32 bytes, so grid >= 6 would otherwise surface as an
-    // ArrayIndexOutOfBoundsException inside an executor task
-    require(grid * grid <= 32, s"sha256 provides 32 bytes of stub entropy; grid*grid = ${grid * grid}")
-    import records.sparkSession.implicits._
-    records.mapPartitions { it =>
-      val md = MessageDigest.getInstance("SHA-256") // one per partition, reused
-      it.map { r =>
-        ImageCodec.decode(r.media) match {
-          case Some(ImageCodec.Image(w, h, ch, px)) =>
-            val (sums, counts) = lumaBlockSums(w, h, ch, px, grid)
-            val f = new Array[Float](grid * grid)
-            var i = 0
-            while (i < f.length) {
-              f(i) =
-                if (counts(i) == 0L) 0f
-                else (sums(i).toDouble / counts(i) / 255.0).toFloat
-              i += 1
-            }
-            MediaFeature(r.id, r.kind, f)
-          case None =>
-            // undecodable payload: the sha-derived stub embedding, same
-            // arithmetic as featureStub (kept bit-identical so the two
-            // entry points cannot drift apart)
-            md.reset()
-            val sha = md.digest(r.media)
-            val f = Array.tabulate(grid * grid)(i => ((sha(i) & 0xff) / 255.0f) - 0.5f)
-            MediaFeature(r.id, r.kind, f)
-        }
-      }
-    }
-  }
-
-  /** STUB feature-extract: a deterministic pseudo-embedding derived from
-    * the payload's sha bytes (a real pipeline would run a learned
-    * vision/audio ENCODER here, which cannot exist in this container —
-    * [[featurePixels]] and [[embedPixels]] are the REAL classical paths
-    * for decodable images, and [[embedPixels]] routes here itself on
-    * undecodable payloads, making this the fallback-only path;
-    * the output shape — fixed-dim float vector per row,
-    * batch-friendly — is exactly what [[Similarity]]/[[Ivf]] consume
-    * downstream).
-    */
-  def featureStub(meta: Dataset[MediaMeta], dim: Int = 16): Dataset[MediaFeature] = {
-    import meta.sparkSession.implicits._
-    require(dim <= 32, "sha256 provides 32 bytes of stub entropy")
-    meta.map { m =>
-      val f = Array.tabulate(dim) { i =>
-        (Integer.parseInt(m.sha.substring(2 * i, 2 * i + 2), 16) / 255.0f) - 0.5f
-      }
-      MediaFeature(m.id, m.kind, f)
-    }
   }
 
   /** Frame sampling for video: every `stride`-th frame index. Declarative —
@@ -1132,9 +1032,7 @@ object Multimodal {
     * pixels → [[ImageCodec.encodePng]] → [[ImageCodec.decode]] → [[lumaHistogram]] —
     * hash-checked EXACTLY: the luma weights and binning are pure integer
     * arithmetic, so the oracle replays pixel generation, BT.601 luma and
-    * the 8-bin histogram in SQL. The float vector [[featurePixels]] hands
-    * to [[Similarity]]/[[Ivf]] is a normalization of precisely these
-    * counts, so checking the counts checks the feature.
+    * the 8-bin histogram in SQL.
     */
   val multimodalFeatures: Q = Q(
     "q_multimodal_features",
@@ -1256,10 +1154,9 @@ object Multimodal {
   /** Registered query: REAL classical embedding end-to-end — formula
     * pixels → [[ImageCodec.encodePng]] → [[ImageCodec.decode]] → [[lumaBlockSums]] —
     * hash-checked EXACTLY. Emits the 4×4 block-luma SUMS (pure integers)
-    * rather than the normalized floats: the float vector [[embedPixels]]
-    * hands to [[Similarity]]/[[Ivf]] is sum/count/255 of precisely these
-    * values (counts are fully determined by width/height), so checking
-    * the sums checks the embedding. Dimensions start at 4 so every block
+    * rather than normalized floats (a block-mean embedding is
+    * sum/count/255 of precisely these values, and counts are fully
+    * determined by width/height). Dimensions start at 4 so every block
     * of the 4×4 lattice is non-empty. The oracle replays pixel
     * generation, BT.601 integer luma, and the block assignment
     * (y·4 div h, x·4 div w) independently in SQL.

@@ -49,10 +49,13 @@ object SetJoin {
     * the verify read (doc_id, toks, h, hok, sz). Built on the family-shared
     * [[Dedup.shingleSets]] cache (one documents scan per session); the df
     * aggregate + per-doc sort runs once, not once per downstream use.
-    * Setless docs (< 3 tokens) are excluded: they cannot reach any
-    * positive threshold against anything.
+    * With exact duplicates the cache is restricted to one representative
+    * per distinct text ([[Dedup.repIds]]). Setless docs (< 3 tokens) are
+    * excluded: they cannot reach any positive threshold against anything.
     */
   private def orderedSets(docs: DataFrame): DataFrame = {
+    val all  = Dedup.shingleSets(docs)
+    val reps = if (Dedup.hasExactDups(docs)) all.join(Dedup.repIds(docs), "doc_id") else all
     // Round-robin spread BEFORE the explode: the family shingle cache
     // inherits the fixture parquet's 3-4 input splits, so the 100M-row
     // (doc_id, tok) explode + its two shuffle writes (df count, df join)
@@ -60,7 +63,7 @@ object SetJoin {
     // narrow exchange of the set rows buys full map parallelism for
     // everything downstream; at production scale the scan has thousands
     // of splits and the exchange is a no-op-sized rebalance.
-    val sets = Width.compute(Dedup.shingleSets(docs).filter(size(col("sset")) > 0))
+    val sets = Width.compute(reps.filter(size(col("sset")) > 0))
     Cached.frame(
       SetSim.rareFirst(sets, "sset").select(col("doc_id") +: col("toks") +: SetSim.image(col("toks")): _*)
     )
@@ -79,9 +82,7 @@ object SetJoin {
     * corpus small enough to enumerate exactly, at more than one fan-out.
     */
   private[graft] def similarityJoinWith(docs: DataFrame, saltB: Int): DataFrame = {
-    val base =
-      if (Dedup.hasExactDups(docs)) docs.join(Dedup.repIds(docs), "doc_id") else docs
-    val os = orderedSets(base)
+    val os = orderedSets(docs)
     SetSim
       .verify(SetSim.prefixCandidates(os, TNum, TDen, saltB), os, os, "toks", TNum, TDen)
       .filter(col("inter") * TDen >= col("uni") * TNum)

@@ -79,7 +79,9 @@ object MatView {
     graft.core.SessionArtifact.memo(built, dir) {
       val path   = graft.core.SessionArtifact.pathFor("graft-mv", dir)
       val events = Tables(spark, dir).events
-      val maxId  = events.agg(max("event_id")).head().getLong(0)
+      // an empty table has no max: -1 puts the watermark at 0, so the
+      // base is empty and the refresh's delta is the whole table
+      val maxId  = events.agg(coalesce(max("event_id"), lit(-1L))).head().getLong(0)
       val wm     = (maxId + 1L) * Num90 / 10L
       rollup(events.filter(col("event_id") < wm))
         .write

@@ -1,19 +1,10 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Temporal join operators Spark lacks natively, built as one-shuffle
   * library transforms (no custom planner rules needed — see SURVEY.md §4).
-  *
-  * As-of join: for each left row, the latest right row with
-  * `rightTs <= leftTs` on the same key. Implemented with the union-sweep
-  * trick: union both sides tagged, one shuffle on the key, one sorted
-  * per-partition sweep carrying a running "last right payload" — O(n log n)
-  * per partition, no per-row backward probe, no range condition the
-  * optimizer would turn into a nested loop. This is the shape that holds at
-  * 100 TB: a single exchange on the join key.
   *
   * Range (interval) join: left rows with `ts` joined to right rows with
   * `[start, end)` intervals. A naive theta-join plans BroadcastNestedLoop/
@@ -24,55 +15,6 @@ import org.apache.spark.sql.functions._
   * selectivity; pick ~ the median interval length.
   */
 object TemporalJoins {
-
-  /** As-of join. Left keeps all its rows; matched right payload columns
-    * arrive as nullable `asof_<name>` (null = no right row at or before).
-    * Ties (equal ts) resolve to the right row (right sorts first).
-    */
-  def asOfJoin(
-      left: DataFrame,
-      right: DataFrame,
-      key: String,
-      leftTs: String,
-      rightTs: String,
-      payload: Seq[String]
-  ): DataFrame = {
-    val leftCols = left.columns.toSeq
-    // carry each side's row as a nullable struct so any schema unions cleanly.
-    // __tie: deterministic order among right rows sharing (key, ts) — without
-    // it, `last(__p)` would pick whichever row the shuffle happened to sort
-    // last, flipping the match across runs/retries. The payload hash is an
-    // arbitrary but STABLE rule (ties resolve to the max-hash payload).
-    val rTagged = right.select(
-      col(key).as("__k"),
-      col(rightTs).as("__ts"),
-      lit(0).as("__src"),
-      struct(payload.map(col): _*).as("__p")
-    ).withColumn("__tie", xxhash64(col("__p")))
-    val lTagged = left.select(
-      col(key).as("__k"),
-      col(leftTs).as("__ts"),
-      lit(1).as("__src"),
-      lit(null).cast(rTagged.schema("__p").dataType).as("__p"),
-      lit(0L).as("__tie"),
-      struct(leftCols.map(col): _*).as("__l")
-    )
-    val rWithL = rTagged.withColumn("__l", lit(null).cast(lTagged.schema("__l").dataType))
-
-    val w = Window
-      .partitionBy("__k")
-      .orderBy(col("__ts"), col("__src"), col("__tie")) // right(0) before left(1) on ties
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    val swept = lTagged
-      .union(rWithL.select("__k", "__ts", "__src", "__p", "__tie", "__l"))
-      .withColumn("__match", last(col("__p"), ignoreNulls = true).over(w))
-      .filter(col("__src") === 1)
-
-    val outLeft  = leftCols.map(c => col(s"__l.$c").as(c))
-    val outRight = payload.map(p => col(s"__match.$p").as(s"asof_$p"))
-    swept.select(outLeft ++ outRight: _*)
-  }
 
   /** Bucketized range join: `left.ts` in `[right.start, right.end)`,
     * equi-key optional (pass null key columns via `keys = Nil` for pure

@@ -7,9 +7,7 @@ import graft.core.Tables
 
 /** Event-stream analytics over the `events` table: tumbling time windows,
   * semi-structured (JSON-ish) property extraction, and gap-based
-  * sessionization. These are the batch duals of the Structured Streaming
-  * pipelines in [[graft.streaming.EventStream]] — same expressions, so a
-  * correctness-green batch query certifies the streaming transform logic.
+  * sessionization.
   *
   * Scale notes: window aggregation groups on (truncated-ts, type) → one
   * partial+final hash-agg exchange; sessionization shuffles once on user_id
@@ -138,9 +136,7 @@ object EventQueries {
     * explode onto 10-minute buckets, clicks hash-join on (user_id, bucket),
     * the exact interval predicate filters after — one equi exchange, never a
     * nested loop). Timestamps compared as epoch micros so both engines do
-    * exact integer arithmetic. The streaming dual (stream-stream interval
-    * join with watermark-bounded state) is
-    * [[graft.streaming.EventStream.viewClickFunnel]].
+    * exact integer arithmetic.
     */
   val rangeJoinFunnel: Q = Q(
     "q_range_join",

@@ -569,29 +569,21 @@ object Pipeline {
       // parquet before a byte is written (same ~2x-compression refusal
       // shape as the gate's), and the memo lets bench reps re-read it.
       val expanded = crossA.union(crossB).union(within)
-      val key = (docs.queryExecution.analyzed.semanticHash(), spreadAt)
-      val dir = contamMemo.computeIfAbsent(
-        key,
-        _ => {
-          val (expRows, expBytes) = contaminationExpansionEstimate(docs)
-          graft.core.WaveScratch.ensureFreeSpace(
-            expBytes / 2,
-            s"contamination expansion ($expRows predicted rows)")
-          val out = graft.core.WaveScratch.dirFor(
-            docs.sparkSession, "contam", f"${key._1}%08x-$spreadAt")
-          val t0 = System.nanoTime()
-          expanded.write.mode("overwrite").parquet(out)
-          graft.core.BuildWalls.record(
-            "contam_expansion", (System.nanoTime() - t0) / 1e9)
-          out
-        }
-      )
+      val key = f"${docs.queryExecution.analyzed.semanticHash()}%08x-$spreadAt"
+      val out = graft.core.SessionArtifact.pathFor("graft-contam", key)
+      val dir = graft.core.SessionArtifact.memo(artifacts, out) {
+        val (expRows, expBytes) = contaminationExpansionEstimate(docs)
+        graft.core.SessionArtifact.ensureFreeSpace(
+          expBytes / 2,
+          s"contamination expansion ($expRows predicted rows)")
+        val t0 = System.nanoTime()
+        expanded.write.mode("overwrite").parquet(out)
+        graft.core.BuildWalls.record("contam_expansion", (System.nanoTime() - t0) / 1e9)
+        out
+      }
       docs.sparkSession.read.parquet(dir).orderBy("test_id", "leak_id")
     }
   }
-
-  private val contamMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, Long), String]()
 
   val contamination: Q = Q(
     "q_contamination",
@@ -1283,10 +1275,8 @@ object Pipeline {
   private[graft] val PipePackTokens = 256L
 
   /** Stage-1 PER-ROW admission predicate (language heuristic + quality
-    * gate) — the ONE definition the batch stage job, the oracle fragment,
-    * and the streaming ingest dual share. Stateless by construction: every
-    * term reads only the row's own text, which is what lets the streaming
-    * dual run in append mode with no state store.
+    * gate) — the ONE definition the batch stage job and the oracle
+    * fragment share. Every term reads only the row's own text.
     */
   private[graft] def cleanGate: org.apache.spark.sql.Column = {
     val toks = split(lower(col("text")), " ", -1)
@@ -1298,50 +1288,13 @@ object Pipeline {
   }
 
   /** Batch stage 1: [[cleanGate]] plus corpus-wide exact dedup (keep the
-    * min doc_id per fingerprint) — the body of the first chained job,
-    * factored out so the streaming dual's agreement test runs the exact
-    * same expressions.
+    * min doc_id per fingerprint) — the body of the first chained job.
     */
   private[graft] def cleanStage(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     docs
       .withColumn("fp", Fingerprint.of(col("text")))
       .withColumn("exact_keep", min("doc_id").over(Window.partitionBy("fp")) === col("doc_id"))
       .filter(cleanGate && col("exact_keep"))
-      .select("doc_id", "source", "lang", "text")
-
-  /** STREAMING dual of pipeline stage 1 — the continuously-running ingest
-    * form: `newDocs` is a streaming documents frame, `seenClean` the
-    * already-accepted s1_clean artifact (static). Admission = the same
-    * per-row [[cleanGate]], then the INCREMENTAL form of the stage's exact
-    * dedup: a stream-static LEFT ANTI join on the text fingerprint drops
-    * any new doc whose normalized text is already accepted. Every stage is
-    * stateless per micro-batch (append mode, no state store) — the same
-    * discipline as [[graft.ext.Dedup.streamingIngestGate]], which this
-    * gate CHAINS INTO: its output is a valid `newDocs` input for the
-    * near-dup flagger, so clean → exact-drop → near-dup-flag runs as one
-    * composed streaming pipeline (StreamingSpec pins batch/stream
-    * agreement for the chain).
-    *
-    * Like the near-dup gate, WITHIN-stream exact duplicates are left to
-    * the consumer: two docs with the same novel fingerprint in the stream
-    * both pass (dedup between them would be a stateful aggregation);
-    * the idempotent sink keyed on fingerprint — or the accepted corpus
-    * absorbing batch k before batch k+1 arrives — owns that, exactly as
-    * production ingest does. The static side carries no broadcast hint on
-    * purpose (the accepted corpus grows without bound; the planner
-    * broadcasts while small).
-    */
-  def streamingCleanIngest(
-      newDocs: org.apache.spark.sql.DataFrame,
-      seenClean: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    newDocs
-      .filter(cleanGate)
-      .withColumn("fp", Fingerprint.of(col("text")))
-      .join(
-        seenClean.select(Fingerprint.of(col("text")).as("fp")).distinct(),
-        Seq("fp"),
-        "left_anti"
-      )
       .select("doc_id", "source", "lang", "text")
 
   /** The full curation pipeline as CHAINED [[graft.api.Engine]] jobs with
@@ -1503,15 +1456,18 @@ object Pipeline {
     jobs.map(f => scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)).toSeq
   }
 
-  /** Per-(JVM, fixture-dir) memo of the staged pipeline run: the six-job
-    * DAG (near-dup verify, six parquet writes) executes ONCE per session —
-    * every later invocation of the query function (bench reps, plan-
-    * fingerprint passes, repeated tests) reads the existing s6_card
-    * artifact, the same warm-up discipline as the other offline-artifact
-    * queries (ADVICE r11). Bench attributes the one staged run to its
-    * `artifacts` accounting via warmUp's `pipeline_stages` build.
+  /** Per-JVM memo of this file's on-disk artifacts, keyed on their
+    * [[graft.core.SessionArtifact.pathFor]] path. The staged pipeline's
+    * six-job DAG (near-dup verify, six parquet writes) executes ONCE per
+    * (session, fixture dir) — every later invocation of the query function
+    * (bench reps, plan-fingerprint passes, repeated tests) reads the
+    * existing s6_card artifact, the same warm-up discipline as the other
+    * offline-artifact queries (ADVICE r11); Bench attributes the one
+    * staged run to its `artifacts` accounting via warmUp's
+    * `pipeline_stages` build. q_contamination's salted expansion is
+    * written once per (plan, spread threshold).
     */
-  private val e2eMemo =
+  private val artifacts =
     new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.FutureTask[String]]()
 
   /** Run (or reuse) the staged pipeline for this session + fixture dir,
@@ -1519,7 +1475,7 @@ object Pipeline {
     */
   private[graft] def stagedWorkFor(s: org.apache.spark.sql.SparkSession, dir: String): String = {
     val work = graft.core.SessionArtifact.pathFor("graft-pipeline", dir)
-    graft.core.SessionArtifact.memo(e2eMemo, work) { pipelineJobs(s, dir, work); work }
+    graft.core.SessionArtifact.memo(artifacts, work) { pipelineJobs(s, dir, work); work }
   }
 
   /** End-to-end staged curation run, hash-checked: the DAG above executes

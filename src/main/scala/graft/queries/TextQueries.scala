@@ -2208,62 +2208,11 @@ object TextQueries {
     * the drift monitor that schedules retraining, as the IVF centroid
     * distance does for the ANN index.
     *
-    * Scale/streaming shape: the frozen weight table is the production
-    * broadcast artifact; scoring the batch is one stream-static-joinable
-    * pass (explode → hash join → partial+final sum), so a Structured
-    * Streaming ingest gate runs the identical expressions per
-    * micro-batch with no aggregation state. Training reaggregates the
-    * family's ONE cached labeled scan with a pushed doc_id filter.
+    * Scale shape: the frozen weight table is the production broadcast
+    * artifact; scoring the batch is one pass (explode → hash join →
+    * partial+final sum). Training reaggregates the family's ONE cached
+    * labeled scan with a pushed doc_id filter.
     */
-  /** Frozen serving artifact of [[qualityIncremental]]: the weight table
-    * trained on the seen corpus (doc_id < 400), collected to a driver-side
-    * map, plus the Laplace prior an unseen term scores at. In production
-    * this is the broadcast model file the scoring fleet loads — the map
-    * here plays that role so [[scoreFrozen]] needs no join at all.
-    */
-  def frozenQualityModel(s: SparkSession, dir: String): (Map[String, Long], Long) = {
-    val seen = labeledDocs(s, dir).filter(col("doc_id") < 400)
-    val t    = classifierTotals(seen).collect()(0)
-    val (nPos, nNeg) = (t.getLong(0), t.getLong(1))
-    def ilog2L(x: Long): Long = 63L - java.lang.Long.numberOfLeadingZeros(x)
-    val prior = ilog2L(nNeg + 2) - ilog2L(nPos + 2)
-    val weights = classifierWeights(classifierTerms(seen), classifierTotals(seen))
-      .collect()
-      .map(r => r.getString(0) -> r.getLong(1))
-      .toMap
-    (weights, prior)
-  }
-
-  /** Streaming half of [[qualityIncremental]]: score (doc_id, text) rows
-    * against the FROZEN model. Tokenize → distinct → map-literal lookup
-    * (OOV terms score the Laplace prior and increment the drift counter)
-    * → in-row integer fold. Everything is per-row expression work — no
-    * join, no aggregation state — so the returned frame is Append-mode
-    * safe under Structured Streaming, and per-micro-batch output equals
-    * the batch dual's (score, n_oov, pred) exactly (StreamingSpec asserts
-    * agreement; both sides are pure integer math). At 100 TB the model
-    * map is one broadcast variable per executor; scoring throughput is
-    * scan bandwidth, the same shape as [[graft.ext.Ivf.streamingIngest]].
-    */
-  def scoreFrozen(docs: DataFrame, weights: Map[String, Long], prior: Long): DataFrame = {
-    val wm = typedLit(weights)
-    docs
-      .select(
-        col("doc_id"),
-        array_distinct(filter(split(lower(col("text")), " ", -1), t => t =!= "")).as("ts")
-      )
-      .select(
-        col("doc_id"),
-        aggregate(
-          col("ts"),
-          lit(0L),
-          (acc, t) => acc + coalesce(element_at(wm, t), lit(prior))
-        ).as("score"),
-        size(filter(col("ts"), t => element_at(wm, t).isNull)).cast("long").as("n_oov")
-      )
-      .withColumn("pred", (col("score") >= 0).cast("int"))
-  }
-
   val qualityIncremental: Q = Q(
     "q_quality_incremental",
     (s, dir) => {

@@ -19,10 +19,10 @@ class CoreUtilSpec extends AnyFunSuite {
 
   test("ensureFreeSpace refuses a footprint the scratch volume cannot hold") {
     val e = intercept[IllegalArgumentException](
-      graft.core.WaveScratch.ensureFreeSpace(Long.MaxValue, "coreutilspec expansion"))
+      graft.core.SessionArtifact.ensureFreeSpace(Long.MaxValue, "coreutilspec expansion"))
     assert(e.getMessage.contains("coreutilspec expansion needs ~"), e.getMessage)
     // an unknown (non-positive) footprint never refuses
-    graft.core.WaveScratch.ensureFreeSpace(0L, "coreutilspec expansion")
+    graft.core.SessionArtifact.ensureFreeSpace(0L, "coreutilspec expansion")
   }
 
   test("deleteRecursively removes a symlink to an outside dir as a link, not its target") {

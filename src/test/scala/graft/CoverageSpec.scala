@@ -18,17 +18,21 @@ class CoverageSpec extends AnyFunSuite {
     walk(new java.io.File("src/main"))
   }
 
+  /** A source line's code: None for a comment line, else the line with
+    * any trailing `//` comment stripped.
+    */
+  private def code(line: String): Option[String] =
+    if (line.trim.startsWith("*") || line.trim.startsWith("/*")) None
+    else Some(line.split("//", 2)(0))
+
   /** (path under src/main/scala/graft/, 1-based line) of every code line in
-    * src/main whose code — comment lines and trailing `//` comments
-    * stripped — satisfies `p`.
+    * src/main whose [[code]] satisfies `p`.
     */
   private def codeSites(p: String => Boolean): Vector[(String, Int)] =
     mainSources.flatMap { f =>
       val text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
       text.linesIterator.zipWithIndex.collect {
-        case (line, i)
-            if !line.trim.startsWith("*") && !line.trim.startsWith("/*") &&
-              p(line.split("//", 2)(0)) =>
+        case (line, i) if code(line).exists(p) =>
           (f.getPath.stripPrefix("src/main/scala/graft/"), i + 1)
       }
     }.toVector
@@ -186,5 +190,37 @@ class CoverageSpec extends AnyFunSuite {
     val stray    = code.filterNot(_._1 == "ext/SetSim.scala")
     assert(stray.isEmpty, s"hash-tier code outside ext/SetSim: ${stray.mkString(", ")}")
     assert(code.nonEmpty, "is the working directory the repo root?")
+  }
+
+  /** Dead-module guard: every top-level object, class or trait in src/main
+    * is reachable from an entry point through code that names it (comments
+    * do not count). A declaration's code is its span, from its header to
+    * the next top-level header. The entry points are the mains; the
+    * expressions [[graft.functions.GraftExtensions]] registers are named in
+    * its span, and core/SparkEnv names it in the session config.
+    */
+  test("every top-level src/main declaration is reachable from an entry point") {
+    val entry  = Set("Submit", "Bench", "Verify", "SparkEntry", "ExplainQ", "SpillProbe", "StressGen")
+    val header = """^(?:(?:final|sealed|abstract|case|implicit)\s+)*(?:object|class|trait)\s+(\w+)""".r
+    // (path:name, name, code of its span)
+    val decls = mainSources.toVector.flatMap { f =>
+      val lines  = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").split("\n", -1).toVector
+      val starts = lines.indices.flatMap(i => header.findPrefixMatchOf(lines(i)).map(m => (i, m.group(1))))
+      starts.zipWithIndex.map { case ((i, name), k) =>
+        val end = if (k + 1 < starts.size) starts(k + 1)._1 else lines.size
+        (s"${f.getPath}:$name", name, lines.slice(i, end).flatMap(code).mkString("\n"))
+      }
+    }
+    assert(decls.exists(d => entry(d._2)), "is the working directory the repo root?")
+    val named = decls.map(d => d._1 -> s"\\b${d._2}\\b".r).toMap
+    var reached = decls.filter(d => entry(d._2)).map(_._1).toSet
+    var frontier = decls.filter(d => reached(d._1))
+    while (frontier.nonEmpty) {
+      val next = decls.filter(d => !reached(d._1) && frontier.exists(u => named(d._1).findFirstIn(u._3).nonEmpty))
+      reached ++= next.map(_._1)
+      frontier = next
+    }
+    val dead = decls.map(_._1).filterNot(reached)
+    assert(dead.isEmpty, s"src/main declarations no entry point reaches: ${dead.mkString(", ")}")
   }
 }

@@ -655,18 +655,16 @@ class ExtSpec extends SparkSpec {
   }
 
   test("featurePixels: identical features through the PNG and GIF routes; JPEG within tolerance") {
-    import spark.implicits._
-    // one underlying image, three container encodings: the lossless codecs
-    // must produce the SAME classical feature vector, and ImageCodec.decode
-    // must route each payload to the right decoder by signature
+    // the feature path q_multimodal_features runs: ImageCodec.decode, then
+    // lumaHistogram over the decoded raster. One underlying image, three container encodings: the lossless codecs
+    // must produce the SAME histogram, and ImageCodec.decode must route
+    // each payload to the right decoder by signature
     val nColors = 16
     val (w, h)  = (24, 18)
     val pal     = Array.tabulate(nColors * 3)(i => ((i / 3) * 16 + 8).toByte) // 16 gray levels
     val idx     = Array.tabulate(w * h)(p => ((p % w) / 2 % nColors).toByte)
     val rgb = new Array[Byte](w * h * 3)
     for (p <- 0 until w * h; c <- 0 until 3) rgb(3 * p + c) = pal(3 * (idx(p) & 0xff) + c)
-    val pngBytes = graft.ext.ImageCodec.encodePng(w, h, 3, rgb)
-    val gifBytes = graft.ext.ImageCodec.encodeGif(w, h, pal, idx)
     val img = new java.awt.image.BufferedImage(w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
     for (y <- 0 until h; x <- 0 until w) {
       val o = (y * w + x) * 3
@@ -675,18 +673,22 @@ class ExtSpec extends SparkSpec {
     }
     val baos = new java.io.ByteArrayOutputStream()
     assert(javax.imageio.ImageIO.write(img, "jpeg", baos))
-    val recs = Seq(
-      Multimodal.MediaRecord(1L, "image", pngBytes),
-      Multimodal.MediaRecord(2L, "image", gifBytes),
-      Multimodal.MediaRecord(3L, "image", baos.toByteArray)
-    ).toDS()
-    val fs = Multimodal.featurePixels(recs, bins = 8).collect().sortBy(_.id).map(_.feature)
-    assert(fs.length == 3, "a codec failed to decode its own payload")
-    assert(fs(0).sameElements(fs(1)), "PNG and GIF routes disagree on a lossless image")
+    val hist = Seq(
+      graft.ext.ImageCodec.encodePng(w, h, 3, rgb),
+      graft.ext.ImageCodec.encodeGif(w, h, pal, idx),
+      baos.toByteArray
+    ).map { bytes =>
+      val d = graft.ext.ImageCodec.decode(bytes).getOrElse(fail("a codec failed to decode its own payload"))
+      assert((d.width, d.height) == ((w, h)))
+      Multimodal.lumaHistogram(d.width, d.height, d.channels, d.pixels, 8)
+    }
+    assert(hist(0)._1.sameElements(hist(1)._1) && hist(0)._2 == hist(1)._2,
+      "PNG and GIF routes disagree on a lossless image")
     // JPEG is lossy: histogram mass may shift one bin at quant boundaries,
-    // but the mean-luma component must stay very close
-    assert(math.abs(fs(0)(8) - fs(2)(8)) < 0.02f,
-      s"JPEG mean luma drifted: ${fs(0)(8)} vs ${fs(2)(8)}")
+    // but the mean luma must stay within a few levels
+    val n = (w * h).toDouble
+    assert(math.abs(hist(0)._2 / n - hist(2)._2 / n) < 0.02 * 255,
+      s"JPEG mean luma drifted: ${hist(0)._2 / n} vs ${hist(2)._2 / n}")
   }
 
   test("ImageCodec.encodeJpeg at quality 0.95 round-trips within 8 levels, gray and RGB") {
@@ -715,17 +717,18 @@ class ExtSpec extends SparkSpec {
   }
 
   test("featurePixels handles gray+alpha (2-channel) PNGs; luma is the gray sample") {
-    import spark.implicits._
-    // PNG color type 4 decodes to 2 channels — the luma must be the gray
+    // ImageCodec.decode then lumaHistogram, as q_multimodal_features runs
+    // them. PNG color type 4 decodes to 2 channels — the luma must be the gray
     // sample (alpha ignored), not an RGB read past the row end
     val (w, h) = (6, 4)
     val px = Array.tabulate[Byte](w * h * 2)(i => if (i % 2 == 0) (i * 5).toByte else 200.toByte)
-    val recs = Seq(Multimodal.MediaRecord(1L, "image", graft.ext.ImageCodec.encodePng(w, h, 2, px))).toDS()
-    val fs = Multimodal.featurePixels(recs, bins = 8).collect()
-    assert(fs.length == 1)
-    val grays   = (0 until w * h).map(p => px(2 * p) & 0xff)
-    val meanRef = grays.sum.toDouble / (w * h) / 255.0
-    assert(math.abs(fs(0).feature(8) - meanRef.toFloat) < 1e-6f, "mean luma must come from the gray channel")
+    val d = graft.ext.ImageCodec.decode(graft.ext.ImageCodec.encodePng(w, h, 2, px))
+      .getOrElse(fail("gray+alpha PNG rejected"))
+    assert(d.channels == 2)
+    val (counts, lumaSum) = Multimodal.lumaHistogram(d.width, d.height, d.channels, d.pixels, 8)
+    val grays = (0 until w * h).map(p => px(2 * p) & 0xff)
+    assert(lumaSum == grays.sum.toLong, "luma must come from the gray channel")
+    assert(counts.toSeq == (0 until 8).map(b => grays.count(_ * 8 / 256 == b).toLong))
   }
 
   test("nearDupClusters returns empty (not NPE) on an empty corpus") {
@@ -854,73 +857,47 @@ class ExtSpec extends SparkSpec {
     assert(meta.map(_.sha).toSeq == meta2.map(_.sha).toSeq)
   }
 
-  test("feature-extract stub: deterministic fixed-dim vectors usable by graft_cosine") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val recs = Tables(spark, sf).documents
-      .limit(50)
-      .select(col("doc_id").as("id"), lit("image").as("kind"), col("text").cast("binary").as("media"))
-      .as[Multimodal.MediaRecord]
-    val feats = Multimodal.featureStub(Multimodal.decodeStub(recs), 16)
-    val rows  = feats.collect()
-    assert(rows.forall(_.feature.length == 16))
-    assert(rows.forall(_.feature.forall(v => v >= -0.5f && v <= 0.5f)))
-    // downstream-compatible: self-cosine of a nonzero vector is 1.0
-    val selfCos = feats
-      .toDF()
-      .select(call_function("graft_cosine", col("feature"), col("feature")).as("c"))
-      .filter(col("c").isNotNull)
-      .agg(min("c"), max("c"))
-      .collect()(0)
-    assert(math.abs(selfCos.getDouble(0) - 1.0) < 1e-9 && math.abs(selfCos.getDouble(1) - 1.0) < 1e-9)
-  }
-
   test("embedPixels: decoded media flows into the ANN family; stub only for undecodable payloads") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    // one underlying image in three container encodings plus a shifted
-    // variant and an undecodable payload — the block-mean embedding must be
-    // IDENTICAL through the lossless routes, near-identical through JPEG,
-    // and the sha-stub fallback must match featureStub bit-for-bit
+    // the embedding path q_multimodal_embed runs: ImageCodec.decode, then
+    // lumaBlockSums over the decoded raster. One underlying image in three container encodings plus a brighter
+    // variant — the block-luma sums must be IDENTICAL through the lossless
+    // routes, near-identical through JPEG, and different for the variant
     val nColors = 16
     val (w, h)  = (32, 24)
     val pal     = Array.tabulate(nColors * 3)(i => ((i / 3) * 16 + 8).toByte)
     val idx     = Array.tabulate(w * h)(p => (((p % w) / 2 + (p / w) / 3) % nColors).toByte)
     val rgb = new Array[Byte](w * h * 3)
     for (p <- 0 until w * h; c <- 0 until 3) rgb(3 * p + c) = pal(3 * (idx(p) & 0xff) + c)
-    val pngBytes = graft.ext.ImageCodec.encodePng(w, h, 3, rgb)
-    val gifBytes = graft.ext.ImageCodec.encodeGif(w, h, pal, idx)
-    val jpgBytes = graft.ext.ImageCodec.encodeJpeg(w, h, 3, rgb, 0.95f)
-    // a brighter variant: every palette level shifted up — a DIFFERENT image
     val rgb2 = rgb.map(b => math.min(255, (b & 0xff) + 90).toByte)
-    val png2 = graft.ext.ImageCodec.encodePng(w, h, 3, rgb2)
-    val junk = "definitely not an image payload".getBytes
-    val recs = Seq(
-      Multimodal.MediaRecord(1L, "image", pngBytes),
-      Multimodal.MediaRecord(2L, "image", gifBytes),
-      Multimodal.MediaRecord(3L, "image", jpgBytes),
-      Multimodal.MediaRecord(4L, "image", png2),
-      Multimodal.MediaRecord(5L, "other", junk)
-    ).toDS()
-    val feats = Multimodal.embedPixels(recs, grid = 4)
-    val byId  = feats.collect().map(f => f.id -> f.feature).toMap
-    assert(byId.values.forall(_.length == 16))
-    assert(byId(1L).sameElements(byId(2L)), "PNG and GIF routes disagree on a lossless image")
+    val blocks = Seq(
+      graft.ext.ImageCodec.encodePng(w, h, 3, rgb),
+      graft.ext.ImageCodec.encodeGif(w, h, pal, idx),
+      graft.ext.ImageCodec.encodeJpeg(w, h, 3, rgb, 0.95f),
+      graft.ext.ImageCodec.encodePng(w, h, 3, rgb2)
+    ).map { bytes =>
+      val d = graft.ext.ImageCodec.decode(bytes).getOrElse(fail("a codec failed to decode its own payload"))
+      Multimodal.lumaBlockSums(d.width, d.height, d.channels, d.pixels, 4)
+    }
+    val (png, counts) = blocks(0)
+    assert(counts.forall(_ == (w / 4) * (h / 4)), "every block of the 4x4 lattice holds an equal share")
+    assert(png.sameElements(blocks(1)._1), "PNG and GIF routes disagree on a lossless image")
     // JPEG is lossy but quality 0.95 keeps block means within a few luma levels
     for (i <- 0 until 16)
-      assert(math.abs(byId(1L)(i) - byId(3L)(i)) < 0.03f, s"JPEG block $i drifted")
-    // the undecodable payload must take the featureStub arithmetic exactly
-    val stub = Multimodal
-      .featureStub(Multimodal.decodeStub(Seq(Multimodal.MediaRecord(5L, "other", junk)).toDS()), 16)
-      .collect()(0)
-    assert(byId(5L).sameElements(stub.feature), "stub fallback drifted from featureStub")
-    // round-trip into Similarity: querying the PNG must rank its lossless
-    // twin (the GIF encoding, identical embedding) at the top
-    val emb = feats.toDF()
-      .select(col("id").as("vec_id"), col("kind").as("label"), col("feature").as("embedding"))
-    val top = graft.ext.Similarity.topKCosine(emb, queryId = 1L, k = 3).collect()
-    assert(top.map(_.getLong(1)).take(2).toSet == Set(1L, 2L),
-      s"lossless twin not at the top: ${top.mkString(", ")}")
+      assert(math.abs(png(i) - blocks(2)._1(i)).toDouble / counts(i) < 0.03 * 255, s"JPEG block $i drifted")
+    assert((0 until 16).forall(i => blocks(3)._1(i) > png(i)), "the brighter variant must read brighter")
+    // an undecodable payload yields no raster (the query's flatMap drops
+    // it); only the metadata decode falls back to the stub dimensions
+    import spark.implicits._
+    val junk = "definitely not an image payload".getBytes("UTF-8")
+    assert(graft.ext.ImageCodec.decode(junk).isEmpty, "a non-image payload decoded to pixels")
+    val meta = Multimodal
+      .decode(Seq(
+        Multimodal.MediaRecord(1L, "image", graft.ext.ImageCodec.encodePng(w, h, 3, rgb)),
+        Multimodal.MediaRecord(2L, "other", junk)).toDS())
+      .collect()
+      .sortBy(_.id)
+    assert((meta(0).width, meta(0).height) == ((w, h)), "a decodable payload took the stub")
+    assert((meta(1).width, meta(1).height) == ((16 + ('d' % 16) * 16, 16 + ('e' % 16) * 16)))
   }
 
   test("imageDims parses real PNG/GIF/JPEG headers produced by javax.imageio") {
@@ -974,17 +951,6 @@ class ExtSpec extends SparkSpec {
     assert((out(0).width, out(0).height) == ((300, 200)))
     // 'n' = 0x6e=110, 'o' = 0x6f=111 → stub dims 16+(110%16)*16, 16+(111%16)*16
     assert((out(1).width, out(1).height) == ((16 + (110 % 16) * 16, 16 + (111 % 16) * 16)))
-  }
-
-  test("signaturesNarrow equals the explode+groupBy signatures exactly") {
-    val docs = Tables(spark, sf).documents
-    val a = Dedup.signatures(docs).orderBy("doc_id").collect()
-    val b = Dedup.signaturesNarrow(docs).orderBy("doc_id").collect()
-    assert(a.length == b.length)
-    a.zip(b).foreach { case (x, y) => assert(x == y, s"$x != $y") }
-    // and it must plan NO exchange (the whole point: a narrow map)
-    val p = Dedup.signaturesNarrow(docs).queryExecution.executedPlan.toString
-    assert(!p.contains("Exchange"), p)
   }
 
   test("incremental dedup flags exactly the cross-boundary near-dup docs") {
@@ -1068,36 +1034,50 @@ class ExtSpec extends SparkSpec {
       (i, t)
     }
     val docs = rows.toDF("doc_id", "text")
-    def run(pruned: Boolean): Seq[(Long, Long, Double)] =
-      Dedup
-        .ngramVerifiedPairs(docs, pruned)
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-        .toSeq
-    val pruned   = run(pruned = true)
-    val unpruned = run(pruned = false)
+    def rows3(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Double)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    // the naive reference: plain band candidates, string intersect on
+    // every candidate, the same double >= 0.3 filter
+    def naive(d: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+      import org.apache.spark.sql.functions._
+      val sets = Dedup.gramSets(d)
+      def side(i: Int) =
+        sets.select(col("doc_id").as(s"d$i"), col("gset").as(s"g$i"), col("sz").as(s"sz$i"))
+      Dedup.candidatePairs(d)
+        .join(side(1), "d1")
+        .join(side(2), "d2")
+        .withColumn("inter", size(array_intersect(col("g1"), col("g2"))).cast("long"))
+        .withColumn("jaccard", col("inter").cast("double") / (col("sz1").cast("long") + col("sz2") - col("inter")))
+        .filter(col("jaccard") >= 0.3)
+        .select("d1", "d2", "jaccard")
+        .orderBy("d1", "d2")
+    }
+    val pruned   = rows3(Dedup.ngramVerifiedPairs(docs))
+    val unpruned = rows3(naive(docs))
     assert(pruned.nonEmpty, "corpus produced no verified pairs — test corpus too weak")
     assert(pruned == unpruned, s"tiered prune changed the output:\n pruned=$pruned\n naive =$unpruned")
     // and on the real fixture, against live candidate structure
     val fixDocs = Tables(spark, sf).documents
-    val fp = Dedup.ngramVerifiedPairs(fixDocs, pruned = true).collect().map(_.toSeq).toSeq
-    val fu = Dedup.ngramVerifiedPairs(fixDocs, pruned = false).collect().map(_.toSeq).toSeq
+    val fp = Dedup.ngramVerifiedPairs(fixDocs).collect().map(_.toSeq).toSeq
+    val fu = naive(fixDocs).collect().map(_.toSeq).toSeq
     assert(fp == fu, "tiered prune changed the fixture output")
 
     // band-saturation re-route (round 13): with the threshold forced BELOW
     // this corpus's bucket occupancy, over-occupied buckets enumerate via
     // the exact prefix filter instead of the |B|² band join — the output
     // must be identical (every within-bucket pair is a candidate; the
-    // prefix bound only drops pairs the 3/10 verify drops anyway)
-    val occ = Dedup.bandOccupancy(docs).collect()
-    val maxOcc = occ.map(_.getLong(3)).max
+    // prefix bound only drops pairs the 3/10 verify drops anyway). The
+    // occupancy is counted at the family's collapsed grain (one row per
+    // distinct text), the grain the re-route sees.
+    val maxOcc = Dedup
+      .bands(Dedup.signatures(docs).join(Dedup.repIds(docs), "doc_id"))
+      .groupBy("band_id", "band_val")
+      .count()
+      .agg(org.apache.spark.sql.functions.max("count"))
+      .collect()(0)
+      .getLong(0)
     assert(maxOcc > 4, s"corpus not saturated enough to exercise the re-route (max occupancy $maxOcc)")
-    assert(occ.map(_.getLong(2)).sum > 0, "occupancy histogram lost the enumeration column")
-    val rerouted = Dedup
-      .ngramVerifiedPairs(docs, pruned = true, sat = 4)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .toSeq
+    val rerouted = rows3(Dedup.ngramVerifiedPairs(docs, sat = 4))
     assert(
       rerouted == pruned,
       s"saturation re-route changed the output:\n rerouted=$rerouted\n band-join=$pruned"

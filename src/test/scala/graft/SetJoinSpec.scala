@@ -58,6 +58,23 @@ class SetJoinSpec extends SparkSpec {
     val plan = SetJoin.similarityJoin(docs).queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"), plan)
 
+    // the rep collapse filters the family's shingle cache: the only cached
+    // (doc_id, sset) relation under the join is Dedup.shingleSets(docs)
+    // itself, never a second cache over docs joined with the reps
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+    def caches(p: SparkPlan): Seq[InMemoryRelation] =
+      adaptiveNodes(p)
+        .collect { case s: InMemoryTableScanExec => s.relation }
+        .flatMap(r => r +: caches(r.cacheBuilder.cachedPlan))
+    val family = graft.ext.Dedup.shingleSets(docs).queryExecution.withCachedData
+      .collectFirst { case r: InMemoryRelation => r.cacheBuilder }
+      .getOrElse(fail("the family shingle sets are not cached"))
+    val ssetCaches = caches(SetJoin.similarityJoin(docs).queryExecution.executedPlan)
+      .filter(_.output.map(_.name) == Seq("doc_id", "sset"))
+    assert(ssetCaches.nonEmpty && ssetCaches.forall(_.cacheBuilder eq family),
+      s"${ssetCaches.map(_.cacheBuilder.cachedPlan.treeString).distinct.mkString("\n")}")
+
     // salted enumeration at fan-outs beyond the session-derived one (the
     // first assertion above already covers it via similarityJoin): every
     // pair must meet exactly once regardless of saltB, so a non-dividing

@@ -8,77 +8,13 @@ import org.apache.spark.rdd.HadoopRDD
 import org.apache.spark.sql.functions._
 
 import graft.api.{Engine, JobSpec}
-import graft.sources.{AvroIO, LineSource, Sources}
+import graft.sources.{LineSource, Sources}
 
-/** Round-trip specs for every source/sink format, plus partition pruning
-  * through a partitioned parquet layout.
-  */
+/** The compacted partitioned parquet sink and the Engine's line source. */
 class SourcesSpec extends SparkSpec {
 
   private def tmp(name: String): String =
     Files.createTempDirectory(name).resolve("data").toString
-
-  test("csv round-trip preserves rows and schema (explicit schema, no infer scan)") {
-    import spark.implicits._
-    val df  = Seq((1L, "a", 1.5), (2L, "b", 2.5)).toDF("id", "name", "v")
-    val out = tmp("csv")
-    Sources.writeCsv(df, out)
-    val back = Sources.csv(spark, out, Some(df.schema))
-    assert(back.orderBy("id").collect().toSeq == df.orderBy("id").collect().toSeq)
-    // csv carries no nullability metadata — compare names and types only
-    assert(back.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
-      df.schema.fields.map(f => (f.name, f.dataType)).toSeq)
-  }
-
-  test("json round-trip preserves rows") {
-    import spark.implicits._
-    val df  = Seq((1L, "x"), (2L, "y")).toDF("id", "s")
-    val out = tmp("json")
-    Sources.writeJson(df, out)
-    val back = Sources.json(spark, out, Some(df.schema))
-    assert(back.orderBy("id").collect().toSeq == df.orderBy("id").collect().toSeq)
-  }
-
-  test("text reader exposes per-file identity like the reference's file scan") {
-    val df = Sources.textWithFile(spark, resource("wc/input"))
-    val files = df.select("input_file").distinct().collect().map(_.getString(0))
-    assert(files.length == 8)
-    assert(files.forall(_.contains("file0")))
-  }
-
-  test("orc round-trip preserves rows") {
-    import spark.implicits._
-    val df  = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "s")
-    val out = tmp("orc")
-    Sources.writeOrc(df, out)
-    val back = Sources.orc(spark, out)
-    assert(back.orderBy("id").collect().toSeq == df.orderBy("id").collect().toSeq)
-  }
-
-  test("gzip text round-trip: transparent decompression on read") {
-    import spark.implicits._
-    val lines = (1 to 100).map(i => s"line-$i")
-    val out   = tmp("gz")
-    Sources.writeTextGzip(lines.toDF("value"), out)
-    // at least one .gz part written, read back transparently
-    val files = new java.io.File(out).listFiles().map(_.getName)
-    assert(files.exists(_.endsWith(".gz")), files.mkString(","))
-    val back = Sources.text(spark, out).collect().map(_.getString(0)).sorted
-    assert(back.toSeq == lines.sorted)
-  }
-
-  test("partitioned parquet write enables partition pruning on read") {
-    import spark.implicits._
-    val df = Seq((1L, "2024-01-01", 1.0), (2L, "2024-01-02", 2.0), (3L, "2024-01-02", 3.0))
-      .toDF("id", "day", "v")
-    val out = tmp("part")
-    Sources.writeParquet(df, out, partitionBy = Seq("day"))
-    val pruned = Sources.parquet(spark, out).filter(col("day") === "2024-01-02")
-    assert(pruned.count() == 2)
-    // the physical scan must read only the matching partition directory
-    val scan = pruned.queryExecution.executedPlan.toString
-    assert(scan.contains("PartitionFilters: [") && scan.contains("day"), scan)
-  }
 
   test("compacted partitioned write emits one file per value, re-split by record cap") {
     // 100 rows over 2 partition values, on a multi-partition source df
@@ -98,64 +34,32 @@ class SourcesSpec extends SparkSpec {
     Sources.writeParquetCompacted(df, out2, partitionBy = Seq("bucket"), maxRecordsPerFile = 20)
     val n0 = new java.io.File(s"$out2/bucket=0").listFiles().count(_.getName.endsWith(".parquet"))
     assert(n0 == 3, s"50 rows at cap 20 should split into 3 files, got $n0") // ceil(50/20)
-    assert(Sources.parquet(spark, out2).count() == 100)
+    assert(spark.read.parquet(out2).count() == 100)
   }
 
-  test("avro round-trip preserves rows, schema, nulls, and binary through the bare-library path") {
-    val df = spark.range(500).select(
-      col("id"),
-      concat(lit("doc-"), col("id")).as("name"),
-      (col("id") * 1.5).as("score"),
-      when(col("id") % 7 === 0, lit(null).cast("string")).otherwise(lit("tag")).as("maybe"),
-      (col("id") % 2 === 0).as("even"),
-      md5(col("id").cast("string")).cast("binary").as("blob")
-    ).repartition(4)
-    val out = tmp("avro")
-    AvroIO.writeAvro(df, out)
-    // one container file per partition
-    val files = new java.io.File(out).listFiles().filter(_.getName.endsWith(".avro"))
-    assert(files.length == 4, files.mkString(","))
-    val back = AvroIO.readAvro(spark, out)
-    assert(back.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
-      df.schema.fields.map(f => (f.name, f.dataType)).toSeq)
-    assert(back.count() == 500)
-    assert(back.where(col("maybe").isNull).count() == df.where(col("maybe").isNull).count())
-    // value-identical, binary included (compare via a stable projection)
-    val a = df.select(col("id"), col("name"), col("score"), col("maybe"), col("even"),
-      hex(col("blob")).as("b")).orderBy("id").collect().toSeq
-    val b = back.select(col("id"), col("name"), col("score"), col("maybe"), col("even"),
-      hex(col("blob")).as("b")).orderBy("id").collect().toSeq
-    assert(a == b, "avro round-trip altered values")
-    // an Avro schema the mapper cannot represent declines loudly
-    val ex = intercept[IllegalArgumentException] {
-      AvroIO.writeAvro(spark.range(1).select(col("id").cast("decimal(10,2)")), tmp("avro_bad"))
-    }
-    assert(ex.getMessage.contains("primitive core"))
+  test("partitioned parquet write enables partition pruning on read") {
+    import spark.implicits._
+    // the IVF index's layout: a compacted write partitioned by the probe key
+    val df = Seq((1L, "2024-01-01", 1.0), (2L, "2024-01-02", 2.0), (3L, "2024-01-02", 3.0))
+      .toDF("id", "day", "v")
+    val out = tmp("part")
+    Sources.writeParquetCompacted(df, out, partitionBy = Seq("day"), maxRecordsPerFile = 1000)
+    val pruned = spark.read.parquet(out).filter(col("day") === "2024-01-02")
+    assert(pruned.count() == 2)
+    // the physical scan must read only the matching partition directory
+    val scan = pruned.queryExecution.executedPlan.toString
+    assert(scan.contains("PartitionFilters: [") && scan.contains("day"), scan)
   }
 
-  test("a single multi-block avro file splits on sync markers and fans out over multiple tasks") {
-    // ONE container file, many small Avro blocks (tiny sync interval):
-    // the sync-marker split must fan it out across tasks, and every range
-    // must see each block exactly once (no dropped or doubled records)
-    val df = spark.range(20000).select(
-      col("id"),
-      concat(lit("row-"), col("id")).as("name")
-    ).coalesce(1)
-    val out = tmp("avro_blocks")
-    AvroIO.writeAvro(df, out, syncInterval = 512)
-    val files = new java.io.File(out).listFiles().filter(_.getName.endsWith(".avro"))
-    assert(files.length == 1, files.mkString(","))
-    assert(files(0).length() > 64 * 1024, "fixture too small to exercise multi-range splits")
-    val back  = AvroIO.readAvro(spark, out, splitBytes = 16 * 1024)
-    val tasks = back.rdd.getNumPartitions
-    assert(tasks > 1, s"single file read with $tasks task(s) — within-file split not engaged")
-    assert(back.count() == 20000, "split ranges dropped or doubled records")
-    assert(back.agg(sum(col("id"))).collect()(0).getLong(0) == 20000L * 19999 / 2)
-    // a range boundary inside a block must not split ownership: distinct ids
-    assert(back.select("id").distinct().count() == 20000)
-    // limit() abandons iterators mid-file — the task-completion listener
-    // must close the readers without error (the ADVICE leak regression)
-    assert(AvroIO.readAvro(spark, out, splitBytes = 16 * 1024).limit(7).count() == 7)
+  test("text reader exposes per-file identity like the reference's file scan") {
+    // each split of the Engine's line source names the one file it reads,
+    // as each of the reference's map tasks owns one input file
+    val path  = resource("wc/input")
+    val lines = LineSource(spark.sparkContext, path, 8)
+    val files = lines.partitions.map(_.asInstanceOf[LineSource.Split].file).distinct
+    assert(files.length == 8)
+    assert(files.forall(_.contains("file0")))
+    assert(files.toSeq == LineSource.files(path).map(_.toString))
   }
 
   /** A generated input directory: 1-5 files of lines ended by random

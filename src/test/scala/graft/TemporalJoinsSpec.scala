@@ -3,58 +3,73 @@ package graft
 
 import graft.ops.TemporalJoins
 
-/** Value + plan specs for the as-of and bucketized range joins. */
+/** Value + plan specs for the as-of join (q_asof_join's running window)
+  * and the bucketized range and interval joins.
+  */
 class TemporalJoinsSpec extends SparkSpec {
 
-  test("asOfJoin picks the latest right row at or before each left ts") {
+  /** q_asof_join over an `events` table of `(event_id, user_id, ts
+    * seconds, event_type)` rows: event_id → the last click's ts in
+    * seconds, or -1 where no click precedes.
+    */
+  private def asOf(rows: Seq[(Long, Long, Long, String)]): Map[Long, Long] = {
     import spark.implicits._
-    val quotes = Seq(
-      (1L, 10L, 100.0),
-      (1L, 20L, 101.0),
-      (1L, 30L, 102.0),
-      (2L, 15L, 50.0)
-    ).toDF("k", "qts", "price")
-    val trades = Seq(
-      (1L, 5L, "t1"),  // before any quote → null
-      (1L, 20L, "t2"), // exactly at quote 20 → 101.0 (tie → right first)
-      (1L, 25L, "t3"), // between 20 and 30 → 101.0
-      (1L, 99L, "t4"), // after all → 102.0
-      (2L, 16L, "t5"), // → 50.0
-      (3L, 10L, "t6")  // key with no quotes → null
-    ).toDF("k", "tts", "trade")
-    val got = TemporalJoins
-      .asOfJoin(trades, quotes, "k", "tts", "qts", Seq("price"))
-      .orderBy("k", "tts")
-      .collect()
-      .map(r => (r.getString(2), if (r.isNullAt(3)) null else r.getDouble(3)))
-      .toSeq
-    assert(got == Seq(("t1", null), ("t2", 101.0), ("t3", 101.0), ("t4", 102.0), ("t5", 50.0), ("t6", null)))
+    import org.apache.spark.sql.functions.{col, timestamp_seconds}
+    val dir = java.nio.file.Files.createTempDirectory("graft-asof")
+    try {
+      rows.toDF("event_id", "user_id", "sec", "event_type")
+        .select(col("event_id"), col("user_id"), timestamp_seconds(col("sec")).as("ts"), col("event_type"))
+        .write
+        .parquet(dir.resolve("events.parquet").toString)
+      graft.queries.Registry.queries("q_asof_join")(spark, dir.toString)
+        .collect()
+        .map { r =>
+          val last = r.getAs[java.time.LocalDateTime]("last_click_ts")
+          r.getAs[Long]("event_id") -> (if (last == null) -1L else last.toEpochSecond(java.time.ZoneOffset.UTC))
+        }
+        .toMap
+    } finally graft.ops.Sinks.deleteQuietly(dir)
+  }
+
+  test("asOfJoin picks the latest right row at or before each left ts") {
+    // the as-of join q_asof_join runs: each event against the same user's
+    // clicks, ordered by (ts, event_id)
+    val got = asOf(Seq(
+      (1L, 1L, 5L, "view"),   // before any click → none
+      (2L, 1L, 10L, "click"), // a click sees itself
+      (3L, 1L, 20L, "view"),  // at a later click's ts, but ordered before it → 10
+      (4L, 1L, 20L, "click"),
+      (5L, 1L, 20L, "view"),  // at the click's ts, ordered after it → 20
+      (6L, 1L, 25L, "view"),  // between clicks 20 and 30 → 20
+      (7L, 1L, 30L, "click"),
+      (8L, 1L, 99L, "purchase"), // after all → 30
+      (9L, 2L, 15L, "click"),
+      (10L, 2L, 16L, "view"), // another user's clicks never leak in → 15
+      (11L, 3L, 40L, "view")  // a user with no clicks → none
+    ))
+    assert(got == Map(1L -> -1L, 2L -> 10L, 3L -> 10L, 4L -> 20L, 5L -> 20L, 6L -> 20L, 7L -> 30L,
+      8L -> 30L, 9L -> 15L, 10L -> 15L, 11L -> -1L))
   }
 
   test("asOfJoin equals the naive per-row maximum (property on random data)") {
-    import spark.implicits._
-    val rnd    = new scala.util.Random(11)
-    val lefts  = (1 to 300).map(i => (rnd.nextInt(5).toLong, rnd.nextInt(1000).toLong, i.toLong))
-    val rights = (1 to 200).map(i => (rnd.nextInt(5).toLong, rnd.nextInt(1000).toLong, i * 1.0))
-    val l      = lefts.toDF("k", "ts", "lid")
-    val r      = rights.toDF("k", "rts", "v")
-    val got = TemporalJoins
-      .asOfJoin(l, r, "k", "ts", "rts", Seq("v", "rts"))
-      .select("k", "ts", "lid", "asof_rts")
-      .collect()
-      .map(x => (x.getLong(2), if (x.isNullAt(3)) -1L else x.getLong(3)))
-      .toMap
-    // naive oracle computed driver-side
-    val byKey = rights.groupBy(_._1)
-    lefts.foreach { case (k, ts, lid) =>
-      val expect = byKey
-        .getOrElse(k, Seq())
-        .filter(_._2 <= ts)
-        .map(_._2)
-        .sorted
-        .lastOption
+    val rnd   = new scala.util.Random(11)
+    val types = Seq("click", "view", "purchase")
+    val rows = (1 to 300).map { i =>
+      (i.toLong, rnd.nextInt(5).toLong, rnd.nextInt(200).toLong, types(rnd.nextInt(types.size)))
+    }
+    val got = asOf(rows)
+    assert(got.size == rows.size)
+    // naive oracle computed driver-side: the latest click at or before
+    // each event in (ts, event_id) order
+    val clicks = rows.filter(_._4 == "click").groupBy(_._2)
+    rows.foreach { case (id, user, ts, _) =>
+      val expect = clicks
+        .getOrElse(user, Seq())
+        .filter(c => c._3 < ts || (c._3 == ts && c._1 <= id))
+        .map(_._3)
+        .maxOption
         .getOrElse(-1L)
-      assert(got(lid) == expect, s"lid=$lid k=$k ts=$ts")
+      assert(got(id) == expect, s"event_id=$id user=$user ts=$ts")
     }
   }
 
