@@ -16,38 +16,18 @@ object Sql {
     "orders", "lineitem", "events", "documents", "embeddings"
   )
 
-  /** Create (or replace) temp views for all tables under `dir`. Memoized per
-    * (session, dir): repeated calls (e.g. a benchmarked query invoking
-    * [[query]] every run) would otherwise re-read all ten parquet footers
-    * each time.
-    *
-    * Staleness contract: the memoized views (and Spark's cached file
-    * listings behind them) reflect the files as of the FIRST call for this
-    * (session, dir). A caller that rewrites the parquet fixtures under the
-    * same dir mid-session must pass `refresh = true`, which re-creates the
-    * views and drops the stale file-listing caches via
-    * `REFRESH TABLE` on each view.
+  /** Create (or replace) temp views for all tables under `dir`, each a
+    * fresh [[Tables]] read. Tables infers each schema once per file stamp,
+    * so a repeat call runs no Spark job, and a fixture rewritten under the
+    * same dir shows in the next call's views.
     */
-  def createViews(spark: SparkSession, dir: String, refresh: Boolean = false): Unit =
-    registered.synchronized {
-      if (refresh && registered.get(spark).contains(dir)) {
-        tableNames.foreach(n => spark.sql(s"REFRESH TABLE $n"))
-        registered.remove(spark)
-      }
-      if (!registered.get(spark).contains(dir)) {
-        val t = Tables(spark, dir)
-        tableNames.foreach { n =>
-          val df = n match {
-            case "events" => t.events // nanos→micros conversion applied
-            case other    => t.t(other)
-          }
-          df.createOrReplaceTempView(n)
-        }
-        registered(spark) = dir
-      }
+  def createViews(spark: SparkSession, dir: String): Unit = {
+    val t = Tables(spark, dir)
+    tableNames.foreach { n =>
+      // events carries the nanos→micros conversion
+      (if (n == "events") t.events else t.t(n)).createOrReplaceTempView(n)
     }
-
-  private val registered = scala.collection.mutable.WeakHashMap.empty[SparkSession, String]
+  }
 
   /** Views + query in one call. */
   def query(spark: SparkSession, dir: String, sql: String): DataFrame = {

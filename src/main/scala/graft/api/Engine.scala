@@ -48,9 +48,9 @@ import graft.sources.{LineSource, ParityLines}
   * then assigned at execution start, so they no longer reflect
   * submission order — that ordering guarantee is FIFO-mode parity.
   *
-  * `parityMode` selects the golden-parity rank-mod group router
-  * ([[graft.ops.GroupStage.rankMod]]) instead of the scalable hash router
-  * ([[graft.ops.GroupStage.hash]]); both count identical lines.
+  * `parityMode` selects the golden-parity rank-mod group router instead of
+  * the scalable hash router ([[graft.ops.GroupStage.counted]] takes the
+  * same flag); both count identical lines.
   *
   * `rawParity` is the byte-exact tier: lines keep their real terminators
   * ([[graft.sources.ParityLines.sortTasks]], which also models the

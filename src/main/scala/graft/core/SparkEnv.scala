@@ -72,7 +72,7 @@ object SparkEnv {
   * Catalyst pushes filters/column pruning into the parquet reader.
   */
 final class Tables(spark: SparkSession, dir: String) {
-  def t(name: String): DataFrame = spark.read.parquet(s"$dir/$name.parquet")
+  def t(name: String): DataFrame = Tables.read(spark, s"$dir/$name.parquet")
 
   def region: DataFrame     = t("region")
   def nation: DataFrame     = t("nation")
@@ -81,10 +81,7 @@ final class Tables(spark: SparkSession, dir: String) {
   def part: DataFrame       = t("part")
   def orders: DataFrame     = t("orders")
   def lineitem: DataFrame   = t("lineitem")
-  /** `ts` arrives as whatever the fixture generation chose (epoch-nanos
-    * int64 under nanosAsLong, or a native parquet timestamp);
-    * [[Tables.nanosToTimestamp]] normalizes every variant to TIMESTAMP_NTZ.
-    */
+  /** `ts` as TIMESTAMP_NTZ, whatever its encoding ([[Tables.nanosToTimestamp]]). */
   def events: DataFrame = Tables.nanosToTimestamp(t("events"))
   def documents: DataFrame  = t("documents")
   def embeddings: DataFrame = t("embeddings")
@@ -93,21 +90,40 @@ final class Tables(spark: SparkSession, dir: String) {
 object Tables {
   def apply(spark: SparkSession, dir: String): Tables = new Tables(spark, dir)
 
-  /** The one `ts` normalization, shared by batch and streaming readers so
-    * the two paths can never diverge. The fixture generator has shipped two
-    * physical encodings across rounds, so this adapts on the READ schema
-    * rather than assuming one:
-    *
-    *   - int64 epoch-nanos (parquet TIMESTAMP(NANOS) surfaced as LongType
-    *     by nanosAsLong): floor-divide to micros — integer `DIV`, not
-    *     double division, since epoch-nanos exceed 2^53;
-    *   - native timestamp[us] (TIMESTAMP_NTZ, or session-TZ TimestampType
-    *     when the file says isAdjustedToUTC): already micros.
-    *
-    * Every variant lands on TIMESTAMP_NTZ: the fixture timestamps are naive
-    * wall-clock values and the DuckDB oracle produces naive TIMESTAMPs —
-    * the session TZ is UTC, so the casts change only the logical type,
-    * never the instant.
+  /** The one parquet reader in src/main: `path` read with its schema given,
+    * so building the DataFrame runs no footer-read job. The schema is
+    * inferred once per file stamp (every data file under `path` with its
+    * relative name, length and mtime), so a rewritten file is re-inferred
+    * on its next read. Each call still makes a fresh relation: a self-join
+    * keeps distinct expression ids. Inference depends on the parquet
+    * settings [[SparkEnv.session]] fixes for every session.
+    */
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val schema = schemas.computeIfAbsent((path, stamp(spark, path)), _ => spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
+  }
+
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[
+    (String, Vector[(String, Long, Long)]), org.apache.spark.sql.types.StructType]()
+
+  private def stamp(spark: SparkSession, path: String): Vector[(String, Long, Long)] = {
+    val root  = new org.apache.hadoop.fs.Path(path)
+    val fs    = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val base  = fs.makeQualified(root).toUri.getPath
+    val files = fs.listFiles(root, true)
+    Iterator.continually(files).takeWhile(_.hasNext).map(_.next())
+      .filterNot(f => f.getPath.getName.startsWith("_") || f.getPath.getName.startsWith("."))
+      .map(f => (f.getPath.toUri.getPath.stripPrefix(base), f.getLen, f.getModificationTime))
+      .toVector.sorted
+  }
+
+  /** The one `ts` normalization. The fixture generator has shipped two
+    * physical encodings, so this adapts on the READ schema: int64
+    * epoch-nanos (TIMESTAMP(NANOS) under nanosAsLong) floor-divide to
+    * micros with integer `DIV` (epoch-nanos exceed 2^53); a native
+    * timestamp[us] is already micros. Every variant lands on TIMESTAMP_NTZ,
+    * as the DuckDB oracle's naive TIMESTAMPs; the session TZ is UTC, so the
+    * casts change only the logical type, never the instant.
     */
   def nanosToTimestamp(events: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.expr

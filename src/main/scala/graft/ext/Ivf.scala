@@ -218,11 +218,11 @@ object Ivf {
     * (one file per cell at fixture scale), so a probe's
     * `cid IN (...)` filter prunes non-probed cells at file-listing time.
     *
-    * Staleness contract (same as [[graft.Sql.createViews]]): the memoized
-    * index reflects the embeddings as of the first call for `dir` in this
-    * JVM; a caller that rewrites the fixture must drop the entry (restart
-    * or a new dir) — exactly the semantics of a production index that is
-    * rebuilt on a schedule, not per write.
+    * Staleness contract: the memoized index reflects the embeddings as of
+    * the first call for `dir` in this JVM; unlike a [[Tables]] read, it
+    * misses a rewritten fixture until a new dir or a restart — exactly the
+    * semantics of a production index that is rebuilt on a schedule, not
+    * per write.
     */
   def indexFor(spark: SparkSession, dir: String): Index =
     graft.core.SessionArtifact.memo(built, dir) {
@@ -268,8 +268,7 @@ object Ivf {
       .map(_._2)
       .toSeq
     val qvLit = array(queryEmb.toIndexedSeq.map(lit): _*)
-    spark.read
-      .parquet(index.path)
+    Tables.read(spark, index.path)
       .filter(col("cid").isInCollection(probes))
       .withColumn("cos", call_function("graft_cosine", col("embedding"), qvLit))
       .select("vec_id", "label", "cos")
@@ -487,8 +486,7 @@ object Ivf {
     "q_topic_clusters",
     (s, dir) => {
       val index = indexFor(s, dir)
-      s.read
-        .parquet(index.path)
+      Tables.read(s, index.path)
         .groupBy(col("cid").cast("int").as("cid"), col("label"))
         .agg(count(lit(1)).as("n_vecs"))
         .orderBy("cid", "label")

@@ -67,7 +67,7 @@ object SemDedup {
     val cvec = element_at(Ivf.centroidArrayLit(idx.centroids), col("cid") + 1)
       .getField("cvec")
     val withD2 = Ivf
-      .quantized(s.read.parquet(idx.path))
+      .quantized(Tables.read(s, idx.path))
       .withColumn("d2", Ivf.qdist(cvec))
       .select(col("vec_id"), col("cid").cast("int").as("cid"), col("d2"))
     val pairs = Similarity.cachedNearDupPairs(emb)

@@ -12,18 +12,18 @@ import org.apache.spark.rdd.{RDD, ShuffledRDD}
   * ([[MapStage.counted]]: [[combine]] or the fused wc kernel), so
   * [[counted]] only routes, and a distinct line crosses the shuffle once
   * per map task. [[expand]] re-emits every copy for a pipe and for the
-  * line-stream entry points ([[apply]], [[hash]], ...).
+  * line-stream entry point [[apply]].
   *
-  * Two routing modes:
+  * Two routing modes, chosen by `parityMode`:
   *
-  *   - [[hash]] (default, the scalable path): partition on
+  *   - hash (default, the scalable path): partition on
   *     `floorMod(line.hashCode, numReducers)` and sort within partitions —
   *     one exchange, no global ordering structure, survives any scale.
   *     Equal lines still land in one partition and adjacent, which is the
   *     only property reducers actually rely on (`wc_reduce.sh` counts
   *     adjacent equal keys).
   *
-  *   - [[rankMod]] (golden-parity mode): reproduces the reference's
+  *   - rank-mod (golden-parity mode): reproduces the reference's
   *     distinct-line round-robin router byte-for-byte
   *     (`/root/reference/mapreduce/manager/__main__.py:587-593`): walk the
   *     merged sorted stream, increment a counter on each NEW distinct line,
@@ -118,12 +118,6 @@ object GroupStage {
   def apply(lines: RDD[String], numReducers: Int, parityMode: Boolean): RDD[String] =
     counted(lines.mapPartitions(combine), numReducers, parityMode).mapPartitions(expand)
 
-  /** Scalable default: route by `floorMod(line.hashCode, numReducers)`. */
-  def hash(lines: RDD[String], numReducers: Int): RDD[String] = apply(lines, numReducers, parityMode = false)
-
-  /** Golden-parity rank-mod router (see object doc). */
-  def rankMod(lines: RDD[String], numReducers: Int): RDD[String] = apply(lines, numReducers, parityMode = true)
-
   /** Byte-exact rank-mod router over lines that CARRY their real trailing
     * newline (from [[graft.sources.ParityLines]]): sort order, the
     * distinct-line counter, and the bucket route all read the exact bytes
@@ -131,8 +125,8 @@ object GroupStage {
     * distinct line from "foo\n", sorting before it (nothing < '\n').
     * Output lines keep their raw bytes too; a sink that writes them
     * verbatim reproduces the reference's output files byte-for-byte
-    * including a missing final newline. Same path as [[rankMod]] under the
-    * identity ordering on the real bytes.
+    * including a missing final newline. Same path as [[apply]] with
+    * `parityMode` under the identity ordering on the real bytes.
     */
   def rankModRaw(rawLines: RDD[String], numReducers: Int): RDD[String] =
     rankRoute(rawLines.mapPartitions(combine), numReducers, Ordering.String).mapPartitions(expand)

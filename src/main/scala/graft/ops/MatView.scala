@@ -99,7 +99,7 @@ object MatView {
     "q_mv_refresh",
     (s, dir) => {
       val b     = baseFor(s, dir)
-      val base  = s.read.parquet(b.path)
+      val base  = Tables.read(s, b.path)
       val delta = rollup(Tables(s, dir).events.filter(col("event_id") >= b.watermark))
       base
         .unionByName(delta)

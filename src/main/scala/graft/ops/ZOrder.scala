@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions.col
   * and replaces two single-column sort orders.
   *
   * Memoized per fixture dir for the session — the production analog is an
-  * offline OPTIMIZE/compaction job whose output outlives any query (same
-  * staleness contract as [[graft.ext.Ivf.indexFor]]).
+  * offline OPTIMIZE/compaction job whose output outlives any query; rebuilt
+  * per session and dir, not when the fixture is rewritten.
   */
 object ZOrder {
 

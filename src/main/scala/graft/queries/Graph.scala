@@ -802,8 +802,7 @@ object GraphQueries {
     "q_conductance",
     (s, dir) => {
       val asg = Cached.frame(
-        s.read
-          .parquet(graft.ext.Ivf.indexFor(s, dir).path)
+        Tables.read(s, graft.ext.Ivf.indexFor(s, dir).path)
           .select(col("vec_id"), col("cid").cast("int").as("cid"))
       )
       val sym = lpSymEdges(s, dir)

@@ -61,11 +61,7 @@ object Pipeline {
     )
   )
 
-  /** Stopword list shared with q_langid's heuristic (kept literal here so
-    * the oracle fragment below can't drift from the Spark expression).
-    */
-  private val StopWords = Seq("the", "of", "and", "to", "in", "a", "is")
-  private val StopList  = StopWords.map(w => s"'$w'").mkString("(", ", ", ")")
+  import TextQueries.{StopList, StopWords}
 
   /** C4-style corpus cleaning as ONE plan: language-ID gate → quality gate
     * → exact-dedup keep-first → MinHash near-dup drop, emitting one row
@@ -581,7 +577,7 @@ object Pipeline {
         graft.core.BuildWalls.record("contam_expansion", (System.nanoTime() - t0) / 1e9)
         out
       }
-      docs.sparkSession.read.parquet(dir).orderBy("test_id", "leak_id")
+      Tables.read(docs.sparkSession, dir).orderBy("test_id", "leak_id")
     }
   }
 
@@ -1166,9 +1162,10 @@ object Pipeline {
           col("n_langs"),
           col("n_distinct_texts"),
           (col("n_docs") - col("n_distinct_texts")).as("dup_docs"),
-          expr("((n_docs - n_distinct_texts) * 1000000L) div n_docs").as("dup_ppm"),
+          // NULL on an empty corpus, as DuckDB's `// 0`
+          expr("((n_docs - n_distinct_texts) * 1000000L) div nullif(n_docs, 0)").as("dup_ppm"),
           col("n_tokens"),
-          expr("n_tokens div n_docs").as("mean_tokens"),
+          expr("n_tokens div nullif(n_docs, 0)").as("mean_tokens"),
           col("n_chars")
         )
     },
@@ -1341,7 +1338,7 @@ object Pipeline {
         Seq(a1)
       }
       jobs += eng.submitStage { sp =>
-        val cleaned = sp.read.parquet(a1)
+        val cleaned = Tables.read(sp, a1)
         val segs = graft.core.Cached.frame(
           cleaned
             .select(col("doc_id"), split(col("text"), " ").as("words"))
@@ -1384,7 +1381,7 @@ object Pipeline {
         Seq(a2)
       }
       jobs += eng.submitStage { sp =>
-        val s2docs = sp.read.parquet(a2)
+        val s2docs = Tables.read(sp, a2)
         val drops = Dedup
           .nearDuplicatesUncollapsed(s2docs.select("doc_id", "text"), 1, 5)
           .select(col("d2").as("doc_id"))
@@ -1397,7 +1394,7 @@ object Pipeline {
       jobs += eng.submitStage { sp =>
         val h = md5(col("doc_id").cast("string").cast("binary"))
         val w = Window.partitionBy("source").orderBy(h, col("doc_id"))
-        sp.read.parquet(a3)
+        Tables.read(sp, a3)
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") <= PipeMixCap)
           .select(
@@ -1415,7 +1412,7 @@ object Pipeline {
           .partitionBy("source")
           .orderBy("doc_id")
           .rowsBetween(Window.unboundedPreceding, -1)
-        sp.read.parquet(a4)
+        Tables.read(sp, a4)
           .withColumn("before", coalesce(sum("n_tok").over(w), lit(0L)))
           .select(
             col("source"),
@@ -1428,10 +1425,10 @@ object Pipeline {
       }
       jobs += eng.submitStage { sp =>
         val nInput    = Tables(sp, dir).documents.count()
-        val nClean    = sp.read.parquet(a1).count()
-        val nSegdedup = sp.read.parquet(a2).count()
-        val nNeardup  = sp.read.parquet(a3).count()
-        sp.read.parquet(a5)
+        val nClean    = Tables.read(sp, a1).count()
+        val nSegdedup = Tables.read(sp, a2).count()
+        val nNeardup  = Tables.read(sp, a3).count()
+        Tables.read(sp, a5)
           .agg(
             count(lit(1)).as("n_mix"),
             countDistinct(col("source"), col("pack_id")).as("n_packs"),
@@ -1487,7 +1484,7 @@ object Pipeline {
     */
   val pipelineE2E: Q = Q(
     "q_pipeline_e2e",
-    (s, dir) => s.read.parquet(s"${stagedWorkFor(s, dir)}/s6_card"),
+    (s, dir) => Tables.read(s, s"${stagedWorkFor(s, dir)}/s6_card"),
     Some(
       s"""WITH lng AS (
          |  SELECT doc_id,

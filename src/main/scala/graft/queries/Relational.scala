@@ -1856,7 +1856,8 @@ object Relational {
       .select(
         col("l_returnflag"),
         col("n"),
-        ((col("sxy") - col("sx") * col("sy") / col("n")) / (col("n") - 1))
+        // NULL for a 1-row group, as DuckDB's `/ 0`
+        ((col("sxy") - col("sx") * col("sy") / col("n")) / nullif(col("n") - 1, lit(0L)))
           .as("covar_qty_price"),
         Num.pearson(col("n"), col("sx"), col("sy"), col("sxx"), col("syy"), col("sxy"))
           .as("corr_qty_price")
@@ -2086,8 +2087,7 @@ object Relational {
       |FROM lineitem
       |WHERE l_partkey BETWEEN 64 AND 255 AND l_suppkey BETWEEN 16 AND 47""".stripMargin
   ) { (s, dir) =>
-    s.read
-      .parquet(graft.ops.ZOrder.layoutFor(s, dir))
+    Tables.read(s, graft.ops.ZOrder.layoutFor(s, dir))
       .filter(col("l_partkey").between(64, 255) && col("l_suppkey").between(16, 47))
       .agg(
         count(lit(1)).as("n"),

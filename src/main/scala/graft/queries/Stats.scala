@@ -113,7 +113,8 @@ object StatsQueries {
           col("n_a"),
           col("n_b"),
           col("d_num"),
-          expr("d_num * 1000000L div (n_a * n_b)").as("ks_ppm"),
+          // NULL when a cohort is empty, as DuckDB's `// 0`
+          expr("d_num * 1000000L div nullif(n_a * n_b, 0)").as("ks_ppm"),
           col("cents").as("at_cents")
         )
     },
@@ -225,12 +226,15 @@ object StatsQueries {
           m2(when(!a, vv).otherwise(lit(0).cast(org.apache.spark.sql.types.DecimalType(25, 4))))
             .as("svv_b")
         )
+      // an empty cohort divides by NULL, not 0: NULL moments, as DuckDB's `/ 0`
+      val na = nullif(col("n_a"), lit(0L))
+      val nb = nullif(col("n_b"), lit(0L))
       val res = agg
-        .withColumn("mean_a", col("sv_a") / col("n_a"))
-        .withColumn("mean_b", col("sv_b") / col("n_b"))
-        .withColumn("var_a", col("svv_a") / col("n_a") - col("mean_a") * col("mean_a"))
-        .withColumn("var_b", col("svv_b") / col("n_b") - col("mean_b") * col("mean_b"))
-        .withColumn("se2", col("var_a") / col("n_a") + col("var_b") / col("n_b"))
+        .withColumn("mean_a", col("sv_a") / na)
+        .withColumn("mean_b", col("sv_b") / nb)
+        .withColumn("var_a", col("svv_a") / na - col("mean_a") * col("mean_a"))
+        .withColumn("var_b", col("svv_b") / nb - col("mean_b") * col("mean_b"))
+        .withColumn("se2", col("var_a") / na + col("var_b") / nb)
       res
         .withColumn(
           "welch_z",

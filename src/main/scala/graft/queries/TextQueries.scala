@@ -82,8 +82,9 @@ object TextQueries {
     )
   )
 
-  private val StopWords = Seq("the", "of", "and", "to", "in", "a", "is")
-  private val StopList  = StopWords.map(w => s"'$w'").mkString("(", ", ", ")")
+  // q_langid's stopwords (and their oracle SQL list), shared with Pipeline's gates
+  private[queries] val StopWords = Seq("the", "of", "and", "to", "in", "a", "is")
+  private[queries] val StopList  = StopWords.map(w => s"'$w'").mkString("(", ", ", ")")
 
   /** N-gram/stopword language-ID heuristic: fraction of whitespace tokens
     * that are common English function words. Declarative: token explode →
@@ -1168,8 +1169,10 @@ object TextQueries {
       )
       .localCheckpoint(false)
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long)]
-    for (k <- 1 to bpeIters) {
-      val top = vocab
+    // stops early once no word has two symbols left (or no word at all)
+    var exhausted = false
+    while (!exhausted && merges.size < bpeIters) {
+      vocab
         .withColumn("sy", split(trim(col("w")), "  "))
         .filter(size(col("sy")) >= 2)
         .select(
@@ -1182,16 +1185,20 @@ object TextQueries {
         .agg(sum("f").as("n"))
         .orderBy(col("n").desc, col("pair"))
         .limit(1)
-        .collect()(0)
-      val pair = top.getString(0)
-      merges += ((k.toLong, pair, top.getLong(1)))
-      val (a, b) = pair.splitAt(pair.indexOf(' ')) match { case (x, y) => (x, y.tail) }
-      vocab = vocab
-        .withColumn(
-          "w",
-          call_function("replace", col("w"), lit(s" $a  $b "), lit(s" $a$b "))
-        )
-        .localCheckpoint(false)
+        .collect()
+        .headOption match {
+        case None => exhausted = true
+        case Some(top) =>
+          val pair = top.getString(0)
+          merges += ((merges.size + 1L, pair, top.getLong(1)))
+          val (a, b) = pair.splitAt(pair.indexOf(' ')) match { case (x, y) => (x, y.tail) }
+          vocab = vocab
+            .withColumn(
+              "w",
+              call_function("replace", col("w"), lit(s" $a  $b "), lit(s" $a$b "))
+            )
+            .localCheckpoint(false)
+      }
     }
     (merges.toSeq, vocab)
   }

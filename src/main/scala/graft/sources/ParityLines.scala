@@ -27,7 +27,7 @@ import org.apache.spark.rdd.RDD
   *
   * It reads each file whole, as the reference's one-worker-per-file sort
   * does, which suits the PARITY tier only: parity fixtures are
-  * file-per-mapper sized. The scalable tier ([[graft.ops.GroupStage.hash]])
+  * file-per-mapper sized. The scalable tier (the hash router of [[graft.ops.GroupStage.counted]])
   * reads splits of files through [[LineSource]], stripping terminators —
   * at 100 TB the trailing byte of one file is not worth giving up
   * record-level splits, which is the same trade Hadoop's TextInputFormat

@@ -58,8 +58,7 @@ object SpillProbe {
     val heavyMem = memSpilled.get()
 
     try {
-      spark.read
-        .parquet(s"$sfDir/lineitem.parquet")
+      graft.core.Tables(spark, sfDir).lineitem
         .withColumn("rep", explode(array((0 until 8).map(lit(_)): _*)))
         .withColumn(
           "pad",

@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Tables
+
 /** Pathological-corpus generator for the scale-stress harness: writes a
   * `mult`× (default 10×) blow-up of a fixture dir in two variants of the
   * SAME cardinality, so a timing ratio between them isolates the effect of
@@ -53,8 +55,7 @@ object StressGen {
     * exact-dup group is EXACTLY the injected rows.
     */
   def hotText(spark: SparkSession, baseDir: String): String = {
-    val t = spark.read
-      .parquet(s"$baseDir/documents.parquet")
+    val t = Tables(spark, baseDir).documents
       .filter(col("doc_id") === 0L)
       .select(col("text"))
       .head()
@@ -74,7 +75,7 @@ object StressGen {
     )
 
   def documents(spark: SparkSession, baseDir: String, mult: Int, hot: Boolean): DataFrame = {
-    val base = spark.read.parquet(s"$baseDir/documents.parquet")
+    val base = Tables(spark, baseDir).documents
     val replicas = (0 until mult)
       .map { i =>
         base.select(
@@ -104,7 +105,7 @@ object StressGen {
     * session/window structure per user clone.
     */
   def events(spark: SparkSession, baseDir: String, mult: Int, hot: Boolean): DataFrame = {
-    val base = spark.read.parquet(s"$baseDir/events.parquet")
+    val base = Tables(spark, baseDir).t("events")
     val replicas = (0 until mult)
       .map { i =>
         base.select(
@@ -126,7 +127,7 @@ object StressGen {
   }
 
   def lineitem(spark: SparkSession, baseDir: String, mult: Int, hot: Boolean): DataFrame = {
-    val base = spark.read.parquet(s"$baseDir/lineitem.parquet")
+    val base = Tables(spark, baseDir).lineitem
     val replicas = (0 until mult)
       .map(i => base.withColumn("l_orderkey", col("l_orderkey") + lit(i * IdStride)))
       .reduce(_ unionByName _)
@@ -144,7 +145,7 @@ object StressGen {
     * first are seeded-perturbed so bucket occupancy grows ~uniformly.
     */
   def embeddings(spark: SparkSession, baseDir: String, mult: Int): DataFrame = {
-    val base = spark.read.parquet(s"$baseDir/embeddings.parquet")
+    val base = Tables(spark, baseDir).embeddings
     (0 until mult)
       .map { i =>
         val emb =
@@ -172,14 +173,13 @@ object StressGen {
     * prefix before MinHash runs, which StressSpec proves quantitatively.
     */
   def boilerplateCorpus(spark: SparkSession, baseDir: String, outDir: String, n: Int): Unit = {
-    val base   = spark.read.parquet(s"$baseDir/documents.parquet").limit(n)
+    val base   = Tables(spark, baseDir).documents.limit(n)
     val boiler = {
       // 64 mostly-DISTINCT words (concatenating several docs, not cycling
       // one — a cycled prefix repeats its 3-gram shingles and weakens the
       // very Jaccard lift the pathology is about), so the prefix tiles 8
       // full 8-word segments and contributes ~62 shared shingles per doc
-      val words = spark.read
-        .parquet(s"$baseDir/documents.parquet")
+      val words = Tables(spark, baseDir).documents
         .filter(col("doc_id") < 4)
         .orderBy("doc_id")
         .collect()
@@ -221,7 +221,7 @@ object StressGen {
     out("events", events(spark, baseDir, mult, hot), 4 * partsScale)
     out("lineitem", lineitem(spark, baseDir, mult, hot), 8 * partsScale)
     out("embeddings", embeddings(spark, baseDir, mult), 4 * partsScale)
-    copiedAsIs.foreach(t => out(t, spark.read.parquet(s"$baseDir/$t.parquet"), 1))
+    copiedAsIs.foreach(t => out(t, Tables(spark, baseDir).t(t), 1))
   }
 
   def main(args: Array[String]): Unit = {

@@ -179,6 +179,18 @@ class CoverageSpec extends AnyFunSuite {
     assert(code.exists(_._1 == "core/Iterate.scala"), "is the working directory the repo root?")
   }
 
+  /** Table access has one reader, [[graft.core.Tables]]: a raw parquet read
+    * re-infers its schema with a Spark job on every call. Comments are
+    * ignored; a multi-line `x.read` ending its line counts too.
+    */
+  test("src/main reads parquet only through core/Tables") {
+    val rawRead = """read\.parquet|spark\.read|\.read\s*$""".r
+    val code    = codeSites(line => rawRead.findFirstIn(line).nonEmpty)
+    val stray   = code.filterNot(_._1 == "core/SparkEnv.scala")
+    assert(stray.isEmpty, s"raw parquet reads outside core/SparkEnv: ${stray.mkString(", ")}")
+    assert(code.nonEmpty, "is the working directory the repo root?")
+  }
+
   /** The exact-Jaccard hash tier has one owner, [[graft.ext.SetSim]]: the
     * intra-doc collision marker `hok`, the hash-array intersect, their
     * bounds and the verify's join order are written once, so the

@@ -20,7 +20,7 @@ class GroupStageSpec extends SparkSpec {
 
   test("rank-mod router reproduces reduce01/reduce02 goldens byte-for-byte") {
     val lines  = spark.sparkContext.parallelize(mapperOut, 4)
-    val routed = GroupStage.rankMod(lines, 2)
+    val routed = GroupStage(lines, 2, parityMode = true)
     val parts = routed
       .mapPartitionsWithIndex { case (i, it) => Iterator((i, it.toList)) }
       .collect()
@@ -58,8 +58,7 @@ class GroupStageSpec extends SparkSpec {
     val lines = spark.sparkContext.parallelize(new scala.util.Random(7).shuffle(combineData), 8)
     // n = 1 puts every prefix pair in one partition, so their order is pinned
     for (n <- Seq(1, 3)) {
-      val parts = GroupStage
-        .hash(lines, n)
+      val parts = GroupStage(lines, n, parityMode = false)
         .mapPartitionsWithIndex { case (i, it) => Iterator((i, it.toList)) }
         .collect()
         .toMap
@@ -94,7 +93,7 @@ class GroupStageSpec extends SparkSpec {
     sc.addSparkListener(listener)
     try {
       sc.setJobGroup(group, "count the hash router's shuffle records")
-      try GroupStage.hash(lines, 3).count()
+      try GroupStage(lines, 3, parityMode = false).count()
       finally sc.clearJobGroup()
       // listener events arrive asynchronously: wait for all 8 map tasks
       val deadline = System.nanoTime() + 30L * 1000000000L
@@ -122,8 +121,7 @@ class GroupStageSpec extends SparkSpec {
 
   test("hash router over one partition past the combine bound equals the driver-side model") {
     val n = 3
-    val parts = GroupStage
-      .hash(spark.sparkContext.parallelize(overBound, 1), n)
+    val parts = GroupStage(spark.sparkContext.parallelize(overBound, 1), n, parityMode = false)
       .mapPartitionsWithIndex { case (i, it) => Iterator((i, it.toList)) }
       .collect()
       .toMap
@@ -142,7 +140,7 @@ class GroupStageSpec extends SparkSpec {
     val input = Seq("worker06/test_worker_06.group_input01", "worker06/test_worker_06.group_input02")
       .flatMap(f => readLines(resource(s"groupstage/$f")))
     val lines  = spark.sparkContext.parallelize(input, 2)
-    val merged = GroupStage.rankMod(lines, 1)
+    val merged = GroupStage(lines, 1, parityMode = true)
       .collect()
       .toList
     assert(merged == input.sorted)
@@ -155,7 +153,7 @@ class GroupStageSpec extends SparkSpec {
   test("rank-mod assigns consecutive sorted distinct lines round-robin") {
     val data  = Seq("a\t1", "b\t1", "c\t1", "d\t1", "e\t1", "a\t1")
     val lines = spark.sparkContext.parallelize(data, 2)
-    val parts = GroupStage.rankMod(lines, 2)
+    val parts = GroupStage(lines, 2, parityMode = true)
       .mapPartitionsWithIndex { case (i, it) => Iterator((i, it.toList)) }
       .collect()
       .toMap
@@ -231,8 +229,8 @@ class GroupStageSpec extends SparkSpec {
       // the stripped-line router merges the two foo lines into ONE distinct
       // (both copies in one bucket, 4 counter slots instead of 5) — the gap
       // this reader+router pair exists to close
-      val stripped = GroupStage
-        .rankMod(spark.sparkContext.parallelize(rawLines.map(_.stripSuffix("\n")), 2), 2)
+      val stripped = GroupStage(
+        spark.sparkContext.parallelize(rawLines.map(_.stripSuffix("\n")), 2), 2, parityMode = true)
         .mapPartitionsWithIndex { case (i, it) => Iterator((i, it.toList)) }
         .collect()
         .toMap

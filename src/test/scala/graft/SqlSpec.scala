@@ -59,7 +59,7 @@ class SqlSpec extends SparkSpec {
     assert(df.count() == 5)
   }
 
-  test("createViews(refresh = true) re-reads fixtures rewritten under the same dir") {
+  test("createViews re-reads fixtures rewritten under the same dir") {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     val tmp = Files.createTempDirectory("graft-sql-refresh").toFile
     tmp.deleteOnExit()
@@ -90,9 +90,29 @@ class SqlSpec extends SparkSpec {
       Paths.get(dir, "documents.parquet"),
       StandardCopyOption.REPLACE_EXISTING
     )
-    Sql.createViews(spark, dir, refresh = true)
     val after =
       Sql.query(spark, dir, "SELECT COUNT(*) AS c FROM documents").collect()(0).getLong(0)
-    assert(after == 100, s"refresh must surface the rewritten fixture (got $after)")
+    assert(after == 100, s"the views must surface the rewritten fixture (got $after)")
+  }
+
+  test("a repeat Tables read runs no Spark job and mints a fresh relation") {
+    val first         = graft.core.Tables(spark, sf).lineitem
+    val (again, jobs) = jobsDuring(graft.core.Tables(spark, sf).lineitem)
+    assert(jobs == 0, s"a repeat read ran $jobs Spark jobs; the schema must come from the memo")
+    assert(again.schema == first.schema)
+    // distinct expression ids, so a self-join of two reads resolves
+    assert(first.queryExecution.analyzed.output.map(_.exprId).intersect(
+      again.queryExecution.analyzed.output.map(_.exprId)).isEmpty)
+  }
+
+  test("Tables re-infers the schema of a dataset rewritten under the same path") {
+    val tmp  = java.nio.file.Files.createTempDirectory("graft-tables-stamp")
+    val path = s"$tmp/t.parquet"
+    try {
+      spark.range(3).write.parquet(path)
+      assert(graft.core.Tables.read(spark, path).columns.toSeq == Seq("id"))
+      spark.range(3).selectExpr("id", "id * 2 AS x").write.mode("overwrite").parquet(path)
+      assert(graft.core.Tables.read(spark, path).columns.toSeq == Seq("id", "x"))
+    } finally graft.ops.Sinks.deleteQuietly(tmp)
   }
 }
