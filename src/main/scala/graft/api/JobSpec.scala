@@ -35,8 +35,8 @@ final case class JobSpec(
 
 /** Completed-job summary: id plus the final `outputfileNN` paths.
   * `startedNanos`/`finishedNanos` bracket the job's execution on the
-  * engine's pool (monotonic clock) — the observable that lets a client,
-  * and `EngineSpec`, verify whether two jobs actually ran concurrently.
+  * engine's single-thread queue (monotonic clock), so a client can see
+  * each job's own wall and that queued jobs ran one after another.
   */
 final case class JobResult(
     jobId: Int,

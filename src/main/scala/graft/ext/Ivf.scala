@@ -507,36 +507,28 @@ object Ivf {
   val PqIters   = 1
   val PqShort   = 50
 
-  private val pqModels =
-    scala.collection.mutable.Map.empty[String, Array[Array[(Int, Array[Long])]]]
+  private type Codebooks = Array[Array[(Int, Array[Long])]]
 
-  /** Per-subspace codebooks: [[kmeansFit]] on each SubDim-slice of the
-    * integer-grid vectors (memoized per fixture dir — the offline
-    * codebook-training job of a production PQ index). Driver traffic per
-    * fit is K·SubDim integers per iteration, M fits total.
-    */
+  private val pqModels =
+    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.FutureTask[Codebooks]]()
+
   /** Warm-up hook: train (and memoize) the PQ codebooks for `dir` — the
     * offline codebook-build analog of [[indexFor]], called by Bench so
     * q_ann_pq timings measure the coding+ADC query path, not the fit.
     */
   def pqWarm(spark: SparkSession, dir: String): Unit = { pqCodebooks(spark, dir); () }
 
-  private def pqCodebooks(
-      spark: SparkSession,
-      dir: String): Array[Array[(Int, Array[Long])]] =
-    pqModels.synchronized {
-      pqModels.getOrElseUpdate(
-        dir, {
-          val q = quantized(Tables(spark, dir).embeddings)
-          (0 until PqM).map { s =>
-            val sub = q.select(
-              col("vec_id"),
-              slice(col("qv"), s * PqSubDim + 1, PqSubDim).as("qv")
-            )
-            kmeansFit(sub, PqK, PqIters)
-          }.toArray
-        }
-      )
+  /** Per-subspace codebooks: [[kmeansFit]] on each SubDim-slice of the
+    * integer-grid vectors (memoized per fixture dir — the offline
+    * codebook-training job of a production PQ index). Driver traffic per
+    * fit is K·SubDim integers per iteration, M fits total.
+    */
+  private def pqCodebooks(spark: SparkSession, dir: String): Codebooks =
+    graft.core.SessionArtifact.memo(pqModels, dir) {
+      val q = quantized(Tables(spark, dir).embeddings)
+      (0 until PqM).map { s =>
+        kmeansFit(q.select(col("vec_id"), slice(col("qv"), s * PqSubDim + 1, PqSubDim).as("qv")), PqK, PqIters)
+      }.toArray
     }
 
   private def subDist(sv: Column, cvec: Column): Column =

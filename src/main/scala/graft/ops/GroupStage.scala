@@ -34,6 +34,12 @@ import org.apache.spark.rdd.{RDD, ShuffledRDD}
   *     Note the quirk kept deliberately: routing is per distinct *line*
   *     (key AND value), not per key — same key with different values can
   *     split across reducers, exactly like the reference.
+  *
+  * Both modes route lines without their terminators. The reference sorts
+  * `readlines()` output, so to it an unterminated last line `foo` is a
+  * distinct line from `foo\n`; here they are one line, as Hadoop's
+  * TextInputFormat reads them. On newline-terminated input, the only
+  * kind the reference's goldens hold, rank-mod routes byte-for-byte.
   */
 object GroupStage {
 
@@ -54,10 +60,6 @@ object GroupStage {
     * continuing with '\t' (0x09 < 0x0A) — so lines compare as if each
     * carried a trailing '\n'. [[compareLines]] does that without building
     * the two strings.
-    *
-    * Lines that carry their real terminator (the raw-parity tier,
-    * [[graft.sources.ParityLines]]) are ordered on their exact bytes
-    * instead, by [[rankModRaw]].
     */
   private val lineOrdering: Ordering[String] = (a, b) => compareLines(a, b)
 
@@ -112,109 +114,23 @@ object GroupStage {
     * counted reduce inputs, hash- or (`parityMode`) rank-mod-routed.
     */
   def counted(counts: RDD[(String, Long)], numReducers: Int, parityMode: Boolean): RDD[(String, Long)] =
-    if (parityMode) rankRoute(counts, numReducers, lineOrdering)
+    if (parityMode) rankRoute(counts, numReducers)
     else shuffleCounts(counts, new HashPartitioner(numReducers)).setKeyOrdering(lineOrdering)
 
   def apply(lines: RDD[String], numReducers: Int, parityMode: Boolean): RDD[String] =
     counted(lines.mapPartitions(combine), numReducers, parityMode).mapPartitions(expand)
 
-  /** Byte-exact rank-mod router over lines that CARRY their real trailing
-    * newline (from [[graft.sources.ParityLines]]): sort order, the
-    * distinct-line counter, and the bucket route all read the exact bytes
-    * the reference's `readlines()` would hold — an unterminated "foo" is a
-    * distinct line from "foo\n", sorting before it (nothing < '\n').
-    * Output lines keep their raw bytes too; a sink that writes them
-    * verbatim reproduces the reference's output files byte-for-byte
-    * including a missing final newline. Same path as [[apply]] with
-    * `parityMode` under the identity ordering on the real bytes.
-    */
-  def rankModRaw(rawLines: RDD[String], numReducers: Int): RDD[String] =
-    rankRoute(rawLines.mapPartitions(combine), numReducers, Ordering.String).mapPartitions(expand)
-
-  /** The one rank-mod router: sum each distinct line's counts, sort the
-    * distinct lines under `ord` and rank them (`zipWithIndex` launches one
+  /** The rank-mod router: sum each distinct line's counts, sort the
+    * distinct lines and rank them (`zipWithIndex` launches one
     * job to count per-partition sizes — no single-partition bottleneck), then
     * route rank `r` to bucket `r % numReducers`. Within a bucket, rank
-    * order IS `ord` order, so sorting on the rank sorts the lines.
+    * order IS line order, so sorting on the rank sorts the lines.
     */
-  private def rankRoute(counts: RDD[(String, Long)], numReducers: Int, ord: Ordering[String]): RDD[(String, Long)] =
+  private def rankRoute(counts: RDD[(String, Long)], numReducers: Int): RDD[(String, Long)] =
     shuffleCounts(counts, Partitioner.defaultPartitioner(counts))
-      .sortBy(_._1)(ord, implicitly)
+      .sortBy(_._1)(lineOrdering, implicitly)
       .zipWithIndex()
       .map(_.swap)
       .repartitionAndSortWithinPartitions(new RankPartitioner(numReducers))
       .values
-
-  /** The reference's FULL group-stage cascade, byte-exact (round 13; input
-    * is [[graft.sources.ParityLines.sortTasks]]'s per-task line streams):
-    *
-    *   1. worker sort task: sort the task's lines (which CARRY their real
-    *      newlines), then `"".join` and write — so an unterminated line
-    *      GLUES onto its sort-successor inside the joined bytes
-    *      (`/root/reference/mapreduce/worker/__main__.py:180-186`);
-    *   2. the manager re-reads each sorted file line-by-line — the glued
-    *      bytes re-split on '\n' only (`manager/__main__.py:570-572` open +
-    *      iterate);
-    *   3. `heapq.merge` across the per-task streams (tie-break: earlier
-    *      stream), then the distinct-line counter routes line i of the
-    *      merged walk to `count % numReducers` (`manager/__main__.py:
-    *      585-593`).
-    *
-    * When every re-split stream is still sorted — ALWAYS true for
-    * newline-terminated corpora, and for unterminated tails that sort last
-    * in their task — heapq.merge's emission order IS the global sort, the
-    * distinct walk IS sorted-distinct rank, and the whole cascade equals
-    * [[rankModRaw]] over the flattened streams: that distributed path runs.
-    * A glued line can break stream sortedness (e.g. lines {"b", "b\n",
-    * "ba\n"} join to "bb\nba\n" — "bb\n" > "ba\n"); heapq.merge's output is
-    * then NOT the global sort, so the cascade falls back to an exact
-    * driver-side simulation — the parity tier is golden-fixture scale by
-    * definition (see [[graft.sources.ParityLines]]'s scaladoc for why the
-    * scalable tier keeps stripped splittable reads).
-    */
-  def referenceGroup(taskStreams: RDD[(Int, Seq[String])], numReducers: Int): RDD[String] = {
-    val streams = taskStreams.mapValues { lines =>
-      graft.sources.ParityLines.splitKeepingNewlines(lines.sorted.mkString(""))
-    }
-    val anomalies = streams
-      .filter { case (_, s) => s.lazyZip(s.drop(1)).exists(_ > _) }
-      .count()
-    if (anomalies == 0L) rankModRaw(streams.flatMap(_._2), numReducers)
-    else {
-      val sc        = taskStreams.sparkContext
-      val collected = streams.collect().sortBy(_._1).map(_._2).toSeq
-      val buckets   = Array.fill(numReducers)(Vector.newBuilder[String])
-      var count     = -1
-      var prev: String = null
-      heapqMerge(collected).foreach { line =>
-        if (line != prev) { prev = line; count += 1 }
-        buckets(count % numReducers) += line
-      }
-      val routed = buckets.map(_.result())
-      // parallelize(0 until n, n) places element i in partition i, so the
-      // bucket id stays the partition id exactly like the fast path
-      sc.parallelize(0 until numReducers, numReducers).flatMap(i => routed(i))
-    }
-  }
-
-  /** `heapq.merge` semantics: k sorted-ish streams, always pop the smallest
-    * head, ties broken toward the earlier stream (Python enqueues
-    * (value, stream-order) tuples). With unsorted streams (the glue
-    * anomaly) the output is NOT globally sorted but is exactly what the
-    * reference's manager walks.
-    */
-  private[graft] def heapqMerge(streams: Seq[Seq[String]]): Iterator[String] = {
-    val iters = streams.map(_.iterator).toArray
-    implicit val ord: Ordering[(String, Int)] = Ordering.Tuple2[String, Int].reverse
-    val pq = scala.collection.mutable.PriorityQueue.empty[(String, Int)]
-    for (i <- iters.indices if iters(i).hasNext) pq.enqueue((iters(i).next(), i))
-    new Iterator[String] {
-      def hasNext: Boolean = pq.nonEmpty
-      def next(): String = {
-        val (line, i) = pq.dequeue()
-        if (iters(i).hasNext) pq.enqueue((iters(i).next(), i))
-        line
-      }
-    }
-  }
 }

@@ -14,10 +14,10 @@ import org.apache.spark.rdd.RDD
   * pre-existing output directory — mirroring `_move_result_files`
   * (`/root/reference/mapreduce/manager/__main__.py:738-761`).
   *
-  * One writer serves both tiers: partition N's task writes `outputfileNN`
-  * under a name unique to its attempt, then renames it over the target
-  * atomically. A failed attempt deletes its temp file, so a retried or
-  * speculative attempt never leaves a torn or stray file.
+  * Partition N's task writes `outputfileNN` under a name unique to its
+  * attempt, then renames it over the target atomically. A failed attempt
+  * deletes its temp file, so a retried or speculative attempt never leaves
+  * a torn or stray file.
   */
 object Sinks {
 
@@ -41,32 +41,21 @@ object Sinks {
     try deleteRecursively(p)
     catch { case NonFatal(_) => () }
 
-  /** Write `reduced` as '\n'-terminated outputfileNN files; returns their paths. */
-  def outputFiles(reduced: RDD[String], outputDirectory: String): Seq[String] =
-    write(reduced, outputDirectory, "\n")
-
-  /** Byte-verbatim sink for the raw-parity tier: lines already CARRY their
-    * real terminators (from [[graft.sources.ParityLines]] /
-    * [[GroupStage.referenceGroup]]), so each partition's bytes are written
-    * EXACTLY — no appended newline, reproducing the reference's output
-    * files including a missing final newline.
+  /** Write `reduced` as '\n'-terminated outputfileNN files, partition i's
+    * task writing `outputfile(i+1)`; returns their paths.
     */
-  def outputFilesRaw(grouped: RDD[String], outputDirectory: String): Seq[String] =
-    write(grouped, outputDirectory, "")
-
-  /** The one writer: partition i's task writes `outputfile(i+1)`. */
-  private def write(rdd: RDD[String], outputDirectory: String, terminator: String): Seq[String] = {
+  def outputFiles(reduced: RDD[String], outputDirectory: String): Seq[String] = {
     val out = Paths.get(outputDirectory)
     deleteRecursively(out)
     Files.createDirectories(out)
     val dir = out.toAbsolutePath.toString
-    rdd
+    reduced
       .mapPartitionsWithIndex { case (i, it) =>
         val name = f"outputfile${i + 1}%02d"
         val tmp  = Paths.get(dir, s".$name.${TaskContext.get().taskAttemptId()}")
         try {
           val w = Files.newBufferedWriter(tmp, StandardCharsets.UTF_8)
-          try it.foreach(line => w.append(line).append(terminator))
+          try it.foreach(line => w.append(line).append('\n'))
           finally w.close()
           Files.move(tmp, Paths.get(dir, name), StandardCopyOption.ATOMIC_MOVE)
         } finally Files.deleteIfExists(tmp) // a no-op once moved

@@ -406,10 +406,11 @@ object EventQueries {
 
   /** Days-since-epoch bucket (truncating integer division of epoch micros —
     * `//` flooring in the DuckDB mirrors agrees for the fixtures' positive
-    * epochs). ONE definition shared by the resample queries so the
-    * bucketing rule can never diverge between them.
+    * epochs). ONE definition shared by the resample queries and
+    * [[StatsQueries]]' day buckets so the bucketing rule can never diverge
+    * between them.
     */
-  private def dayOf(ts: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+  private[queries] def dayOf(ts: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     call_function("div", unix_micros(ts.cast("timestamp")), lit(86400000000L))
 
   /** The dense (user_id, day) grid spanning each user's [first, last] day —

@@ -22,10 +22,8 @@ import graft.ops.PrefixSum
   * [[graft.ops.PrefixSum]] rather than a keyless window.
   */
 object StatsQueries {
+  import EventQueries.dayOf
   import Num._
-
-  private def dayOf(ts: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    call_function("div", unix_micros(ts.cast("timestamp")), lit(86400000000L))
 
   /** Global (table-wide, not per-key) running revenue over the full order
     * history — the classic keyless `SUM OVER (ORDER BY)` restated as a

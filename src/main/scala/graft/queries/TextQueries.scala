@@ -1245,7 +1245,9 @@ object TextQueries {
     * pair recount (`p_k`), one argmax (`m_k`), one literal-replace
     * re-segment (`w_k`, term carried through) — the same integer
     * expressions the Spark loop evaluates. Unreferenced trailing CTEs
-    * (e.g. `w_K` under the merge-list query) cost nothing.
+    * (e.g. `w_K` under the merge-list query) cost nothing. When no pair
+    * is left, `m_k` is empty and `w_k` keeps `w_{k-1}`'s segmentation, as
+    * the Spark trainer stops with its merged vocabulary.
     */
   private def bpeStepsSql(iters: Int): String = {
     val steps = (1 to iters)
@@ -1257,10 +1259,10 @@ object TextQueries {
            |  GROUP BY 1),
            |m$k AS (SELECT pr, n FROM p$k ORDER BY n DESC, pr LIMIT 1),
            |w$k AS (
-           |  SELECT t, replace(s,
+           |  SELECT t, CASE WHEN m$k.pr IS NULL THEN s ELSE replace(s,
            |    ' ' || string_split(m$k.pr, ' ')[1] || '  ' || string_split(m$k.pr, ' ')[2] || ' ',
-           |    ' ' || string_split(m$k.pr, ' ')[1] || string_split(m$k.pr, ' ')[2] || ' ') AS s, f
-           |  FROM w${k - 1}, m$k)""".stripMargin
+           |    ' ' || string_split(m$k.pr, ' ')[1] || string_split(m$k.pr, ' ')[2] || ' ') END AS s, f
+           |  FROM w${k - 1} LEFT JOIN m$k ON TRUE)""".stripMargin
       }
       .mkString(",\n")
     s"""WITH toks AS (SELECT unnest(string_split(lower(text), ' ')) AS t FROM documents),

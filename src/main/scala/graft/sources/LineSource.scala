@@ -27,6 +27,11 @@ import org.apache.spark.rdd.RDD
   *     starts at or before its end, so each line is read by exactly one
   *     split.
   * Files are read as plain text: no codec is chosen by file suffix.
+  *
+  * It is the Engine's one reader. Lines come back without their
+  * terminators, so a file that ends mid-line yields its last line as if it
+  * were terminated. The reference's `readlines()` keeps that distinction;
+  * a job here does not (see [[graft.ops.GroupStage]]).
   */
 object LineSource {
 

@@ -2,6 +2,9 @@ package graft
 
 import java.nio.file.{Files, Path}
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.expr
+
 /** Registered queries on degenerate inputs the fixtures never produce. */
 class DegenerateSpec extends SparkSpec {
 
@@ -10,14 +13,19 @@ class DegenerateSpec extends SparkSpec {
   private val made = scala.collection.mutable.ArrayBuffer.empty[Path]
 
   /** sf0.001 with each table that `cut` names reduced to its first `rows`
-    * rows (schema kept); every other table as it is.
+    * rows (schema kept) and then passed through `edit`; every other table
+    * as it is.
     */
-  private def fixture(prefix: String, rows: Int, cut: String => Boolean): Path = {
+  private def fixture(
+      prefix: String,
+      rows: Int,
+      cut: String => Boolean,
+      edit: DataFrame => DataFrame = identity): Path = {
     val dir = Files.createTempDirectory(prefix)
     made += dir
     for (f <- new java.io.File(sf).listFiles() if f.getName.endsWith(".parquet")) {
       val to = dir.resolve(f.getName)
-      if (cut(f.getName)) spark.read.parquet(f.getPath).limit(rows).write.parquet(to.toString)
+      if (cut(f.getName)) edit(spark.read.parquet(f.getPath).limit(rows)).write.parquet(to.toString)
       else Files.copy(f.toPath, to)
     }
     dir
@@ -28,6 +36,15 @@ class DegenerateSpec extends SparkSpec {
 
   /** Every table cut to one row. */
   private lazy val oneRow = fixture("graft-one-row", 1, _ => true)
+
+  /** Three documents, in doc_id order "ab ab", "ab" and "ab x": the one
+    * merge `a b` leaves no pair, long before the trainer's K merges.
+    */
+  private lazy val bpeShort = fixture(
+    "graft-bpe-short",
+    3,
+    Set("documents.parquet"),
+    _.withColumn("text", expr("element_at(array('ab ab', 'ab', 'ab x'), row_number() over (order by doc_id))")))
 
   private def run(name: String, dir: Path) =
     graft.queries.Registry.queries(name)(spark, dir.toString).collect()
@@ -71,5 +88,11 @@ class DegenerateSpec extends SparkSpec {
     assert(ab.isNullAt(ab.fieldIndex("welch_z")))
     val ks = only("q_ks_test")
     assert(ks.isNullAt(ks.fieldIndex("ks_ppm")))
+  }
+
+  test("q_bpe_encode keeps the merged vocabulary when the corpus runs out of pairs") {
+    // "ab" → 1 symbol after the one merge, "x" stays 1 character
+    val rows = run("q_bpe_encode", bpeShort)
+    assert(rows.map(_.getAs[Long]("n_bpe_tokens")).toSeq == Seq(2L, 1L, 2L))
   }
 }

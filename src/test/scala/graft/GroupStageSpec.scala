@@ -161,86 +161,4 @@ class GroupStageSpec extends SparkSpec {
     assert(parts(0) == List("a\t1", "a\t1", "c\t1", "e\t1"))
     assert(parts(1) == List("b\t1", "d\t1"))
   }
-
-  test("referenceGroup replays the heapq.merge walk when the sort-join glue breaks stream order") {
-    // The one shape where the reference's cascade is NOT a global sort:
-    // task lines {"b", "b\n", "ba\n"} worker-sort to [b, b\n, ba\n], the
-    // "".join glues the unterminated "b" onto "b\n" → bytes "bb\nba\n",
-    // and the manager re-reads ["bb\n", "ba\n"] — an UNSORTED stream.
-    // heapq.merge then emits stream-order for that file, not sorted order.
-    // Replay with a second (sorted) task ["ab\n", "bc\n"]:
-    //   merge: ab\n | bb\n | ba\n | bc\n  (pop smallest head; after bb\n
-    //   the s0 head is ba\n, which loses to nothing — emitted next)
-    //   distinct walk: ab→0 bb→1 ba→2 bc→3; %2 → b0=[ab, ba], b1=[bb, bc]
-    val t0 = Seq("b\n", "ba\n", "b")  // readlines() of "b\nba\nb"
-    val t1 = Seq("ab\n", "bc\n")
-    val streams = spark.sparkContext.parallelize(Seq((0, t0), (1, t1)), 2)
-    val parts = GroupStage
-      .referenceGroup(streams, 2)
-      .mapPartitionsWithIndex { case (i, it) => Iterator((i, it.toList)) }
-      .collect()
-      .toMap
-    assert(parts(0) == List("ab\n", "ba\n"))
-    assert(parts(1) == List("bb\n", "bc\n"))
-    // a plain global-sort router would route bb\n with ab\n — the cascade
-    // semantics (emission order, not sorted order) are load-bearing here
-    val flat = GroupStage
-      .rankModRaw(spark.sparkContext.parallelize(Seq("bb\n", "ba\n") ++ t1, 2), 2)
-      .mapPartitionsWithIndex { case (i, it) => Iterator((i, it.toList)) }
-      .collect()
-      .toMap
-    assert(flat != parts)
-  }
-
-  test("newline-preserving rank-mod matches the reference byte-for-byte on an unterminated fixture") {
-    // Fixture: two "map output" files, the second ending MID-LINE — the
-    // shape textFile cannot represent (it strips terminators). The
-    // reference's readlines() keeps real bytes
-    // (/root/reference/mapreduce/worker/__main__.py:180-182), so the
-    // unterminated "foo\t1" is a DIFFERENT distinct line from the
-    // terminated "foo\t1\n" in file 1, sorts immediately BEFORE it
-    // (proper prefix), and the two consume two rank-counter slots — every
-    // subsequent bucket assignment shifts relative to the stripped path.
-    val dir = java.nio.file.Files.createTempDirectory("parity-lines")
-    def put(name: String, bytes: String): Unit =
-      java.nio.file.Files.write(
-        dir.resolve(name),
-        bytes.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      )
-    put("file01", "bar\t1\nfoo\t1\nzap\t1\n")
-    put("file02", "bar\t1\nqux\t1\nfoo\t1") // no trailing newline
-    try {
-      val raw = graft.sources.ParityLines.sortTasks(spark.sparkContext, dir.toString, 2).flatMap(_._2)
-      // the reader preserved the real bytes: exactly one unterminated line
-      val rawLines = raw.collect().toSeq
-      assert(rawLines.count(!_.endsWith("\n")) == 1)
-      assert(rawLines.sorted.mkString("") == "bar\t1\nbar\t1\nfoo\t1" + "foo\t1\nqux\t1\nzap\t1\n")
-      val parts = GroupStage
-        .rankModRaw(raw, 2)
-        .mapPartitionsWithIndex { case (i, it) => Iterator((i, it.toList)) }
-        .collect()
-        .toMap
-      // reference replay: sorted distinct raw lines are
-      //   "bar\t1\n", "foo\t1" (unterminated, a proper prefix so it sorts
-      //   BEFORE "foo\t1\n"), "foo\t1\n", "qux\t1\n", "zap\t1\n"
-      // → buckets 0 1 0 1 0; both copies of "bar\t1\n" ride bucket 0
-      assert(parts(0) == List("bar\t1\n", "bar\t1\n", "foo\t1\n", "zap\t1\n"))
-      assert(parts(1) == List("foo\t1", "qux\t1\n"))
-      // the stripped-line router merges the two foo lines into ONE distinct
-      // (both copies in one bucket, 4 counter slots instead of 5) — the gap
-      // this reader+router pair exists to close
-      val stripped = GroupStage(
-        spark.sparkContext.parallelize(rawLines.map(_.stripSuffix("\n")), 2), 2, parityMode = true)
-        .mapPartitionsWithIndex { case (i, it) => Iterator((i, it.toList)) }
-        .collect()
-        .toMap
-      assert(
-        stripped.values.exists(_.count(_ == "foo\t1") == 2),
-        "stripped path should merge the foo lines into one bucket"
-      )
-      assert(stripped != parts.map { case (k, v) => k -> v.map(_.stripSuffix("\n")) })
-    } finally {
-      graft.ops.Sinks.deleteRecursively(dir)
-    }
-  }
 }
